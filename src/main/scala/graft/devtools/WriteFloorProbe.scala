@@ -3,7 +3,7 @@ package graft.devtools
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: where does the ~40 ms driver-side tiny-parquet write go?
-  * Times writeLocalParquetFile-equivalent writes under (a) the default
+  * Times one-file ParquetWriteSupport writes under (a) the default
   * ChecksumFileSystem (.crc sidecar + checksum maintenance) and (b)
   * RawLocalFileSystem, plus a bare reopen-for-footer read, 50 reps
   * each. Usage: tools/run.sh graft.devtools.WriteFloorProbe

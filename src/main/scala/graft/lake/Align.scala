@@ -36,7 +36,8 @@ object Align {
       case (tf, orig) =>
         fieldExpr(tf,
           resolve(df.schema.fields, tf.name, ci)
-            .map(f => col(s"`${f.name.replace("`", "``")}`") -> f.dataType),
+            .map(f => (col(s"`${f.name.replace("`", "``")}`"), f.dataType,
+              f.nullable)),
           tf.name, ci, Some(orig)).as(tf.name)
     }
     val kept = extras.filter(df.columns.contains).map(e => col(s"`$e`"))
@@ -59,7 +60,9 @@ object Align {
       }
     }
 
-  private def fieldExpr(tf: StructField, in: Option[(Column, DataType)],
+  /** `in`: the input column, its type, and whether it may be null. */
+  private def fieldExpr(tf: StructField,
+      in: Option[(Column, DataType, Boolean)],
       path: String, ci: Boolean,
       orig: Option[StructField] = None): Column = in match {
     case None =>
@@ -74,20 +77,25 @@ object Align {
           s"required field '$path' missing from input")
       orig.map(o => graft.schema.Defaults.writeFill(o, tf.dataType))
         .getOrElse(lit(null).cast(tf.dataType))
-    case Some((c, inT)) => typeExpr(tf.dataType, inT, c, path, ci)
+    case Some((c, inT, nullable)) =>
+      typeExpr(tf.dataType, inT, c, path, ci, nullable)
   }
 
   private def typeExpr(tgt: DataType, in: DataType, c: Column,
-      path: String, ci: Boolean): Column =
+      path: String, ci: Boolean, nullable: Boolean = true): Column =
     (tgt, in) match {
       case (t: StructType, i: StructType) =>
-        when(c.isNull, lit(null).cast(t))
-          .otherwise(struct(t.fields.toSeq.map { tf =>
-            fieldExpr(tf,
-              resolve(i.fields, tf.name, ci)
-                .map(f => c.getField(f.name) -> f.dataType),
-              s"$path.${tf.name}", ci).as(tf.name)
-          }: _*))
+        val fields = struct(t.fields.toSeq.map { tf =>
+          fieldExpr(tf,
+            resolve(i.fields, tf.name, ci)
+              .map(f => (c.getField(f.name), f.dataType, true)),
+            s"$path.${tf.name}", ci).as(tf.name)
+        }: _*)
+        // a top-level struct the frame declares non-nullable stays
+        // non-nullable, so its file column is REQUIRED like any other
+        // such column
+        if (!nullable) fields
+        else when(c.isNull, lit(null).cast(t)).otherwise(fields)
       case (ArrayType(te: StructType, _), ArrayType(ie: StructType, _)) =>
         transform(c, x => typeExpr(te, ie, x, s"$path.element", ci))
       case (t, i) if t == i => c

@@ -2,9 +2,10 @@ package graft.lake
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 import org.apache.spark.sql.types.StructType
@@ -72,19 +73,27 @@ case class RangeFilter(column: String,
   * many-file snapshots and adds up per file open on the read path.
   * `shared` is never mutated; callers that must mutate use `mutable()`
   * (the copy constructor copies properties without an XML reload).
+  *
+  * Which engine IO still goes through Hadoop's RawLocalFileSystem under
+  * these confs: the scan side only — the DSv2 readers' parquet record
+  * readers ([[graft.sources]] `LakeReaders`), `LakeSourceOps`'
+  * footer-schema read, and the fixture loader in `graft.queries.Tables`.
+  * Data-file writes ([[graft.sources.LakeParquetDataWriter]]) and the
+  * commit-time footer reads ([[FileStats]]) go through java.nio
+  * (parquet's LocalOutputFile / LocalInputFile): RawLocalFileSystem
+  * forks a `chmod` per created file when native Hadoop is absent. The
+  * writer still takes a `mutable()` copy, as the carrier of its
+  * ParquetWriteSupport settings only.
   */
 private[graft] object HadoopConfs {
   lazy val shared: org.apache.hadoop.conf.Configuration = {
     val c = new org.apache.hadoop.conf.Configuration()
-    // Engine-internal parquet IO runs on RawLocalFileSystem (r18): the
-    // default ChecksumFileSystem writes a `.crc` sidecar per file and
-    // re-reads it on every open — measured ~23% of a tiny lake file's
-    // write wall, plus one extra created/swept file per data file, for
-    // a checksum parquet's own page CRCs and the container blobs' CRC
-    // framing already cover. Scoped to THESE confs only (the cache is
-    // disabled for the file scheme here, so Spark's session
-    // FileSystems are untouched); ChecksumFileSystem readers tolerate
-    // absent sidecars, so files written either way read under either.
+    // RawLocalFileSystem (r18): the default ChecksumFileSystem writes
+    // a `.crc` sidecar per file and re-reads it on every open, for a
+    // checksum parquet's own page CRCs already cover. Scoped to THESE
+    // confs only (the cache is disabled for the file scheme here, so
+    // Spark's session FileSystems are untouched); ChecksumFileSystem
+    // readers tolerate absent sidecars.
     c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
@@ -94,6 +103,29 @@ private[graft] object HadoopConfs {
 }
 
 object FileStats {
+
+  /** Open one warehouse parquet file for its footer through java.nio
+    * (parquet's LocalInputFile): no Hadoop FileSystem in the way. The
+    * options come from the shared conf — parquet's default options
+    * build a fresh Hadoop Configuration (an XML parse) per open.
+    */
+  private def openFooter(path: String): ParquetFileReader =
+    ParquetFileReader.open(
+      new LocalInputFile(java.nio.file.Paths.get(LakeTable.normalizePath(path))),
+      HadoopReadOptions.builder(HadoopConfs.shared).build())
+
+  /** Names of the top-level columns the file's footer declares
+    * REQUIRED — a column no row of the file can hold NULL in. Empty
+    * when the footer is unreadable (conservative: nothing proven).
+    */
+  def requiredTopLevel(path: String): Set[String] =
+    try {
+      val reader = openFooter(path)
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .filter(_.isRepetition(Type.Repetition.REQUIRED))
+        .map(_.getName).toSet
+      finally reader.close()
+    } catch { case _: Exception => Set.empty }
 
   /** Extract top-level-column min/max from a parquet footer, mapped to
     * field IDs via the schema the file was written under.
@@ -110,8 +142,7 @@ object FileStats {
     * argument: every file read together must share this schema.
     */
   def sparkSchemaFromFooter(path: String): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), HadoopConfs.shared))
+    val reader = openFooter(path)
     try new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(
         org.apache.spark.sql.internal.SQLConf.get)
@@ -128,8 +159,7 @@ object FileStats {
       fileSchema: StructType): (Long, Map[Int, ColStats]) = {
     val nameToId = fileSchema.fields.map(f => f.name -> FieldIds.idOf(f)).toMap
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), HadoopConfs.shared))
+      val reader = openFooter(path)
       try {
         val rows = reader.getRecordCount
         // stats extraction failures must not destroy the exact row

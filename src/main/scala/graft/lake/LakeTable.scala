@@ -316,11 +316,11 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // footer null counts prove a clean file for free, so the Iceberg
     // required-field contract costs O(footers) per commit (a column
     // without null accounting falls back to the delta scan)
-    val required = Reconcile.clean(next.currentSchema)
-      .asInstanceOf[StructType].fields.toSeq
-      .filterNot(_.nullable).map(f =>
-        s"required column '${f.name}'" ->
-          s"`${f.name.replace("`", "``")}` IS NOT NULL")
+    val requiredFields = Reconcile.clean(next.currentSchema)
+      .asInstanceOf[StructType].fields.toSeq.filterNot(_.nullable)
+    val required = requiredFields.map(f =>
+      s"required column '${f.name}'" ->
+        s"`${f.name.replace("`", "``")}` IS NOT NULL")
     val cons = declared ++ required
     if (cons.isEmpty) return
     val before = md.snapshots.map(_.id).toSet
@@ -329,29 +329,62 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       next.staged.filterNot(s => beforeStaged(s.id)))
       .filterNot(s => LakeTable.isByteMove(s.operation))
       .flatMap(_.files)
+    // label → field id of each required column, for the footer proof
+    val requiredIds = required.map(_._1).zip(requiredFields.map(f =>
+      FieldIds.idOf(next.currentSchema(f.name)))).toMap
     if (added.nonEmpty)
-      validateFiles(added, next.currentSchema, cons.toMap)
+      validateFiles(added, next, cons.toMap, requiredIds)
   }
 
   /** One constraint pass over `files`: per constraint (the label is
     * the human phrase — "CHECK constraint 'x'" or "required column
     * 'y'"), drop every file whose footer stats prove it cannot hold a
-    * violating row, then run the `limit(1)` violation scan over the
+    * violating row, then — for a required column (`requiredIds`: label
+    * → field id) — every file whose parquet footer declares the column
+    * REQUIRED, then run the `limit(1)` violation scan over the
     * remainder. Refuses BY NAME on the first violation — the commit
     * never happens, so a bad batch can't land partially.
     */
   private[lake] def validateFiles(files: Seq[DataFileMeta],
-      schema: StructType, cons: Map[String, String]): Unit = {
+      next: TableMetadata, cons: Map[String, String],
+      requiredIds: Map[String, Int]): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    val schema = next.currentSchema
+    // per file: the top-level columns its footer declares REQUIRED,
+    // read once per file on first need (driver-side, no Spark job)
+    val footerRequired =
+      scala.collection.mutable.Map.empty[String, Set[String]]
+    def loadFooters(fs: Seq[DataFileMeta]): Unit = {
+      val missing = fs.map(_.path).distinct.filterNot(footerRequired.contains)
+      footerRequired ++= missing.zip(
+        LakeTable.parMapFiles(missing)(FileStats.requiredTopLevel))
+    }
+    // footers carry no field ids: the column's name in the schema the
+    // file was WRITTEN under is the name its footer column has
+    def footerProves(f: DataFileMeta, fieldId: Int): Boolean =
+      next.schemas.find(_.id == f.schemaId).flatMap(_.schema.fields
+          .find(fd => FieldIds.hasId(fd) && FieldIds.idOf(fd) == fieldId))
+        .exists(fd => footerRequired(f.path)(fd.name))
     var scanned = 0
     cons.toSeq.sortBy(_._1).foreach { case (label, sql) =>
       // a zero-row file (an empty write partition) carries no stats
       // and no rows — trivially violation-free
       val nonEmpty = files.filter(_.rows != 0)
-      val unproven = Constraints.violationFilters(sql, schema) match {
+      val statsUnproven = Constraints.violationFilters(sql, schema) match {
         case Some(vfs) => nonEmpty.filter(f => vfs.exists(vf =>
           FileStats.mightMatch(f.stats, schema, Seq(vf))))
         case None => nonEmpty
+      }
+      // a REQUIRED footer column is backed by the engine's own writer
+      // check (LakeParquetDataWriter refuses a null in a non-nullable
+      // write column), and parquet can encode no null in it at all;
+      // files whose column is OPTIONAL (nullable-declared frames,
+      // FileFormatWriter output, adopted external files) keep the scan
+      val unproven = requiredIds.get(label) match {
+        case Some(id) if statsUnproven.nonEmpty =>
+          loadFooters(statsUnproven)
+          statsUnproven.filterNot(footerProves(_, id))
+        case _ => statsUnproven
       }
       if (unproven.nonEmpty) {
         scanned += unproven.size
@@ -1049,11 +1082,6 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       removedPaths: Seq[String] = Seq.empty,
       retryConflicts: Boolean = true,
       lineage: Boolean = false): SnapshotMeta = {
-    // Spark's default parquet timestamp encoding is INT96 (legacy);
-    // pin INT64 micros so footer min/max stats exist for timestamp
-    // columns and the graft-lake record reader's INT64 fast path holds
-    aligned.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // the files' true write schema: captured BEFORE any reload, since
     // `aligned` was coerced to it by the caller (a retry that crosses
     // a concurrent evolution keeps this id; reads reconcile per group)
@@ -1078,18 +1106,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // name is a hint — a retried commit may land under a later id.
     val outDir = dataDir.resolve(
       s"snap-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
-    val profT0 = System.nanoTime()
     val files0 = writeDataFiles(aligned, outDir)
-    if (sys.props.contains("graft.prof.write")) {
-      val t1 = System.nanoTime()
-      val r = commitSnapshot(
-        (if (lineage) files0.map(_.copy(lineageCols = true)) else files0),
-        schemaIdAtWrite, operation, streamBatchId, streamId,
-        removedPaths, retryConflicts)
-      println(f"    [write ${(t1 - profT0) / 1e6}%6.1f ms  " +
-        f"commit ${(System.nanoTime() - t1) / 1e6}%6.1f ms]")
-      return r
-    }
     // a lineage rewrite physically wrote _graft_row_id /
     // _graft_last_updated columns — record the flag so lineage reads
     // know to consume them (and inherit through their null cells)
@@ -1104,31 +1121,6 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
 
   // ---- write-audit-publish (Iceberg's wap.id staging) ------------------
 
-  /** The driver-side single-file write behind [[writeDataFiles]]'s
-    * LocalRelation fast path: Spark's own parquet WriteSupport over
-    * the already-folded InternalRows, so the bytes are identical to
-    * what a one-task FileFormatWriter job would produce (INT64-micros
-    * timestamps, CORRECTED rebase, snappy) at none of the
-    * job/commit-protocol cost. Stats/blooms attach exactly as on the
-    * distributed path.
-    */
-  private[lake] def writeLocalDataFile(source: DataFrame,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-      outDir: Path): Seq[DataFileMeta] = {
-    Files.createDirectories(outDir)
-    val p = outDir.resolve(
-      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-    LakeTable.writeLocalParquetFile(source.schema, rows, p)
-    val (nrows, stats) =
-      FileStats.fromFooterWithRows(p.toString, md.currentSchema)
-    val meta = DataFileMeta(p.toString, md.currentSchemaId,
-      md.currentSpec.id, rows = nrows, partitionValues = Map.empty,
-      stats = stats,
-      bytes = try Files.size(p) catch { case _: Exception => -1L },
-      sortedByIds = Seq.empty)
-    attachBlooms(source.sparkSession, outDir, Seq(meta), Some(source))
-  }
-
   /** Write one aligned DataFrame as parquet data files under `outDir` —
     * hidden-partition columns, write clustering, writer options, and
     * per-file metadata (rows / partition values / stats / bytes) — the
@@ -1136,33 +1128,27 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     */
   private[lake] def writeDataFiles(aligned0: DataFrame,
       outDir: Path): Seq[DataFileMeta] = {
+    val local = LakeTable.isLocalPlan(aligned0)
     // a frame whose OPTIMIZED plan is a LocalRelation (rows already on
-    // the driver, every expression folded) writes its one file on the
-    // DRIVER — no Spark job, no FileFormatWriter/commit-protocol
-    // round-trip (~100 ms of the ~130 ms a tiny publication costs).
-    // Only for unpartitioned, uncustered, default-option writes — the
-    // incremental-MV/marker publication shape; anything else keeps the
-    // full distributed path.
-    if (md.currentSpec.fields.isEmpty &&
-        !md.properties.contains("write.sort-order") &&
-        !md.properties.keys.exists(_.startsWith("write.option.")) &&
-        !sys.props.contains("graft.write.nolocal") &&
-        LakeTable.isLocalPlan(aligned0)) {
-      // the isLocalPlan pre-check keeps the extra optimizer pass off
-      // scan-derived writes — only an all-LocalRelation plan can fold
-      aligned0.queryExecution.optimizedPlan match {
+    // the driver, every expression folded) runs the direct writer's
+    // task body on the DRIVER over those rows — no Spark job at all
+    // (a Lambda-style append of a few orders, an incremental-MV
+    // publication).
+    // The isLocalPlan pre-check keeps the extra optimizer pass off
+    // scan-derived writes — only an all-LocalRelation plan can fold.
+    val driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+      if (!local) None
+      else aligned0.queryExecution.optimizedPlan match {
         case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          return writeLocalDataFile(aligned0, lr.data, outDir)
-        case _ => ()
+          Some(lr.data)
+        case _ => None
       }
-    }
     // a LocalRelation source is bounded by construction (rows already
     // collected on the driver) — publish as ONE file: LocalTableScan
     // otherwise parallelizes to leafNodeDefaultParallelism slices
     // (= cores), and N tiny files' footer/stats/manifest cost
     // dominates the commit (the incremental-MV publication path)
-    val aligned = if (LakeTable.isLocalPlan(aligned0))
-      aligned0.coalesce(1) else aligned0
+    val aligned = if (local) aligned0.coalesce(1) else aligned0
     val schema = md.currentSchema
     val spec = md.currentSpec
     val partInfo = spec.fields.map { f =>
@@ -1201,9 +1187,11 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // — table properties (write.option.*), not session parquet confs,
     // are how a lake table customizes its files, and those properties
     // force the FileFormatWriter path above.
-    // variant columns stay on the FileFormatWriter path: the session
-    // conf it propagates is what SHREDS them (lake_variant_prune's
-    // clip depends on that); the direct writer's task conf does not
+    // distributed variant columns stay on the FileFormatWriter path:
+    // the session conf it propagates is what SHREDS them
+    // (lake_variant_prune's clip depends on that); the direct writer's
+    // task conf does not. Driver-resident batches are never shredded —
+    // a handful of rows gives the clip nothing to skip.
     def hasVariant(dt: org.apache.spark.sql.types.DataType): Boolean =
       dt match {
         case _: org.apache.spark.sql.types.VariantType => true
@@ -1222,7 +1210,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
           // in file clustering (r17 advice)
           !md.properties.get("write.distribution-mode")
             .forall(m => m == "hash" || m == "none") ||
-          hasVariant(aligned.schema)) None
+          (hasVariant(aligned.schema) && driverRows.isEmpty)) None
       else {
         val resolved = partInfo.map { case (f, srcName, _) =>
           val ord = aligned.schema.fieldNames.indexOf(srcName)
@@ -1239,6 +1227,9 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         if (resolved.forall(_.isDefined)) Some(resolved.flatten) else None
       }
     directPlan match {
+      case Some(plan) if driverRows.isDefined =>
+        return writeDirect(aligned0, plan, outDir, Some(aligned0),
+          driverRows)
       case Some(plan) =>
         // same hash-distribution rule as the Hive path below: each
         // partition value lands in one task → one file per value. The
@@ -1258,7 +1249,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         val distributed =
           if (plan.isEmpty) base else base.sortWithinPartitions(pExprs: _*)
         return writeDirect(distributed, plan, outDir,
-          Some(aligned0).filter(LakeTable.isLocalPlan))
+          Some(aligned0).filter(_ => local))
       case None => ()
     }
     val withP0 = pCols.foldLeft(aligned) { case (d, (n, e)) => d.withColumn(n, e) }
@@ -1353,8 +1344,21 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     val recordedSortIds =
       if (sortedIds.size == plainSortCols.size) sortedIds else Seq.empty
     val writer = clustered.write.mode("overwrite").options(writerOpts)
-    (if (pCols.nonEmpty) writer.partitionBy(pCols.map(_._1): _*) else writer)
-      .parquet(outDir.toString)
+    // Spark's default parquet timestamp encoding is INT96 (legacy);
+    // pin INT64 micros so footer min/max stats exist for timestamp
+    // columns and the graft-lake record reader's INT64 fast path holds.
+    // Session-scoped in Spark, so set only for this write and restore
+    // the caller's value after it.
+    val session = clustered.sparkSession.conf
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val callerTs = session.getOption(tsKey)
+    session.set(tsKey, "TIMESTAMP_MICROS")
+    try (if (pCols.nonEmpty) writer.partitionBy(pCols.map(_._1): _*)
+         else writer).parquet(outDir.toString)
+    finally callerTs match {
+      case Some(v) => session.set(tsKey, v)
+      case None => session.unset(tsKey)
+    }
 
     LakeTable.parMapFiles(listParquet(outDir)) { p =>
       // parse only the segments below outDir (an ancestor dir containing
@@ -1376,13 +1380,14 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         sortedByIds = recordedSortIds)
     } match {
       case metas => attachBlooms(aligned.sparkSession, outDir, metas,
-        Some(aligned0).filter(LakeTable.isLocalPlan))
+        Some(aligned0).filter(_ => local))
     }
   }
 
   /** The direct write path of [[writeDataFiles]]: one job whose tasks
     * write parquet through [[graft.sources.LakeParquetDataWriter]] (the
-    * DSv2 delta writer) and return (path, partitionValues) — metadata
+    * DSv2 delta writer) and return (path, partitionValues), or with
+    * `driverRows` the same task body run once on the driver — metadata
     * carries the partition values, files lay flat under `outDir`.
     * Stats/rows come from the footers exactly like the Hive path; a
     * failed task aborts its own files and the survivors are orphans
@@ -1390,7 +1395,9 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     */
   private def writeDirect(df: DataFrame,
       plan: Seq[graft.sources.PartField], outDir: Path,
-      bloomSource: Option[DataFrame]): Seq[DataFileMeta] = {
+      bloomSource: Option[DataFrame],
+      driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+        None): Seq[DataFileMeta] = {
     // bloom fusion (r18): resolve the table's bloom columns against the
     // write schema and let the WRITE TASKS build the filters from the
     // rows they are writing — no read-back job. Falls back to the
@@ -1415,7 +1422,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // driver no longer re-opens every written file at commit time
     val res = LakeTable.writeViaTaskWriterRich(
       df, outDir, plan, bloomPlan, dataDir,
-      statsSchema = md.currentSchema)
+      statsSchema = md.currentSchema, driverRows = driverRows)
     val metas = res.files.map { case (p, partVals) =>
       val (rows, stats, bytes) = res.stats.getOrElse(p, {
         // defensive fallback (a task that somehow reported a file
@@ -1910,51 +1917,6 @@ object LakeTable {
   private[lake] final case class Claim(table: LakeTable, version: Int,
       target: Path, ext: TableMetadata, manifests: Seq[Path])
 
-  /** Every leaf of the frame's plan is a LocalRelation — the rows are
-    * already on the driver, so the frame is bounded by construction
-    * (the incremental-MV publication shape). Such writes coalesce to
-    * one task/file: LocalTableScan otherwise parallelizes its handful
-    * of rows to leafNodeDefaultParallelism (= cores) slices.
-    */
-  /** Spark's own parquet WriteSupport driven on the DRIVER: bytes
-    * identical to a one-task FileFormatWriter job (INT64-micros
-    * timestamps, CORRECTED rebase, snappy), none of the
-    * job/commit-protocol cost. The conf keys are the ones
-    * ParquetWriteSupport.init / SparkToParquetSchemaConverter assert
-    * on — the same values ParquetFileFormat.prepareWrite stamps.
-    */
-  private[lake] def writeLocalParquetFile(schema: StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-      p: Path): Unit = {
-    val conf = HadoopConfs.mutable()
-    org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-      .setSchema(schema, conf)
-    locally {
-      import org.apache.spark.sql.internal.SQLConf
-      conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
-      conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-        "TIMESTAMP_MICROS")
-      conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
-      conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
-        SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.defaultValueString)
-    }
-    final class B(f: org.apache.parquet.io.OutputFile)
-        extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-          org.apache.spark.sql.catalyst.InternalRow, B](f) {
-      override def getWriteSupport(c: org.apache.hadoop.conf.Configuration) =
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetWriteSupport
-      override def self(): B = this
-    }
-    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString), conf)
-    val w = new B(out).withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach(w.write) finally w.close()
-  }
-
   /** Max distinct keys a marker batch INLINES into the snapshot
     * metadata (`EqDeleteMeta.inlineKeys`): covers the incremental-MV
     * key-limit (1000) publications while keeping per-version metadata
@@ -2120,13 +2082,17 @@ object LakeTable {
     * only the ~40-byte refs back with the file list — the r17 path
     * re-read every just-written file through an extra Spark job (plus
     * a row shuffle past the small-delta bounds); the rows are already
-    * in hand at write time, at ANY scale.
+    * in hand at write time, at ANY scale. `driverRows` (the rows of a
+    * frame whose optimized plan is a LocalRelation) runs the same task
+    * body once on the driver instead of launching the job.
     */
   private[lake] def writeViaTaskWriterRich(df: DataFrame, dir: Path,
       plan: Seq[graft.sources.PartField],
       bloomPlan: Seq[graft.sources.BloomWriteCol], bloomDir: Path,
       statsSchema: StructType = null,
-      countOrdinal: Int = -1): TaskWriteOut = {
+      countOrdinal: Int = -1,
+      driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+        None): TaskWriteOut = {
     Files.createDirectories(dir)
     val out = dir.toString
     val bloomOut = Option(bloomDir).map(_.toString).orNull
@@ -2135,7 +2101,7 @@ object LakeTable {
     // (the caller's contract) — one open file per task at any
     // cardinality; unsorted keys would only split into extra files
     val keyed = plan.nonEmpty
-    val msgs = df.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
+    val task = (i: Int, it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
       if (!it.hasNext)
         Iterator.empty[graft.sources.LakeFilesBloomCommit]
       else {
@@ -2154,7 +2120,30 @@ object LakeTable {
           }
         } catch { case e: Throwable => w.abort(); throw e }
       }
-    }.collect()
+    val msgs = driverRows match {
+      case Some(rows) =>
+        // rows already on the driver: ONE run of the task body here,
+        // no job. Grouped stably by rendered partition key, so each
+        // value is one contiguous run → one file, as hash+sort gives
+        // the distributed run.
+        val grouped =
+          if (!keyed) rows.iterator
+          else {
+            val groups = scala.collection.mutable.LinkedHashMap.empty[
+              Seq[String],
+              scala.collection.mutable.ArrayBuffer[
+                org.apache.spark.sql.catalyst.InternalRow]]
+            rows.foreach { r =>
+              groups.getOrElseUpdate(
+                plan.map(graft.sources.LakeStreamingWrite.renderValue(_, r)),
+                scala.collection.mutable.ArrayBuffer.empty) += r
+            }
+            groups.valuesIterator.flatMap(_.iterator)
+          }
+        task(0, grouped).toArray
+      case None =>
+        df.queryExecution.toRdd.mapPartitionsWithIndex(task).collect()
+    }
     // blobs shipped by small tasks fold into ONE driver-written
     // container (the r17 small-delta layout — routine lifecycle writes
     // keep one .gbf per write); big tasks already wrote their own
@@ -2195,6 +2184,12 @@ object LakeTable {
         case _ => 128L
       }.sum + 1024L })
 
+  /** Every leaf of the frame's plan is a LocalRelation — the rows are
+    * already on the driver, so the frame is bounded by construction
+    * (the incremental-MV publication shape). Such writes coalesce to
+    * one task/file: LocalTableScan otherwise parallelizes its handful
+    * of rows to leafNodeDefaultParallelism (= cores) slices.
+    */
   private[lake] def isLocalPlan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       LocalRelation, Repartition, RepartitionByExpression}

@@ -101,8 +101,6 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     require(!md.staged.exists(_.wapId.contains(wapId)),
       s"wap id '$wapId' already staged")
     val aligned = Align(df, md.currentSchema)
-    aligned.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     if (currentHintVersion() != loadedVersion)
       throw new java.util.ConcurrentModificationException(
         s"table $location was committed concurrently; reload and retry")
@@ -218,8 +216,6 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
   def appendToBranch(df: DataFrame, name: String): SnapshotMeta = {
     branchRef(name)
     val aligned = Align(df, md.currentSchema)
-    aligned.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     if (currentHintVersion() != loadedVersion)
       throw new java.util.ConcurrentModificationException(
         s"table $location was committed concurrently; reload and retry")
@@ -329,8 +325,6 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     }
     branch.foreach(branchRef)
     val aligned = source.map(Align(_, md.currentSchema))
-    aligned.foreach(_.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
     // the files'/batch's true write schema, captured before any
     // further reload — reads reconcile by id per schema version
     val schemaIdAtWrite = md.currentSchemaId
@@ -482,8 +476,6 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     def writeGroup(df: DataFrame): Seq[DataFileMeta] = {
       val aligned = Align.keeping(df, md.currentSchema,
         LakeTable.matLineageCols)
-      aligned.sparkSession.conf
-        .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       val fs = writeDataFiles(aligned, freshOutDir())
       // an origin group may hold zero rows (all its candidates were
       // touched) — drop the empty file rather than commit it

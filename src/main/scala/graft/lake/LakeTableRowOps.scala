@@ -65,38 +65,38 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
               LakeTable.renderInlineKey(dt, r, i) }
             if (!seen.contains(k)) seen += k -> r.copy()
           }
-          Files.createDirectories(dir)
-          val p = dir.resolve("keys-00000.snappy.parquet")
-          LakeTable.writeLocalParquetFile(
-            StructType(ids.zip(types).map { case (id, dt) =>
-              StructField(s"k$id", dt, nullable = true) }),
-            seen.values.toSeq, p)
           val inline = seen.size <= LakeTable.InlineKeyCap
-          return EqDeleteMeta(Seq(p.toString), ids, snapshotId,
+          return EqDeleteMeta(markerFiles(proj, dir, Some(seen.values.toSeq)),
+            ids, snapshotId,
             inlineKeys = if (inline) Some(seen.keys.toSeq) else None,
             inlineTypes =
               if (inline) Some(types.map(_.simpleString)) else None)
         case _ => ()
       }
     }
-    val typed = proj.distinct()
-    // r17: per-task direct write (no FileFormatWriter machinery) — the
-    // marker files are plain flat parquet either way. An EMPTY key set
-    // still publishes one empty marker: every batch consumer
-    // (eqBatchFrame, liveEqDeletes suffix grouping) assumes paths is
-    // non-empty, exactly the invariant FileFormatWriter's always-one-
-    // file behavior used to provide.
-    val written = LakeTable.writeViaTaskWriter(typed, dir, Seq.empty)
-      .map(_._1).sorted
-    val paths =
-      if (written.nonEmpty) written
-      else {
-        Files.createDirectories(dir)
-        val p = dir.resolve("keys-00000.snappy.parquet")
-        LakeTable.writeLocalParquetFile(typed.schema, Seq.empty, p)
-        Seq(p.toString)
-      }
-    EqDeleteMeta(paths, ids, snapshotId)
+    EqDeleteMeta(markerFiles(proj.distinct(), dir, None), ids, snapshotId)
+  }
+
+  /** The marker parquet of one equality batch, written by the direct
+    * writer (r17: no FileFormatWriter machinery — the marker files are
+    * plain flat parquet either way); `driverRows` runs it on the
+    * driver. An EMPTY key set still publishes one empty marker: every
+    * batch consumer (eqBatchFrame, liveEqDeletes suffix grouping)
+    * assumes paths is non-empty, exactly the invariant
+    * FileFormatWriter's always-one-file behavior used to provide.
+    */
+  private def markerFiles(keys: DataFrame, dir: Path,
+      driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]])
+      : Seq[String] = {
+    val written = LakeTable.writeViaTaskWriterRich(keys, dir, Seq.empty,
+      Seq.empty, null, driverRows = driverRows).files.map(_._1).sorted
+    if (written.nonEmpty) written
+    else {
+      val w = new graft.sources.LakeParquetDataWriter(dir.toString,
+        keys.schema, Seq.empty, "empty")
+      w.openEmpty()
+      w.commit().asInstanceOf[graft.sources.LakeFilesCommit].files.map(_._1)
+    }
   }
 
   /** The table's identifier fields resolved to their CURRENT names —

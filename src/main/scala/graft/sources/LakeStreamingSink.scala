@@ -7,8 +7,6 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.TaskType
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -34,7 +32,7 @@ import graft.schema.FieldIds
   * skipped — the same exactly-once contract as StreamIngest, with
   * distributed writes (rows never travel to the driver).
   *
-  * abort() deletes staged files (and checksum sidecars).
+  * abort() deletes staged files.
   */
 private[sources] class LakeStreamingWrite(wh: String, db: String, tbl: String,
     queryId: String, schema: StructType,
@@ -48,13 +46,8 @@ private[sources] class LakeStreamingWrite(wh: String, db: String, tbl: String,
       LakeStreamingWrite.partitionPlan(t, schema))
   }
 
-  private def deleteStaged(p: String): Unit = {
-    val path = Paths.get(p)
-    Files.deleteIfExists(path)
-    // Hadoop local-FS checksum sidecar
-    Files.deleteIfExists(path.getParent.resolve(
-      "." + path.getFileName.toString + ".crc"))
-  }
+  private def deleteStaged(p: String): Unit =
+    Files.deleteIfExists(Paths.get(p))
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
@@ -273,9 +266,16 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     bloomPlan.nonEmpty || statsSchema != null || countOrdinal >= 0
 
   private case class Sink(
-      writer: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow],
-      ctx: TaskAttemptContextImpl, path: String,
-      blooms: Array[graft.lake.BloomFilters.Accumulator])
+      writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow],
+      path: String, blooms: Array[graft.lake.BloomFilters.Accumulator])
+
+  // ordinals of the top-level columns the write schema declares
+  // non-nullable: their footer column is REQUIRED, which commit-time
+  // validation takes as proof of no nulls — so a null arriving there
+  // refuses here, instead of being left to parquet-mr's handling of a
+  // missing required field
+  private val requiredOrdinals =
+    schema.fields.indices.filterNot(i => schema(i).nullable).toArray
 
   private val sinks = mutable.LinkedHashMap.empty[Seq[String], Sink]
   private val MaxOpenPartitions = 1000
@@ -325,7 +325,9 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     }
   }
 
-  private def open(path: String): Sink = {
+  // the ParquetWriteSupport settings, the same for every file this
+  // writer opens
+  private lazy val conf = {
     val conf = graft.lake.HadoopConfs.mutable()
     ParquetWriteSupport.setSchema(schema, conf)
     // everything ParquetWriteSupport/SparkToParquetSchemaConverter
@@ -333,19 +335,27 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
-    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.defaultValueString)
     conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "false")
     conf.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "true")
     conf.set(SQLConf.CASE_SENSITIVE.key, "false")
-    val ctx = new TaskAttemptContextImpl(conf,
-      new org.apache.hadoop.mapreduce.TaskAttemptID(
-        "graft", 0, TaskType.MAP, 0, 0))
-    val fmt = new org.apache.parquet.hadoop.ParquetOutputFormat[InternalRow](
-      new ParquetWriteSupport())
-    Sink(fmt.getRecordWriter(ctx.getConfiguration,
-      new org.apache.hadoop.fs.Path(path),
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY),
-      ctx, path,
+    conf
+  }
+
+  // the stage dir, created with the first file (as Hadoop's create did)
+  private lazy val stagePath = Files.createDirectories(Paths.get(stageDir))
+
+  private def open(name: String): Sink = {
+    val path = stagePath.resolve(name).toString
+    // java.nio file creation: Hadoop's RawLocalFileSystem forks a
+    // `chmod` per created file when native Hadoop is absent
+    val out = new org.apache.parquet.io.LocalOutputFile(Paths.get(path))
+    Sink(new LakeParquetDataWriter.Builder(out).withConf(conf)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build(),
+      path,
       if (bloomPlan.isEmpty) null
       else Array.fill(bloomPlan.size)(
         new graft.lake.BloomFilters.Accumulator()))
@@ -365,24 +375,25 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
         projected.project(record); projected
       } else throw new IllegalStateException(
         s"row has ${record.numFields} fields for ${schema.length}-column schema")
+    var r = 0
+    while (r < requiredOrdinals.length) {
+      val i = requiredOrdinals(r)
+      // the wording of the commit-time validation's refusal
+      require(!row.isNullAt(i), s"required column '${schema(i).name}' " +
+        s"(`${schema(i).name.replace("`", "``")}` IS NOT NULL) is " +
+        "violated by incoming rows — commit refused")
+      r += 1
+    }
     val key = partPlan.map(p => LakeStreamingWrite.renderValue(p, row))
     if (closeOnKeyChange && sinks.nonEmpty && !sinks.contains(key)) {
       val (prevKey, prev) = sinks.head
-      prev.writer.close(prev.ctx)
+      prev.writer.close()
       closed += prev.path -> partPlan.map(_.name).zip(prevKey).toMap
       finishBlooms(prev)
       sinks.clear()
     }
-    val sink = sinks.getOrElseUpdate(key, {
-      require(closeOnKeyChange || sinks.size < MaxOpenPartitions,
-        s"task exceeds $MaxOpenPartitions open partitions — repartition " +
-          "the input by the partition source columns (each open file " +
-          "buffers a row group; memory limits bite before this cap)")
-      fileSeq += 1
-      open(s"$stageDir/part-$filePrefix-${fileSeq - 1}-" +
-        s"${UUID.randomUUID().toString.take(8)}.parquet")
-    })
-    sink.writer.write(null, row)
+    val sink = sinkFor(key)
+    sink.writer.write(row)
     if (bloomPlan.nonEmpty) {
       val h = bloomProj(row)
       var i = 0
@@ -399,9 +410,28 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
           java.lang.Long.valueOf(a.longValue + b.longValue))
   }
 
+  private def sinkFor(key: Seq[String]): Sink =
+    sinks.getOrElseUpdate(key, {
+      require(closeOnKeyChange || sinks.size < MaxOpenPartitions,
+        s"task exceeds $MaxOpenPartitions open partitions — repartition " +
+          "the input by the partition source columns (each open file " +
+          "buffers a row group; memory limits bite before this cap)")
+      fileSeq += 1
+      open(s"part-$filePrefix-${fileSeq - 1}-" +
+        s"${UUID.randomUUID().toString.take(8)}.parquet")
+    })
+
+  /** Open the (unpartitioned) writer's file before any row arrives, so
+    * a writer that sees none still commits one zero-row file carrying
+    * the schema — the empty equality-delete marker batch. */
+  def openEmpty(): Unit = {
+    require(partPlan.isEmpty, "an empty file has no partition value")
+    sinkFor(Seq.empty)
+  }
+
   override def commit(): WriterCommitMessage = {
     val files = sinks.toSeq.map { case (key, sink) =>
-      sink.writer.close(sink.ctx)
+      sink.writer.close()
       finishBlooms(sink)
       sink.path -> partPlan.map(_.name).zip(key).toMap
     }
@@ -450,19 +480,11 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
 
   override def abort(): Unit = {
     sinks.values.foreach { sink =>
-      try sink.writer.close(sink.ctx) catch { case _: Exception => () }
-      val p = Paths.get(sink.path)
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.getParent.resolve(
-        "." + p.getFileName.toString + ".crc"))
+      try sink.writer.close() catch { case _: Exception => () }
+      Files.deleteIfExists(Paths.get(sink.path))
     }
     sinks.clear()
-    closed.foreach { case (path, _) =>
-      val p = Paths.get(path)
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.getParent.resolve(
-        "." + p.getFileName.toString + ".crc"))
-    }
+    closed.foreach { case (path, _) => Files.deleteIfExists(Paths.get(path)) }
     closed.clear()
     closedBlooms.clear()
     closedStats.clear()
@@ -473,6 +495,14 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
 }
 
 private[graft] object LakeParquetDataWriter {
+  /** parquet-mr's writer builder over Spark's own ParquetWriteSupport. */
+  private final class Builder(f: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
+        InternalRow, Builder](f) {
+    override def getWriteSupport(c: Configuration) = new ParquetWriteSupport
+    override def self(): Builder = this
+  }
+
   /** Per-task bound on bloom blobs riding the commit message instead
     * of a task-written container: a routine lifecycle write's blobs
     * are 128 B – a few KB per (file, column) (a ~40k-row file is

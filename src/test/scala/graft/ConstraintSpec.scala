@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -223,5 +225,152 @@ class ConstraintSpec extends AnyFunSuite {
       s"far-from-boundary floats must still prove via stats: " +
         s"$scanned/$total")
     assert(LakeTable.load(wh, "d", "f").read(spark).count() == 1L)
+  }
+
+  /** Every message along the cause chain. */
+  private def causes(x: Throwable): String = Iterator.iterate(x)(_.getCause)
+    .takeWhile(_ != null)
+    .map(c => Option(c.getMessage).getOrElse("")).mkString(" ")
+
+  /** Spark jobs this thread launches inside `body`, counted by job
+    * group (suites share the session, so a global count would race). */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"cons-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            group == j.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    // the listener bus is async: a stable count over consecutive polls
+    def quiesce(): Int = {
+      var stable = 0; var prev = jobs.get
+      while (stable < 3) {
+        Thread.sleep(30)
+        val cur = jobs.get
+        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+      }
+      prev
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "constraint validation jobs")
+    try { body; quiesce() }
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  /** k (required long), items (required array), addr (required
+    * struct), note (optional): stats prove k; only footers can prove
+    * items and addr. */
+  private def setupNested(tag: String): String = {
+    val wh = Files.createTempDirectory(s"graft-cons-$tag").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"k","data_type":"long","required":true},
+        |{"column_name":"items","data_type":"array","required":true,
+        |  "array_def":{"column_name":"element","data_type":"long"}},
+        |{"column_name":"addr","data_type":"struct","required":true,
+        |  "struct_def":[{"column_name":"city","data_type":"string"}]},
+        |{"column_name":"note","data_type":"string"}],
+        |"partitions":[]}""".stripMargin)
+    wh
+  }
+
+  private def nestedFrame(wh: String, nullable: Boolean,
+      rows: org.apache.spark.sql.Row*) = {
+    val schema = LakeTable.load(wh, "d", "t").currentSchema
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      if (!nullable) schema
+      else org.apache.spark.sql.types.StructType(
+        schema.fields.map(_.copy(nullable = true))))
+  }
+
+  private def refusal(wh: String, df: org.apache.spark.sql.DataFrame)
+      : Exception = {
+    val before = LakeTable.load(wh, "d", "t").read(spark).count()
+    val e = intercept[Exception](LakeTable.load(wh, "d", "t").append(df))
+    assert(LakeTable.load(wh, "d", "t").read(spark).count() == before,
+      "the refused batch must land nothing")
+    e
+  }
+
+  test("required array and struct columns are proven from the parquet " +
+      "footer: no validation scan, no Spark job") {
+    import org.apache.spark.sql.Row
+    val wh = setupNested("footer")
+    val jobs = jobsOf {
+      LakeTable.load(wh, "d", "t").append(nestedFrame(wh, nullable = false,
+        Row(1L, Seq(1L, 2L), Row("x"), null), Row(2L, Seq(), Row(null), "n")))
+    }
+    assert(Constraints.lastValidationScan == Some((0, 3)),
+      "stats prove k, the REQUIRED footer columns prove items and addr")
+    assert(jobs == 0, s"a clean local append launched $jobs Spark jobs")
+    assert(LakeTable.load(wh, "d", "t").read(spark).count() == 2L)
+  }
+
+  test("a nullable-declared frame keeps the validation scan: clean rows " +
+      "pass through it, a NULL refuses by name with nothing landed") {
+    import org.apache.spark.sql.Row
+    val wh = setupNested("scan")
+    // OPTIONAL footer columns prove nothing: items and addr are scanned
+    LakeTable.load(wh, "d", "t").append(nestedFrame(wh, nullable = true,
+      Row(1L, Seq(1L), Row("x"), null)))
+    assert(Constraints.lastValidationScan == Some((2, 3)))
+    val e = refusal(wh, nestedFrame(wh, nullable = true,
+      Row(2L, Seq(2L), Row("y"), null), Row(3L, null, Row("z"), null)))
+    assert(e.getMessage == "requirement failed: required column 'items' " +
+      "(`items` IS NOT NULL) is violated by incoming rows — commit refused",
+      e.getMessage)
+  }
+
+  test("the writer refuses a NULL in a non-nullable write column with " +
+      "the validation's message, before any file is committed") {
+    import org.apache.spark.sql.Row
+    val wh = Files.createTempDirectory("graft-cons-writer").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"k","data_type":"long","required":true},
+        |{"column_name":"blob","data_type":"binary","required":true},
+        |{"column_name":"note","data_type":"string"}],
+        |"partitions":[]}""".stripMargin)
+    // the frame DECLARES blob non-nullable yet holds a NULL, so its file
+    // column would be REQUIRED and the writer itself must refuse. (Spark
+    // carries such a NULL through its local-relation folding only for
+    // types it does not copy, binary among them; most others fail in
+    // Spark before any write.)
+    val e = refusal(wh, spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, Array[Byte](1), null), Row(2L, null, "n")),
+      LakeTable.load(wh, "d", "t").currentSchema))
+    assert(e.getMessage == "requirement failed: required column 'blob' " +
+      "(`blob` IS NOT NULL) is violated by incoming rows — commit refused",
+      e.getMessage)
+    assert(e.getStackTrace.exists(
+      _.getClassName == "graft.sources.LakeParquetDataWriter"),
+      "refused by the writer, not by the validation scan")
+    assert(Files.walk(java.nio.file.Paths.get(wh)).iterator().asScala
+      .forall(!_.toString.endsWith(".parquet")),
+      "the aborted write leaves no data file behind")
+  }
+
+  test("an add_files-adopted file whose required columns are OPTIONAL " +
+      "in its footer goes through the validation scan") {
+    import org.apache.spark.sql.Row
+    val wh = setupNested("addfiles")
+    // a Spark-written external file: file sources write every column
+    // OPTIONAL
+    val dir = Files.createTempDirectory("graft-cons-ext").toString
+    nestedFrame(wh, nullable = true, Row(1L, Seq(1L), Row("x"), "e"))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val ext = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.toString).find(_.endsWith(".parquet")).get
+    assert(graft.lake.FileStats.requiredTopLevel(ext).isEmpty)
+    LakeTable.load(wh, "d", "t").addFiles(spark, Seq(ext))
+    assert(Constraints.lastValidationScan == Some((2, 3)),
+      "items and addr are scanned; k is proven by its null count")
+    assert(LakeTable.load(wh, "d", "t").read(spark).count() == 1L)
   }
 }

@@ -157,4 +157,51 @@ class DirectWriteSpec extends AnyFunSuite {
       assert(f.bytes === Files.size(Paths.get(f.path)), f.path)
     }
   }
+
+  test("a lake append leaves the caller's session parquet timestamp " +
+      "type as it was, while its files still carry INT64 micros " +
+      "timestamps with min/max stats") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    // a session of its own: the INT96 setting must not leak into
+    // other suites sharing the default session
+    val s2 = spark.newSession()
+    s2.conf.set(key, "INT96")
+    // the driver run of the direct writer, then the FileFormatWriter
+    // path a write.sort-order table keeps
+    for (props <- Seq(Map.empty[String, String],
+        Map("write.sort-order" -> "k"))) {
+      val wh = Files.createTempDirectory("graft-directw-ts").toString
+      Engine.processTableDefJson(wh,
+        """{"database_name":"d","table_name":"t","columns":[
+          |{"column_name":"k","data_type":"long"},
+          |{"column_name":"ts","data_type":"timezone"}],
+          |"partitions":[]}""".stripMargin)
+      if (props.nonEmpty) LakeTable.load(wh, "d", "t").updateProperties(props)
+      LakeTable.load(wh, "d", "t").append(s2.sql(
+        """SELECT * FROM VALUES (2L, TIMESTAMP'2024-01-02 03:04:05.123456'),
+          |(1L, TIMESTAMP'2023-05-06 07:08:09') AS v(k, ts)""".stripMargin))
+      assert(s2.conf.get(key) == "INT96", s"props $props")
+      val t = LakeTable.load(wh, "d", "t")
+      val tsId = graft.schema.FieldIds.idOf(t.currentSchema("ts"))
+      val files = t.metadata.snapshots.flatMap(_.files)
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.parquet.io.LocalInputFile(Paths.get(f.path)))
+        val ts = try {
+          val m = reader.getFooter.getFileMetaData.getSchema
+          m.getType(m.getFieldIndex("ts")).asPrimitiveType
+        } finally reader.close()
+        assert(ts.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
+          s"props $props")
+        assert(ts.getLogicalTypeAnnotation == org.apache.parquet.schema
+          .LogicalTypeAnnotation.timestampType(true,
+            org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS),
+          s"props $props")
+        assert(f.stats.get(tsId).exists(_.kind == "num"), s"props $props")
+      }
+      assert(t.read(s2).count() == 2L)
+    }
+  }
 }

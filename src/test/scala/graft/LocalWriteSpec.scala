@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake.{Engine, LakeTable}
 
 /** The driver-side LocalRelation write fast path
-  * ([[graft.lake.LakeTable]] `writeLocalDataFile` /
-  * `writeEqDeleteBatch`'s inline branch): bytes must be
+  * ([[graft.lake.LakeTable]] `writeDataFiles`' driver run of the
+  * direct writer / `writeEqDeleteBatch`'s inline branch): bytes must be
   * indistinguishable from a FileFormatWriter job's output for every
   * storable type, and the path must actually run WITHOUT Spark jobs —
   * that is its whole point.
@@ -108,7 +108,7 @@ class LocalWriteSpec extends AnyFunSuite {
   }
 
   test("explicit repartition opts OUT of the single-file rule; " +
-      "partitioned tables keep the distributed path") {
+      "partitioned local appends write on the driver too") {
     val wh = Files.createTempDirectory("graft-localwrite2").toString
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"p","columns":[
@@ -119,10 +119,14 @@ class LocalWriteSpec extends AnyFunSuite {
     import SparkTestSession.spark.implicits._
     val t = LakeTable.load(wh, "d", "p")
     val (_, jobs) = countJobs {
-      t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      t.append(Seq((1L, "a"), (2L, "b"), (1L, "c")).toDF("k", "v"))
     }
-    assert(jobs > 0, "a partitioned write needs the distributed path")
-    assert(LakeTable.load(wh, "d", "p").read(spark).count() == 2L)
+    assert(jobs == 0,
+      s"a partitioned local append must not launch Spark jobs, got $jobs")
+    val files = LakeTable.load(wh, "d", "p").metadata.snapshots.head.files
+    assert(files.map(f => f.partitionValues("kp") -> f.rows).toSet ==
+      Set("1" -> 2L, "2" -> 1L), "one file per partition value")
+    assert(LakeTable.load(wh, "d", "p").read(spark).count() == 3L)
     // unpartitioned + explicit repartition: the caller's file spread
     // is respected (N files)
     Engine.processTableDefJson(wh,
