@@ -35,6 +35,13 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
   def metadata: TableMetadata = md
   def currentSchema: StructType = md.currentSchema
 
+  /** A handle frozen at this handle's current view — `md` is replaced
+    * on every commit, so a lazily planned read built now must not see
+    * a later commit through the same handle.
+    */
+  private[graft] def frozenView: LakeTable =
+    new LakeTable(location, md, loadedVersion)
+
   /** Schema current AT a snapshot (validates the id with context). */
   def schemaAsOf(snapshotId: Long): StructType = {
     val snap = md.snapshots.find(_.id == snapshotId).getOrElse(
@@ -1582,22 +1589,25 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
 
   // ---- read ------------------------------------------------------------
 
-  /** Unified read across every snapshot and schema version: files are
-    * grouped by the schema they were written under, each group gets one
-    * field-ID reconciling projection to the current schema, groups are
-    * unioned (SURVEY.md §4.3).
+  /** Unified read across every snapshot and schema version, served by
+    * the DSv2 connector ([[graft.sources.LakeSource.engineRead]]): a
+    * `DataSourceV2Relation` over the table pinned to THIS handle's view
+    * (snapshot log, schema, an open transaction's staged state). Each
+    * file is reconciled to the read schema by field ID inside the
+    * reader, and position deletes, deletion vectors and equality
+    * batches apply there too — no anti-join, no broadcast job — while
+    * column pruning and row-group skipping of any filter the caller
+    * adds push into the scan. It reads the files `prune` and
+    * `statsFilters` keep, packed into tasks by Spark's file-source
+    * rule, and is declared like a parquet read: every column nullable,
+    * no field metadata (SURVEY.md §4.3).
     *
     * `prune`: partition-field name → allowed values. A file is skipped
     * only when its own spec recorded that field with a non-matching
     * value — files from specs without the field are conservatively kept
     * (multi-spec correctness, SURVEY.md §7.2). `statsFilters` further
-    * drops files by min/max column statistics.
-    *
-    * Incremental scan (Iceberg-style CDC read): rows appended by
-    * snapshots in (fromSnapshot, toSnapshot], reconciled to the current
-    * schema. Rewrite (compaction) snapshots are skipped — they move
-    * bytes, not data — so incremental consumers never see reprocessed
-    * rows.
+    * drops files by min/max column statistics. `asOfSnapshot` reads the
+    * live state at that snapshot under the schema current then.
     */
   def read(spark: SparkSession,
       prune: Map[String, Set[String]] = Map.empty,
@@ -1605,22 +1615,10 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       statsFilters: Seq[RangeFilter] = Seq.empty): DataFrame = {
     // time travel: restrict to snapshots <= asOf and reconcile to the
     // schema that was current when that snapshot committed
-    val visible = asOfSnapshot match {
-      case Some(sid) =>
-        require(md.snapshots.exists(_.id == sid), s"no snapshot $sid")
-        md.snapshots.filter(_.id <= sid)
-      case None => md.snapshots
-    }
-    val current = asOfSnapshot match {
-      case Some(sid) => md.schemaById(visible.find(_.id == sid).get.schemaId)
-      case None => md.currentSchema
-    }
-    readFiles(spark,
-      LakeTable.matchingFiles(
-        LakeTable.liveFiles(visible, prune, current, statsFilters),
-        current, prune, statsFilters, md.schemaOpt),
-      current, LakeTable.liveDeletes(visible),
-      LakeTable.liveEqDeletes(visible))
+    asOfSnapshot.foreach(sid =>
+      require(md.snapshots.exists(_.id == sid), s"no snapshot $sid"))
+    graft.sources.LakeSource.engineRead(spark, this, prune, asOfSnapshot,
+      statsFilters)
   }
 
   /** The table with its row-lineage columns (Iceberg v3): `_row_id` —
@@ -1630,32 +1628,23 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     * `_last_updated_sequence_number`, the data sequence of the commit
     * that last wrote the row. Rows written before lineage existed
     * (unstamped files) read a null `_row_id` until a rewrite
-    * materializes them. Same snapshot/delete semantics as [[read]].
-    *
-    * Scale note: this Spark-native path ships one (path → firstRowId)
-    * entry per scanned file inside the plan's lookup expression —
-    * O(files) plan bytes, fine for tooling-scale reads. For a
-    * full-table lineage scan at cluster scale prefer the DSv2
-    * connector's `_graft_row_id`/`_graft_last_updated` metadata
-    * columns, where each input partition carries ONLY its own file's
-    * constants (O(1) per task, like Iceberg's per-split first_row_id).
+    * materializes them. Same snapshot/delete semantics as [[read]] —
+    * it IS [[read]] plus the connector's `_graft_row_id` /
+    * `_graft_last_updated` metadata columns, where each input
+    * partition carries only its own file's constants (O(1) per task,
+    * like Iceberg's per-split first_row_id).
     */
   def readLineage(spark: SparkSession,
       asOfSnapshot: Option[Long] = None): DataFrame = {
-    val visible = asOfSnapshot match {
-      case Some(sid) =>
-        require(md.snapshots.exists(_.id == sid), s"no snapshot $sid")
-        md.snapshots.filter(_.id <= sid)
-      case None => md.snapshots
-    }
-    val current = asOfSnapshot match {
-      case Some(sid) => md.schemaById(visible.find(_.id == sid).get.schemaId)
-      case None => md.currentSchema
-    }
-    readFiles(spark,
-      LakeTable.liveFiles(visible, Map.empty, current),
-      current, LakeTable.liveDeletes(visible),
-      LakeTable.liveEqDeletes(visible), lineage = true)
+    import graft.sources.LakeSource.{LastUpdMetaCol, RowIdMetaCol}
+    asOfSnapshot.foreach(sid =>
+      require(md.snapshots.exists(_.id == sid), s"no snapshot $sid"))
+    val rows = graft.sources.LakeSource.engineRead(spark, this, Map.empty,
+      asOfSnapshot, Seq.empty, metaCols = true)
+    rows.select(rows.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
+      col(RowIdMetaCol).as("_row_id", Metadata.empty),
+      col(LastUpdMetaCol).as("_last_updated_sequence_number",
+        Metadata.empty)): _*)
   }
 
   /** Live files surviving partition + stats pruning under the current
@@ -1679,13 +1668,32 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       current, prune, statsFilters, md.schemaOpt)
   }
 
-  /** One reconciling scan group per schema version, unioned; rows at
-    * positions marked by live merge-on-read delete files are dropped
-    * via an anti-join on (file URI, row position) — `_metadata` columns
-    * on the read side match the values captured at delete-write time,
-    * and the (small) delete set broadcasts.
+  /** The parquet-stack read of an explicit file list: one reconciling
+    * scan group per schema version, unioned; rows at positions marked
+    * by `deletes` are dropped via an anti-join on (file URI, row
+    * position) — `_metadata` columns on the read side match the values
+    * captured at delete-write time, and the (small) delete set
+    * broadcasts — vectors by an in-stage bitmap probe, equality
+    * batches by one anti-join per key set.
+    *
+    * [[read]], [[readLineage]] and the merge-on-read row-op scan run on
+    * the connector instead. The callers that stay read a file list, or
+    * a delete state, that is not a snapshot's live view:
+    *  - constraint validation (`validateFiles`, CHECK scans) reads
+    *    only the files their footers and stats could not prove
+    *    (ConstraintSpec);
+    *  - incremental and changelog reads (`changesBetween`, the
+    *    changelog views) read a snapshot range's added or removed
+    *    files (LakeSpec, ChangelogCowSpec, ChangelogReplaceSpec);
+    *  - scoped compaction (`compactScoped`) and the copy-on-write
+    *    DELETE/UPDATE/MERGE rewrite the files they selected, with the
+    *    live deletes and lineage (MaintenanceSpec, DvRandomSpec,
+    *    RowOpsSpec, RowLineageSpec);
+    *  - branch and write-audit-publish reads (`readBranch`,
+    *    `readStaged`) and branch copy-on-write read a fork-base or live
+    *    state plus re-sequenced staged commits (BranchSpec, WapSpec).
     */
-  private[lake] def readFiles(spark: SparkSession, files: Seq[DataFileMeta],
+  private[graft] def readFiles(spark: SparkSession, files: Seq[DataFileMeta],
       target: StructType,
       deletes: Map[String, DeleteSet] = Map.empty,
       eqDeletes: Seq[EqDeleteMeta] = Seq.empty,
@@ -1732,26 +1740,15 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       val vecAlive = if (dvRefs.isEmpty) base else
         base.filter(!LakeTable.dvDeletedCol(spark,
           col("_metadata.file_path"), col("_metadata.row_index"), dvRefs))
-      val delPaths = groupDel.flatMap(_.paths).distinct
-      val alive = if (delPaths.isEmpty) vecAlive else {
-        // delete files store plain normalized paths; _metadata.file_path
-        // is a url-encoded URI — normalize it for the join
-        val del = spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(delPaths: _*)
-          .withColumnRenamed("file_path", "_graft_dfile")
-          .withColumnRenamed("pos", "_graft_dpos")
-        vecAlive
-          .withColumn("_graft_dfile",
-            LakeTable.normalizeUdf(col("_metadata.file_path")))
-          .withColumn("_graft_dpos", col("_metadata.row_index"))
-          .join(del, Seq("_graft_dfile", "_graft_dpos"), "left_anti")
-      }
       // row lineage (v3 inheritance rule): a row's id is its
       // materialized _graft_row_id when the file carries one and the
       // cell is non-null, else firstRowId + row_position; the
       // last-updated sequence inherits the file's data sequence the
       // same way. Both file constants resolve through a codegen'd
-      // path-keyed lookup — no join, stays in the scan stage.
+      // path-keyed lookup — no join, stays in the scan stage. Tagged
+      // in one projection with the delete-join keys, BEFORE the
+      // position-delete anti-join: `_metadata` does not resolve above
+      // the join.
       val lineageCols: Seq[Column] = if (!lineage) Seq.empty else {
         val firstRefs = group.collect {
           case f if f.firstRowId >= 0 =>
@@ -1772,8 +1769,23 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         else Seq(computedId.as("_row_id"),
           computedSeq.as("_last_updated_sequence_number"))
       }
-      val projected = alive.select(
-        Reconcile.projection(fileSchema, target) ++ lineageCols: _*)
+      val delPaths = groupDel.flatMap(_.paths).distinct
+      // delete files store plain normalized paths; _metadata.file_path
+      // is a url-encoded URI — normalize it for the join
+      val posCols = if (delPaths.isEmpty) Nil else Seq(
+        LakeTable.normalizeUdf(col("_metadata.file_path")).as("_graft_dfile"),
+        col("_metadata.row_index").as("_graft_dpos"))
+      val tagged = if (lineageCols.isEmpty && posCols.isEmpty) vecAlive
+        else vecAlive.select(col("*") +: (lineageCols ++ posCols): _*)
+      val alive = if (delPaths.isEmpty) tagged else {
+        val del = spark.read.schema(LakeTable.DeleteFileSchema)
+          .parquet(delPaths: _*)
+          .withColumnRenamed("file_path", "_graft_dfile")
+          .withColumnRenamed("pos", "_graft_dpos")
+        tagged.join(del, Seq("_graft_dfile", "_graft_dpos"), "left_anti")
+      }
+      val projected = alive.select(Reconcile.projection(fileSchema, target) ++
+        (if (!lineage) Nil else LakeTable.lineageFields.map(f => col(f.name))): _*)
       // anti-join the applicable equality batches, one join per
       // distinct key-column set; keys resolve by FIELD ID against the
       // target schema (rename-proof — batches store columns as k<id>).
@@ -2032,7 +2044,7 @@ object LakeTable {
     * by the two writers (commitMoR's select and LakeDeltaWriter's
     * deleteSchema). Passing it to the reads skips schema inference,
     * which launches a footer-merge Spark job per call (r17). */
-  private[lake] val DeleteFileSchema: StructType = StructType(Seq(
+  private[graft] val DeleteFileSchema: StructType = StructType(Seq(
     StructField("file_path", StringType),
     StructField("pos", LongType)))
 

@@ -272,12 +272,9 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     if (currentHintVersion() != loadedVersion)
       throw new java.util.ConcurrentModificationException(
         s"table $location was committed concurrently; reload and retry")
-    val candidates = LakeTable.matchingFiles(
-      LakeTable.liveFiles(md.snapshots, prune, md.currentSchema, statsFilters),
-      md.currentSchema, prune, statsFilters, md.schemaOpt)
-    if (candidates.isEmpty) return None
-    val matched = liveRowsWithPos(spark, candidates)
-      .filter(coalesce(predicate, lit(false)))
+    if (plannedFiles(prune, statsFilters).isEmpty) return None
+    val matched = liveRowsWithPos(spark, prune, statsFilters)
+      .filter(predicate)
     commitMoR(spark, matched, appended = None)
   }
 
@@ -296,15 +293,12 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     if (currentHintVersion() != loadedVersion)
       throw new java.util.ConcurrentModificationException(
         s"table $location was committed concurrently; reload and retry")
-    val candidates = LakeTable.matchingFiles(
-      LakeTable.liveFiles(md.snapshots, prune, md.currentSchema, statsFilters),
-      md.currentSchema, prune, statsFilters, md.schemaOpt)
-    if (candidates.isEmpty) return None
+    if (plannedFiles(prune, statsFilters).isEmpty) return None
     // one materialization feeds both the delete positions and the
     // updated copies (localCheckpoint: reclaimed when the df drops)
-    val matched = liveRowsWithPos(spark, candidates,
+    val matched = liveRowsWithPos(spark, prune, statsFilters,
       lineage = writesVectors)
-      .filter(coalesce(predicate, lit(false))).localCheckpoint()
+      .filter(predicate).localCheckpoint()
     // a v3 updated copy is the SAME row: it materializes the matched
     // row's id and nulls its last-updated so inheritance re-stamps the
     // new file's sequence — identical semantics to the CoW update path
@@ -349,18 +343,33 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val srcKeyed = source.select(
       (keys.map(k => col(s"`$k`")) ++
         setCols.map(c => col(s"`$c`").as(s"_src_$c"))): _*)
-    val dupKey = srcKeyed.groupBy(keys.map(k => col(s"`$k`")): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
+    val keyCols = keys.map(k => col(s"`$k`"))
+    // a driver-resident source (LakeTable.isLocalPlan) is checked on
+    // the driver — collecting a LocalRelation runs no Spark job; the
+    // refusal names the key as the groupBy's row would, count included
+    val dupKey =
+      if (LakeTable.isLocalPlan(source)) {
+        val norm: Any => Any = {
+          case d: Double if d == 0.0 => 0.0 // -0.0 groups with 0.0
+          case f: Float if f == 0.0f => 0.0f
+          case v => v
+        }
+        source.select(keyCols: _*).collect().toSeq
+          .groupBy(r => r.toSeq.map(norm)).collectFirst {
+            case (k, rs) if rs.size > 1 =>
+              org.apache.spark.sql.Row.fromSeq(k :+ rs.size.toLong)
+          }.toSeq
+      } else srcKeyed.groupBy(keyCols: _*)
+        .count().filter(col("count") > 1).limit(1).collect().toSeq
     require(dupKey.isEmpty,
       s"merge source has multiple rows for key ${dupKey.headOption}")
 
-    val candidates = LakeTable.liveFiles(md.snapshots)
     // v3 lineage carries only through UPDATE copies — they ARE the
     // matched rows; deletes retire ids and inserts take fresh ones
     val carryIds = writesVectors && onMatch == "update"
     val matched =
-      if (candidates.isEmpty || onMatch == "keep") None
-      else Some(liveRowsWithPos(spark, candidates, lineage = carryIds)
+      if (plannedFiles().isEmpty || onMatch == "keep") None
+      else Some(liveRowsWithPos(spark, lineage = carryIds)
         .join(srcKeyed, keys, "inner").localCheckpoint())
     val updatedCopies = matched.filter(_ => onMatch == "update").map { m =>
       val lineageSel: Seq[Column] =
@@ -371,8 +380,22 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
         if (setCols.contains(n)) col(s"`_src_$n`").as(n) else col(s"`$n`")
       } ++ lineageSel: _*), schema, LakeTable.matLineageCols)
     }
+    // the matched keys ARE the target's keys among the source's (inner
+    // join vs. left_anti on the same keys; NULL keys match neither), so
+    // the insert side anti-joins the checkpointed match instead of a
+    // second full scan of the target. Spark cannot size a checkpoint;
+    // the match is bounded by the source, so it broadcasts whenever the
+    // source would — the insert rows keep the source's partitioning (a
+    // shuffle join would re-partition them, and the write's file count
+    // with them)
     val inserts = if (!insertUnmatched) None else {
-      val targetKeys = read(spark).select(keys.map(k => col(s"`$k`")): _*)
+      val targetKeys = matched match {
+        case Some(m) if source.queryExecution.optimizedPlan.stats.sizeInBytes <=
+            org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold =>
+          broadcast(m.select(keyCols: _*))
+        case Some(m) => m.select(keyCols: _*)
+        case None => read(spark).select(keyCols: _*)
+      }
       Some(Align(source.join(targetKeys, keys, "left_anti"), schema))
     }
     // allowMissingColumns: inserted rows carry no materialized lineage
@@ -391,64 +414,37 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     }
   }
 
-  /** Live rows of `candidates` under the current schema, tagged with
-    * (file URI, row position), existing merge-on-read deletes already
-    * excluded — the shared front half of every MoR row-level op.
-    * With `lineage` (v3 update paths), each row additionally carries
-    * its `_row_id` (materialized column when the file has one, else
-    * `firstRowId + position` — the same inheritance rule as
-    * [[readFiles]]) so an updated copy can preserve the row's
-    * identity through the delete+insert.
+  /** Live rows under the current schema (narrowed by `prune` /
+    * `statsFilters` exactly as [[read]]), tagged with `_graft_dfile` /
+    * `_graft_dpos` — the normalized data-file path and file-absolute
+    * row position, taken from the connector's `_graft_file` /
+    * `_graft_pos` metadata columns — the shared front half of every
+    * MoR row-level op. Existing position deletes and deletion vectors
+    * apply inside the reader ([[graft.sources.LakeSource.engineRead]]),
+    * so matched rows never re-match a deleted position. With
+    * `lineage` (v3 update paths), each row additionally carries its
+    * `_row_id` (materialized column when the file has one, else
+    * `firstRowId + position`) so an updated copy can preserve the
+    * row's identity through the delete+insert.
     */
-  private[lake] def liveRowsWithPos(spark: SparkSession,
-      candidates: Seq[DataFileMeta], lineage: Boolean = false): DataFrame = {
-    val existing = LakeTable.liveDeletes(md.snapshots)
-    val tagged = candidates
-      .groupBy(f => (f.schemaId, lineage && f.lineageCols))
-      .map { case ((schemaId, withMat), group) =>
-      val fileSchema = md.schemaById(schemaId)
-      val cleanSchema = Reconcile.clean(fileSchema).asInstanceOf[StructType]
-      val base = spark.read
-        .schema(if (withMat) StructType(cleanSchema.fields ++ Seq(
-            StructField("_graft_row_id", LongType),
-            StructField("_graft_last_updated", LongType)))
-          else cleanSchema)
-        .parquet(group.map(_.path): _*)
-        .withColumn("_graft_dfile",
-          LakeTable.normalizeUdf(col("_metadata.file_path")))
-        .withColumn("_graft_dpos", col("_metadata.row_index"))
-      val lineageCols: Seq[Column] = if (!lineage) Seq.empty else {
-        val firstRefs = group.collect {
-          case f if f.firstRowId >= 0 =>
-            LakeTable.normalizePath(f.path) -> f.firstRowId
-        }.toMap
-        val computedId = LakeTable.fileConstCol(spark,
-          col("_metadata.file_path"), firstRefs) +
-          col("_metadata.row_index")
-        if (withMat)
-          Seq(coalesce(col("_graft_row_id"), computedId).as("_row_id"))
-        else Seq(computedId.as("_row_id"))
-      }
-      base.select(Reconcile.projection(fileSchema, md.currentSchema) ++
-        Seq(col("_graft_dfile"), col("_graft_dpos")) ++ lineageCols: _*)
-    }.reduce(_.unionByName(_))
-    val existingSets = candidates
-      .flatMap(f => existing.get(LakeTable.normalizePath(f.path)))
-    // rows already deleted by a deletion vector must not re-match
-    // (same reason the parquet anti-join below exists)
-    val dvRefs = existingSets.flatMap(_.dv)
-      .map(d => LakeTable.normalizePath(d.dataPath) ->
-        ((d.dvPath, d.offset, d.length))).toMap
-    val vecLive = if (dvRefs.isEmpty) tagged else
-      tagged.filter(!LakeTable.dvDeletedCol(spark,
-        col("_graft_dfile"), col("_graft_dpos"), dvRefs))
-    val oldDeletePaths = existingSets.flatMap(_.paths).distinct
-    if (oldDeletePaths.isEmpty) vecLive
-    else vecLive.join(spark.read.schema(LakeTable.DeleteFileSchema)
-        .parquet(oldDeletePaths: _*)
-        .select(col("file_path").as("_graft_dfile"),
-          col("pos").as("_graft_dpos")),
-      Seq("_graft_dfile", "_graft_dpos"), "left_anti")
+  private[graft] def liveRowsWithPos(spark: SparkSession,
+      prune: Map[String, Set[String]] = Map.empty,
+      statsFilters: Seq[RangeFilter] = Seq.empty,
+      lineage: Boolean = false): DataFrame = {
+    import graft.sources.LakeSource.{FileMetaCol, PosMetaCol, RowIdMetaCol}
+    val rows = graft.sources.LakeSource.engineRead(spark, this, prune, None,
+      statsFilters, metaCols = true)
+    // declared as the parquet stack declared them (a nullable path, no
+    // metadata-column tags): the delete files written from these
+    // columns keep their layout
+    val path = org.apache.spark.sql.GraftPlanBridge.column(
+      org.apache.spark.sql.catalyst.expressions.KnownNullable(
+        org.apache.spark.sql.GraftPlanBridge.expression(col(FileMetaCol))))
+    rows.select(rows.columns.toSeq.map(c => col(s"`$c`")) ++
+      Seq(path.as("_graft_dfile", Metadata.empty),
+        col(PosMetaCol).as("_graft_dpos", Metadata.empty)) ++
+      (if (lineage) Seq(col(RowIdMetaCol).as("_row_id", Metadata.empty))
+       else Nil): _*)
   }
 
   /** Commit one merge-on-read snapshot: `matched` rows (tagged with

@@ -57,8 +57,30 @@ private[sources] object LakeReaderFactory {
     ps.nonEmpty && ps.forall {
       case fp: LakeFilePartition => vectorizable(fp)
       case kp: LakeKeyedFilePartition => vectorizable(kp.toFilePartition)
+      case mp: LakeMultiFilePartition => mp.parts.forall(vectorizable)
       case _ => false
     }
+}
+
+/** One packed partition's file reads chained in order: each inner
+  * reader opens when its predecessor is exhausted and closes before
+  * the next opens, so a task holds one open file at a time.
+  */
+private[sources] class ChainedPartitionReader[T](
+    parts: Seq[LakeFilePartition], open: LakeFilePartition => PartitionReader[T])
+    extends PartitionReader[T] {
+  private val rest = parts.iterator
+  private var cur: PartitionReader[T] = _
+  override def next(): Boolean = {
+    while (cur == null || !cur.next()) {
+      if (cur != null) { cur.close(); cur = null }
+      if (!rest.hasNext) return false
+      cur = open(rest.next())
+    }
+    true
+  }
+  override def get(): T = cur.get()
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
 /** The per-scan columnar flag, shared between the Batch (which sets it
@@ -102,10 +124,17 @@ private[sources] class LakeReaderFactory(
     partition match {
       case fp: LakeFilePartition => mk(fp)
       case kp: LakeKeyedFilePartition => mk(kp.toFilePartition)
+      case mp: LakeMultiFilePartition => new ChainedPartitionReader(mp.parts, mk)
       case other => throw new UnsupportedOperationException(
         s"no columnar reader for $other")
     }
   }
+
+  private def fileReader(p: LakeFilePartition): PartitionReader[InternalRow] =
+    BatchRowLakeReader.plan(p) match {
+      case Some(pl) => new BatchRowLakeReader(p, pl)
+      case None => new GroupRowReader(p)
+    }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -115,17 +144,10 @@ private[sources] class LakeReaderFactory(
         override def get(): InternalRow = new GenericInternalRow(values)
         override def close(): Unit = ()
       }
-      case p: LakeFilePartition =>
-        BatchRowLakeReader.plan(p) match {
-          case Some(pl) => new BatchRowLakeReader(p, pl)
-          case None => new GroupRowReader(p)
-        }
-      case p: LakeKeyedFilePartition =>
-        val fp = p.toFilePartition
-        BatchRowLakeReader.plan(fp) match {
-          case Some(pl) => new BatchRowLakeReader(fp, pl)
-          case None => new GroupRowReader(fp)
-        }
+      case p: LakeFilePartition => fileReader(p)
+      case p: LakeKeyedFilePartition => fileReader(p.toFilePartition)
+      case p: LakeMultiFilePartition =>
+        new ChainedPartitionReader(p.parts, fileReader)
       case p: LakeEqMarkerPartition => new EqMarkerReader(p)
       case p: LakeChangelogPartition =>
         val innerReader = createReader(p.inner)

@@ -39,6 +39,59 @@ private[graft] object LakeSource {
     name == FileMetaCol || name == PosMetaCol ||
       name == RowIdMetaCol || name == LastUpdMetaCol
 
+  /** An engine-internal read of `t` through the connector
+    * ([[LakeTable.read]], the merge-on-read row-op scan): a
+    * `DataSourceV2Relation` over a [[LakeSparkTable]] pinned to the
+    * handle's CURRENT view, so the readers apply position deletes,
+    * deletion vectors and equality batches inside the scan — no
+    * anti-join — and column pruning and row-group skipping apply. It
+    * reads the files `prune`/`statsFilters` keep ([[LakeReadPin]]).
+    * The output mirrors a parquet read of the reconciled schema: every
+    * column nullable, no field metadata. The metadata columns
+    * ([[FileMetaCol]] etc.) stay resolvable on the relation; a caller
+    * that selects them passes `metaCols`, which declines VARIANT
+    * extraction pushdown — the accepted-extraction scan serves data
+    * columns only (VariantScanPrep declines it only for a Project that
+    * extracts from a variant).
+    */
+  def engineRead(spark: org.apache.spark.sql.SparkSession, t: LakeTable,
+      prune: Map[String, Set[String]], asOfSnapshot: Option[Long],
+      statsFilters: Seq[graft.lake.RangeFilter], metaCols: Boolean = false)
+      : org.apache.spark.sql.DataFrame = {
+    val view = t.frozenView
+    val md = view.metadata
+    val table = new LakeSparkTable(view.location.getParent.getParent.toString,
+      md.database, md.table, 0L, view, asOfSnapshot,
+      pin = Some(LakeReadPin(view, prune, statsFilters)))
+    val schema = asOfSnapshot.map(view.schemaAsOf)
+      .getOrElse(view.currentSchema)
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(Reconcile.clean(asNullable(schema)).asInstanceOf[StructType])
+    org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation(
+        table, output, None, None,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          if (!metaCols) java.util.Map.of()
+          else java.util.Map.of(VariantScanPrep.RefuseVariantsKey, "true")),
+        None))
+  }
+
+  /** `st` with every field, element and map value nullable at every
+    * level, field metadata (ids) kept — the shape a parquet read
+    * declares.
+    */
+  def asNullable(st: StructType): StructType = {
+    def go(dt: DataType): DataType = dt match {
+      case s: StructType => asNullable(s)
+      case ArrayType(et, _) => ArrayType(go(et), containsNull = true)
+      case MapType(kt, vt, _) => MapType(go(kt), go(vt),
+        valueContainsNull = true)
+      case other => other
+    }
+    StructType(st.fields.map(f =>
+      f.copy(dataType = go(f.dataType), nullable = true)))
+  }
+
   /** Changelog-mode columns (option("changelog", "true") on a stream
     * read): same names/semantics as `LakeTable.changelogBetween`.
     */

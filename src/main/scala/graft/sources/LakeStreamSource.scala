@@ -39,12 +39,14 @@ import graft.schema.FieldIds
   * Batch reads (`spark.read.format("graft-lake")`) plan the current
   * live file set through the same reader.
   *
-  * Scale: planInputPartitions is a metadata-only walk (one partition
-  * per data file — no listing, no footer reads on the driver); each
-  * file is read by one task and reconciled to the stream-start schema
-  * by field ID, so mid-stream schema evolution never breaks a running
-  * query. Reconciliation runs recursively through structs, lists and
-  * maps; every TypeMapper type (decimal included) is supported.
+  * Scale: planInputPartitions is a metadata-only walk (no listing, no
+  * footer reads on the driver): batch scans pack small files into
+  * tasks by Spark's file-source rule (`LakeScan.pack`), streams plan
+  * one partition per data file; each file is reconciled to the
+  * stream-start schema by field ID, so mid-stream schema evolution
+  * never breaks a running query. Reconciliation runs recursively
+  * through structs, lists and maps; every TypeMapper type (decimal
+  * included) is supported.
   */
 class LakeStreamProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-lake"
@@ -81,7 +83,8 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
     startSnapshot: Long, lake: LakeTable,
     val asOfSnapshot: Option[Long] = None,
     val branchName: Option[String] = None,
-    changelogMode: Boolean = false)
+    changelogMode: Boolean = false,
+    val pin: Option[LakeReadPin] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -186,9 +189,12 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     filters.forall(LakeSource.convertibleFilter)
 
-  // a version pin reads under the schema current AT that snapshot
-  private lazy val pinnedSchema: StructType =
-    asOfSnapshot.map(lake.schemaAsOf).getOrElse(lake.currentSchema)
+  // a version pin reads under the schema current AT that snapshot; an
+  // engine-internal read declares it nullable (LakeSource.engineRead)
+  private lazy val pinnedSchema: StructType = {
+    val s = asOfSnapshot.map(lake.schemaAsOf).getOrElse(lake.currentSchema)
+    if (pin.isDefined) LakeSource.asNullable(s) else s
+  }
 
   override def name(): String = s"graft.$db.$tbl"
   // surfaces in DESCRIBE EXTENDED / SHOW TBLPROPERTIES
@@ -291,7 +297,8 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
         .map(_.split(",").toSeq.filter(_.nonEmpty)),
       refuseVariants =
         Option(options.get(VariantScanPrep.RefuseVariantsKey))
-          .exists(_.toBoolean))
+          .exists(_.toBoolean),
+      pin = pin)
   }
 
   /** INSERT INTO / df.writeTo(...).append() via the V1 write bridge:
@@ -399,6 +406,19 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
   }
 }
 
+/** An engine-internal read ([[LakeTable.read]], the merge-on-read
+  * row-op scan): the scan plans from `table` — the CALLING handle's
+  * metadata (snapshot log, schemas, an open transaction's staged
+  * view) captured when the read was built — instead of reloading the
+  * table by name. It reads exactly the live files the caller's
+  * partition `prune` and min/max `statsFilters` keep (resolved against
+  * the read schema, like `LakeTable.plannedFiles`); Spark's own pushed
+  * and runtime filters skip row groups inside them only.
+  */
+private[graft] case class LakeReadPin(table: LakeTable,
+    prune: Map[String, Set[String]] = Map.empty,
+    statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty)
+
 /** Scan planning with the two pushdowns that matter at scale:
   *
   *  - column pruning (`SupportsPushDownRequiredColumns`): the scan's
@@ -423,7 +443,8 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
     changelogMode: Boolean = false,
     rowLevelOp: Boolean = false,
     referencedCols: Option[Seq[String]] = None,
-    refuseVariants: Boolean = false)
+    refuseVariants: Boolean = false,
+    pin: Option[LakeReadPin] = None)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -460,8 +481,12 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
     // an incremental range reads raw added files, not the live set —
     // the metadata rollups below would answer for the wrong row set
     if (incremental.isDefined) return false
+    // a pinned read's prune/stats narrowing is a row-set restriction
+    // the whole-table rollups below cannot honour
+    if (pin.exists(p => p.prune.nonEmpty || p.statsFilters.nonEmpty))
+      return false
 
-    val t = LakeTable.load(wh, db, tbl)
+    val t = pin.map(_.table).getOrElse(LakeTable.load(wh, db, tbl))
     val visible = LakeSource.visibleSnapshots(t, asOfSnapshot)
     val live = LakeTable.liveFiles(visible)
     val deletes = LakeTable.liveDeletes(visible)
@@ -628,7 +653,7 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
   override def build(): Scan =
     new LakeScan(wh, db, tbl, startSnapshot, target, stats, aggResult,
       asOfSnapshot, onPlanned, maxSnapshotsPerTrigger, branchName,
-      skipDeleteSnapshots, incremental, changelogMode, rowLevelOp)
+      skipDeleteSnapshots, incremental, changelogMode, rowLevelOp, pin)
 }
 
 private[sources] class LakeScan(wh: String, db: String, tbl: String,
@@ -642,7 +667,8 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     skipDeleteSnapshots: Boolean = false,
     incremental: Option[(Long, Long)] = None,
     changelogMode: Boolean = false,
-    rowLevelOp: Boolean = false) extends Scan
+    rowLevelOp: Boolean = false,
+    pin: Option[LakeReadPin] = None) extends Scan
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering
@@ -650,7 +676,7 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
 
   // one metadata load shared by statistics and batch planning
   private lazy val planned = {
-    val t = LakeTable.load(wh, db, tbl)
+    val t = pin.map(_.table).getOrElse(LakeTable.load(wh, db, tbl))
     incremental match {
       case Some((from, to)) =>
         // rows ADDED in (from, to] — raw append/upsert files, no
@@ -717,10 +743,24 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
           LakeTable.liveEqDeletes(visible) ++ branchEqs)
       case None =>
         val visible = LakeSource.visibleSnapshots(t, asOfSnapshot)
-        (t, LakeTable.matchingFiles(
-          LakeTable.liveFiles(visible, Map.empty, target, statsFilters),
-          target, Map.empty, statsFilters,
-          t.metadata.schemaOpt), LakeTable.liveDeletes(visible),
+        val files = pin match {
+          case Some(p) =>
+            // exactly the caller's file set — its narrowing, against the
+            // whole read schema (its columns need not survive column
+            // pruning). Spark's pushed filters skip row groups inside
+            // these files but drop none of them: the tasks stay the
+            // parquet read's (file skipping would re-size the packing,
+            // and with it the files written from the scan)
+            val schema = asOfSnapshot.map(t.schemaAsOf)
+              .getOrElse(t.currentSchema)
+            LakeTable.matchingFiles(LakeTable.liveFiles(visible, p.prune,
+              schema, p.statsFilters), schema, p.prune, p.statsFilters,
+              t.metadata.schemaOpt)
+          case None => LakeTable.matchingFiles(
+            LakeTable.liveFiles(visible, Map.empty, target, statsFilters),
+            target, Map.empty, statsFilters, t.metadata.schemaOpt)
+        }
+        (t, files, LakeTable.liveDeletes(visible),
           LakeTable.liveEqDeletes(visible))
     }
   }
@@ -791,7 +831,9 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
         case t => graft.lake.Transforms.bucketCount(t).isDefined
       }
     val cols = spec.fields.map(f => srcField(f.sourceFieldId).map(f -> _))
-    if (aggResult.isEmpty && files.nonEmpty &&
+    // engine-internal reads report no layout, as the parquet read they
+    // replace: their small files pack instead of grouping by key
+    if (aggResult.isEmpty && files.nonEmpty && pin.isEmpty &&
         spec.fields.nonEmpty &&
         files.forall(_.specId == spec.id) &&
         cols.forall(_.isDefined) &&
@@ -861,13 +903,23 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     * join is metadata-planned. Conservative: reported only when EVERY
     * live file carries the same recorded sort ids and they all survive
     * column pruning (merge-on-read position deletes drop rows in
-    * place, preserving order).
+    * place, preserving order). A scan that reports an ordering keeps
+    * one file per partition — packed small files would concatenate
+    * sorted runs. Engine-internal reads report none (as the parquet
+    * read they replace) and pack.
     */
   override def outputOrdering()
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    ordering
+
+  private lazy val ordering = fileSortOrder()
+
+  private def fileSortOrder()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
     val files = planned._2
-    if (aggResult.nonEmpty || files.isEmpty) return Array.empty
+    if (aggResult.nonEmpty || files.isEmpty || pin.isDefined)
+      return Array.empty
     val ids = files.head.sortedByIds
     if (ids.isEmpty || !files.forall(_.sortedByIds == ids)) return Array.empty
     val names = ids.map(id => target.fields
@@ -1000,8 +1052,9 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     // (applied to the scan after static planning) take effect
     def planInputPartitions(): Array[InputPartition] = {
       val (t, matched, _, _) = planned
-      val files = LakeTable.matchingFiles(matched, target,
-        Map.empty, runtimeRanges, t.metadata.schemaOpt)
+      val files = if (pin.isDefined) matched
+        else LakeTable.matchingFiles(matched, target, Map.empty,
+          runtimeRanges, t.metadata.schemaOpt)
       onPlanned(files) // row-level ops capture the replaced group here
       val ext = LakeSource.externalTest(t.location)
       val out: Array[InputPartition] = keyedSpec match {
@@ -1038,7 +1091,18 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
             .flatMap(s => scala.util.Try(s.toLong).toOption)
             .map(math.max(_, 4096L))
             .getOrElse(128L * 1024 * 1024)
-          files.flatMap { f =>
+          // Spark's file-source sizing (FilePartition.maxSplitBytes):
+          // the split unit never exceeds what spark.read.parquet would
+          // cut the same files into, so a scan plans the same pieces
+          val session = org.apache.spark.sql.SparkSession.active
+          val openCost = org.apache.spark.sql.internal.SQLConf.get
+            .filesOpenCostInBytes
+          val packable = files.filter(f => f.bytes >= 0 && !ext(f.path))
+          val maxSplit = org.apache.spark.sql.execution.datasources
+            .FilePartition.maxSplitBytes(session,
+              packable.map(_.bytes + openCost).sum)
+          val unit = math.min(splitTarget, maxSplit)
+          val pieces = files.flatMap { f =>
             val deletes = deletePathsFor(f)
             val eqs = eqBatchesFor(f)
             val dv = dvFor(f)
@@ -1059,22 +1123,23 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
               pushedRanges =
                 if (rowLevelOp) Seq.empty
                 else statsFilters ++ runtimeRanges)
-            if (rowLevelOp || isExt || f.bytes <= splitTarget)
-              Seq(one)
+            if (rowLevelOp || isExt || f.bytes <= unit)
+              Seq((one, f.bytes))
             else {
               // cap the fan-out per file: a tiny configured target on
               // a huge file must widen its ranges, not flood the
               // planner with partitions
-              val eff = math.max(splitTarget,
-                (f.bytes + 8191) / 8192)
+              val eff = math.max(unit, (f.bytes + 8191) / 8192)
               val n = ((f.bytes + eff - 1) / eff).toInt
               (0 until n).map { i =>
                 val st = i.toLong * eff
-                one.copy(start = st,
-                  length = math.min(eff, f.bytes - st))
+                val len = math.min(eff, f.bytes - st)
+                (one.copy(start = st, length = len), len)
               }
             }
-          }.toArray
+          }
+          if (ordering.nonEmpty) pieces.map(_._1).toArray
+          else LakeScan.pack(session, pieces, maxSplit).toArray
       }
       decision.allColumnar = LakeReaderFactory.allVectorizable(out)
       out
@@ -1102,6 +1167,48 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     new LakeMicroBatchStream(wh, db, tbl, startSnapshot, target,
       maxSnapshotsPerTrigger, skipDeleteSnapshots, changelogMode)
 }
+
+private[sources] object LakeScan {
+  /** Small-file packing, Spark's file-source rule verbatim
+    * (`FilePartition.getFilePartitions` over pieces sorted by size,
+    * descending — next-fit with `spark.sql.files.openCostInBytes` per
+    * piece, bounded by `maxSplit`): a lake scan plans exactly the
+    * tasks `spark.read.parquet` would over the same files, so a write
+    * fed by the scan (compaction, MV publication) writes the same
+    * number of files, in the same row order (pieces largest first, as
+    * the file source reads them). External files and pieces of unknown
+    * size keep a partition of their own, after the packed ones.
+    */
+  def pack(session: org.apache.spark.sql.SparkSession,
+      pieces: Seq[(LakeFilePartition, Long)],
+      maxSplit: Long): Seq[InputPartition] = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val ps = pieces.toIndexedSeq
+    val (packable, alone) = ps.zipWithIndex
+      .partition { case ((p, bytes), _) => bytes >= 0 && !p.external }
+    val byFile = new java.util.IdentityHashMap[PartitionedFile, Int]()
+    val files = packable.map { case ((p, bytes), i) =>
+      val pf = PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPathString(p.path),
+        p.start, bytes)
+      byFile.put(pf, i)
+      pf
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    val groups = FilePartition.getFilePartitions(session, files, maxSplit)
+      .map(_.files.map(byFile.get).toSeq) ++
+      alone.map { case (_, i) => Seq(i) }
+    groups.map {
+      case Seq(i) => ps(i)._1
+      case many => LakeMultiFilePartition(many.map(ps(_)._1))
+    }
+  }
+}
+
+/** Several small-file reads served by one task, in order — the
+  * packed input partition of [[LakeScan.pack]].
+  */
+private[sources] case class LakeMultiFilePartition(
+    parts: Seq[LakeFilePartition]) extends InputPartition
 
 private[sources] case class LakeOffset(snapshotId: Long) extends Offset {
   override def json(): String = snapshotId.toString

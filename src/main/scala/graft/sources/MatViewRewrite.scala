@@ -75,8 +75,12 @@ object MatViewRewrite {
     // fast bail: no aggregate over a lake relation, nothing to do
     val hasLakeAgg = plan.exists {
       case a: Aggregate => a.child.exists {
-        case r: DataSourceV2Relation =>
-          r.table.isInstanceOf[LakeSparkTable]
+        // engine-internal reads (pinned to a handle) read exactly the
+        // handle's state — a view never answers for them
+        case r: DataSourceV2Relation => r.table match {
+          case t: LakeSparkTable => t.pin.isEmpty
+          case _ => false
+        }
         case _ => false
       }
       case _ => false

@@ -305,7 +305,7 @@ private[graft] object MatViews {
       case r: DataSourceV2Relation => r.table match {
         case t: LakeSparkTable
             if t.wh == warehouse && t.asOfSnapshot.isEmpty &&
-              t.branchName.isEmpty =>
+              t.branchName.isEmpty && t.pin.isEmpty =>
           Some((t.db, t.tbl))
         case _ => None
       }

@@ -21,6 +21,14 @@ import graft.lake.{DeletionVectors, Engine, LakeTable}
 class DvSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** The parquet-stack file-list read (`readFiles`) of every live file
+    * with the live delete state — the shape scoped compaction and the
+    * copy-on-write rewrites read.
+    */
+  private def fileListRead(t: LakeTable): DataFrame =
+    t.readFiles(spark, t.plannedFiles(), t.currentSchema,
+      LakeTable.liveDeletes(t.metadata.snapshots))
+
   private def mkTable(tag: String): (String, LakeTable) = {
     val wh = Files.createTempDirectory(s"graft-dv-$tag").toString
     Engine.processTableDefJson(wh,
@@ -200,7 +208,15 @@ class DvSpec extends AnyFunSuite {
     val (_, t) = mkTable("plan")
     t.append(df((1L to 6L).map(i => (i, s"v$i"))))
     t.deleteMoR(spark, col("id") <= 2L)
-    val qe = t.read(spark).queryExecution
+    // the connector read applies the vector inside its reader: no
+    // join, no probe expression
+    val rp = t.read(spark).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!rp.contains("Join") && !rp.contains("dvdeleted("), rp)
+    assert(t.read(spark).count() == 4L)
+    // the file-list reads that stay on the parquet stack (scoped
+    // compaction, copy-on-write rewrites) probe the bitmap in-stage
+    val qe = fileListRead(t).queryExecution
     val p = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(p.contains("dvdeleted("),
       "the vector probe expression must be in the plan:\n" + p)
@@ -295,7 +311,7 @@ class DvSpec extends AnyFunSuite {
       .repartition(100))
     LakeTable.load(whW, "d", "t").deleteMoR(spark, col("id") % 4L === 0L)
     val (wideBytes, wideBc) =
-      lookupBytes(LakeTable.load(whW, "d", "t").read(spark))
+      lookupBytes(fileListRead(LakeTable.load(whW, "d", "t")))
     assert(wideBc, "a wide delete's refs must ride as a broadcast")
     assert(wideBytes < 4096,
       s"serialized lookup must be O(1), got $wideBytes bytes")
@@ -304,7 +320,7 @@ class DvSpec extends AnyFunSuite {
     tN.append(df(Seq((1L, "a"), (2L, "b"), (3L, "c"))))
     LakeTable.load(whN, "d", "t").deleteMoR(spark, col("id") === 2L)
     val (_, narrowBc) =
-      lookupBytes(LakeTable.load(whN, "d", "t").read(spark))
+      lookupBytes(fileListRead(LakeTable.load(whN, "d", "t")))
     assert(!narrowBc, "a narrow delete's refs must stay inline")
   }
 

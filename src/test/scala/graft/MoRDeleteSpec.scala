@@ -197,6 +197,71 @@ class MoRDeleteSpec extends AnyFunSuite {
     assert(lakeReader(wh).count() == 2L)
   }
 
+  test("mergeMoR: NULL source keys insert, duplicate target keys all " +
+      "update, the insert side never re-scans the target") {
+    import SparkTestSession.spark.implicits._
+    val (wh, t) = mkTable("mrgnull")
+    t.append(Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"), (2L, "b2"),
+      (null, "n")).toDF("id", "v"))
+    val src = Seq[(java.lang.Long, String)]((2L, "B"), (null, "N"),
+      (5L, "E")).toDF("id", "v")
+    // the target is scanned ONCE (the matched checkpoint); the insert
+    // anti-join reads that checkpoint, not a second target scan
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler
+          .SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("DataSourceRDD")))
+          scans.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try t.mergeMoR(spark, src, Seq("id"))
+    finally {
+      Thread.sleep(200)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    assert(scans.get == 1, s"target scans: ${scans.get}")
+    val got = LakeTable.load(wh, "d", "t").read(spark).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1)))
+      .toSeq.sorted
+    // both id=2 rows match and update; NULL never matches, on either
+    // side: the target's NULL row stays, the source's NULL row inserts
+    assert(got == Seq((None, "N"), (None, "n"), (Some(1L), "a"),
+      (Some(2L), "B"), (Some(2L), "B"), (Some(5L), "E")))
+  }
+
+  test("mergeMoR refuses duplicate source keys with one message for a " +
+      "driver-resident and an RDD-backed source") {
+    import SparkTestSession.spark.implicits._
+    val (_, t) = mkTable("mrgdup")
+    t.append(df(Seq((1L, "a"), (2L, "b"))))
+    val rows = Seq((2L, "x"), (7L, "y"), (2L, "z"))
+    val local = rows.toDF("id", "v")
+    val distributed = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2)).toDF("id", "v")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val localErr = try intercept[IllegalArgumentException](
+        t.mergeMoR(spark, local, Seq("id")))
+      finally {
+        Thread.sleep(200)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    assert(jobs.get == 0, "the driver-side check runs no Spark job")
+    val rddErr = intercept[IllegalArgumentException](
+      t.mergeMoR(spark, distributed, Seq("id")))
+    assert(localErr.getMessage ==
+      "requirement failed: merge source has multiple rows for key Some([2,2])")
+    assert(rddErr.getMessage == localErr.getMessage)
+    assert(ids(LakeTable.load(t.location.getParent.getParent.toString,
+      "d", "t").read(spark)) == Set(1L, 2L), "nothing committed")
+  }
+
   test("metadata columns _graft_file/_graft_pos are selectable") {
     val (wh, t) = mkTable("metacols")
     t.append(df(Seq((1L, "a"), (2L, "b"))).repartition(1))

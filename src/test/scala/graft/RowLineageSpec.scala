@@ -243,7 +243,15 @@ class RowLineageSpec extends AnyFunSuite {
   test("lineage read plan: per-file constants resolve in the scan stage, no join") {
     val (_, t) = mkTable("plan")
     t.append(df((1L to 6L).map(i => (i, s"v$i"))))
-    val p = t.readLineage(spark).queryExecution.explainString(
+    // the connector lineage read takes per-file constants from its
+    // input partitions: no join, no lookup expression
+    val rp = t.readLineage(spark).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(!rp.contains("Join") && !rp.contains("fileconst("), rp)
+    // the file-list reads that stay on the parquet stack (scoped
+    // compaction, copy-on-write rewrites) resolve them in-stage
+    val p = t.readFiles(spark, t.plannedFiles(), t.currentSchema,
+      lineage = true).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert(p.contains("fileconst("),
       "the per-file constant lookup must be in the plan:\n" + p)
