@@ -83,9 +83,8 @@ object DeletionVectors {
   /** Process-wide vector cache, byte-budgeted ([[BlobCache]]):
     * containers are immutable so entries never invalidate, and the
     * budget bounds driver/executor heap no matter how many files a
-    * scan cycles through. The map-level lock is off the row path:
-    * [[graft.functions.DvLookup]] holds a per-thread last-file slot,
-    * so this is hit once per file change per task, not per row.
+    * scan cycles through. The map-level lock is off the row path: a
+    * reader loads its file's vector once, not per row.
     */
   private val cache = new BlobCache[Roaring64Bitmap](256L << 20,
     bm => bm.serializedSizeInBytes())

@@ -22,10 +22,10 @@ import graft.schema._
   * logic); data under `data/snap-{id}/`, Hive-style `_p_*=value`
   * partition dirs.
   *
-  * Scale: metadata is O(schemas + specs + files); reads are grouped by
-  * schema version (one reconciling projection per group — not per
-  * file) and unioned, so the plan size is bounded by the number of
-  * schema versions, not file count.
+  * Scale: metadata is O(schemas + specs + files); every read is one
+  * DSv2 scan ([[graft.sources.LakeSource.engineRead]]) whose readers
+  * reconcile each file to the read schema by field id, so the plan
+  * size is one relation whatever the file or schema-version count.
   */
 class LakeTable private (val location: Path, private[lake] var md: TableMetadata,
     initialVersion: Int = -1)
@@ -39,8 +39,14 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     * on every commit, so a lazily planned read built now must not see
     * a later commit through the same handle.
     */
-  private[graft] def frozenView: LakeTable =
-    new LakeTable(location, md, loadedVersion)
+  private[graft] def frozenView: LakeTable = viewOf(md)
+
+  /** A handle over `next` — a metadata document this handle is about
+    * to commit — for reads that must see it before it lands
+    * (constraint validation of an incoming commit).
+    */
+  private[lake] def viewOf(next: TableMetadata): LakeTable =
+    new LakeTable(location, next, loadedVersion)
 
   /** Schema current AT a snapshot (validates the id with context). */
   def schemaAsOf(snapshotId: Long): StructType = {
@@ -401,7 +407,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
           .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
           .getOrElse(throw new IllegalStateException(
             s"validating $label needs a Spark session"))
-        val viol = readFiles(spark, unproven, schema)
+        val viol = viewOf(next).readPinned(spark, unproven)
           .filter(not(coalesce(expr(sql), lit(true))))
           .limit(1).count()
         require(viol == 0L,
@@ -454,7 +460,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         // scan ONLY the unproven files, with merge-on-read deletes
         // applied — a violating row that is already deleted is fine,
         // and the stats-proven majority of a large table is never read
-        val viol = readFiles(spark, unproven, schema,
+        val viol = readPinned(spark, unproven,
             LakeTable.liveDeletes(md.snapshots),
             LakeTable.liveEqDeletes(md.snapshots))
           .filter(not(coalesce(expr(sql), lit(true))))
@@ -1636,11 +1642,18 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     */
   def readLineage(spark: SparkSession,
       asOfSnapshot: Option[Long] = None): DataFrame = {
-    import graft.sources.LakeSource.{LastUpdMetaCol, RowIdMetaCol}
     asOfSnapshot.foreach(sid =>
       require(md.snapshots.exists(_.id == sid), s"no snapshot $sid"))
-    val rows = graft.sources.LakeSource.engineRead(spark, this, Map.empty,
-      asOfSnapshot, Seq.empty, metaCols = true)
+    withLineage(graft.sources.LakeSource.engineRead(spark, this,
+      asOfSnapshot = asOfSnapshot))
+  }
+
+  /** `rows` (a connector read) plus `_row_id` and
+    * `_last_updated_sequence_number` from its lineage metadata
+    * columns.
+    */
+  private def withLineage(rows: DataFrame): DataFrame = {
+    import graft.sources.LakeSource.{LastUpdMetaCol, RowIdMetaCol}
     rows.select(rows.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
       col(RowIdMetaCol).as("_row_id", Metadata.empty),
       col(LastUpdMetaCol).as("_last_updated_sequence_number",
@@ -1668,162 +1681,34 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       current, prune, statsFilters, md.schemaOpt)
   }
 
-  /** The parquet-stack read of an explicit file list: one reconciling
-    * scan group per schema version, unioned; rows at positions marked
-    * by `deletes` are dropped via an anti-join on (file URI, row
-    * position) — `_metadata` columns on the read side match the values
-    * captured at delete-write time, and the (small) delete set
-    * broadcasts — vectors by an in-stage bitmap probe, equality
-    * batches by one anti-join per key set.
-    *
-    * [[read]], [[readLineage]] and the merge-on-read row-op scan run on
-    * the connector instead. The callers that stay read a file list, or
-    * a delete state, that is not a snapshot's live view:
+  /** An explicit file list read under an explicit delete state, as
+    * given, through the same pinned connector scan as [[read]]
+    * ([[graft.sources.LakeReadState]]): each file reconciled to this
+    * handle's current schema, its position deletes, deletion vector
+    * and applicable equality batches (batch seq > file seq) applied
+    * inside the reader. With `lineage`, rows carry `_row_id` and
+    * `_last_updated_sequence_number` as [[readLineage]]'s do. The
+    * callers read a file set that is not a snapshot's live view:
     *  - constraint validation (`validateFiles`, CHECK scans) reads
-    *    only the files their footers and stats could not prove
-    *    (ConstraintSpec);
+    *    only the files their footers and stats could not prove;
     *  - incremental and changelog reads (`changesBetween`, the
     *    changelog views) read a snapshot range's added or removed
-    *    files (LakeSpec, ChangelogCowSpec, ChangelogReplaceSpec);
+    *    files;
     *  - scoped compaction (`compactScoped`) and the copy-on-write
     *    DELETE/UPDATE/MERGE rewrite the files they selected, with the
-    *    live deletes and lineage (MaintenanceSpec, DvRandomSpec,
-    *    RowOpsSpec, RowLineageSpec);
+    *    live deletes and lineage;
     *  - branch and write-audit-publish reads (`readBranch`,
-    *    `readStaged`) and branch copy-on-write read a fork-base or live
-    *    state plus re-sequenced staged commits (BranchSpec, WapSpec).
+    *    `readStaged`) and branch copy-on-write read a fork-base or
+    *    live state plus re-sequenced staged commits.
     */
-  private[graft] def readFiles(spark: SparkSession, files: Seq[DataFileMeta],
-      target: StructType,
+  private[graft] def readPinned(spark: SparkSession,
+      files: Seq[DataFileMeta],
       deletes: Map[String, DeleteSet] = Map.empty,
       eqDeletes: Seq[EqDeleteMeta] = Seq.empty,
       lineage: Boolean = false): DataFrame = {
-    if (files.isEmpty) {
-      val clean = Reconcile.clean(target).asInstanceOf[StructType]
-      val out = if (!lineage) clean else StructType(clean.fields ++
-        LakeTable.lineageFields)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
-    }
-    // equality-delete applicability is per file sequence: batch seq >
-    // file seq. Batches sorted by seq → a file's applicable set is a
-    // suffix, so grouping by (schema, suffix start) keeps the plan
-    // bounded by schemas × batches, never file count.
-    val batches = eqDeletes.sortBy(_.seq)
-    def suffixIdx(fseq: Long): Int = {
-      val i = batches.indexWhere(_.seq > fseq)
-      if (i < 0) batches.size else i
-    }
-    // lineage reads additionally split groups on the materialized-
-    // column flag: rewritten files physically carry _graft_row_id /
-    // _graft_last_updated, plain appends don't, and the read schema
-    // must match the file
-    files.groupBy(f => (f.schemaId, suffixIdx(f.seq),
-        lineage && f.lineageCols)).map {
-      case ((schemaId, bIdx, withMatCols), group) =>
-      val fileSchema = md.schemaById(schemaId)
-      val cleanSchema = Reconcile.clean(fileSchema).asInstanceOf[StructType]
-      val base = spark.read
-        .schema(if (withMatCols) StructType(cleanSchema.fields ++ Seq(
-            StructField("_graft_row_id", LongType),
-            StructField("_graft_last_updated", LongType)))
-          else cleanSchema)
-        .parquet(group.map(_.path): _*)
-      val groupDel = group
-        .flatMap(f => deletes.get(LakeTable.normalizePath(f.path)))
-      // v3 deletion vectors: a per-row bitmap probe INSIDE the scan's
-      // codegen stage — no delete-file read, no anti-join, no shuffle;
-      // each executor seeks the container blob once per file
-      val dvRefs = groupDel.flatMap(_.dv)
-        .map(d => LakeTable.normalizePath(d.dataPath) ->
-          ((d.dvPath, d.offset, d.length))).toMap
-      val vecAlive = if (dvRefs.isEmpty) base else
-        base.filter(!LakeTable.dvDeletedCol(spark,
-          col("_metadata.file_path"), col("_metadata.row_index"), dvRefs))
-      // row lineage (v3 inheritance rule): a row's id is its
-      // materialized _graft_row_id when the file carries one and the
-      // cell is non-null, else firstRowId + row_position; the
-      // last-updated sequence inherits the file's data sequence the
-      // same way. Both file constants resolve through a codegen'd
-      // path-keyed lookup — no join, stays in the scan stage. Tagged
-      // in one projection with the delete-join keys, BEFORE the
-      // position-delete anti-join: `_metadata` does not resolve above
-      // the join.
-      val lineageCols: Seq[Column] = if (!lineage) Seq.empty else {
-        val firstRefs = group.collect {
-          case f if f.firstRowId >= 0 =>
-            LakeTable.normalizePath(f.path) -> f.firstRowId
-        }.toMap
-        val seqRefs = group.collect {
-          case f if f.seq >= 0 => LakeTable.normalizePath(f.path) -> f.seq
-        }.toMap
-        val path = col("_metadata.file_path")
-        val pos = col("_metadata.row_index")
-        val computedId =
-          LakeTable.fileConstCol(spark, path, firstRefs) + pos
-        val computedSeq = LakeTable.fileConstCol(spark, path, seqRefs)
-        if (withMatCols) Seq(
-          coalesce(col("_graft_row_id"), computedId).as("_row_id"),
-          coalesce(col("_graft_last_updated"), computedSeq)
-            .as("_last_updated_sequence_number"))
-        else Seq(computedId.as("_row_id"),
-          computedSeq.as("_last_updated_sequence_number"))
-      }
-      val delPaths = groupDel.flatMap(_.paths).distinct
-      // delete files store plain normalized paths; _metadata.file_path
-      // is a url-encoded URI — normalize it for the join
-      val posCols = if (delPaths.isEmpty) Nil else Seq(
-        LakeTable.normalizeUdf(col("_metadata.file_path")).as("_graft_dfile"),
-        col("_metadata.row_index").as("_graft_dpos"))
-      val tagged = if (lineageCols.isEmpty && posCols.isEmpty) vecAlive
-        else vecAlive.select(col("*") +: (lineageCols ++ posCols): _*)
-      val alive = if (delPaths.isEmpty) tagged else {
-        val del = spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(delPaths: _*)
-          .withColumnRenamed("file_path", "_graft_dfile")
-          .withColumnRenamed("pos", "_graft_dpos")
-        tagged.join(del, Seq("_graft_dfile", "_graft_dpos"), "left_anti")
-      }
-      val projected = alive.select(Reconcile.projection(fileSchema, target) ++
-        (if (!lineage) Nil else LakeTable.lineageFields.map(f => col(f.name))): _*)
-      // anti-join the applicable equality batches, one join per
-      // distinct key-column set; keys resolve by FIELD ID against the
-      // target schema (rename-proof — batches store columns as k<id>).
-      // Null-safe equality: an eq-delete with a NULL key matches NULL
-      // (Iceberg's delete-file semantics). The key sets are
-      // upsert-batch-sized → broadcast build sides.
-      batches.drop(bIdx).groupBy(_.fieldIds).foldLeft(projected) {
-        case (df, (ids, bs)) =>
-          // key ids resolve to (possibly struct-nested) paths in the
-          // target schema; df("a.b") navigates the struct. A TOP-LEVEL
-          // name is backticked so a literal dot in it is not
-          // misparsed as nesting.
-          val resolved = ids.map { id =>
-            LakeTable.structPathOfId(target, id)
-              .getOrElse(throw new IllegalStateException(
-                s"equality-delete key field id $id not in current schema"))
-          }
-          val names = resolved.map(_._1)
-          // batches written on either side of a key promotion
-          // (int->long, float->double) have heterogeneous PHYSICAL
-          // types, and one multi-path parquet read fails on mixed
-          // INT32/INT64 files — read each batch (homogeneous by
-          // construction) separately, cast its keys to the target
-          // schema's key types, then union (the DSv2 reader path
-          // reconciles per file the same way).
-          val keyDf = bs.map { b =>
-            LakeTable.eqBatchFrame(spark, b).select(
-              ids.zip(resolved).map { case (id, (_, f)) =>
-                col(s"k$id").cast(f.dataType).as(s"k$id")
-              }: _*)
-          }.reduce(_.unionByName(_))
-          val cond = ids.zip(names).map { case (id, n) =>
-            val c = if (target.fieldNames.contains(n)) df(s"`$n`") else df(n)
-            c <=> keyDf(s"k$id")
-          }.reduce(_ && _)
-          df.join(keyDf, cond, "left_anti")
-      }
-    }.reduce(_.unionByName(_))
+    val rows = graft.sources.LakeSource.engineRead(spark, this,
+      state = Some(graft.sources.LakeReadState(files, deletes, eqDeletes)))
+    if (lineage) withLineage(rows) else rows
   }
 
   // ---- maintenance -----------------------------------------------------
@@ -2621,61 +2506,17 @@ object LakeTable {
       filters: Seq[RangeFilter]): Boolean =
     bloomMightMatchProbes(f, bloomProbes(schema, filters))
 
-  /** `input_file_name()` / `_metadata.file_path` yield URIs
-    * (`file:/…`, %XX-escaped); metadata stores plain filesystem
-    * paths — normalize for matching.
+  /** Spark's file scans report URIs (`file:/…`, %XX-escaped);
+    * metadata stores plain filesystem paths — normalize for matching.
     */
   def normalizePath(p: String): String =
     if (p.startsWith("file:"))
       java.nio.file.Paths.get(java.net.URI.create(p)).toString
     else p
 
-  /** normalizePath as a column function, for joining scan-produced
-    * file URIs against the plain paths stored in delete files.
-    */
-  val normalizeUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf(normalizePath _)
-
-  /** `(path, pos) is deleted by its file's deletion vector` as a
-    * codegen-friendly Column ([[graft.functions.DvDeleted]]); `refs`
-    * maps normalized data paths to (container, offset, length). Wide
-    * maps ride as a broadcast, small ones inline
-    * ([[graft.functions.RefCarrier]]) — either way the task closure
-    * stays O(1) in affected-file count.
-    */
-  def dvDeletedCol(spark: SparkSession, path: Column, pos: Column,
-      refs: Map[String, (String, Long, Long)]): Column = {
-    val lookup = new graft.functions.DvLookup(
-      graft.functions.RefCarrier(spark, refs.size, refs))
-    org.apache.spark.sql.GraftPlanBridge.column(
-      graft.functions.DvDeleted(
-        org.apache.spark.sql.GraftPlanBridge.expression(path),
-        org.apache.spark.sql.GraftPlanBridge.expression(pos), lookup))
-  }
-
-  /** The row-lineage projection appended by lineage reads. */
-  val lineageFields: Seq[StructField] = Seq(
-    StructField("_row_id", LongType, nullable = true),
-    StructField("_last_updated_sequence_number", LongType, nullable = true))
-
   /** The materialized lineage column names rewrites store in parquet. */
   val matLineageCols: Seq[String] =
     Seq("_graft_row_id", "_graft_last_updated")
-
-  /** A per-file long constant resolved from the row's file path
-    * ([[graft.functions.FileConst]]): null for paths absent from
-    * `refs`. Codegen-friendly — the per-row cost is one cached
-    * last-path probe, no join; wide maps broadcast instead of riding
-    * the expression tree ([[graft.functions.RefCarrier]]).
-    */
-  def fileConstCol(spark: SparkSession, path: Column,
-      refs: Map[String, Long]): Column = {
-    val lookup = new graft.functions.FileConstLookup(
-      graft.functions.RefCarrier(spark, refs.size, refs))
-    org.apache.spark.sql.GraftPlanBridge.column(
-      graft.functions.FileConst(
-        org.apache.spark.sql.GraftPlanBridge.expression(path), lookup))
-  }
 
   def tableLocation(warehouse: String, db: String, table: String): Path =
     Paths.get(warehouse, db, table)

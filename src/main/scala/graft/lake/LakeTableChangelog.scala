@@ -28,12 +28,11 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
 
   def changesBetween(spark: SparkSession, fromSnapshot: Long,
       toSnapshot: Long): DataFrame = {
-    val current = md.currentSchema
     val files = md.snapshots
       .filter(s => s.id > fromSnapshot && s.id <= toSnapshot &&
         (s.operation == "append" || s.operation == "upsert"))
       .flatMap(_.files)
-    readFiles(spark, files, current)
+    readPinned(spark, files)
   }
 
   /** Changelog scan with delete markers (Iceberg's
@@ -120,8 +119,9 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
           else lit(null).cast(dt)
       }
       // per-batch read: key files on either side of a type promotion
-      // have heterogeneous physical types (same rule as readFiles);
-      // inline-keyed batches resolve as LocalRelations, zero IO
+      // have heterogeneous physical types, and one multi-path parquet
+      // read fails on mixed INT32/INT64 files; inline-keyed batches
+      // resolve as LocalRelations, zero IO
       LakeTable.eqBatchFrame(spark, b)
         .select(current.fields.toSeq.map(f => build(f).as(f.name)): _*)
     }
@@ -130,47 +130,45 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
     // deleted positions — full row content, reconciled to the current
     // schema. O(files actually touched by the delete).
     def posMarkers(sn: SnapshotMeta): DataFrame = {
+      import graft.sources.LakeSource.{FileMetaCol, PosMetaCol}
       val affected = sn.deleteCounts.keySet
       val byPath = md.snapshots.filter(_.id <= sn.id).flatMap(_.files)
         .map(f => LakeTable.normalizePath(f.path) -> f).toMap
       // an affected data file no longer listed by any snapshot <= sn
       // (expired/squashed history) means the deleted ROWS cannot be
       // read back — a silent drop would emit a changelog missing
-      // retractions, and an empty group would die later in an opaque
-      // reduce; name the problem instead
+      // retractions; name the problem instead
       val missing = affected.filterNot(byPath.contains)
       require(missing.isEmpty,
         s"changelog: snapshot ${sn.id}'s position deletes reference " +
           s"data file(s) no longer in history (expired?): " +
           missing.toSeq.sorted.mkString(", "))
-      val metas = affected.toSeq.sorted.flatMap(byPath.get)
-      // vector commits: the container's DELTA blob holds exactly the
-      // positions this snapshot deleted — a per-row bitmap probe
-      // (kept = deleted) replaces the semi-join entirely
-      val dvDeltaRefs = sn.dvs.map(d =>
-        LakeTable.normalizePath(d.dataPath) ->
-          ((d.dvPath, d.deltaOffset, d.deltaLength))).toMap
-      lazy val del = spark.read.schema(LakeTable.DeleteFileSchema)
-        .parquet(sn.deletePaths: _*)
-        .select(col("file_path").as("_graft_dfile"),
-          col("pos").as("_graft_dpos"))
-      metas.groupBy(_.schemaId).map { case (schemaId, group) =>
-        val fileSchema = md.schemaById(schemaId)
-        val scan = spark.read
-          .schema(Reconcile.clean(fileSchema).asInstanceOf[StructType])
-          .parquet(group.map(_.path): _*)
-        val marked =
-          if (dvDeltaRefs.nonEmpty)
-            scan.filter(LakeTable.dvDeletedCol(spark,
-              col("_metadata.file_path"), col("_metadata.row_index"),
-              dvDeltaRefs))
-          else scan
-            .withColumn("_graft_dfile",
-              LakeTable.normalizeUdf(col("_metadata.file_path")))
-            .withColumn("_graft_dpos", col("_metadata.row_index"))
-            .join(del, Seq("_graft_dfile", "_graft_dpos"), "left_semi")
-        marked.select(Reconcile.projection(fileSchema, current): _*)
-      }.reduce(_.unionByName(_))
+      // the (data file, position) pairs this snapshot deleted: a vector
+      // commit's DELTA blobs hold exactly them (expanded here, on the
+      // driver); a positional commit's delete files list them
+      val deleted =
+        if (sn.dvs.nonEmpty) {
+          val pairs = new java.util.ArrayList[org.apache.spark.sql.Row]()
+          sn.dvs.foreach { d =>
+            val path = LakeTable.normalizePath(d.dataPath)
+            val it = DeletionVectors.readBlob(d.dvPath, d.deltaOffset,
+              d.deltaLength).getLongIterator
+            while (it.hasNext)
+              pairs.add(org.apache.spark.sql.Row(path, it.next()))
+          }
+          spark.createDataFrame(pairs, LakeTable.DeleteFileSchema)
+        } else spark.read.schema(LakeTable.DeleteFileSchema)
+          .parquet(sn.deletePaths: _*)
+      // every affected file read whole (no deletes applied: these rows
+      // ARE deleted), tagged with the connector's row identity
+      val rows = readPinned(spark, affected.toSeq.sorted.map(byPath))
+      rows.select(rows.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
+          col(FileMetaCol).as("_graft_dfile"),
+          col(PosMetaCol).as("_graft_dpos")): _*)
+        .join(deleted.select(col("file_path").as("_graft_dfile"),
+          col("pos").as("_graft_dpos")),
+          Seq("_graft_dfile", "_graft_dpos"), "left_semi")
+        .drop("_graft_dfile", "_graft_dpos")
     }
 
     // the row delta of one CoW overwrite: rows of the replaced files AS
@@ -186,9 +184,9 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
         byPath.getOrElse(p, throw new IllegalStateException(
           s"changelog: overwrite ${sn.id} replaced $p, which no " +
             s"snapshot < ${sn.id} lists (expired history?)")))
-      val before = readFiles(spark, removedMetas, current,
+      val before = readPinned(spark, removedMetas,
         LakeTable.liveDeletes(md.snapshots.filter(_.id < sn.id)))
-      val after = readFiles(spark, sn.files, current)
+      val after = readPinned(spark, sn.files)
       if (!current.fields.exists(f => LakeTable.hasMapType(f.dataType)))
         (before.exceptAll(after), after.exceptAll(before))
       else {
@@ -222,7 +220,7 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           clean)
       }
-      val after = readFiles(spark, sn.files, current)
+      val after = readPinned(spark, sn.files)
       if (!current.fields.exists(f => LakeTable.hasMapType(f.dataType)))
         (before.exceptAll(after), after.exceptAll(before))
       else {
@@ -257,7 +255,7 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
               Seq(posMarkers(sn)) else Seq.empty) ++
               sn.eqDeletes.map(eqMarkers)
           val ins =
-            if (sn.files.nonEmpty) Seq(readFiles(spark, sn.files, current))
+            if (sn.files.nonEmpty) Seq(readPinned(spark, sn.files))
             else Seq.empty
           dels.map(tagged(_, "delete", ord, sn.id)) ++
             ins.map(tagged(_, "insert", ord, sn.id))

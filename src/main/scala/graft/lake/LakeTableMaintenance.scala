@@ -68,8 +68,8 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
         eqBatches.exists(_.seq > f.seq) || f.schemaId != md.currentSchemaId)
     if (selected.isEmpty || !worthIt) None
     else Some(writeSnapshot({
-      val frame = readFiles(spark, selected, md.currentSchema, deletes,
-        eqBatches, lineage = writesVectors)
+      val frame = readPinned(spark, selected, deletes, eqBatches,
+        lineage = writesVectors)
       Align.keeping(if (writesVectors) matLineage(frame) else frame,
         md.currentSchema, LakeTable.matLineageCols)
     },
@@ -306,8 +306,8 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
       !wanted.subsetOf(f.blooms.map(_.fieldId).toSet))
     if (missing.isEmpty) return 0
     val names = targets.map(_._1)
-    // one reconciling scan group per schema version (the readFiles
-    // rule): each group projects to the current schema, then hashes
+    // one reconciling scan group per schema version: each group
+    // projects to the current schema, then hashes
     val hashFrame = missing.groupBy(_.schemaId).map { case (sid, group) =>
       val fileSchema = md.schemaById(sid)
       val clean = Reconcile.clean(fileSchema).asInstanceOf[StructType]
@@ -710,7 +710,7 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     // live positional parquet tombstone converts to a deletion vector
     // (the representation v3 mandates), after which reads never open
     // a delete parquet again
-    if (writesVectors) return convertPositionalToVectors(spark, liveDel)
+    if (writesVectors) return convertPositionalToVectors(liveDel)
     val delFiles = liveDel.values.flatMap(_.paths).toSeq.distinct
     if (delFiles.size <= 1) return None
     val newId = (md.snapshots ++ md.staged).map(_.id).foldLeft(0L)(math.max) + 1
@@ -738,42 +738,32 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
   }
 
   /** Convert every live positional-parquet delete to a deletion
-    * vector in one squash commit: bitmaps build per file on the
-    * executors (rows of dead data files pruned at the scan), the
-    * exact per-file counts audit the conversion, and the committed
-    * "rewrite" snapshot carries ONLY vectors — the already-vectored
-    * files' DVs ride along unchanged. Delta blobs are empty (nothing
-    * is newly deleted; this is a representation change, invisible to
-    * the changelog like any rewrite).
+    * vector in one squash commit: each live data file's bitmap builds
+    * on the driver from the positions the readers themselves load
+    * ([[graft.sources.LakeSource.loadDeletedPositions]]: one parse per
+    * delete file, cached; tombstones of dead data files are never
+    * asked for), the exact per-file counts audit the conversion, and
+    * the committed "rewrite" snapshot carries ONLY vectors — the
+    * already-vectored files' DVs ride along unchanged. Delta blobs are
+    * empty (nothing is newly deleted; this is a representation change,
+    * invisible to the changelog like any rewrite).
     */
-  private[lake] def convertPositionalToVectors(spark: SparkSession,
+  private[lake] def convertPositionalToVectors(
       liveDel: Map[String, DeleteSet]): Option[SnapshotMeta] = {
     import org.roaringbitmap.longlong.Roaring64Bitmap
-    import spark.implicits._
     val positional = liveDel.filter(_._2.dv.isEmpty)
     if (positional.isEmpty) return None
-    val delFiles = positional.values.flatMap(_.paths).toSeq.distinct
     val newId = (md.snapshots ++ md.staged).map(_.id).foldLeft(0L)(math.max) + 1
-    val liveKeys = positional.keySet.toSeq
-    val built: Array[(String, Array[Byte])] = spark.read
-      .schema(LakeTable.DeleteFileSchema).parquet(delFiles: _*)
-      .filter(LakeTable.normalizeUdf(col("file_path")).isin(liveKeys: _*))
-      .select(col("file_path").cast("string"), col("pos").cast("long"))
-      .as[(String, Long)]
-      .groupByKey(t => LakeTable.normalizePath(t._1))
-      .mapGroups { (path, it) =>
-        val bm = new Roaring64Bitmap()
-        it.foreach(t => bm.addLong(t._2))
-        (path, DeletionVectors.serialize(bm))
-      }.collect()
-    val blobs = built.toSeq.sortBy(_._1).map { case (p, bytes) =>
-      val full = DeletionVectors.deserialize(bytes)
+    val blobs = positional.toSeq.sortBy(_._1).map { case (p, ds) =>
+      val full = new Roaring64Bitmap()
+      Option(graft.sources.LakeSource.loadDeletedPositions(ds.paths, p))
+        .foreach(_.forEach(pos => full.addLong(pos)))
       // the exact per-file deleted-row count is tracked metadata — a
       // conversion that changes it would corrupt visible row counts
-      require(full.getLongCardinality == positional(p).rows,
+      require(full.getLongCardinality == ds.rows,
         s"positional→vector conversion for $p changed the deleted-row " +
           s"count: parquet holds ${full.getLongCardinality}, metadata " +
-          s"says ${positional(p).rows}")
+          s"says ${ds.rows}")
       p -> ((full, new Roaring64Bitmap()))
     }
     val dvPath = dataDir.resolve(s"deletes-$newId-" +

@@ -126,15 +126,14 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
   def readStaged(spark: SparkSession, wapId: String): DataFrame = {
     val snap = stagedSnapshot(wapId).getOrElse(
       throw new IllegalArgumentException(s"no staged snapshot '$wapId'"))
-    val current = md.currentSchema
     // staged files carry no explicit seq — stamp the staged snapshot's
     // own id so live equality batches (seq < staged id) apply to the
     // LIVE rows but not to the staged batch itself, exactly as they
     // will after publish
-    readFiles(spark,
+    readPinned(spark,
       LakeTable.liveFiles(md.snapshots) ++
         snap.files.map(f => if (f.seq >= 0) f else f.copy(seq = snap.id)),
-      current, LakeTable.liveDeletes(md.snapshots),
+      LakeTable.liveDeletes(md.snapshots),
       LakeTable.liveEqDeletes(md.snapshots))
   }
 
@@ -255,10 +254,10 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     // time, and replacement files get fresh UUID paths.
     val cowRemoved = branchSnaps(name).flatMap(_.removedPaths)
       .map(LakeTable.normalizePath).toSet
-    readFiles(spark,
+    readPinned(spark,
       (LakeTable.liveFiles(visible) ++ files)
         .filterNot(f => cowRemoved(LakeTable.normalizePath(f.path))),
-      md.currentSchema, LakeTable.liveDeletes(visible),
+      LakeTable.liveDeletes(visible),
       LakeTable.liveEqDeletes(visible) ++ eqs)
   }
 
@@ -449,7 +448,7 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     // (the file-meta seq is exactly the format's deferred-sequencing
     // mechanism), so after publish they still read the sequence of
     // the commit that last changed them.
-    val rows = readFiles(spark, affected, md.currentSchema,
+    val rows = readPinned(spark, affected,
       LakeTable.liveDeletes(visible), lineage = writesVectors)
     val p = coalesce(predicate, lit(false))
     val valueCols: Seq[Column] = assignments match {

@@ -244,7 +244,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val affected = affectedFiles(spark, predicate, prune, statsFilters)
     if (affected.isEmpty) None
     else {
-      val kept0 = readFiles(spark, affected, md.currentSchema,
+      val kept0 = readPinned(spark, affected,
           LakeTable.liveDeletes(md.snapshots), lineage = writesVectors)
         .filter(!coalesce(predicate, lit(false)))
       // surviving rows are untouched — their lineage carries verbatim
@@ -433,7 +433,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       lineage: Boolean = false): DataFrame = {
     import graft.sources.LakeSource.{FileMetaCol, PosMetaCol, RowIdMetaCol}
     val rows = graft.sources.LakeSource.engineRead(spark, this, prune, None,
-      statsFilters, metaCols = true)
+      statsFilters)
     // declared as the parquet stack declared them (a nullable path, no
     // metadata-column tags): the delete files written from these
     // columns keep their layout
@@ -629,7 +629,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     if (affected.isEmpty) None
     else {
       val cond = coalesce(predicate, lit(false))
-      val base = readFiles(spark, affected, md.currentSchema,
+      val base = readPinned(spark, affected,
         LakeTable.liveDeletes(md.snapshots), lineage = writesVectors)
       // one projection, every RHS evaluated against the PRE-update row
       // (SQL UPDATE semantics: SET a=b, b=a swaps; sequential
@@ -705,7 +705,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       predicate = keyPred, matchSource = Some(srcKeyed -> keys))
 
     val rewritten = if (affected.isEmpty) None else {
-      val joined = readFiles(spark, affected, schema,
+      val joined = readPinned(spark, affected,
           LakeTable.liveDeletes(md.snapshots), lineage = writesVectors)
         .join(srcKeyed, keys, "left")
       val matchedCol = coalesce(col("_src_matched"), lit(false))

@@ -1295,10 +1295,10 @@ private[sources] class GroupRowReader(p: LakeFilePartition)
     // consuming walks qualify too — positions come from parquet's own
     // getCurrentRowIndex, which stays file-absolute when row groups
     // are skipped or records filtered, so MoR delete positions /
-    // `_metadata.row_index` / inherited row ids can no longer
-    // desynchronize). External files are excluded (legacy INT96
-    // timestamps compare differently), as is changelog delete-marker
-    // emission (small incremental reads; keep the walk full).
+    // `_graft_pos` / inherited row ids can no longer desynchronize).
+    // External files are excluded (legacy INT96 timestamps compare
+    // differently), as is changelog delete-marker emission (small
+    // incremental reads; keep the walk full).
     val pred =
       if (p.external || p.emitOnlyDeleted || p.pushedRanges.isEmpty) None
       // ranges arrive named by the TARGET schema; rewrite to the
@@ -1366,8 +1366,8 @@ private[sources] class GroupRowReader(p: LakeFilePartition)
 
   // merge-on-read: positions of this file deleted by live delete
   // files, probed with parquet's per-record row index — the same
-  // file-absolute index space the _metadata.row_index values captured
-  // at delete-write time. (Scale note: a per-file set in memory —
+  // file-absolute index space the `_graft_pos` values captured at
+  // delete-write time. (Scale note: a per-file set in memory —
   // Iceberg uses roaring bitmaps for the same structure.)
   private val deletedPos: java.util.HashSet[java.lang.Long] =
     LakeSource.loadDeletedPositions(p.deletes, p.path)

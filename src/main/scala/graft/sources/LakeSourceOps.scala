@@ -39,30 +39,32 @@ private[graft] object LakeSource {
     name == FileMetaCol || name == PosMetaCol ||
       name == RowIdMetaCol || name == LastUpdMetaCol
 
-  /** An engine-internal read of `t` through the connector
-    * ([[LakeTable.read]], the merge-on-read row-op scan): a
+  /** An engine-internal read of `t` through the connector: a
     * `DataSourceV2Relation` over a [[LakeSparkTable]] pinned to the
-    * handle's CURRENT view, so the readers apply position deletes,
-    * deletion vectors and equality batches inside the scan — no
-    * anti-join — and column pruning and row-group skipping apply. It
-    * reads the files `prune`/`statsFilters` keep ([[LakeReadPin]]).
+    * handle's CURRENT view ([[LakeReadPin]]), so the readers apply
+    * position deletes, deletion vectors and equality batches inside
+    * the scan — no anti-join — and column pruning and row-group
+    * skipping apply. It reads the live files `prune`/`statsFilters`
+    * keep ([[LakeTable.read]], the merge-on-read row-op scan), or
+    * exactly `state` when given: an explicit file list under an
+    * explicit delete state ([[LakeTable.readPinned]]).
     * The output mirrors a parquet read of the reconciled schema: every
     * column nullable, no field metadata. The metadata columns
-    * ([[FileMetaCol]] etc.) stay resolvable on the relation; a caller
-    * that selects them passes `metaCols`, which declines VARIANT
-    * extraction pushdown — the accepted-extraction scan serves data
-    * columns only (VariantScanPrep declines it only for a Project that
-    * extracts from a variant).
+    * ([[FileMetaCol]] etc.) stay resolvable on the relation; a pinned
+    * scan declines VARIANT extraction pushdown, whose accepted scan
+    * serves data columns only.
     */
   def engineRead(spark: org.apache.spark.sql.SparkSession, t: LakeTable,
-      prune: Map[String, Set[String]], asOfSnapshot: Option[Long],
-      statsFilters: Seq[graft.lake.RangeFilter], metaCols: Boolean = false)
+      prune: Map[String, Set[String]] = Map.empty,
+      asOfSnapshot: Option[Long] = None,
+      statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty,
+      state: Option[LakeReadState] = None)
       : org.apache.spark.sql.DataFrame = {
     val view = t.frozenView
     val md = view.metadata
     val table = new LakeSparkTable(view.location.getParent.getParent.toString,
       md.database, md.table, 0L, view, asOfSnapshot,
-      pin = Some(LakeReadPin(view, prune, statsFilters)))
+      pin = Some(LakeReadPin(view, prune, statsFilters, state)))
     val schema = asOfSnapshot.map(view.schemaAsOf)
       .getOrElse(view.currentSchema)
     val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -70,10 +72,7 @@ private[graft] object LakeSource {
     org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation(
         table, output, None, None,
-        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          if (!metaCols) java.util.Map.of()
-          else java.util.Map.of(VariantScanPrep.RefuseVariantsKey, "true")),
-        None))
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(), None))
   }
 
   /** `st` with every field, element and map value nullable at every

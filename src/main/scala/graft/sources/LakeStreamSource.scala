@@ -406,18 +406,36 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
   }
 }
 
-/** An engine-internal read ([[LakeTable.read]], the merge-on-read
-  * row-op scan): the scan plans from `table` — the CALLING handle's
-  * metadata (snapshot log, schemas, an open transaction's staged
-  * view) captured when the read was built — instead of reloading the
-  * table by name. It reads exactly the live files the caller's
+/** An engine-internal read ([[LakeSource.engineRead]]): the scan plans
+  * from `table` — the CALLING handle's metadata (snapshot log, schemas,
+  * an open transaction's staged view, or a not-yet-committed
+  * metadata document) captured when the read was built — instead of
+  * reloading the table by name, under `table`'s current schema (or the
+  * one current at the read's snapshot).
+  *
+  * Without `state` it reads exactly the live files the caller's
   * partition `prune` and min/max `statsFilters` keep (resolved against
-  * the read schema, like `LakeTable.plannedFiles`); Spark's own pushed
-  * and runtime filters skip row groups inside them only.
+  * the read schema, like `LakeTable.plannedFiles`), with the live
+  * delete state. With `state` it reads that explicit file list under
+  * that delete state, as given: the changelog's added or removed
+  * files, a constraint scan's unproven files, a rewrite's inputs, a
+  * branch overlay with its re-sequenced equality batches. Either way
+  * Spark's own pushed and runtime filters skip row groups inside the
+  * files only, and the readers apply deletes per file.
   */
 private[graft] case class LakeReadPin(table: LakeTable,
     prune: Map[String, Set[String]] = Map.empty,
-    statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty)
+    statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty,
+    state: Option[LakeReadState] = None)
+
+/** An explicit read state: data files (each carrying its own data
+  * sequence and lineage constants), position-delete sets and deletion
+  * vectors keyed by normalized data path, and equality batches — each
+  * applies to the files with a lower sequence.
+  */
+private[graft] case class LakeReadState(files: Seq[graft.lake.DataFileMeta],
+    deletes: Map[String, graft.lake.DeleteSet] = Map.empty,
+    eqDeletes: Seq[graft.lake.EqDeleteMeta] = Seq.empty)
 
 /** Scan planning with the two pushdowns that matter at scale:
   *
@@ -481,9 +499,10 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
     // an incremental range reads raw added files, not the live set —
     // the metadata rollups below would answer for the wrong row set
     if (incremental.isDefined) return false
-    // a pinned read's prune/stats narrowing is a row-set restriction
-    // the whole-table rollups below cannot honour
-    if (pin.exists(p => p.prune.nonEmpty || p.statsFilters.nonEmpty))
+    // a pinned read's prune/stats narrowing or explicit state is a
+    // row-set restriction the whole-table rollups below cannot honour
+    if (pin.exists(p => p.prune.nonEmpty || p.statsFilters.nonEmpty ||
+        p.state.isDefined))
       return false
 
     val t = pin.map(_.table).getOrElse(LakeTable.load(wh, db, tbl))
@@ -560,11 +579,15 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
   override def pushVariantExtractions(
       exts: Array[org.apache.spark.sql.connector.read.VariantExtraction])
       : Array[Boolean] = {
-    // refuseVariants: VariantScanPrep saw a metadata-column reference —
-    // the accepted path's readSchema cannot carry it, so decline and
-    // let the normal pruneColumns path serve the query
+    // refuseVariants: VariantScanPrep saw a metadata column in the
+    // relation's output — the accepted path's readSchema cannot carry
+    // it, so decline and let the normal pruneColumns path serve the
+    // query. A pinned (engine-internal) read declines in any session:
+    // its callers select metadata columns on plans the extension rule
+    // may never see
     val servable = !changelogMode && !rowLevelOp && incremental.isEmpty &&
-      !refuseVariants && !sys.props.contains("graft.read.novector")
+      !refuseVariants && pin.isEmpty &&
+      !sys.props.contains("graft.read.novector")
     def colOf(e: org.apache.spark.sql.connector.read.VariantExtraction)
         : Option[StructField] =
       if (e.columnName.length != 1) None
@@ -714,6 +737,13 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
   }
 
   private def plannedFull(t: LakeTable) = {
+    pin.flatMap(_.state) match {
+      case Some(st) => (t, st.files, st.deletes, st.eqDeletes)
+      case None => plannedLive(t)
+    }
+  }
+
+  private def plannedLive(t: LakeTable) = {
     branchName match {
       case Some(b) =>
         // branch overlay: main AS OF the fork base plus the branch's
@@ -769,8 +799,7 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     * key columns resolved by field id against the read-time schema —
     * the reader filters matching rows out (Iceberg's DeleteFilter).
     * Resolution runs against the PINNED as-of schema (the schema that
-    * was current at the read's snapshot), matching LakeTable.readFiles:
-    * a VERSION AS OF read of a state whose then-live key column was
+    * was current at the read's snapshot): a VERSION AS OF read of a state whose then-live key column was
     * later dropped is well-defined and must not fail against the
     * current schema.
     */

@@ -42,8 +42,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * into the Aggregate and the two rules would fight to non-convergence.
   *
   * Conservative bail-outs: any bare (non-extraction) use of a variant
-  * attribute, a non-literal path, metadata-column references, or a
-  * non-lake relation leave the plan untouched.
+  * attribute, a non-literal path, or a non-lake relation leave the
+  * plan untouched; a relation that outputs a metadata column is only
+  * marked to refuse the variant push.
   */
 object VariantScanPrep extends Rule[LogicalPlan] {
 
@@ -52,12 +53,29 @@ object VariantScanPrep extends Rule[LogicalPlan] {
   val ReferencedColsKey = "graft.read.columns"
 
   /** Option key telling the ScanBuilder to DECLINE variant extractions
-    * for this scan (metadata-column queries — see trimRelationColumns). */
+    * for this scan (a relation whose output carries metadata columns —
+    * see `apply`). */
   val RefuseVariantsKey = "graft.variant.refuse"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConf(SQLConf.PUSH_VARIANT_INTO_SCAN)) return plan
-    plan.transformDown {
+    // metadata columns force REFUSAL of the whole variant push: once
+    // AddMetadataColumns puts _graft_file/_graft_pos INTO a relation's
+    // output, the accepted-variant path's readSchema (derived from the
+    // DATA schema, no metadata fields) misaligns upstream's positional
+    // output↔readSchema zip, and execution dies with
+    // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — whether the variant is
+    // extracted in a Project, only in a Filter, or used bare (`$`
+    // pushed). The builder is told to decline so the normal
+    // pruneColumns path (meta-col pass-through) serves the query.
+    plan.transformUp {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[LakeSparkTable] &&
+          !r.options.containsKey(RefuseVariantsKey) &&
+          r.output.exists(a => LakeSource.isMetaCol(a.name)) =>
+        val opts = new java.util.HashMap[String, String](r.options)
+        opts.put(RefuseVariantsKey, "true")
+        r.copy(options = new CaseInsensitiveStringMap(opts))
+    }.transformDown {
       case agg: Aggregate =>
         // the optimizer's PullOutGroupingExpressions (operator batch,
         // before this rule) may already have interposed a Project of
@@ -171,25 +189,8 @@ object VariantScanPrep extends Rule[LogicalPlan] {
     }
     val referenced = AttributeSet(p.projectList.flatMap(_.references)) ++
       filterRefs(child)
-    if (!referenced.subsetOf(AttributeSet(rel.output))) return p
-    // metadata-column references force REFUSAL of the whole variant
-    // push (review-found r17): AddMetadataColumns puts _graft_file/
-    // _graft_pos INTO rel.output when referenced (so the subset check
-    // alone passes), but the accepted-variant path's readSchema derives
-    // from the DATA schema, which has no metadata fields — upstream's
-    // positional output↔readSchema zip then misbinds and execution
-    // dies with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND. That crash is the
-    // upstream-shaped plain-session behavior; here the builder is told
-    // to decline so the normal pruneColumns path (meta-col
-    // pass-through) serves the query instead.
-    if (referenced.exists(a => LakeSource.isMetaCol(a.name))) {
-      val opts = new java.util.HashMap[String, String](rel.options)
-      opts.put(RefuseVariantsKey, "true")
-      return p.copy(child = child.transformUp {
-        case r: DataSourceV2Relation if r eq rel =>
-          rel.copy(options = new CaseInsensitiveStringMap(opts))
-      })
-    }
+    if (!referenced.subsetOf(AttributeSet(rel.output)) ||
+        rel.options.containsKey(RefuseVariantsKey)) return p
     val keep = rel.output.filter(referenced.contains)
     if (keep.size == rel.output.size) return p
     val opts = new java.util.HashMap[String, String](rel.options)

@@ -15,15 +15,18 @@ import graft.lake.{Engine, LakeTable, RangeFilter, Reconcile}
   * `format("graft-lake")` cell-identical to the engine's native
   * reconciling reader.
   *
-  * Since `LakeTable.read` and the merge-on-read row-op scan are served
-  * by the connector, the spec is also their differential against the
-  * parquet stack they replaced: `readFiles` (parquet read + reconciling
-  * projection + delete anti-joins) over the same planned files, and the
-  * `_metadata`-tagged position scan of the retired `liveRowsWithPos`
-  * body (kept below as the reference) — merge-on-read position
-  * deletes, equality batches (inline and file-based), v3 deletion
-  * vectors, time travel across an ALTER, partition pruning and stats
-  * filters. Cells AND schemas (names, types, nullability, field
+  * Every engine-internal read is served by the connector, so the spec
+  * is also their differential against a plain parquet reference
+  * ([[ParquetReference]]: parquet read + reconciling projection,
+  * driver-collected delete positions anti-joined on `_metadata`):
+  * `LakeTable.read`, `readLineage` and the merge-on-read row-op scan
+  * under merge-on-read position deletes, equality batches (inline and
+  * file-based), v3 deletion vectors, time travel across an ALTER,
+  * partition pruning and stats filters; and the pinned file-list reads
+  * (`readPinned`) of each of their callers — constraint scans,
+  * `changesBetween`, changelog delete markers, the copy-on-write
+  * before-state, scoped compaction with lineage, `readStaged` and
+  * `readBranch`. Cells AND schemas (names, types, nullability, field
   * metadata) must agree.
   */
 class ConnectorRandomSpec extends AnyFunSuite {
@@ -124,7 +127,7 @@ class ConnectorRandomSpec extends AnyFunSuite {
     assert(!r.hasError, r.toString)
   }
 
-  /** The parquet-stack read `LakeTable.read` used to be. */
+  /** The parquet reference of `LakeTable.read`. */
   private def stackRead(t: LakeTable,
       prune: Map[String, Set[String]] = Map.empty,
       asOf: Option[Long] = None,
@@ -133,44 +136,18 @@ class ConnectorRandomSpec extends AnyFunSuite {
     val visible = asOf.map(sid => md.snapshots.filter(_.id <= sid))
       .getOrElse(md.snapshots)
     val schema = asOf.map(t.schemaAsOf).getOrElse(md.currentSchema)
-    t.readFiles(spark, t.plannedFiles(prune, stats, asOf), schema,
-      LakeTable.liveDeletes(visible), LakeTable.liveEqDeletes(visible))
+    ParquetReference.read(spark, t, t.plannedFiles(prune, stats, asOf),
+      schema, LakeTable.liveDeletes(visible), LakeTable.liveEqDeletes(visible))
   }
 
-  /** The retired `liveRowsWithPos` body: every live file read through
-    * parquet with `_metadata` file path (normalized by the udf) and row
-    * index, live vectors probed, live position-delete files anti-joined.
+  /** The parquet reference of `liveRowsWithPos`: every live file with
+    * its normalized path and row index, live deletes applied.
     */
   private def stackRowsWithPos(t: LakeTable): DataFrame = {
     val md = t.metadata
-    val files = LakeTable.liveFiles(md.snapshots)
-    val existing = LakeTable.liveDeletes(md.snapshots)
-    val tagged = files.groupBy(_.schemaId).map { case (sid, group) =>
-      val fs = md.schemaById(sid)
-      spark.read.schema(Reconcile.clean(fs).asInstanceOf[StructType])
-        .parquet(group.map(_.path): _*)
-        .withColumn("_graft_dfile",
-          LakeTable.normalizeUdf(col("_metadata.file_path")))
-        .withColumn("_graft_dpos", col("_metadata.row_index"))
-        .select(Reconcile.projection(fs, md.currentSchema) ++
-          Seq(col("_graft_dfile"), col("_graft_dpos")): _*)
-    }.reduce(_.unionByName(_))
-    val sets = files.flatMap(f =>
-      existing.get(LakeTable.normalizePath(f.path)))
-    val dvRefs = sets.flatMap(_.dv).map(d =>
-      LakeTable.normalizePath(d.dataPath) -> ((d.dvPath, d.offset, d.length)))
-      .toMap
-    val vecLive = if (dvRefs.isEmpty) tagged else
-      tagged.filter(!LakeTable.dvDeletedCol(spark, col("_graft_dfile"),
-        col("_graft_dpos"), dvRefs))
-    val delPaths = sets.flatMap(_.paths).distinct
-    val live = if (delPaths.isEmpty) vecLive
-      else vecLive.join(spark.read.schema(LakeTable.DeleteFileSchema)
-        .parquet(delPaths: _*)
-        .select(col("file_path").as("_graft_dfile"),
-          col("pos").as("_graft_dpos")),
-      Seq("_graft_dfile", "_graft_dpos"), "left_anti")
-    // the join put its keys first; the columns are read by name
+    val live = ParquetReference.read(spark, t,
+      LakeTable.liveFiles(md.snapshots), md.currentSchema,
+      LakeTable.liveDeletes(md.snapshots), withPos = true)
     live.select((md.currentSchema.fieldNames.toSeq ++
       Seq("_graft_dfile", "_graft_dpos")).map(c => col(s"`$c`")): _*)
   }
@@ -248,8 +225,8 @@ class ConnectorRandomSpec extends AnyFunSuite {
         val t = load()
         assertSame(t.read(spark), stackRead(t), s"iter $iter $stage read")
         val snaps = t.metadata.snapshots
-        assertSame(t.readLineage(spark), t.readFiles(spark, t.plannedFiles(),
-          t.currentSchema, LakeTable.liveDeletes(snaps),
+        assertSame(t.readLineage(spark), ParquetReference.read(spark, t,
+          t.plannedFiles(), t.currentSchema, LakeTable.liveDeletes(snaps),
           LakeTable.liveEqDeletes(snaps), lineage = true),
           s"iter $iter $stage lineage")
       }
@@ -351,6 +328,155 @@ class ConnectorRandomSpec extends AnyFunSuite {
         "the case must prune something")
       assertSame(got, stackRead(t, prune, asOf, stats),
         s"prune=$prune stats=$stats asOf=$asOf")
+    }
+  }
+
+  /** The changelog delete markers of one position-delete snapshot,
+    * by the reference: the affected files read whole, semi-joined
+    * against the positions the snapshot deleted — its delete files'
+    * rows, or its vectors' delta bits.
+    */
+  private def refMarkers(t: LakeTable, sn: graft.lake.SnapshotMeta): DataFrame = {
+    val byPath = t.metadata.snapshots.filter(_.id <= sn.id).flatMap(_.files)
+      .map(f => LakeTable.normalizePath(f.path) -> f).toMap
+    val files = sn.deleteCounts.keySet.toSeq.sorted.map(byPath)
+    val pairs =
+      if (sn.dvs.nonEmpty) sn.dvs.flatMap(d =>
+        ParquetReference.vectorBits(d.dvPath, d.deltaOffset, d.deltaLength)
+          .map(LakeTable.normalizePath(d.dataPath) -> _))
+      else spark.read.schema(LakeTable.DeleteFileSchema)
+        .parquet(sn.deletePaths: _*).collect().toSeq
+        .map(r => (LakeTable.normalizePath(r.getString(0)), r.getLong(1)))
+    ParquetReference.read(spark, t, files, t.currentSchema, withPos = true)
+      .join(ParquetReference.positionFrame(spark, pairs),
+        Seq("_graft_dfile", "_graft_dpos"), "left_semi")
+      .select(t.currentSchema.fieldNames.toSeq.map(c => col(s"`$c`")): _*)
+  }
+
+  test("differential: the pinned file-list reads of constraint scans, " +
+      "changesBetween, changelog markers, the copy-on-write before-state, " +
+      "scoped compaction, readStaged and readBranch vs the parquet " +
+      "reference (seeded)") {
+    val rnd = new scala.util.Random(77770004L)
+    for (iter <- 1 to 2) {
+      val v3 = iter % 2 == 0
+      val (wh, t0, schema) = mkKeyed(rnd, s"pin$iter", v3)
+      def load() = LakeTable.load(wh, "d", "t")
+      def ids(r: Range): Seq[java.lang.Long] =
+        r.map(i => java.lang.Long.valueOf(i.toLong))
+      def snaps() = load().metadata.snapshots
+      t0.append(rowsFor(schema, ids(0 until 30) :+ null, rnd))
+      val firstAppend = snaps().last.id
+      load().append(rowsFor(schema, ids(30 until 50), rnd))
+      load().append(rowsFor(schema, ids(50 until 60), rnd))
+      val lastAppend = snaps().last.id
+
+      // changesBetween: the range's added files, no deletes
+      val added = snaps().filter(s => s.id > firstAppend && s.id <= lastAppend)
+        .flatMap(_.files)
+      assertSame(load().changesBetween(spark, firstAppend, lastAppend),
+        ParquetReference.read(spark, load(), added, load().currentSchema),
+        s"iter $iter changesBetween")
+
+      // changelog delete markers: a first delete, then a second one on
+      // the same files (v2 delete files accumulate, v3 vectors replace
+      // with a delta blob of the new positions)
+      val m = 2 + rnd.nextInt(3)
+      load().deleteMoR(spark, col("id") % m === 1L)
+      load().deleteMoR(spark, col("id") > 40L && col("id") < 52L)
+      for (sn <- snaps().takeRight(2)) {
+        assert(if (v3) sn.dvs.nonEmpty else sn.deletePaths.nonEmpty)
+        val t = load()
+        val prev = t.metadata.snapshots.filter(_.id < sn.id).map(_.id).max
+        val markers = t.changelogBetween(spark, prev, sn.id)
+          .filter(col("_change_type") === "delete")
+          .drop("_change_type", "_change_ordinal", "_change_snapshot_id")
+        assertSame(markers, refMarkers(t, sn), s"iter $iter markers ${sn.id}")
+      }
+
+      // the copy-on-write before-state: the replaced files as visible
+      // just before the overwrite, their position deletes applied
+      load().delete(spark, col("id") % 5 === 2L)
+      val cow = snaps().last
+      assert(cow.operation == "overwrite" && cow.removedPaths.nonEmpty)
+      val t1 = load()
+      val before = t1.metadata.snapshots.filter(_.id < cow.id)
+      val byPath = before.flatMap(_.files)
+        .map(f => LakeTable.normalizePath(f.path) -> f).toMap
+      val removed = cow.removedPaths.map(p => byPath(LakeTable.normalizePath(p)))
+      assertSame(t1.readPinned(spark, removed, LakeTable.liveDeletes(before)),
+        ParquetReference.read(spark, t1, removed, t1.currentSchema,
+          LakeTable.liveDeletes(before)), s"iter $iter cow before-state")
+
+      // equality batches, then a constraint scan over the files stats
+      // cannot prove (addConstraint's shape: live deletes applied)
+      load().upsertMoR(spark, rowsFor(schema, ids(5 until 15), rnd), Seq("id"))
+      load().deleteByKeysMoR(spark, spark.range(25, 35, 1, 2).select(col("id")))
+      val t2 = load()
+      val live = LakeTable.liveFiles(t2.metadata.snapshots)
+      val check = "id < 45"
+      val unproven = graft.lake.Constraints.violationFilters(check,
+          t2.currentSchema) match {
+        case Some(vfs) => live.filter(f => vfs.exists(vf =>
+          graft.lake.FileStats.mightMatch(f.stats, t2.currentSchema, Seq(vf))))
+        case None => live
+      }
+      assert(unproven.nonEmpty && unproven.size < live.size,
+        s"the case must prove some files: ${unproven.size}/${live.size}")
+      val liveDel = LakeTable.liveDeletes(t2.metadata.snapshots)
+      val liveEq = LakeTable.liveEqDeletes(t2.metadata.snapshots)
+      assertSame(t2.readPinned(spark, unproven, liveDel, liveEq)
+          .filter(!coalesce(expr(check), lit(true))),
+        ParquetReference.read(spark, t2, unproven, t2.currentSchema,
+          liveDel, liveEq).filter(!coalesce(expr(check), lit(true))),
+        s"iter $iter constraint scan")
+
+      // readStaged: the live state plus the staged files, stamped with
+      // the staged snapshot's id as their sequence
+      val staged = load().appendStaged(rowsFor(schema, ids(8 until 12), rnd),
+        "w1")
+      val t3 = load()
+      assertSame(t3.readStaged(spark, "w1"), ParquetReference.read(spark, t3,
+        live ++ staged.files.map(f =>
+          if (f.seq >= 0) f else f.copy(seq = staged.id)),
+        t3.currentSchema, liveDel, liveEq), s"iter $iter readStaged")
+      load().discardStaged("w1")
+
+      // readBranch: the fork base plus re-sequenced branch commits
+      // carrying equality batches; main's post-fork upsert stays out
+      load().createBranch("b")
+      load().upsertMoR(spark, rowsFor(schema, ids(0 until 6), rnd), Seq("id"))
+      load().upsertToBranchMoR(spark, "b", rowsFor(schema, ids(20 until 28), rnd),
+        Seq("id"))
+      load().upsertToBranchMoR(spark, "b", rowsFor(schema, ids(24 until 40), rnd),
+        Seq("id"))
+      val t4 = load()
+      val base = t4.metadata.refs("b").baseSnapshotId.get
+      val visible = t4.metadata.snapshots.filter(_.id <= base)
+      val (overlay, branchEqs) = LakeTable.resequenceOverlay(base,
+        t4.metadata.staged.filter(_.wapId.contains("branch:b")).sortBy(_.id))
+      assert(branchEqs.size == 2)
+      assertSame(t4.readBranch(spark, "b"), ParquetReference.read(spark, t4,
+        LakeTable.liveFiles(visible) ++ overlay, t4.currentSchema,
+        LakeTable.liveDeletes(visible),
+        LakeTable.liveEqDeletes(visible) ++ branchEqs),
+        s"iter $iter readBranch")
+
+      // scoped compaction: its input read (lineage on v3), then the
+      // rewritten table reads back the same rows and lineage
+      val t5 = load()
+      val s5 = t5.metadata.snapshots
+      val all = LakeTable.liveFiles(s5)
+      val (del5, eq5) = (LakeTable.liveDeletes(s5), LakeTable.liveEqDeletes(s5))
+      val ref = ParquetReference.read(spark, t5, all, t5.currentSchema, del5,
+        eq5, lineage = v3)
+      assertSame(t5.readPinned(spark, all, del5, eq5, lineage = v3), ref,
+        s"iter $iter compaction input")
+      val want = cells(ref)
+      assert(t5.compactScoped(spark).isDefined)
+      val t6 = load()
+      val got = if (v3) t6.readLineage(spark) else t6.read(spark)
+      assert(cells(got) == want, s"iter $iter compacted rows")
     }
   }
 

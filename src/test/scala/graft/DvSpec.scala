@@ -21,12 +21,12 @@ import graft.lake.{DeletionVectors, Engine, LakeTable}
 class DvSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** The parquet-stack file-list read (`readFiles`) of every live file
-    * with the live delete state — the shape scoped compaction and the
-    * copy-on-write rewrites read.
+  /** The pinned file-list read of every live file with the live
+    * delete state — the shape scoped compaction and the copy-on-write
+    * rewrites read.
     */
   private def fileListRead(t: LakeTable): DataFrame =
-    t.readFiles(spark, t.plannedFiles(), t.currentSchema,
+    t.readPinned(spark, t.plannedFiles(),
       LakeTable.liveDeletes(t.metadata.snapshots))
 
   private def mkTable(tag: String): (String, LakeTable) = {
@@ -214,16 +214,14 @@ class DvSpec extends AnyFunSuite {
       .explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(!rp.contains("Join") && !rp.contains("dvdeleted("), rp)
     assert(t.read(spark).count() == 4L)
-    // the file-list reads that stay on the parquet stack (scoped
-    // compaction, copy-on-write rewrites) probe the bitmap in-stage
-    val qe = fileListRead(t).queryExecution
-    val p = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("dvdeleted("),
-      "the vector probe expression must be in the plan:\n" + p)
-    assert(!p.contains("Join"),
-      "a vectored read must not anti-join delete files (v2's shape):\n" + p)
-    assert(p.contains("[codegen id"),
-      "the probe must not break whole-stage codegen:\n" + p)
+    // the file-list reads (scoped compaction, copy-on-write rewrites)
+    // run on the same pinned scan: the vector applies in the reader
+    val p = fileListRead(t).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(p.contains("BatchScan"), p)
+    assert(!p.contains("Join") && !p.contains("Filter"),
+      "a vectored file-list read must not join or filter:\n" + p)
+    assert(fileListRead(t).count() == 4L)
   }
 
   test("SQL DELETE/UPDATE on a v3 merge-on-read table commit vectors") {
@@ -288,40 +286,6 @@ class DvSpec extends AnyFunSuite {
     // idempotent: nothing positional left to convert
     assert(LakeTable.load(wh, "d", "t")
       .rewritePositionDeleteFiles(spark).isEmpty)
-  }
-
-  test("wide-delete refs broadcast: task-closure bytes stay O(1) in files") {
-    def lookupBytes(d: DataFrame): (Int, Boolean) = {
-      val lookups = d.queryExecution.optimizedPlan
-        .flatMap(_.expressions)
-        .flatMap(_.collect { case e: graft.functions.DvDeleted => e.lookup })
-      assert(lookups.nonEmpty, "expected a DvDeleted filter in the plan")
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(lookups.head)
-      oos.close()
-      (bos.size(),
-        lookups.head.carrier.isInstanceOf[graft.functions.BcastRefs[_]])
-    }
-    // wide: more affected files than RefCarrier.InlineMax — the plan
-    // must carry a broadcast handle, not the per-file map
-    val (whW, tW) = mkTable("wide")
-    import SparkTestSession.spark.implicits._
-    tW.append((0L until 400L).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartition(100))
-    LakeTable.load(whW, "d", "t").deleteMoR(spark, col("id") % 4L === 0L)
-    val (wideBytes, wideBc) =
-      lookupBytes(fileListRead(LakeTable.load(whW, "d", "t")))
-    assert(wideBc, "a wide delete's refs must ride as a broadcast")
-    assert(wideBytes < 4096,
-      s"serialized lookup must be O(1), got $wideBytes bytes")
-    // narrow: a handful of files stays inline — no broadcast round trip
-    val (whN, tN) = mkTable("narrow")
-    tN.append(df(Seq((1L, "a"), (2L, "b"), (3L, "c"))))
-    LakeTable.load(whN, "d", "t").deleteMoR(spark, col("id") === 2L)
-    val (_, narrowBc) =
-      lookupBytes(fileListRead(LakeTable.load(whN, "d", "t")))
-    assert(!narrowBc, "a narrow delete's refs must stay inline")
   }
 
   test("mergeMoR under vectors: matched rows vector-deleted, updates append") {

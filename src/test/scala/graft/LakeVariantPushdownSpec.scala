@@ -361,6 +361,28 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
     }
   }
 
+  test("a metadata column in the relation output refuses the variant " +
+      "push for bare and filter-only variant uses too") {
+    val (wh, cat) = mk("metaout", rows = 500)
+    withExtSession { s2 =>
+      s2.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+      s2.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      // a bare variant (the whole '$' is pushed) and an extraction that
+      // only the Filter holds, each beside a metadata column
+      val cases = Seq(
+        s"SELECT _graft_file, payload FROM $cat.d.t" -> 500,
+        s"""SELECT _graft_pos, k FROM $cat.d.t
+           |WHERE variant_get(payload, '$$.small', 'long') > 480"""
+          .stripMargin -> 19)
+      for ((sql, n) <- cases) {
+        def run() = s2.sql(sql).collect().map(_.toString).sorted.toSeq
+        val truth = withPushIn(s2, on = false)(run())
+        val got = withPushIn(s2, on = true)(run())
+        assert(got == truth && truth.size == n, sql)
+      }
+    }
+  }
+
   test("q_star_join's fixture memo survives interleaved sfDirs " +
       "(review-found r17: a fixed warehouse path let a second dir's " +
       "build destroy the first memo entry's data)") {

@@ -248,17 +248,14 @@ class RowLineageSpec extends AnyFunSuite {
     val rp = t.readLineage(spark).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert(!rp.contains("Join") && !rp.contains("fileconst("), rp)
-    // the file-list reads that stay on the parquet stack (scoped
-    // compaction, copy-on-write rewrites) resolve them in-stage
-    val p = t.readFiles(spark, t.plannedFiles(), t.currentSchema,
-      lineage = true).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("fileconst("),
-      "the per-file constant lookup must be in the plan:\n" + p)
-    assert(!p.contains("Join"),
+    // the file-list reads (scoped compaction, copy-on-write rewrites)
+    // run on the same pinned scan: the constants ride the partitions
+    val p = t.readPinned(spark, t.plannedFiles(), lineage = true)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+    assert(p.contains("BatchScan"), p)
+    assert(!p.contains("Join") && !p.contains("fileconst("),
       "lineage must not join a file-constant table:\n" + p)
-    assert(p.contains("[codegen id"),
-      "the lookup must not break whole-stage codegen:\n" + p)
   }
 
   test("zero-copy clone carries the id counter: no collisions after cloning") {
