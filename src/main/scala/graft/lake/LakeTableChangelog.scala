@@ -1,13 +1,8 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import graft.schema._
 
 /** Time travel and change-data-capture surface of [[LakeTable]]:
   * snapshot-as-of resolution, `changesBetween`, and the changelog
@@ -45,18 +40,24 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
     * its inserts (an upsert's own rows must survive its own key batch,
     * mirroring sequence-number semantics).
     *
-    * Marker content: positional deletes emit the FULL deleted rows
-    * (the delete files pin (file, pos); the rows are read back from
-    * the data files — O(affected files)); equality-delete batches emit
-    * the KEY columns (nested keys materialize their enclosing struct
-    * path) with every other column null — the batch never knew the
-    * victim rows, only their keys, and re-deriving them would need the
-    * pre-image of the whole table.
+    * The appends, upserts and deletes of the range are ONE pinned
+    * connector scan — the changelog stream's partitions
+    * (`LakeScan.changelogPartitions`) planned as a batch: no join, no
+    * broadcast, no driver-side read of delete files. Marker content:
+    * positional deletes emit the FULL deleted rows (the affected data
+    * files are read back by a reader that keeps only the positions the
+    * snapshot's delete files or vector delta name — O(affected
+    * files)); equality-delete batches emit the KEY columns (nested
+    * keys fill their enclosing structs) with every other column null —
+    * the batch never knew the victim rows, only their keys, and
+    * re-deriving them would need the pre-image of the whole table.
     *
     * Rewrites move bytes, not data — skipped, no ordinal consumed.
     * Copy-on-write commits (overwrite/replace) carry no row-level
     * change information (removed paths were REWRITTEN, with survivors,
-    * into new files) and are refused.
+    * into new files) and are refused unless `includeCowDiffs` /
+    * `includeReplaceDiffs` opt into computing their row diffs, which
+    * union in as `exceptAll` frames at their own ordinals.
     */
   def changelogBetween(spark: SparkSession, fromSnapshot: Long,
       toSnapshot: Long, includeCowDiffs: Boolean = false,
@@ -94,105 +95,17 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
         else ": copy-on-write commits carry no row-level change " +
           "information (pass includeCowDiffs=true to compute the row " +
           "delta at O(rewritten bytes) cost)"))
-    // map-typed columns can't join a multiset except directly —
-    // cowDiff normalizes them to key-sorted entry arrays for the diff
-    // and rebuilds the map shape after, so any schema participates
-
-    def tagged(df: DataFrame, typ: String, ord: Int, sid: Long): DataFrame =
-      df.withColumn("_change_type", lit(typ))
-        .withColumn("_change_ordinal", lit(ord))
-        .withColumn("_change_snapshot_id", lit(sid))
-
-    // equality markers: key columns (possibly struct-nested) filled
-    // from the batch's k<id> columns, everything else null
-    def eqMarkers(b: EqDeleteMeta): DataFrame = {
-      val keyIds = b.fieldIds.toSet
-      def hasKey(f: StructField): Boolean =
-        FieldIds.flatten(StructType(Seq(f))).exists { case (_, sf) =>
-          FieldIds.hasId(sf) && keyIds.contains(FieldIds.idOf(sf)) }
-      def build(f: StructField): Column = f.dataType match {
-        case st: StructType if hasKey(f) =>
-          struct(st.fields.toSeq.map(c => build(c).as(c.name)): _*)
-        case dt =>
-          if (FieldIds.hasId(f) && keyIds.contains(FieldIds.idOf(f)))
-            col(s"k${FieldIds.idOf(f)}").cast(dt)
-          else lit(null).cast(dt)
-      }
-      // per-batch read: key files on either side of a type promotion
-      // have heterogeneous physical types, and one multi-path parquet
-      // read fails on mixed INT32/INT64 files; inline-keyed batches
-      // resolve as LocalRelations, zero IO
-      LakeTable.eqBatchFrame(spark, b)
-        .select(current.fields.toSeq.map(f => build(f).as(f.name)): _*)
-    }
-
-    // positional markers: read the affected data files' rows at the
-    // deleted positions — full row content, reconciled to the current
-    // schema. O(files actually touched by the delete).
-    def posMarkers(sn: SnapshotMeta): DataFrame = {
-      import graft.sources.LakeSource.{FileMetaCol, PosMetaCol}
-      val affected = sn.deleteCounts.keySet
-      val byPath = md.snapshots.filter(_.id <= sn.id).flatMap(_.files)
-        .map(f => LakeTable.normalizePath(f.path) -> f).toMap
-      // an affected data file no longer listed by any snapshot <= sn
-      // (expired/squashed history) means the deleted ROWS cannot be
-      // read back — a silent drop would emit a changelog missing
-      // retractions; name the problem instead
-      val missing = affected.filterNot(byPath.contains)
-      require(missing.isEmpty,
-        s"changelog: snapshot ${sn.id}'s position deletes reference " +
-          s"data file(s) no longer in history (expired?): " +
-          missing.toSeq.sorted.mkString(", "))
-      // the (data file, position) pairs this snapshot deleted: a vector
-      // commit's DELTA blobs hold exactly them (expanded here, on the
-      // driver); a positional commit's delete files list them
-      val deleted =
-        if (sn.dvs.nonEmpty) {
-          val pairs = new java.util.ArrayList[org.apache.spark.sql.Row]()
-          sn.dvs.foreach { d =>
-            val path = LakeTable.normalizePath(d.dataPath)
-            val it = DeletionVectors.readBlob(d.dvPath, d.deltaOffset,
-              d.deltaLength).getLongIterator
-            while (it.hasNext)
-              pairs.add(org.apache.spark.sql.Row(path, it.next()))
-          }
-          spark.createDataFrame(pairs, LakeTable.DeleteFileSchema)
-        } else spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(sn.deletePaths: _*)
-      // every affected file read whole (no deletes applied: these rows
-      // ARE deleted), tagged with the connector's row identity
-      val rows = readPinned(spark, affected.toSeq.sorted.map(byPath))
-      rows.select(rows.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
-          col(FileMetaCol).as("_graft_dfile"),
-          col(PosMetaCol).as("_graft_dpos")): _*)
-        .join(deleted.select(col("file_path").as("_graft_dfile"),
-          col("pos").as("_graft_dpos")),
-          Seq("_graft_dfile", "_graft_dpos"), "left_semi")
-        .drop("_graft_dfile", "_graft_dpos")
-    }
-
-    // the row delta of one CoW overwrite: rows of the replaced files AS
-    // VISIBLE just before it (their accumulated position deletes still
-    // applied — CoW verbs refuse while equality batches are live, so
-    // positional state is the only kind that can exist) diffed against
-    // the rewritten output. Kept rows cancel in the multiset except;
-    // only genuinely deleted/changed rows surface.
-    def cowDiff(sn: SnapshotMeta): (DataFrame, DataFrame) = {
-      val byPath = md.snapshots.filter(_.id < sn.id).flatMap(_.files)
-        .map(f => LakeTable.normalizePath(f.path) -> f).toMap
-      val removedMetas = sn.removedPaths.map(LakeTable.normalizePath).map(p =>
-        byPath.getOrElse(p, throw new IllegalStateException(
-          s"changelog: overwrite ${sn.id} replaced $p, which no " +
-            s"snapshot < ${sn.id} lists (expired history?)")))
-      val before = readPinned(spark, removedMetas,
-        LakeTable.liveDeletes(md.snapshots.filter(_.id < sn.id)))
-      val after = readPinned(spark, sn.files)
+    // the row delta of one copy-on-write overwrite or full replace:
+    // `before` minus `after` = deletes, the reverse = inserts. Kept
+    // rows cancel in the multiset except; only genuinely deleted or
+    // changed rows surface. Map-typed columns can't join a multiset
+    // except directly — they diff as key-sorted entry arrays
+    // (orderable, entry-order-insensitive) and are rebuilt after, so
+    // the semantics stay full-row multiset equality for any schema
+    def rowDiff(before: DataFrame, after: DataFrame): (DataFrame, DataFrame) =
       if (!current.fields.exists(f => LakeTable.hasMapType(f.dataType)))
         (before.exceptAll(after), after.exceptAll(before))
       else {
-        // maps → key-sorted entry arrays for the diff (orderable,
-        // entry-order-insensitive), back to maps after — the diff
-        // semantics stay full-row multiset equality
         def norm(df: DataFrame) = df.select(current.fields.toSeq.map(f =>
           LakeTable.mapNormExpr(col(s"`${f.name}`"), f.dataType)
             .as(f.name)): _*)
@@ -203,14 +116,28 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
         val na = norm(after)
         (denorm(nb.exceptAll(na)), denorm(na.exceptAll(nb)))
       }
+
+    // one CoW overwrite: rows of the replaced files AS VISIBLE just
+    // before it (their accumulated position deletes still applied —
+    // CoW verbs refuse while equality batches are live, so positional
+    // state is the only kind that can exist) against the rewritten
+    // output
+    def cowDiff(sn: SnapshotMeta): (DataFrame, DataFrame) = {
+      val byPath = md.snapshots.filter(_.id < sn.id).flatMap(_.files)
+        .map(f => LakeTable.normalizePath(f.path) -> f).toMap
+      val removedMetas = sn.removedPaths.map(LakeTable.normalizePath).map(p =>
+        byPath.getOrElse(p, throw new IllegalStateException(
+          s"changelog: overwrite ${sn.id} replaced $p, which no " +
+            s"snapshot < ${sn.id} lists (expired history?)")))
+      rowDiff(readPinned(spark, removedMetas,
+          LakeTable.liveDeletes(md.snapshots.filter(_.id < sn.id))),
+        readPinned(spark, sn.files))
     }
 
-    // the row delta of one full-content replace: the WHOLE table as
-    // visible at the preceding snapshot (every live delete applied —
-    // read-at-snapshot handles positional, vector, and equality state
-    // alike) diffed against the replace's own file set. Kept rows
-    // cancel in the multiset except — a replace that re-writes 99% of
-    // the table unchanged emits only the 1% that moved.
+    // one full-content replace: the WHOLE table as visible at the
+    // preceding snapshot (every live delete applied) against the
+    // replace's own file set — a replace that re-writes 99% of the
+    // table unchanged emits only the 1% that moved
     def replaceDiff(sn: SnapshotMeta): (DataFrame, DataFrame) = {
       val prev = md.snapshots.filter(_.id < sn.id).map(_.id)
         .reduceOption(_ max _)
@@ -220,56 +147,27 @@ private[lake] trait LakeTableChangelog { self: LakeTable =>
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           clean)
       }
-      val after = readPinned(spark, sn.files)
-      if (!current.fields.exists(f => LakeTable.hasMapType(f.dataType)))
-        (before.exceptAll(after), after.exceptAll(before))
-      else {
-        def norm(df: DataFrame) = df.select(current.fields.toSeq.map(f =>
-          LakeTable.mapNormExpr(col(s"`${f.name}`"), f.dataType)
-            .as(f.name)): _*)
-        def denorm(df: DataFrame) = df.select(current.fields.toSeq.map(f =>
-          LakeTable.mapDenormExpr(col(s"`${f.name}`"), f.dataType)
-            .as(f.name)): _*)
-        val nb = norm(before)
-        val na = norm(after)
-        (denorm(nb.exceptAll(na)), denorm(na.exceptAll(nb)))
-      }
+      rowDiff(before, readPinned(spark, sn.files))
     }
 
-    val parts = range.sortBy(_.id)
-      .filterNot(s => LakeTable.isByteMove(s.operation))
-      .zipWithIndex.flatMap { case (sn, ord) =>
-        if (sn.operation == "replace") {
-          // reachable only under includeReplaceDiffs (require above)
-          val (delRows, insRows) = replaceDiff(sn)
-          Seq(tagged(delRows, "delete", ord, sn.id),
-            tagged(insRows, "insert", ord, sn.id))
-        } else if (sn.operation == "overwrite") {
-          // reachable only under includeCowDiffs (the require above)
-          val (delRows, insRows) = cowDiff(sn)
-          Seq(tagged(delRows, "delete", ord, sn.id),
-            tagged(insRows, "insert", ord, sn.id))
-        } else {
-          val dels =
-            (if (sn.deletePaths.nonEmpty || sn.dvs.nonEmpty)
-              Seq(posMarkers(sn)) else Seq.empty) ++
-              sn.eqDeletes.map(eqMarkers)
-          val ins =
-            if (sn.files.nonEmpty) Seq(readPinned(spark, sn.files))
-            else Seq.empty
-          dels.map(tagged(_, "delete", ord, sn.id)) ++
-            ins.map(tagged(_, "insert", ord, sn.id))
-        }
+    val ordered = range.sortBy(_.id)
+      .filterNot(s => LakeTable.isByteMove(s.operation)).zipWithIndex
+    val (diffs, rowLevel) = ordered.partition { case (sn, _) =>
+      sn.operation == "overwrite" || sn.operation == "replace" }
+    // the computed diffs (reachable only under the opt-ins — the
+    // require above), each side with its snapshot's change columns
+    val diffLegs = diffs.flatMap { case (sn, ord) =>
+      val (delRows, insRows) =
+        if (sn.operation == "replace") replaceDiff(sn) else cowDiff(sn)
+      Seq(delRows -> "delete", insRows -> "insert").map { case (rows, typ) =>
+        rows.select(col("*"), lit(typ).as("_change_type"),
+          lit(ord).as("_change_ordinal"), lit(sn.id).as("_change_snapshot_id"))
       }
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        // data columns nullable: marker rows null-fill non-key columns
-        StructType(clean.fields.toSeq.map(_.copy(nullable = true)) ++ Seq(
-          StructField("_change_type", StringType, nullable = false),
-          StructField("_change_ordinal", IntegerType, nullable = false),
-          StructField("_change_snapshot_id", LongType, nullable = false))))
-    else parts.reduce(_.unionByName(_))
+    }
+    // every append, upsert and delete: one pinned connector scan of
+    // their markers and added rows
+    (graft.sources.LakeSource.engineRead(spark, this,
+      changelog = Some(rowLevel)) +: diffLegs).reduce(_.unionByName(_))
   }
 
   /** `identifierCols` resolved: explicit → as given; empty → the

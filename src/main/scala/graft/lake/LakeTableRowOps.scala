@@ -765,7 +765,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       LakeTable.liveFiles(md.snapshots, prune, md.currentSchema, statsFilters),
       md.currentSchema, prune, statsFilters, md.schemaOpt))
     if (candidates.isEmpty) return Seq.empty
-    val tagged = candidates.groupBy(_.schemaId).map { case (schemaId, group) =>
+    val withFile = candidates.groupBy(_.schemaId).map { case (schemaId, group) =>
       val fileSchema = md.schemaById(schemaId)
       spark.read
         .schema(Reconcile.clean(fileSchema).asInstanceOf[StructType])
@@ -775,8 +775,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
           col("_graft_file"): _*)
     }.reduce(_.unionByName(_)).filter(predicate)
     val matchedRows = matchSource match {
-      case Some((src, keys)) => tagged.join(src, keys, "left_semi")
-      case None => tagged
+      case Some((src, keys)) => withFile.join(src, keys, "left_semi")
+      case None => withFile
     }
     val hit = matchedRows.select("_graft_file").distinct()
       .collect().map(r => LakeTable.normalizePath(r.getString(0))).toSet

@@ -186,20 +186,33 @@ private[sources] class LakeReaderFactory(
 }
 
 /** Changelog delete markers from equality-delete key files: one output
-  * row per key tuple, key columns filled (physical-type-adaptive via
-  * `eqKeyValue` — batches written before a type promotion still read),
-  * all other columns null.
+  * row per key tuple, key columns filled by field id (physical-type-
+  * adaptive via `eqKeyValue` — batches written before a type promotion
+  * still read), a struct enclosing a nested key rebuilt around it, all
+  * other columns null. A key whose column the target lacks (dropped
+  * since, or pruned) fills nothing.
   */
 private[sources] class EqMarkerReader(p: LakeEqMarkerPartition)
     extends PartitionReader[InternalRow] {
-  private val keyByFieldId: Map[Int, StructField] =
-    p.keyFields.fields.map(f => FieldIds.idOf(f) -> f).toMap
-  private val fillers: Array[Group => Any] = p.target.fields.map { tf =>
-    if (FieldIds.hasId(tf) && keyByFieldId.contains(FieldIds.idOf(tf))) {
-      val id = FieldIds.idOf(tf)
-      (g: Group) => LakeSource.eqKeyValue(g, s"k$id", tf.dataType)
-    } else (_: Group) => null
-  }
+  private val keyIds = p.keyIds.toSet
+  private def isKey(f: StructField): Boolean =
+    FieldIds.hasId(f) && keyIds.contains(FieldIds.idOf(f))
+  private def holdsKey(f: StructField): Boolean = isKey(f) ||
+    (f.dataType match {
+      case st: StructType => st.fields.exists(holdsKey)
+      case _ => false
+    })
+  private def filler(f: StructField): Group => Any =
+    if (isKey(f)) {
+      val name = s"k${FieldIds.idOf(f)}"
+      (g: Group) => LakeSource.eqKeyValue(g, name, f.dataType)
+    } else f.dataType match {
+      case st: StructType if holdsKey(f) =>
+        val kids = st.fields.map(filler)
+        (g: Group) => new GenericInternalRow(kids.map(_(g)))
+      case _ => (_: Group) => null
+    }
+  private val fillers: Array[Group => Any] = p.target.fields.map(filler)
   private val files = p.paths.iterator
   private var reader: ParquetReader[Group] = _
   private var cur: Group = _

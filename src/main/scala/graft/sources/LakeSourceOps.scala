@@ -47,7 +47,10 @@ private[graft] object LakeSource {
     * skipping apply. It reads the live files `prune`/`statsFilters`
     * keep ([[LakeTable.read]], the merge-on-read row-op scan), or
     * exactly `state` when given: an explicit file list under an
-    * explicit delete state ([[LakeTable.readPinned]]).
+    * explicit delete state ([[LakeTable.readPinned]]). With
+    * `changelog` it reads the changelog of those (snapshot, ordinal)
+    * pairs through [[LakeScan.changelogPartitions]], the output
+    * gaining the three change columns (`LakeTable.changelogBetween`).
     * The output mirrors a parquet read of the reconciled schema: every
     * column nullable, no field metadata. The metadata columns
     * ([[FileMetaCol]] etc.) stay resolvable on the relation; a pinned
@@ -58,17 +61,19 @@ private[graft] object LakeSource {
       prune: Map[String, Set[String]] = Map.empty,
       asOfSnapshot: Option[Long] = None,
       statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty,
-      state: Option[LakeReadState] = None)
+      state: Option[LakeReadState] = None,
+      changelog: Option[Seq[(graft.lake.SnapshotMeta, Int)]] = None)
       : org.apache.spark.sql.DataFrame = {
     val view = t.frozenView
     val md = view.metadata
     val table = new LakeSparkTable(view.location.getParent.getParent.toString,
       md.database, md.table, 0L, view, asOfSnapshot,
-      pin = Some(LakeReadPin(view, prune, statsFilters, state)))
+      pin = Some(LakeReadPin(view, prune, statsFilters, state, changelog)))
     val schema = asOfSnapshot.map(view.schemaAsOf)
       .getOrElse(view.currentSchema)
+    val data = Reconcile.clean(asNullable(schema)).asInstanceOf[StructType]
     val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
-      .toAttributes(Reconcile.clean(asNullable(schema)).asInstanceOf[StructType])
+      .toAttributes(if (changelog.isDefined) changelogSchema(data) else data)
     org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation(
         table, output, None, None,

@@ -276,7 +276,7 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
     // but force data columns nullable — marker rows null-fill non-key
     // columns; readSchema cleans at the end like the normal path
     val full =
-      if (changelogMode)
+      if (changelogMode || pin.exists(_.changelog.isDefined))
         StructType(pinnedSchema.fields.toSeq.map(_.copy(nullable = true)) ++
           LakeSource.changelogFields)
       else pinnedSchema
@@ -422,11 +422,18 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
   * branch overlay with its re-sequenced equality batches. Either way
   * Spark's own pushed and runtime filters skip row groups inside the
   * files only, and the readers apply deletes per file.
+  *
+  * With `changelog` it reads the changelog of those (snapshot,
+  * `_change_ordinal`) pairs instead — the partitions
+  * [[LakeScan.changelogPartitions]] plans for the changelog stream,
+  * as one batch scan whose schema adds the three change columns
+  * (`LakeTable.changelogBetween`).
   */
 private[graft] case class LakeReadPin(table: LakeTable,
     prune: Map[String, Set[String]] = Map.empty,
     statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty,
-    state: Option[LakeReadState] = None)
+    state: Option[LakeReadState] = None,
+    changelog: Option[Seq[(graft.lake.SnapshotMeta, Int)]] = None)
 
 /** An explicit read state: data files (each carrying its own data
   * sequence and lineage constants), position-delete sets and deletion
@@ -499,10 +506,10 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
     // an incremental range reads raw added files, not the live set —
     // the metadata rollups below would answer for the wrong row set
     if (incremental.isDefined) return false
-    // a pinned read's prune/stats narrowing or explicit state is a
-    // row-set restriction the whole-table rollups below cannot honour
+    // a pinned read's prune/stats narrowing, explicit state or
+    // changelog is a row set the whole-table rollups below cannot honour
     if (pin.exists(p => p.prune.nonEmpty || p.statsFilters.nonEmpty ||
-        p.state.isDefined))
+        p.state.isDefined || p.changelog.isDefined))
       return false
 
     val t = pin.map(_.table).getOrElse(LakeTable.load(wh, db, tbl))
@@ -737,9 +744,15 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
   }
 
   private def plannedFull(t: LakeTable) = {
-    pin.flatMap(_.state) match {
-      case Some(st) => (t, st.files, st.deletes, st.eqDeletes)
-      case None => plannedLive(t)
+    (pin.flatMap(_.state), pin.flatMap(_.changelog)) match {
+      case (Some(st), _) => (t, st.files, st.deletes, st.eqDeletes)
+      case (_, Some(range)) =>
+        // the added and marker-read files: what the statistics size
+        (t, range.flatMap(_._1.files) ++ LakeScan.changelogAffected(
+            t.metadata, range.map(_._1)).values.flatten,
+          Map.empty[String, graft.lake.DeleteSet],
+          Seq.empty[graft.lake.EqDeleteMeta])
+      case _ => plannedLive(t)
     }
   }
 
@@ -1071,6 +1084,15 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     def planInputPartitions(): Array[InputPartition] =
       Array(LakeAggPartition(aggResult.get._2))
     def createReaderFactory(): PartitionReaderFactory = new LakeReaderFactory
+  } else if (pin.exists(_.changelog.isDefined)) new Batch {
+    // the changelog stream's partitions as one batch scan: row
+    // partitions only (the default factory never reads columnar)
+    def planInputPartitions(): Array[InputPartition] = {
+      val t = planned._1
+      LakeScan.changelogPartitions(t.metadata, pin.get.changelog.get,
+        target, LakeSource.externalTest(t.location))
+    }
+    def createReaderFactory(): PartitionReaderFactory = new LakeReaderFactory
   } else new Batch {
     // the columnar decision is per-SCAN (Spark forbids mixing row and
     // columnar partitions in one scan): planInputPartitions stamps
@@ -1198,6 +1220,75 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
 }
 
 private[sources] object LakeScan {
+  /** The changelog's input partitions (Iceberg's
+    * `create_changelog_view` shape) — one planner under the changelog
+    * stream and the batch `LakeTable.changelogBetween`. `range` pairs
+    * each row-level snapshot (append, upsert, delete) with its
+    * `_change_ordinal`; `target` is the scan's (pruned) changelog
+    * schema. Per snapshot, tagged with its three change columns:
+    *  - "delete": every data file its position deletes or vector
+    *    DELTA blobs touch, read whole by a reader that emits only the
+    *    deleted positions (full-row markers, reconciled by field id);
+    *  - "delete": every equality-batch key file, read as key-only
+    *    markers (struct-nested keys fill their enclosing structs,
+    *    every other column null — the batch never knew the victims);
+    *  - "insert": every added data file, deletes not applied.
+    * Metadata only: no footer or delete-file IO on the driver — the
+    * readers load delete positions through the executor cache.
+    */
+  def changelogPartitions(md: graft.lake.TableMetadata,
+      range: Seq[(graft.lake.SnapshotMeta, Int)], target: StructType,
+      ext: String => Boolean): Array[InputPartition] = {
+    val dataTarget = StructType(
+      target.fields.filterNot(f => LakeSource.isChangelogCol(f.name)))
+    val affected = changelogAffected(md, range.map(_._1))
+    range.flatMap { case (sn, ord) =>
+      def wrap(p: InputPartition, typ: String): InputPartition =
+        LakeChangelogPartition(p, typ, ord, sn.id, target)
+      // vector commit: each marker partition reads its file's DELTA
+      // blob (exactly the rows this snapshot deleted)
+      val deltaByPath = sn.dvs.map(d => LakeTable.normalizePath(d.dataPath) ->
+        ((d.dvPath, d.deltaOffset, d.deltaLength))).toMap
+      val pos = affected.getOrElse(sn.id, Seq.empty).map(f =>
+        LakeFilePartition(f.path, md.schemaById(f.schemaId), dataTarget,
+          deletes = sn.deletePaths, emitOnlyDeleted = true,
+          external = ext(f.path),
+          dv = deltaByPath.get(LakeTable.normalizePath(f.path))))
+      val eq = sn.eqDeletes.flatMap(b => b.paths.map(p =>
+        LakeEqMarkerPartition(Seq(p), b.fieldIds, dataTarget)))
+      val ins = sn.files.map(f =>
+        LakeFilePartition(f.path, md.schemaById(f.schemaId), dataTarget,
+          external = ext(f.path)))
+      (pos ++ eq).map(wrap(_, "delete")) ++ ins.map(wrap(_, "insert"))
+    }.toArray
+  }
+
+  /** Per delete-bearing snapshot id, the data files its position
+    * deletes touch, resolved from the history up to the range's end.
+    * A file no snapshot lists any more (expired or squashed history)
+    * fails by name: its deleted rows cannot be read back, and a
+    * silent drop would emit a changelog missing retractions.
+    */
+  def changelogAffected(md: graft.lake.TableMetadata,
+      snaps: Seq[graft.lake.SnapshotMeta])
+      : Map[Long, Seq[graft.lake.DataFileMeta]] = {
+    val deleting = snaps.filter(sn =>
+      sn.deletePaths.nonEmpty || sn.dvs.nonEmpty)
+    if (deleting.isEmpty) return Map.empty
+    val last = deleting.map(_.id).max
+    val byPath = md.snapshots.filter(_.id <= last).flatMap(_.files)
+      .map(f => LakeTable.normalizePath(f.path) -> f).toMap
+    deleting.map { sn =>
+      val affected = sn.deleteCounts.keySet.toSeq.sorted
+      val missing = affected.filterNot(byPath.contains)
+      require(missing.isEmpty,
+        s"changelog: snapshot ${sn.id}'s position deletes reference " +
+          s"data file(s) no longer in history (expired?): " +
+          missing.mkString(", "))
+      sn.id -> affected.map(byPath)
+    }.toMap
+  }
+
   /** Small-file packing, Spark's file-source rule verbatim
     * (`FilePartition.getFilePartitions` over pieces sorted by size,
     * descending — next-fit with `spark.sql.files.openCostInBytes` per
@@ -1285,12 +1376,12 @@ private[sources] case class LakeFilePartition(path: String,
     extends InputPartition
 
 /** Equality-delete batch key files as changelog delete markers: each
-  * record's key columns (stored as `k<fieldId>`) fill the matching
-  * TOP-LEVEL target fields, everything else null — the batch never
-  * knew the victim rows, only their keys.
+  * record's key columns (stored as `k<fieldId>`) fill the target
+  * fields of those ids, top-level or struct-nested, everything else
+  * null — the batch never knew the victim rows, only their keys.
   */
 private[sources] case class LakeEqMarkerPartition(paths: Seq[String],
-    keyFields: StructType, target: StructType) extends InputPartition
+    keyIds: Seq[Int], target: StructType) extends InputPartition
 
 /** Wraps any row-producing partition with the three changelog columns
   * appended at fixed values. `target` is the full changelog schema the
@@ -1442,55 +1533,10 @@ private[sources] class LakeMicroBatchStream(wh: String, db: String,
       s"changelog stream of $db.$tbl hit snapshot(s) " +
         bad.map(sn => s"${sn.id}(${sn.operation})").mkString(", ") +
         ": copy-on-write commits carry no row-level change information")
-    val dataTarget = StructType(
-      target.fields.filterNot(f => LakeSource.isChangelogCol(f.name)))
-    val ext = LakeSource.externalTest(LakeTable.tableLocation(wh, db, tbl))
-    inRange.filterNot(sn => LakeTable.isByteMove(sn.operation))
-      .sortBy(_.id).zipWithIndex
-      .flatMap { case (sn, ord) =>
-        def wrap(p: InputPartition, typ: String): InputPartition =
-          LakeChangelogPartition(p, typ, ord, sn.id, target)
-        val pos: Seq[InputPartition] =
-          if (sn.deletePaths.isEmpty && sn.dvs.isEmpty) Seq.empty
-          else {
-            val byPath = md.snapshots.filter(_.id <= sn.id)
-              .flatMap(_.files)
-              .map(f => LakeTable.normalizePath(f.path) -> f).toMap
-            val affected = sn.deleteCounts.keySet
-            val missing = affected.filterNot(byPath.contains)
-            require(missing.isEmpty,
-              s"changelog stream: snapshot ${sn.id}'s position deletes " +
-                "reference data file(s) no longer in history (expired?): " +
-                missing.toSeq.sorted.mkString(", "))
-            // vector commit: each marker partition reads its file's
-            // DELTA blob (exactly the rows this snapshot deleted)
-            val deltaByPath = sn.dvs.map(d =>
-              LakeTable.normalizePath(d.dataPath) ->
-                ((d.dvPath, d.deltaOffset, d.deltaLength))).toMap
-            affected.toSeq.sorted.flatMap(byPath.get).map(f =>
-              LakeFilePartition(f.path, md.schemaById(f.schemaId),
-                dataTarget, deletes = sn.deletePaths,
-                emitOnlyDeleted = true, external = ext(f.path),
-                dv = deltaByPath.get(LakeTable.normalizePath(f.path))))
-          }
-        val eq: Seq[InputPartition] = sn.eqDeletes.flatMap { b =>
-          val keyFields = b.fieldIds.map { id =>
-            val f = md.currentSchema.fields
-              .find(f => FieldIds.hasId(f) && FieldIds.idOf(f) == id)
-            f.getOrElse(throw new UnsupportedOperationException(
-              s"changelog stream: equality-delete key field id $id is " +
-                "not a top-level column of the current schema (nested " +
-                "keys are batch-changelog-only — use " +
-                "CALL create_changelog_view)"))
-          }
-          b.paths.map(p =>
-            LakeEqMarkerPartition(Seq(p), StructType(keyFields), dataTarget))
-        }
-        val ins: Seq[InputPartition] = sn.files.map(f =>
-          LakeFilePartition(f.path, md.schemaById(f.schemaId), dataTarget,
-            external = ext(f.path)))
-        (pos ++ eq).map(wrap(_, "delete")) ++ ins.map(wrap(_, "insert"))
-      }.toArray
+    LakeScan.changelogPartitions(md,
+      inRange.filterNot(sn => LakeTable.isByteMove(sn.operation))
+        .sortBy(_.id).zipWithIndex, target,
+      LakeSource.externalTest(LakeTable.tableLocation(wh, db, tbl)))
   }
 
   // per-stream columnar flag, stamped at each micro-batch's planning

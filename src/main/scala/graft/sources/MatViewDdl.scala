@@ -398,8 +398,8 @@ object MatViewDdl {
         // conf-gated fault injection (like the incr-scan-audit
         // observable): proves post-commit failures log as
         // outcome=error, never as a refusal of work that happened
-        if (spark.conf.getOption(
-            "spark.graft.matview.post-commit-fault").contains("true"))
+        if (spark.conf.get(
+            "spark.graft.matview.post-commit-fault", "false") == "true")
           throw new IllegalStateException(
             "injected post-commit fault (test observable)")
         stamp(wm.map { case (h, hTs) =>

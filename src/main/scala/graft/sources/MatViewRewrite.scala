@@ -64,8 +64,7 @@ object MatViewRewrite {
   def lastRewriteAgeMs: Option[Long] = lastRewriteAgeTL.get()
 
   def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption("spark.graft.matview.rewrite")
-      .contains("false")
+    spark.conf.get("spark.graft.matview.rewrite", "true") != "false"
 
   def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
     lastRewriteTL.set(None)

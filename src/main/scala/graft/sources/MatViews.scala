@@ -1234,8 +1234,7 @@ private[graft] object MatViews {
     * tune with spark.graft.matview.incr-key-limit.
     */
   private def keyLimit(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.matview.incr-key-limit")
-      .map(_.toInt).getOrElse(4096)
+    spark.conf.get("spark.graft.matview.incr-key-limit", "4096").toInt
 
   /** (files scanned after pruning, live files) of the last incremental
     * refresh's backing read — a test/tooling observable for the
@@ -1394,7 +1393,7 @@ private[graft] object MatViews {
       else null
     var eqScanPruned, eqScanTotal = 0
     val auditScans = spark.conf
-      .getOption("spark.graft.matview.incr-scan-audit").contains("true")
+      .get("spark.graft.matview.incr-scan-audit", "false") == "true"
     val eqTouched = eqSnaps.flatMap(_.eqDeletes).flatMap { b =>
       if (w <= 0) None
       else {
@@ -1525,8 +1524,8 @@ private[graft] object MatViews {
           // contributes no filter for this position
           case None => g.copy(outName = "__graft_no_such_column")
         }))
-    if (spark.conf.getOption("spark.graft.matview.incr-scan-audit")
-        .contains("true"))
+    if (spark.conf.get("spark.graft.matview.incr-scan-audit", "false")
+        == "true")
       lastRecomputeScan = Some((
         src.plannedFiles(statsFilters = srcFilters).size,
         src.plannedFiles().size))
@@ -1720,7 +1719,7 @@ private[graft] object MatViews {
     val newPins = oldPins ++ rePins
     var dimScanPruned, dimScanTotal = 0
     val auditDimScans = spark.conf
-      .getOption("spark.graft.matview.incr-scan-audit").contains("true")
+      .get("spark.graft.matview.incr-scan-audit", "false") == "true"
     val dimLegs: Seq[DataFrame] =
       if (movedDims.isEmpty || w <= 0) Seq.empty
       else movedDims.map { case (d, m, i) =>
@@ -1861,8 +1860,8 @@ private[graft] object MatViews {
         shape.groupCols)
     // test/tooling observable only — the extra planning pass (bloom
     // probes included) must not tax production refreshes
-    if (spark.conf.getOption("spark.graft.matview.incr-scan-audit")
-        .contains("true"))
+    if (spark.conf.get("spark.graft.matview.incr-scan-audit", "false")
+        == "true")
       lastBackingScan = Some((
         backing0.plannedFiles(statsFilters = filters).size,
         backing0.plannedFiles().size))
@@ -1981,8 +1980,7 @@ private[graft] object MatViews {
     // toInt, not toIntOption: a malformed value must fail loudly like
     // the sibling incr-key-limit read, not silently fall back to 8
     val threshold = spark.conf
-      .getOption("spark.graft.matview.compact-threshold")
-      .map(_.trim.toInt).getOrElse(8)
+      .get("spark.graft.matview.compact-threshold", "8").trim.toInt
     if (threshold <= 0) return
     val t = LakeTable.load(warehouse, db, matTable)
     val snaps = t.metadata.snapshots

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -120,5 +122,115 @@ class JobBudgetSpec extends AnyFunSuite {
       "FROM gjb.d.src GROUP BY g ORDER BY g")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == want.toSeq, "refresh must stay exact")
+  }
+
+  /** Spark jobs this thread launches inside `body`, counted by job
+    * group (suites share the session, so a global count would race),
+    * plus the last plan of every SQL execution those jobs ran under
+    * (adaptive re-plans replace the initial one).
+    */
+  private def jobsAndPlans(body: => Unit)
+      : (Int, Seq[org.apache.spark.sql.execution.SparkPlanInfo]) = {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val group = s"jobs-plans-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long,
+      org.apache.spark.sql.execution.SparkPlanInfo]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            group == j.properties.getProperty("spark.jobGroup.id")) {
+          jobs.incrementAndGet()
+          Option(j.properties.getProperty("spark.sql.execution.id"))
+            .foreach(id => execIds.add(id.toLong))
+        }
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.put(u.executionId, u.sparkPlanInfo)
+        case _ => ()
+      }
+    }
+    // the listener bus is async: a stable count over consecutive polls
+    def quiesce(): Int = {
+      var stable = 0; var prev = jobs.get
+      while (stable < 3) {
+        Thread.sleep(30)
+        val cur = jobs.get
+        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+      }
+      prev
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "job and plan pins")
+    try {
+      body
+      val n = quiesce()
+      (n, execIds.asScala.toSeq.sorted.flatMap(id => Option(plans.get(id))))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("an incremental refresh over a MoR merge and delete plans its " +
+      "changelog as ONE scan: no join, no broadcast, pinned jobs") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-jobs-cl").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"clsrc","columns":[
+        |{"column_name":"k","data_type":"long"},
+        |{"column_name":"g","data_type":"string"},
+        |{"column_name":"amt","data_type":"decimal(18,4)"}],
+        |"partitions":[]}""".stripMargin)
+    def rows(r: Seq[(Long, String, Double)]) = r.toDF("k", "g", "amt")
+      .select(col("k"), col("g"), col("amt").cast("decimal(18,4)").as("amt"))
+    LakeTable.load(wh, "d", "clsrc").append(
+      rows((1L to 120L).map(i => (i, s"g${i % 4}", i * 0.5))))
+    spark.conf.set("spark.sql.catalog.gjcl", "graft.sources.LakeCatalog")
+    spark.conf.set("spark.sql.catalog.gjcl.warehouse", wh)
+    vsql("CREATE MATERIALIZED VIEW gjcl.d.roll AS SELECT g, count(*) AS n, " +
+      "sum(amt) AS s FROM gjcl.d.clsrc GROUP BY g").collect()
+    // a MoR merge (position deletes + inserts) and a MoR delete
+    LakeTable.load(wh, "d", "clsrc").mergeMoR(spark,
+      rows(Seq((3L, "g1", 99.0), (500L, "g9", 1.0))), Seq("k"))
+    LakeTable.load(wh, "d", "clsrc").deleteMoR(spark,
+      col("k").between(10L, 19L))
+    val (jobs, plans) = jobsAndPlans {
+      vsql("REFRESH MATERIALIZED VIEW gjcl.d.roll INCREMENTAL").collect()
+    }
+    def nodes(p: org.apache.spark.sql.execution.SparkPlanInfo)
+        : Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
+      p +: p.children.flatMap(nodes)
+    def changelogScan(n: org.apache.spark.sql.execution.SparkPlanInfo) =
+      n.nodeName.startsWith("BatchScan") &&
+        n.simpleString.contains("graft.d.clsrc") &&
+        n.simpleString.contains("_change_type")
+    val deltaPlans = plans.filter(p => nodes(p).exists(changelogScan))
+    assert(deltaPlans.size == 1,
+      s"one execution reads the changelog, got ${deltaPlans.size}")
+    val delta = nodes(deltaPlans.head)
+    assert(delta.count(changelogScan) == 1,
+      "the changelog plans as ONE scan:\n" +
+        delta.map(_.nodeName).mkString(", "))
+    assert(!delta.exists(n => n.nodeName.contains("Join") ||
+        n.nodeName.contains("BroadcastExchange")),
+      "no join and no broadcast under the delta aggregate: " +
+        delta.map(_.nodeName).mkString(", "))
+    assert(delta.exists(_.nodeName.contains("HashAggregate")))
+    // measured: 5 jobs. The semi-join changelog ran 7: one broadcast
+    // job per position-delete snapshot, for its (path, pos) build side
+    assert(jobs == 5, s"refresh jobs: $jobs")
+    val got = vsql("SELECT g, n, CAST(s AS STRING) FROM gjcl.d.roll " +
+      "ORDER BY g").collect().map(r => (r.getString(0), r.getLong(1),
+        r.getString(2))).toSeq
+    val want = vsql("SELECT g, count(*), CAST(sum(amt) AS STRING) FROM " +
+      "gjcl.d.clsrc GROUP BY g ORDER BY g").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+    assert(got == want, "refresh must stay exact")
   }
 }

@@ -421,4 +421,42 @@ class LakeStreamReadSpec extends AnyFunSuite {
     assert(msgs(ex).exists(_.contains("row-level change")),
       s"got: ${msgs(ex)}")
   }
+
+  test("changelog stream: a struct-nested equality key fills its " +
+      "enclosing struct in the key-only marker") {
+    import SparkTestSession.spark.implicits._
+    val wh = Files.createTempDirectory("graft-dsv2-chnested").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"meta","data_type":"struct","struct_def":[
+        |  {"column_name":"region","data_type":"string"},
+        |  {"column_name":"score","data_type":"int"}]}],
+        |"partitions":[]}""".stripMargin)
+    val t = LakeTable.load(wh, "d", "t")
+    t.append(Seq((1L, "eu", 10), (2L, "us", 20)).toDF("id", "region", "score")
+      .select(col("id"), struct(col("region"), col("score")).as("meta")))
+    t.deleteByKeysMoR(spark, Seq("us").toDF("meta.region"))
+    val q = lakeStream(wh).option("changelog", "true").load()
+      .writeStream.format("memory").queryName("lake_chnested")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.sql("SELECT _change_ordinal, _change_type, id, " +
+        "meta.region, meta.score, meta IS NULL FROM lake_chnested")
+      .collect().map(r => (r.getInt(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getString(3),
+        if (r.isNullAt(4)) None else Some(r.getInt(4)), r.getBoolean(5)))
+      .toSet
+    assert(got == Set(
+      (0, "insert", Some(1L), "eu", Some(10), false),
+      (0, "insert", Some(2L), "us", Some(20), false),
+      // the marker: the key inside its struct, every other cell null
+      (1, "delete", None, "us", None, false)))
+    // the batch changelog plans the same partitions
+    assert(LakeTable.load(wh, "d", "t").changelogBetween(spark, 0L, 2L)
+      .filter(col("_change_type") === "delete")
+      .select(col("id").isNull, col("meta.region"), col("meta.score").isNull)
+      .collect().map(r => (r.getBoolean(0), r.getString(1), r.getBoolean(2)))
+      .toSeq == Seq((true, "us", true)))
+  }
 }
