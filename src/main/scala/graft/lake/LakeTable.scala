@@ -1135,20 +1135,26 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
   // ---- write-audit-publish (Iceberg's wap.id staging) ------------------
 
   /** Write one aligned DataFrame as parquet data files under `outDir` —
-    * hidden-partition columns, write clustering, writer options, and
-    * per-file metadata (rows / partition values / stats / bytes) — the
-    * shared back half of every snapshot-producing write.
+    * the shared back half of every snapshot-producing write. Every file
+    * goes through [[writeDirect]] (the one lake parquet writer); only
+    * the DataFrame-level preparation varies with the table:
+    *  - a frame whose OPTIMIZED plan is a LocalRelation (rows already
+    *    on the driver: a Lambda-style append of a few orders, an
+    *    incremental-MV publication) runs the writer once on the driver
+    *    over those rows — no Spark job — grouped by partition key, or
+    *    sorted by (partition key, sort order) under `write.sort-order`;
+    *  - every other frame runs it in tasks: hash-distributed by the
+    *    partition expressions (Iceberg's `write.distribution-mode=hash`
+    *    default — one file per partition value; `none` opts out, any
+    *    other value hash-distributes) and sorted by them within each
+    *    task, or range-partitioned and sorted by `write.sort-order`.
+    * Each file's partition values are in metadata; files lay flat.
     */
   private[lake] def writeDataFiles(aligned0: DataFrame,
       outDir: Path): Seq[DataFileMeta] = {
     val local = LakeTable.isLocalPlan(aligned0)
-    // a frame whose OPTIMIZED plan is a LocalRelation (rows already on
-    // the driver, every expression folded) runs the direct writer's
-    // task body on the DRIVER over those rows — no Spark job at all
-    // (a Lambda-style append of a few orders, an incremental-MV
-    // publication).
-    // The isLocalPlan pre-check keeps the extra optimizer pass off
-    // scan-derived writes — only an all-LocalRelation plan can fold.
+    // the isLocalPlan pre-check keeps the extra optimizer pass off
+    // scan-derived writes — only an all-LocalRelation plan can fold
     val driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
       if (!local) None
       else aligned0.queryExecution.optimizedPlan match {
@@ -1157,128 +1163,13 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         case _ => None
       }
     // a LocalRelation source is bounded by construction (rows already
-    // collected on the driver) — publish as ONE file: LocalTableScan
+    // collected on the driver) — publish as ONE task: LocalTableScan
     // otherwise parallelizes to leafNodeDefaultParallelism slices
     // (= cores), and N tiny files' footer/stats/manifest cost
-    // dominates the commit (the incremental-MV publication path)
+    // dominates the commit
     val aligned = if (local) aligned0.coalesce(1) else aligned0
     val schema = md.currentSchema
-    val spec = md.currentSpec
-    val partInfo = spec.fields.map { f =>
-      val (srcName, srcField) = FieldIds.flatten(schema)
-        .collectFirst { case (p, fd) if FieldIds.idOf(fd) == f.sourceFieldId => (p, fd) }
-        .getOrElse(throw new IllegalStateException(
-          s"spec source field ${f.sourceFieldId} not in schema"))
-      (f, srcName, srcField)
-    }
-    val pCols = partInfo.map { case (f, srcName, srcField) =>
-      (s"_p_${f.name}",
-        Transforms.expr(f.transform, col(srcName), Some(srcField.dataType)))
-    }
-    // "write.option.<k>" table properties pass through to the parquet
-    // writer — e.g. write.option.parquet.bloom.filter.enabled#col=true
-    // adds a bloom filter for row-group skipping on point lookups
-    val writerOpts = md.properties.collect {
-      case (k, v) if k.startsWith("write.option.") =>
-        k.stripPrefix("write.option.") -> v
-    }
-    // Direct per-task parquet write (r17, guide §1.2): the DSv2 delta/
-    // streaming writer already writes lake files without Spark's
-    // FileFormatWriter — no WriteFiles planning, no commit-protocol
-    // staging/rename — and its flat-file + partitionValues-in-metadata
-    // layout has coexisted with Hive-dir files since the SQL DML path
-    // landed. Routing the batch writes that need none of the
-    // FileFormatWriter extras (no write.sort-order clustering, no
-    // writer options, every partition transform in renderCheck's
-    // supported set) through it saves ~100-150 ms of per-write
-    // machinery — ~30% of the lifecycle band's wall at sf0.1 was this
-    // write job. Partition VALUES render via the same renderValue the
-    // DSv2 writer uses (pinned equal to the Hive-dir rendering);
-    // -Dgraft.write.nodirect restores the old path for A/B. Note the
-    // file-format contract: like every DSv2 lake write since the SQL
-    // DML path landed, the task writer pins SNAPPY + TIMESTAMP_MICROS
-    // — table properties (write.option.*), not session parquet confs,
-    // are how a lake table customizes its files, and those properties
-    // force the FileFormatWriter path above.
-    // distributed variant columns stay on the FileFormatWriter path:
-    // the session conf it propagates is what SHREDS them
-    // (lake_variant_prune's clip depends on that); the direct writer's
-    // task conf does not. Driver-resident batches are never shredded —
-    // a handful of rows gives the clip nothing to skip.
-    def hasVariant(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case _: org.apache.spark.sql.types.VariantType => true
-        case st: StructType => st.fields.exists(f => hasVariant(f.dataType))
-        case org.apache.spark.sql.types.ArrayType(et, _) => hasVariant(et)
-        case org.apache.spark.sql.types.MapType(kt, vt, _) =>
-          hasVariant(kt) || hasVariant(vt)
-        case _ => false
-      }
-    val directPlan: Option[Seq[graft.sources.PartField]] =
-      if (sys.props.contains("graft.write.nodirect") || writerOpts.nonEmpty ||
-          md.properties.contains("write.sort-order") ||
-          // only the modes the direct path implements identically to
-          // the Hive path (absent = hash default, explicit hash, none);
-          // any future mode falls back rather than silently diverging
-          // in file clustering (r17 advice)
-          !md.properties.get("write.distribution-mode")
-            .forall(m => m == "hash" || m == "none") ||
-          (hasVariant(aligned.schema) && driverRows.isEmpty)) None
-      else {
-        val resolved = partInfo.map { case (f, srcName, _) =>
-          val ord = aligned.schema.fieldNames.indexOf(srcName)
-          if (ord < 0) None // struct-nested source: keep the Hive path
-          else {
-            val pf = graft.sources.PartField(f.name, f.transform, ord,
-              aligned.schema(ord).dataType)
-            if (scala.util.Try(
-                graft.sources.LakeStreamingWrite.renderCheck(pf)).isSuccess)
-              Some(pf)
-            else None
-          }
-        }
-        if (resolved.forall(_.isDefined)) Some(resolved.flatten) else None
-      }
-    directPlan match {
-      case Some(plan) if driverRows.isDefined =>
-        return writeDirect(aligned0, plan, outDir, Some(aligned0),
-          driverRows)
-      case Some(plan) =>
-        // same hash-distribution rule as the Hive path below: each
-        // partition value lands in one task → one file per value. The
-        // within-partition sort by the transform expressions makes
-        // every rendered key ONE contiguous run, so the task writer's
-        // closeOnKeyChange mode holds a single open file regardless of
-        // partition cardinality — the same sorted dynamic-partition
-        // contract FileFormatWriter provides (review-found r17: the
-        // unsorted multi-sink form hard-capped at 1000 values/task
-        // where the Hive path had no limit).
-        val pExprs = pCols.map(_._2)
-        val base =
-          if (plan.isEmpty ||
-              md.properties.get("write.distribution-mode").contains("none"))
-            aligned
-          else aligned.repartition(pExprs: _*)
-        val distributed =
-          if (plan.isEmpty) base else base.sortWithinPartitions(pExprs: _*)
-        return writeDirect(distributed, plan, outDir,
-          Some(aligned0).filter(_ => local))
-      case None => ()
-    }
-    val withP0 = pCols.foldLeft(aligned) { case (d, (n, e)) => d.withColumn(n, e) }
-    // hash-distribute rows by the partition values before writing
-    // (Iceberg's write.distribution-mode=hash default): each partition
-    // value lands in ONE task, so a partitioned append produces one
-    // file per partition dir instead of one per (task × dir) — commit
-    // time footer reads, metadata size, and later scan planning all
-    // scale with partitions, not parallelism. Skipped when a
-    // write.sort-order takes its own range-partition path; opt out
-    // with write.distribution-mode=none (e.g. one giant hot partition).
-    val withP =
-      if (pCols.isEmpty || md.properties.contains("write.sort-order") ||
-          md.properties.get("write.distribution-mode").contains("none"))
-        withP0
-      else withP0.repartition(pCols.map(p => col(s"`${p._1}`")): _*)
+    val pExprs = partitionColumns.map(_._2)
     // write clustering ("write.sort-order" table property): either a
     // comma-separated column list (lexicographic sort) or
     // "zorder(a,b,…)" (Morton-curve interleave — narrow min/max ranges
@@ -1291,11 +1182,11 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // scan can report per-partition ordering; zorder clusters without
     // producing a source-column ordering, so it records nothing
     var plainSortCols: Seq[String] = Seq.empty
-    val clustered = md.properties.get("write.sort-order") match {
-      case None => withP
-      case Some(spec) =>
+    val sortExprs: Seq[Column] = md.properties.get("write.sort-order") match {
+      case None => Seq.empty
+      case Some(order) =>
         val zorderRe = """(?i)zorder\s*\(([^)]*)\)""".r
-        val sortExprs = spec.trim match {
+        order.trim match {
           case zorderRe(colSpec)
               if colSpec.split(",").count(_.trim.nonEmpty) >= 2 =>
             // z-order needs each column scaled to its batch min/max
@@ -1305,10 +1196,10 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
             val cols = colSpec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             val bits = 63 / cols.size
             val bins = BigDecimal(1L << bits)
-            val statsRow = withP.select(cols.flatMap(c => Seq(
+            val statsRow = aligned.select(cols.flatMap(c => Seq(
               min(col(s"`$c`").cast("double")), max(col(s"`$c`").cast("double")))): _*)
               .collect()(0)
-            graft.functions.VectorFunctions.register(withP.sparkSession)
+            graft.functions.VectorFunctions.register(aligned.sparkSession)
             val binned = cols.zipWithIndex.map { case (c, i) =>
               val lo = Option(statsRow.get(2 * i)).map(_.toString.toDouble).getOrElse(0.0)
               val hi = Option(statsRow.get(2 * i + 1)).map(_.toString.toDouble).getOrElse(0.0)
@@ -1330,24 +1221,6 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
             plainSortCols = cols
             cols.map(c => col(s"`$c`"))
         }
-        if (sortExprs.isEmpty) withP
-        else {
-          // prefix the partition-dir columns: FileFormatWriter requires
-          // rows ordered by partition columns for dynamic-partition
-          // writes and would otherwise insert its own (unstable) sort,
-          // destroying the within-file order this clustering (and the
-          // recorded sortedByIds) promises. With the prefix, the
-          // writer's requirement is already satisfied and each file —
-          // where the partition value is constant — is truly sorted by
-          // the declared order.
-          val dirSort = pCols.map(p => col(s"`${p._1}`"))
-          val ranged = md.properties.get("write.sort-buckets")
-            .map(_.trim.toInt) match {
-            case Some(n) => withP.repartitionByRange(n, sortExprs: _*)
-            case None => withP.repartitionByRange(sortExprs: _*)
-          }
-          ranged.sortWithinPartitions(dirSort ++ sortExprs: _*)
-        }
     }
     // identical for every file of this write; case-insensitive to
     // match how col(`c`) resolved the sort itself (an id that fails to
@@ -1356,102 +1229,102 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       schema.fields.find(_.name.equalsIgnoreCase(c)).map(FieldIds.idOf))
     val recordedSortIds =
       if (sortedIds.size == plainSortCols.size) sortedIds else Seq.empty
-    val writer = clustered.write.mode("overwrite").options(writerOpts)
-    // Spark's default parquet timestamp encoding is INT96 (legacy);
-    // pin INT64 micros so footer min/max stats exist for timestamp
-    // columns and the graft-lake record reader's INT64 fast path holds.
-    // Session-scoped in Spark, so set only for this write and restore
-    // the caller's value after it.
-    val session = clustered.sparkSession.conf
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val callerTs = session.getOption(tsKey)
-    session.set(tsKey, "TIMESTAMP_MICROS")
-    try (if (pCols.nonEmpty) writer.partitionBy(pCols.map(_._1): _*)
-         else writer).parquet(outDir.toString)
-    finally callerTs match {
-      case Some(v) => session.set(tsKey, v)
-      case None => session.unset(tsKey)
-    }
-
-    LakeTable.parMapFiles(listParquet(outDir)) { p =>
-      // parse only the segments below outDir (an ancestor dir containing
-      // '=' must not be misread as a partition value) and undo Spark's
-      // Hive-style %XX escaping — NOT URLDecoder, which would corrupt
-      // literal '+' (e.g. 'c++', '+01:00') into a space
-      val partVals = outDir.relativize(p).iterator().asScala.map(_.toString)
-        .filter(_.contains("=")).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k.stripPrefix("_p_") ->
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(v)
-        }.toMap
-      val (rows, stats) = FileStats.fromFooterWithRows(p.toString, schema)
-      DataFileMeta(p.toString, md.currentSchemaId, spec.id,
-        rows = rows, partitionValues = partVals,
-        stats = stats,
-        bytes = try Files.size(p) catch { case _: Exception => -1L },
-        sortedByIds = recordedSortIds)
-    } match {
-      case metas => attachBlooms(aligned.sparkSession, outDir, metas,
-        Some(aligned0).filter(_ => local))
+    // rows sort by the partition expressions first, so each rendered
+    // key is ONE contiguous run and the writer's closeOnKeyChange mode
+    // holds a single open file at any partition cardinality (the
+    // sorted dynamic-partition contract of FileFormatWriter); the sort
+    // order follows within each partition value
+    val rowOrder = pExprs ++ sortExprs
+    driverRows match {
+      case Some(rows) =>
+        val ordered =
+          if (sortExprs.isEmpty) rows
+          else {
+            import org.apache.spark.sql.catalyst.expressions.{Ascending, InterpretedOrdering, SortOrder}
+            val ord = new InterpretedOrdering(graft.sources.WritePlan.bind(
+              aligned0.sparkSession, aligned0.schema, rowOrder)
+              .map(SortOrder(_, Ascending)))
+            rows.sorted(ord)
+          }
+        writeDirect(aligned0, outDir, recordedSortIds, Some(ordered))
+      case None =>
+        val distributed =
+          if (sortExprs.nonEmpty) {
+            val ranged = md.properties.get("write.sort-buckets")
+              .map(_.trim.toInt) match {
+              case Some(n) => aligned.repartitionByRange(n, sortExprs: _*)
+              case None => aligned.repartitionByRange(sortExprs: _*)
+            }
+            ranged.sortWithinPartitions(rowOrder: _*)
+          } else if (pExprs.isEmpty) aligned
+          else {
+            val base =
+              if (md.properties.get("write.distribution-mode").contains("none"))
+                aligned
+              else aligned.repartition(pExprs: _*)
+            base.sortWithinPartitions(pExprs: _*)
+          }
+        writeDirect(distributed, outDir, recordedSortIds)
     }
   }
 
-  /** The direct write path of [[writeDataFiles]]: one job whose tasks
-    * write parquet through [[graft.sources.LakeParquetDataWriter]] (the
-    * DSv2 delta writer) and return (path, partitionValues), or with
-    * `driverRows` the same task body run once on the driver — metadata
-    * carries the partition values, files lay flat under `outDir`.
-    * Stats/rows come from the footers exactly like the Hive path; a
-    * failed task aborts its own files and the survivors are orphans
-    * for the maintenance sweep (the DSv2 write contract).
+  /** The current spec's partition fields as (name, `Transforms.expr`
+    * column over the source column path) — what the writer renders
+    * per row and the task-mode write distributes and sorts by. */
+  private[graft] def partitionColumns: Seq[(String, Column)] = {
+    val flat = FieldIds.flatten(md.currentSchema)
+    md.currentSpec.fields.map { f =>
+      val (srcName, srcField) = flat
+        .collectFirst { case (p, fd) if FieldIds.idOf(fd) == f.sourceFieldId => (p, fd) }
+        .getOrElse(throw new IllegalStateException(
+          s"spec source field ${f.sourceFieldId} not in schema"))
+      f.name -> Transforms.expr(f.transform, col(srcName), Some(srcField.dataType))
+    }
+  }
+
+  /** "write.option.<k>" table properties: parquet writer settings
+    * (e.g. write.option.parquet.bloom.filter.enabled#col=true adds a
+    * parquet bloom filter for row-group skipping on point lookups). */
+  private[graft] def writerOptions: Map[String, String] =
+    md.properties.collect {
+      case (k, v) if k.startsWith("write.option.") =>
+        k.stripPrefix("write.option.") -> v
+    }
+
+  /** The file sink of [[writeDataFiles]]: one job whose tasks write
+    * `df` through [[graft.sources.LakeParquetDataWriter]] under the
+    * table's [[graft.sources.WritePlan]], or with `driverRows` the
+    * same task body run once on the driver. The tasks also build each
+    * file's bloom filters (`write.bloom-columns`) from the rows they
+    * write and read its footer stats right after close, so nothing is
+    * read back. A failed task aborts its own files and the survivors
+    * are orphans for the maintenance sweep (the DSv2 write contract).
     */
-  private def writeDirect(df: DataFrame,
-      plan: Seq[graft.sources.PartField], outDir: Path,
-      bloomSource: Option[DataFrame],
+  private def writeDirect(df: DataFrame, outDir: Path,
+      sortedByIds: Seq[Int],
       driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
         None): Seq[DataFileMeta] = {
-    // bloom fusion (r18): resolve the table's bloom columns against the
-    // write schema and let the WRITE TASKS build the filters from the
-    // rows they are writing — no read-back job. Falls back to the
-    // read-back build if any target fails to resolve (it cannot for an
-    // aligned write — defensive) or under -Dgraft.bloom.notask (A/B).
-    val targets = bloomTargets()
-    val bloomPlan: Seq[graft.sources.BloomWriteCol] =
-      if (targets.isEmpty || sys.props.contains("graft.bloom.notask"))
-        Seq.empty
-      else {
-        val resolved = targets.flatMap { case (n, fid) =>
-          val ord = df.schema.fieldNames.indexOf(n)
-          if (ord < 0) None
-          else Some(graft.sources.BloomWriteCol(n, fid, ord,
-            df.schema(ord).dataType))
-        }
-        if (resolved.size == targets.size) resolved else Seq.empty
-      }
-    // footer stats fused too (r18): the tasks read their own files'
-    // footers right after close (page-cache hot, same
-    // fromFooterWithRows against the same current schema), so the
-    // driver no longer re-opens every written file at commit time
+    val bloomPlan = bloomTargets().map { case (n, fid) =>
+      val ord = df.schema.fieldNames.indexOf(n)
+      require(ord >= 0, s"bloom column '$n' is not in the write schema")
+      graft.sources.BloomWriteCol(n, fid, ord, df.schema(ord).dataType)
+    }
     val res = LakeTable.writeViaTaskWriterRich(
-      df, outDir, plan, bloomPlan, dataDir,
-      statsSchema = md.currentSchema, driverRows = driverRows)
-    val metas = res.files.map { case (p, partVals) =>
-      val (rows, stats, bytes) = res.stats.getOrElse(p, {
-        // defensive fallback (a task that somehow reported a file
-        // without stats): the old driver-side read
-        val (r, s) = FileStats.fromFooterWithRows(p, md.currentSchema)
-        (r, s,
-          try Files.size(Paths.get(p)) catch { case _: Exception => -1L })
-      })
+      df, outDir, graft.sources.LakeStreamingWrite.writePlan(this, df.schema,
+        df.sparkSession),
+      bloomPlan, dataDir, statsSchema = md.currentSchema,
+      driverRows = driverRows)
+    res.files.map { case (p, partVals) =>
+      val (rows, stats, bytes) = res.stats.getOrElse(p,
+        throw new IllegalStateException(s"no task stats for written file $p"))
+      val blooms =
+        if (bloomPlan.isEmpty) Seq.empty
+        else res.blooms.getOrElse(p, throw new IllegalStateException(
+          s"no bloom filters for written file $p"))
       DataFileMeta(p, md.currentSchemaId, md.currentSpec.id,
         rows = rows, partitionValues = partVals, stats = stats,
-        bytes = bytes)
+        bytes = bytes, sortedByIds = sortedByIds, blooms = blooms)
     }
-    if (bloomPlan.nonEmpty)
-      metas.map(m => res.blooms.get(m.path)
-        .map(refs => m.copy(blooms = refs)).getOrElse(m))
-    else attachBlooms(df.sparkSession, outDir, metas, bloomSource)
   }
 
   /** Reload this handle's view of the table to the committed head —
@@ -1501,13 +1374,6 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
         timestampMs = System.currentTimeMillis()),
       apply = snap => md.copy(snapshots = md.snapshots :+ snap))
   }
-
-  private[lake] def listParquet(dir: Path): Seq[Path] =
-    scala.util.Using.resource(Files.walk(dir)) { st =>
-      st.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .toSeq.sortBy(_.toString)
-    }
 
   // ---- partition-spec evolution (SQL surface) --------------------------
 
@@ -1949,15 +1815,6 @@ object LakeTable {
       out.toSeq.map(_.asInstanceOf[B])
     }
 
-  /** One job that writes `df` as parquet under `dir` through the DSv2
-    * per-task writer ([[graft.sources.LakeParquetDataWriter]]) and
-    * returns each task's (path, partitionValues) — the shared engine
-    * of the r17 direct write path: no FileFormatWriter planning, no
-    * commit-protocol staging/rename (~100-150 ms per write at sf0.1).
-    * A failed task aborts its own files; survivors are orphans for the
-    * maintenance sweep (the DSv2 write contract). Pass an empty `plan`
-    * for unpartitioned marker/delete writes.
-    */
   /** Everything a rich task write returns beyond the file list: bloom
     * refs, per-file (rows, stats, bytes), and the countOrdinal value
     * histogram — each present only when the matching input asked. */
@@ -1967,8 +1824,17 @@ object LakeTable {
       stats: Map[String, (Long, Map[Int, ColStats], Long)],
       counts: Map[String, Long])
 
+  /** One job that writes `df` as parquet under `dir` through the one
+    * lake writer ([[graft.sources.LakeParquetDataWriter]]) and returns
+    * each task's (path, partitionValues) — no FileFormatWriter
+    * planning, no commit-protocol staging/rename (~100-150 ms per
+    * write at sf0.1). A failed task aborts its own files; survivors
+    * are orphans for the maintenance sweep (the DSv2 write contract).
+    * Pass [[graft.sources.WritePlan.empty]] for unpartitioned
+    * marker/delete writes.
+    */
   private[lake] def writeViaTaskWriter(df: DataFrame, dir: Path,
-      plan: Seq[graft.sources.PartField]): Seq[(String, Map[String, String])] =
+      plan: graft.sources.WritePlan): Seq[(String, Map[String, String])] =
     writeViaTaskWriterRich(df, dir, plan, Seq.empty, null).files
 
   /** [[writeViaTaskWriter]] with in-task bloom fusion (r18): when
@@ -1981,10 +1847,12 @@ object LakeTable {
     * a row shuffle past the small-delta bounds); the rows are already
     * in hand at write time, at ANY scale. `driverRows` (the rows of a
     * frame whose optimized plan is a LocalRelation) runs the same task
-    * body once on the driver instead of launching the job.
+    * body once on the driver instead of launching the job. Either way
+    * the writer runs under the frame's session confs (its VARIANT
+    * shredding limits), as a FileFormatWriter job's writers do.
     */
   private[lake] def writeViaTaskWriterRich(df: DataFrame, dir: Path,
-      plan: Seq[graft.sources.PartField],
+      plan: graft.sources.WritePlan,
       bloomPlan: Seq[graft.sources.BloomWriteCol], bloomDir: Path,
       statsSchema: StructType = null,
       countOrdinal: Int = -1,
@@ -1997,7 +1865,7 @@ object LakeTable {
     // partitioned writes arrive sorted by the transform expressions
     // (the caller's contract) — one open file per task at any
     // cardinality; unsorted keys would only split into extra files
-    val keyed = plan.nonEmpty
+    val keyed = plan.partNames.nonEmpty
     val task = (i: Int, it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
       if (!it.hasNext)
         Iterator.empty[graft.sources.LakeFilesBloomCommit]
@@ -2017,29 +1885,32 @@ object LakeTable {
           }
         } catch { case e: Throwable => w.abort(); throw e }
       }
-    val msgs = driverRows match {
-      case Some(rows) =>
-        // rows already on the driver: ONE run of the task body here,
-        // no job. Grouped stably by rendered partition key, so each
-        // value is one contiguous run → one file, as hash+sort gives
-        // the distributed run.
-        val grouped =
-          if (!keyed) rows.iterator
-          else {
-            val groups = scala.collection.mutable.LinkedHashMap.empty[
-              Seq[String],
-              scala.collection.mutable.ArrayBuffer[
-                org.apache.spark.sql.catalyst.InternalRow]]
-            rows.foreach { r =>
-              groups.getOrElseUpdate(
-                plan.map(graft.sources.LakeStreamingWrite.renderValue(_, r)),
-                scala.collection.mutable.ArrayBuffer.empty) += r
+    val msgs = org.apache.spark.sql.GraftPlanBridge.withSessionConf(
+        df.sparkSession, jobs = driverRows.isEmpty) {
+      driverRows match {
+        case Some(rows) =>
+          // rows already on the driver: ONE run of the task body here,
+          // no job. Grouped stably by rendered partition key, so each
+          // value is one contiguous run → one file, as hash+sort gives
+          // the distributed run.
+          val grouped =
+            if (!keyed) rows.iterator
+            else {
+              val keyOf = plan.keys()
+              val groups = scala.collection.mutable.LinkedHashMap.empty[
+                Seq[String],
+                scala.collection.mutable.ArrayBuffer[
+                  org.apache.spark.sql.catalyst.InternalRow]]
+              rows.foreach { r =>
+                groups.getOrElseUpdate(keyOf(r),
+                  scala.collection.mutable.ArrayBuffer.empty) += r
+              }
+              groups.valuesIterator.flatMap(_.iterator)
             }
-            groups.valuesIterator.flatMap(_.iterator)
-          }
-        task(0, grouped).toArray
-      case None =>
-        df.queryExecution.toRdd.mapPartitionsWithIndex(task).collect()
+          task(0, grouped).toArray
+        case None =>
+          df.queryExecution.toRdd.mapPartitionsWithIndex(task).collect()
+      }
     }
     // blobs shipped by small tasks fold into ONE driver-written
     // container (the r17 small-delta layout — routine lifecycle writes
@@ -2090,7 +1961,6 @@ object LakeTable {
   private[lake] def isLocalPlan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       LocalRelation, Repartition, RepartitionByExpression}
-    if (sys.props.contains("graft.write.nolocal")) return false
     val plan = df.queryExecution.logical
     val leaves = plan.collectLeaves()
     leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]) &&

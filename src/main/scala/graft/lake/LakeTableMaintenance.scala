@@ -82,126 +82,18 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
       retryConflicts = false, lineage = writesVectors))
   }
 
-  /** Opt-in per-file bloom filters (`write.bloom-columns=a,b`): one
-    * distributed pass over ONLY the named columns of the just-written
-    * delta builds a filter per (file, column) over
-    * `xxhash64(cast(col AS STRING))`, each TASK writes its own `.gbf`
-    * sidecar container for the files it grouped, and each manifest
-    * entry carries ~40 bytes of blob reference ([[BloomRef]]) — scan
-    * planning can then drop files on point-lookup equality that
-    * min/max ranges cannot prune (high-cardinality ids spread across
-    * every file). Cost is O(delta rows × bloom columns) at write, zero
-    * on non-bloom reads. Ineligible columns (non-integral, non-string
-    * — their cast-to-string is not promotion-stable) are skipped
-    * silently: skipping is always conservative.
+  /** Opt-in per-file bloom filters (`write.bloom-columns=a,b`): a
+    * filter per (file, column) over `xxhash64(cast(col AS STRING))`,
+    * built by the write tasks from the rows they write, stored in
+    * `.gbf` sidecar containers, and referenced by ~40 bytes per
+    * manifest entry ([[BloomRef]]) — scan planning can then drop files
+    * on point-lookup equality that min/max ranges cannot prune
+    * (high-cardinality ids spread across every file). Ineligible
+    * columns (non-integral, non-string — their cast-to-string is not
+    * promotion-stable) are skipped silently: skipping is always
+    * conservative.
     *
-    * The container write is EXECUTOR-SIDE (the manifest supports any
-    * number of containers): only the O(files × columns × 40 B) refs
-    * come back to the driver, never the filter bits — a 10k-file
-    * compaction with MiB-sized blobs would otherwise stage gigabytes
-    * on the driver. A failed/retried task's half-written container is
-    * an unreferenced orphan, cleaned like any lost data file.
-    */
-  private[lake] def attachBlooms(spark: SparkSession, outDir: Path,
-      metas: Seq[DataFileMeta],
-      source: Option[DataFrame] = None): Seq[DataFileMeta] = {
-    val targets = bloomTargets()
-    if (targets.isEmpty || metas.isEmpty) return metas
-    // bounded local publication (ONE file from a LocalRelation — the
-    // incremental-MV shape): hash the rows we already hold instead of
-    // reading the file back through two Spark jobs. The projection
-    // folds to a LocalRelation (ConvertToLocalRelation), so the
-    // collect is driver-only; the container write is driver IO.
-    source.filter(s =>
-      metas.size == 1 && LakeTable.isLocalPlan(s)) match {
-      case Some(s) =>
-        val rows = s.select(bloomHashCols(targets.map(_._1)): _*)
-          .collect()
-        val blobs = targets.indices.map { i =>
-          BloomFilters.serialize(BloomFilters.build(
-            rows.iterator.filterNot(_.isNullAt(i))
-              .map(_.getLong(i)).toArray))
-        }
-        Files.createDirectories(dataDir)
-        val container = dataDir.resolve(
-          s"blooms-${java.util.UUID.randomUUID().toString.take(12)}.gbf")
-        val spans = BloomFilters.writeContainer(container, blobs)
-        val refs = targets.zip(spans).map { case ((_, fid), (off, len)) =>
-          BloomRef(fid, container.toString, off, len, BloomFilters.K)
-        }
-        return metas.map(_.copy(blooms = refs))
-      case None => ()
-    }
-    // the metas were written by THIS call under the current schema —
-    // read the explicit file list with that schema instead of
-    // re-inferring it from the just-written footers (the inference
-    // launches its own merge job; r17 driver sampling put it among
-    // the top lifecycle costs). Extra physical columns (materialized
-    // lineage) clip away; partition-source columns are in the files.
-    val hashed = spark.read
-      .schema(Reconcile.clean(md.currentSchema).asInstanceOf[StructType])
-      .parquet(metas.map(_.path): _*)
-      .select(col("_metadata.file_path").as("_fp") +:
-        bloomHashCols(targets.map(_._1)): _*)
-    // Small-delta fast path (r17 optimization): the distributed build
-    // below costs two jobs and a full row shuffle (groupByKey on the
-    // file path) — right for a 10k-file compaction, pure overhead for
-    // the routine lifecycle write of a handful of files (every MV
-    // create/refresh write lands here: ~0.6 s of the warm CREATE
-    // MATERIALIZED VIEW wall was this read-back). Under the bounds,
-    // run ONE narrow collect of (path, hash…) rows — the hashes are
-    // the same catalyst projection the big path shuffles, so build and
-    // probe still can never disagree — group driver-side, and write a
-    // single container. Bounds are conservative (≤ 256Ki rows × cols
-    // of 8-byte hashes ≈ a few MB on the driver, ≤ 128 files per
-    // container) and env-tunable; past them the shuffle path is the
-    // right tool and still runs.
-    val totalRows = metas.map(_.rows).sum
-    // warn-and-default on a malformed override — a bad dev knob must
-    // not fail a WRITE (the r16-advice RETIME_THRESHOLD precedent)
-    val driverMaxRows = sys.props.get("graft.bloom.driver-build.max-rows")
-      .flatMap { v =>
-        val n = v.toLongOption
-        if (n.isEmpty) System.err.println(
-          s"[lake] WARNING: malformed graft.bloom.driver-build.max-rows " +
-            s"'$v' — using default 262144")
-        n
-      }.getOrElse(262144L)
-    val built: Seq[(String, Seq[BloomRef])] =
-      if (metas.size <= 128 && totalRows >= 0 && totalRows <= driverMaxRows) {
-        val rows = hashed.collect()
-        val byPath = rows.groupBy(r => LakeTable.normalizePath(r.getString(0)))
-        val ordered = byPath.toSeq.sortBy(_._1)
-        val blobs = ordered.flatMap { case (_, rs) =>
-          targets.indices.map { i =>
-            BloomFilters.serialize(BloomFilters.build(
-              rs.iterator.filterNot(_.isNullAt(i + 1))
-                .map(_.getLong(i + 1)).toArray))
-          }
-        }
-        if (ordered.isEmpty) Seq.empty
-        else {
-          Files.createDirectories(dataDir)
-          val container = dataDir.resolve(
-            s"blooms-${java.util.UUID.randomUUID().toString.take(12)}.gbf")
-          val spans = BloomFilters.writeContainer(container, blobs)
-            .toIndexedSeq
-          var idx = -1
-          ordered.map { case (p, _) =>
-            (p, targets.map { case (_, fid) =>
-              idx += 1
-              BloomRef(fid, container.toString, spans(idx)._1,
-                spans(idx)._2, BloomFilters.K)
-            })
-          }
-        }
-      } else buildBloomRefs(spark, hashed, targets).toSeq
-    val refsByPath: Map[String, Seq[BloomRef]] = built.toMap
-    metas.map(m => refsByPath.get(LakeTable.normalizePath(m.path))
-      .map(refs => m.copy(blooms = refs)).getOrElse(m))
-  }
-
-  /** The (column name, field id) pairs `write.bloom-columns` names,
+    * The (column name, field id) pairs `write.bloom-columns` names,
     * restricted to bloom-eligible types — shared by the write path and
     * the backfill verb.
     */
@@ -296,7 +188,6 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     * the number of files that gained filters (0 = nothing to do).
     */
   def buildBlooms(spark: SparkSession): Int = {
-    val current = md.currentSchema
     val targets = bloomTargets()
     require(targets.nonEmpty,
       "build_blooms: set write.bloom-columns to bloom-eligible " +
@@ -305,17 +196,11 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     val missing = plannedFiles().filter(f =>
       !wanted.subsetOf(f.blooms.map(_.fieldId).toSet))
     if (missing.isEmpty) return 0
-    val names = targets.map(_._1)
-    // one reconciling scan group per schema version: each group
-    // projects to the current schema, then hashes
-    val hashFrame = missing.groupBy(_.schemaId).map { case (sid, group) =>
-      val fileSchema = md.schemaById(sid)
-      val clean = Reconcile.clean(fileSchema).asInstanceOf[StructType]
-      spark.read.schema(clean).parquet(group.map(_.path): _*)
-        .select(col("_metadata.file_path").as("_fp") +:
-          Reconcile.projection(fileSchema, current): _*)
-        .select(col("_fp") +: bloomHashCols(names): _*)
-    }.reduce(_.unionByName(_))
+    // one connector scan of the files under the current schema (no
+    // deletes passed: deleted rows still contribute bits)
+    val hashFrame = readPinned(spark, missing)
+      .select(col(graft.sources.LakeSource.FileMetaCol).as("_fp") +:
+        bloomHashCols(targets.map(_._1)): _*)
     val refsByPath = buildBloomRefs(spark, hashFrame, targets).toMap
     val updated = missing.flatMap(f =>
       refsByPath.get(LakeTable.normalizePath(f.path)).map { refs =>
@@ -730,7 +615,7 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
         .join(org.apache.spark.sql.functions.broadcast(livePaths),
           Seq("file_path"), "left_semi")
         .coalesce(1),
-      dir, Seq.empty).map(_._1).sorted
+      dir, graft.sources.WritePlan.empty).map(_._1).sorted
     val snap = liveStateSnapshot(md.snapshots, newId, md.currentSchemaId,
       System.currentTimeMillis()).copy(deletePaths = merged)
     commit(md.copy(snapshots = md.snapshots :+ snap))

@@ -429,7 +429,8 @@ private[lake] trait LakeTableRefs { self: LakeTable =>
     val candidates = (LakeTable.liveFiles(visible) ++ overlayFiles)
       .filterNot(f => cowRemoved(LakeTable.normalizePath(f.path)))
     val affected = affectedFiles(spark, predicate,
-      candidatesOverride = Some(candidates))
+      candidatesOverride = Some(candidates),
+      deletes = Some(LakeTable.liveDeletes(visible)))
     if (affected.isEmpty) return None
     // v3 branch rewrites preserve row lineage exactly like the
     // main-table CoW verbs: survivors carry their id + last-updated

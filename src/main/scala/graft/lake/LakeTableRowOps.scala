@@ -88,12 +88,13 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
   private def markerFiles(keys: DataFrame, dir: Path,
       driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]])
       : Seq[String] = {
-    val written = LakeTable.writeViaTaskWriterRich(keys, dir, Seq.empty,
+    val written = LakeTable.writeViaTaskWriterRich(keys, dir,
+      graft.sources.WritePlan.empty,
       Seq.empty, null, driverRows = driverRows).files.map(_._1).sorted
     if (written.nonEmpty) written
     else {
       val w = new graft.sources.LakeParquetDataWriter(dir.toString,
-        keys.schema, Seq.empty, "empty")
+        keys.schema, graft.sources.WritePlan.empty, "empty")
       w.openEmpty()
       w.commit().asInstanceOf[graft.sources.LakeFilesCommit].files.map(_._1)
     }
@@ -479,7 +480,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val res = LakeTable.writeViaTaskWriterRich(
       matched.select(col("_graft_dfile").as("file_path"),
         col("_graft_dpos").as("pos")),
-      delDir, Seq.empty, Seq.empty, null, countOrdinal = 0)
+      delDir, graft.sources.WritePlan.empty, Seq.empty, null,
+      countOrdinal = 0)
     val written = res.files.map(_._1).sorted
     val counts: Map[String, Long] = res.counts.toSeq
       .groupMapReduce { case (p, _) => LakeTable.normalizePath(p) }(
@@ -748,38 +750,37 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
   }
 
   /** Files whose rows could be touched by a row-level op: metadata
-    * pruning first (partition values + min/max stats), then one scan
-    * that tags every row with its source file and keeps the distinct
-    * file names of rows matching `predicate` (and, for merge, joining a
-    * source key). Only those files get rewritten.
+    * pruning first (partition values + min/max stats), then one pinned
+    * connector scan of the candidates' LIVE rows (the view's position
+    * deletes and deletion vectors applied — a row already deleted
+    * touches nothing) that keeps the distinct `_graft_file` of rows
+    * matching `predicate` (and, for merge, joining a source key). Only
+    * those files get rewritten. Branch CoW passes its own candidates
+    * and the branch view's `deletes`.
     */
   private[lake] def affectedFiles(spark: SparkSession, predicate: Column,
       prune: Map[String, Set[String]] = Map.empty,
       statsFilters: Seq[RangeFilter] = Seq.empty,
       matchSource: Option[(DataFrame, Seq[String])] = None,
-      candidatesOverride: Option[Seq[DataFileMeta]] = None)
+      candidatesOverride: Option[Seq[DataFileMeta]] = None,
+      deletes: Option[Map[String, DeleteSet]] = None)
       : Seq[DataFileMeta] = {
-    // branch CoW passes its own (branch-view) candidate set; the main
-    // path derives it from the committed live files
     val candidates = candidatesOverride.getOrElse(LakeTable.matchingFiles(
       LakeTable.liveFiles(md.snapshots, prune, md.currentSchema, statsFilters),
       md.currentSchema, prune, statsFilters, md.schemaOpt))
     if (candidates.isEmpty) return Seq.empty
-    val withFile = candidates.groupBy(_.schemaId).map { case (schemaId, group) =>
-      val fileSchema = md.schemaById(schemaId)
-      spark.read
-        .schema(Reconcile.clean(fileSchema).asInstanceOf[StructType])
-        .parquet(group.map(_.path): _*)
-        .withColumn("_graft_file", input_file_name())
-        .select(Reconcile.projection(fileSchema, md.currentSchema) :+
-          col("_graft_file"): _*)
-    }.reduce(_.unionByName(_)).filter(predicate)
+    // the metadata column is projected before any join (a join's
+    // output drops metadata columns)
+    val live = readPinned(spark, candidates,
+      deletes.getOrElse(LakeTable.liveDeletes(md.snapshots)))
+      .filter(predicate)
+      .select(col("*"), col(graft.sources.LakeSource.FileMetaCol).as("_hit"))
     val matchedRows = matchSource match {
-      case Some((src, keys)) => withFile.join(src, keys, "left_semi")
-      case None => withFile
+      case Some((src, keys)) => live.join(src, keys, "left_semi")
+      case None => live
     }
-    val hit = matchedRows.select("_graft_file").distinct()
-      .collect().map(r => LakeTable.normalizePath(r.getString(0))).toSet
+    val hit = matchedRows.select("_hit").distinct().collect()
+      .map(r => LakeTable.normalizePath(r.getString(0))).toSet
     candidates.filter(f => hit(LakeTable.normalizePath(f.path)))
   }
 }

@@ -84,10 +84,10 @@ object Transforms {
 
   // ---- executor-side rendering ----------------------------------------
   // The same strings `expr` produces through date_format, computed from
-  // raw internal values — shared by the distributed writers and the V2
-  // partition-transform functions so the two paths can never drift.
-  // Wall-clock types only (NTZ micros / epoch days): tz-aware rendering
-  // would depend on the session timezone.
+  // raw internal values — for the V2 partition-transform functions (the
+  // writers evaluate `expr` itself). Wall-clock types only (NTZ micros /
+  // epoch days): tz-aware rendering would depend on the session
+  // timezone.
 
   def renderLocal(transform: String, ldt: java.time.LocalDateTime): String =
     transform match {

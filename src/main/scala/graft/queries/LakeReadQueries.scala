@@ -97,15 +97,13 @@ object LakeReadQueries extends QueryModule {
           |{"column_name":"o_key","data_type":"long"},
           |{"column_name":"payload","data_type":"variant"}],
           |"partitions":[]}""".stripMargin)
-      // distributed write => the parquet writer SHREDS the variant
-      // (the driver-local publication writer has no shredding path)
-      sys.props("graft.write.nolocal") = "1"
-      try LakeTable.load(wh, "vp", "ordersv").append(
+      // the lake writer SHREDS the variant (the session's write
+      // shredding + schema inference defaults)
+      LakeTable.load(wh, "vp", "ordersv").append(
         Tables(s, dir, "orders").selectExpr(
           "o_orderkey AS o_key",
           "parse_json(to_json(struct(o_orderstatus, o_totalprice, " +
             "CAST(o_orderdate AS STRING) AS o_orderdate))) AS payload"))
-      finally sys.props.remove("graft.write.nolocal")
       s.conf.set("spark.sql.catalog.graftvp", "graft.sources.LakeCatalog")
       s.conf.set("spark.sql.catalog.graftvp.warehouse", wh)
       val clipped0 = org.apache.spark.sql.execution.datasources.parquet

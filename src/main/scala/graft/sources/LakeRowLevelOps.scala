@@ -51,7 +51,7 @@ private[sources] class LakeRowLevelOperation(wh: String, db: String,
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = new BatchWrite {
           private val (writtenSchemaId, writtenSpecId, partPlan, stage) = {
-            val plan = LakeStreamingWrite.partitionPlan(
+            val plan = LakeStreamingWrite.writePlan(
               table, info.schema(): StructType)
             (table.metadata.currentSchemaId, table.metadata.currentSpecId,
               plan,
@@ -92,7 +92,7 @@ private[sources] class LakeRowLevelOperation(wh: String, db: String,
 }
 
 private[sources] class LakeBatchWriterFactory(stageDir: String,
-    schema: StructType, partPlan: Seq[PartField]) extends DataWriterFactory {
+    schema: StructType, partPlan: WritePlan) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
     new LakeParquetDataWriter(stageDir, schema, partPlan,
@@ -152,7 +152,7 @@ private[sources] class LakeDeltaBatchWrite(wh: String, db: String,
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   private val (writtenSchemaId, writtenSpecId, partPlan, stage) = {
-    val plan = LakeStreamingWrite.partitionPlan(table, rowSchema)
+    val plan = LakeStreamingWrite.writePlan(table, rowSchema)
     (table.metadata.currentSchemaId, table.metadata.currentSpecId, plan,
       LakeTable.tableLocation(wh, db, tbl).resolve("data")
         .resolve(s"delta-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -203,7 +203,7 @@ private[sources] case class LakeDeltaCommit(
     deleteCounts: Map[String, Long]) extends WriterCommitMessage
 
 private[sources] class LakeDeltaWriterFactory(stageDir: String,
-    rowSchema: StructType, partPlan: Seq[PartField])
+    rowSchema: StructType, partPlan: WritePlan)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[
@@ -217,7 +217,7 @@ private[sources] class LakeDeltaWriterFactory(stageDir: String,
   * position) counts and land in one position-delete parquet per task.
   */
 private[sources] class LakeDeltaWriter(stageDir: String,
-    rowSchema: StructType, partPlan: Seq[PartField], tag: String)
+    rowSchema: StructType, partPlan: WritePlan, tag: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[
       org.apache.spark.sql.catalyst.InternalRow] {
   import org.apache.spark.sql.catalyst.InternalRow
@@ -231,7 +231,7 @@ private[sources] class LakeDeltaWriter(stageDir: String,
       org.apache.spark.sql.types.LongType, nullable = false)))
   private val deleteWriter =
     new LakeParquetDataWriter(s"$stageDir/deletes", deleteSchema,
-      Seq.empty, s"del-$tag")
+      WritePlan.empty, s"del-$tag")
   private val counts = scala.collection.mutable.Map.empty[String, Long]
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {

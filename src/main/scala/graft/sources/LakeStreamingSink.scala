@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.util.UUID
 
 import scala.collection.mutable
@@ -11,12 +10,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{GraftVariantShredding, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.lake.LakeTable
-import graft.schema.FieldIds
 
 /** DSv2 streaming sink: `df.writeStream.format("graft-lake")…` commits
   * one snapshot per non-empty micro-batch WITHOUT foreachBatch.
@@ -24,9 +22,9 @@ import graft.schema.FieldIds
   * Executor side: each task streams its InternalRows straight into
   * parquet files under the table's data directory (Spark's own
   * ParquetWriteSupport — full type coverage, INT64-micros timestamps),
-  * fanning out one file per hidden-partition value (transforms are
-  * evaluated per row with the same rendering as the batch writer, so
-  * metadata pruning sees identical strings). Driver side: commit()
+  * fanning out one file per hidden-partition value (the batch
+  * writer's [[WritePlan]], so metadata pruning sees identical
+  * strings). Driver side: commit()
   * turns (path, partitionValues) pairs into one append snapshot tagged
   * with (queryId, epochId), so replayed epochs after a crash are
   * skipped — the same exactly-once contract as StreamIngest, with
@@ -38,12 +36,12 @@ private[sources] class LakeStreamingWrite(wh: String, db: String, tbl: String,
     queryId: String, schema: StructType,
     branch: Option[String] = None) extends StreamingWrite {
 
-  // schema version + partition plan captured at query start: a
+  // schema version + write plan captured at query start: a
   // mid-stream ALTER TABLE must not re-label old-schema files
   private val (writtenSchemaId, writtenSpecId, partPlan) = {
     val t = LakeTable.load(wh, db, tbl)
     (t.metadata.currentSchemaId, t.metadata.currentSpecId,
-      LakeStreamingWrite.partitionPlan(t, schema))
+      LakeStreamingWrite.writePlan(t, schema))
   }
 
   private def deleteStaged(p: String): Unit =
@@ -82,115 +80,119 @@ private[sources] class LakeStreamingWrite(wh: String, db: String, tbl: String,
 
 private[graft] object LakeStreamingWrite {
 
-  /** Resolve the table's partition spec against a writer's row schema:
-    * (partition name, transform, source ordinal, type) per spec field,
-    * failing fast on transforms the executor-side renderer can't
-    * produce.
+  /** The table's file layout bound to a writer's row schema — the one
+    * [[WritePlan]] every lake data write (batch, streaming, SQL DML)
+    * hands to [[LakeParquetDataWriter]]: the spec's partition
+    * expressions, the `write.option.*` properties, and whether VARIANT
+    * columns shred.
     */
-  def partitionPlan(t: LakeTable, schema: StructType): Seq[PartField] = {
-    val md = t.metadata
-    val plan = md.currentSpec.fields.map { f =>
-      val srcName = FieldIds.flatten(md.currentSchema)
-        .collectFirst { case (p, fd) if FieldIds.idOf(fd) == f.sourceFieldId => p }
-        .getOrElse(throw new IllegalStateException(
-          s"spec source field ${f.sourceFieldId} not in schema"))
-      val ord = try schema.fieldIndex(srcName) catch {
-        case _: IllegalArgumentException =>
-          throw new UnsupportedOperationException(
-            s"graft-lake writer: partition source '$srcName' is nested — " +
-              "distributed writes support top-level sources only; use the " +
-              "driver-side batch path")
-      }
-      PartField(f.name, f.transform, ord, schema.fields(ord).dataType)
-    }
-    plan.foreach(renderCheck)
-    plan
-  }
-
-  /** Throws for (transform, type) pairs renderValue can't produce.
-    * Time transforms are limited to wall-clock types (NTZ/date): the
-    * batch writer renders tz-aware timestamps in the SESSION timezone
-    * via date_format, which an executor cannot reproduce portably.
-    */
-  def renderCheck(p: PartField): Unit = (p.transform, p.dataType) match {
-    case ("identity", StringType | IntegerType | LongType | BooleanType |
-                      DoubleType | FloatType | DateType) => ()
-    case ("year" | "month" | "day" | "hour",
-          TimestampNTZType | DateType) => ()
-    case (tf, _) if graft.lake.Transforms.bucketCount(tf).isDefined => ()
-    case (tf, StringType | IntegerType | LongType)
-        if graft.lake.Transforms.truncateWidth(tf).isDefined => ()
-    case (tf, dt) => throw new UnsupportedOperationException(
-      s"graft-lake writer: partition transform $tf(${dt.simpleString}) is " +
-        "not supported for distributed writes; use LakeTable.append / " +
-        "StreamIngest.intoLake (driver-side batch path) for this table")
-  }
-
-  /** Same rendering as the batch writer's directory values
-    * (Transforms.expr + Hive null dir), evaluated on an InternalRow.
-    */
-  def renderValue(p: PartField, row: InternalRow): String = {
-    // bucket first: the batch expression pmod(hash(col), n) maps NULL
-    // to pmod(seed, n), never to the default partition dir
-    graft.lake.Transforms.bucketCount(p.transform).foreach { n =>
-      val v = if (row.isNullAt(p.ordinal)) null else row.get(p.ordinal, p.dataType)
-      val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-        .hash(v, p.dataType, 42L).toInt
-      val m = h % n
-      return (if (m < 0) m + n else m).toString
-    }
-    if (row.isNullAt(p.ordinal)) return "__HIVE_DEFAULT_PARTITION__"
-    // truncate next: same NULL → default-dir rule as identity/time, then
-    // the batch expression's floor/prefix on the non-null value
-    graft.lake.Transforms.truncateWidth(p.transform).foreach { w =>
-      return (p.dataType match {
-        case IntegerType =>
-          val v = row.getInt(p.ordinal); (v - Math.floorMod(v, w)).toString
-        case LongType =>
-          val v = row.getLong(p.ordinal)
-          (v - Math.floorMod(v, w.toLong)).toString
-        case StringType =>
-          // character (codepoint-pair) prefix, matching substring(col,1,w)
-          val v = row.getUTF8String(p.ordinal).substringSQL(1, w).toString
-          if (v.isEmpty) "__HIVE_DEFAULT_PARTITION__" else v
-        case other => throw new UnsupportedOperationException(other.simpleString)
-      })
-    }
-    def ldt: LocalDateTime = p.dataType match {
-      case TimestampNTZType =>
-        val micros = row.getLong(p.ordinal)
-        LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt, ZoneOffset.UTC)
-      case DateType =>
-        LocalDate.ofEpochDay(row.getInt(p.ordinal).toLong).atStartOfDay
-      case other => throw new UnsupportedOperationException(other.simpleString)
-    }
-    p.transform match {
-      case "identity" => p.dataType match {
-        case StringType =>
-          // Hive path treats null AND empty as the default partition
-          val v = row.getUTF8String(p.ordinal).toString
-          if (v.isEmpty) "__HIVE_DEFAULT_PARTITION__" else v
-        case IntegerType => row.getInt(p.ordinal).toString
-        case LongType => row.getLong(p.ordinal).toString
-        case BooleanType => row.getBoolean(p.ordinal).toString
-        case DoubleType => row.getDouble(p.ordinal).toString
-        case FloatType => row.getFloat(p.ordinal).toString
-        case DateType => LocalDate.ofEpochDay(row.getInt(p.ordinal).toLong).toString
-        case other => throw new UnsupportedOperationException(other.simpleString)
-      }
-      case t @ ("year" | "month" | "day" | "hour") =>
-        graft.lake.Transforms.renderLocal(t, ldt)
-      case other => throw new UnsupportedOperationException(other)
-    }
+  def writePlan(t: LakeTable, schema: StructType,
+      spark: org.apache.spark.sql.SparkSession =
+        org.apache.spark.sql.SparkSession.active): WritePlan = {
+    val parts = t.partitionColumns
+    val options = t.writerOptions
+    WritePlan(parts.map(_._1), WritePlan.bind(spark, schema, parts.map(_._2)),
+      options, WritePlan.shredsVariants(spark, schema, options))
   }
 }
 
-/** One spec field bound to the query schema: partition name, transform,
-  * source ordinal, source type.
+/** How a [[LakeParquetDataWriter]] lays out its files: `partExprs` are
+  * the spec's `Transforms.expr` partition expressions bound to the row
+  * schema (the session time zone fixed at analysis, nested sources as
+  * struct access), rendered per row exactly as FileFormatWriter
+  * renders a dynamic partition directory value; `options` are the
+  * table's `write.option.*` parquet settings; `shred` infers a VARIANT
+  * shredding schema per file.
   */
-private[graft] case class PartField(name: String, transform: String,
-    ordinal: Int, dataType: DataType)
+private[graft] case class WritePlan(partNames: Seq[String],
+    partExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    options: Map[String, String] = Map.empty,
+    shred: Boolean = false) {
+
+  /** The rendered partition key of a row: one string per spec field, a
+    * null or empty value rendering as the Hive default partition.
+    * Interpreted: a write evaluates a handful of expressions per row,
+    * and generating code for them cost more than it saves on the
+    * small driver-resident batches. */
+  def keys(): InternalRow => Seq[String] =
+    if (partExprs.isEmpty) _ => Nil
+    else {
+      val proj = org.apache.spark.sql.catalyst.expressions
+        .InterpretedUnsafeProjection.createProjection(partExprs)
+      row => {
+        val k = proj(row)
+        partExprs.indices.map { i =>
+          val v = if (k.isNullAt(i)) "" else k.getUTF8String(i).toString
+          if (v.isEmpty) WritePlan.DefaultPartition else v
+        }
+      }
+    }
+}
+
+private[graft] object WritePlan {
+  val empty: WritePlan = WritePlan(Nil, Nil)
+
+  val DefaultPartition: String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .DEFAULT_PARTITION_NAME
+
+  /** Resolve `cols` against `schema` (analyzed over an empty relation
+    * of that schema) and bind them to its ordinals. The analysis costs
+    * milliseconds — as much as a driver-resident append of a few rows
+    * writes — so its result is kept per (schema, columns, session
+    * confs), and each caller gets its own copy of the trees. */
+  def bind(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      cols: Seq[org.apache.spark.sql.Column])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    if (cols.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+      val key = (schema, cols.map(_.toString), spark.conf.getAll)
+      val exprs = Option(bound.get(key)).getOrElse {
+        val rel = LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+        val resolved =
+          org.apache.spark.sql.GraftPlanBridge.analyzeSelect(spark, rel, cols) match {
+            case p @ Project(list, child) if p.resolved => list.map { e =>
+              val bare = e match { case a: Alias => a.child; case o => o }
+              BindReferences.bindReference(bare, child.output)
+            }
+            case other => throw new IllegalStateException(
+              s"write expressions do not resolve against the write schema: $other")
+          }
+        bound.put(key, resolved)
+        resolved
+      }
+      exprs.map(_.clone())
+    }
+
+  private val bound = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[AnyRef,
+        Seq[org.apache.spark.sql.catalyst.expressions.Expression]](
+      16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef,
+          Seq[org.apache.spark.sql.catalyst.expressions.Expression]]) =
+        size > 256
+    })
+
+  /** Whether FileFormatWriter would shred this schema's VARIANT columns
+    * under the active session: write shredding on, schema inference
+    * on (a `spark.sql.variant.inferShreddingSchema` writer option
+    * overrides the session, as for a parquet write option), and a
+    * VARIANT somewhere in the schema. */
+  def shredsVariants(spark: org.apache.spark.sql.SparkSession,
+      schema: StructType, options: Map[String, String]): Boolean = {
+    def conf(key: String) = spark.conf.get(key).trim.toBoolean
+    val inferKey = SQLConf.VARIANT_INFER_SHREDDING_SCHEMA.key
+    conf(SQLConf.VARIANT_WRITE_SHREDDING_ENABLED.key) &&
+      options.collectFirst {
+        case (k, v) if k.equalsIgnoreCase(inferKey) => v.trim.toBoolean
+      }.getOrElse(conf(inferKey)) &&
+      org.apache.spark.sql.catalyst.expressions.variant
+        .VariantExpressionEvalUtils.typeContainsVariant(schema)
+  }
+}
 
 private[graft] case class LakeFilesCommit(
     files: Seq[(String, Map[String, String])]) extends WriterCommitMessage
@@ -205,7 +207,7 @@ private[graft] case class LakeFilesCommit(
   * container layout); past the bound the task writes its own container
   * and only the ~40-byte `refs` travel (a 10k-file compaction never
   * stages blobs on the driver). Only
-  * [[graft.lake.LakeTable.writeViaTaskWriterBlooms]] produces this
+  * [[graft.lake.LakeTable.writeViaTaskWriterRich]] produces this
   * shape; the streaming sink keeps [[LakeFilesCommit]].
   */
 private[graft] case class LakeFilesBloomCommit(
@@ -229,7 +231,7 @@ private[graft] case class BloomWriteCol(name: String, fieldId: Int,
     ordinal: Int, dataType: DataType)
 
 private[sources] class LakeStreamingWriterFactory(stageDir: String,
-    schema: StructType, partPlan: Seq[PartField])
+    schema: StructType, partPlan: WritePlan)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -238,8 +240,19 @@ private[sources] class LakeStreamingWriterFactory(stageDir: String,
       s"$epochId-$partitionId")
 }
 
-/** Writes InternalRows to parquet, one lazily opened file per hidden-
-  * partition value (Spark's ParquetWriteSupport). An empty task
+/** The one lake parquet writer: every batch, streaming and SQL DML
+  * data write (and every delete/marker file) runs it, in a Spark task
+  * or — for a driver-resident batch — once on the driver. Writes
+  * InternalRows to parquet, one lazily opened file per hidden-
+  * partition value (`partPlan`'s partition expressions, rendered as
+  * FileFormatWriter renders a partition directory), through Spark's
+  * ParquetWriteSupport with the table's `write.option.*` settings
+  * applied to the parquet builder — files are SNAPPY with INT64-micros
+  * timestamps whatever the session's parquet confs say; a table
+  * customizes its files through those properties. With
+  * `partPlan.shred`, each file buffers its first rows
+  * (FileFormatWriter's 4096 rows / 64 MiB) and writes under the
+  * VARIANT shredding schema Spark infers from them. An empty task
   * creates no files.
   *
   * `closeOnKeyChange` (the r17 batch direct-write mode): the task
@@ -254,7 +267,7 @@ private[sources] class LakeStreamingWriterFactory(stageDir: String,
   * guards the multi-sink streaming mode.
   */
 private[graft] class LakeParquetDataWriter(stageDir: String,
-    schema: StructType, partPlan: Seq[PartField], filePrefix: String,
+    schema: StructType, partPlan: WritePlan, filePrefix: String,
     closeOnKeyChange: Boolean = false,
     bloomPlan: Seq[BloomWriteCol] = Seq.empty,
     bloomDir: String = null,
@@ -265,9 +278,48 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   private def rich: Boolean =
     bloomPlan.nonEmpty || statsSchema != null || countOrdinal >= 0
 
-  private case class Sink(
-      writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow],
-      path: String, blooms: Array[graft.lake.BloomFilters.Accumulator])
+  /** One open file. Under `partPlan.shred` the parquet writer opens
+    * only once the shredding schema is inferred from the buffered
+    * first rows (or at close). */
+  private final class Sink(val path: String,
+      val blooms: Array[graft.lake.BloomFilters.Accumulator]) {
+    private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] =
+      if (partPlan.shred) null else open(path)
+    private var buffered = mutable.ArrayBuffer.empty[InternalRow]
+    private var bufferedBytes = 0L
+
+    def write(row: InternalRow): Unit =
+      if (writer != null) writer.write(row)
+      else {
+        val u = toUnsafe(row)
+        bufferedBytes += u.getSizeInBytes
+        buffered += u.copy()
+        if (buffered.size >= LakeParquetDataWriter.ShredBufferRows ||
+            bufferedBytes > LakeParquetDataWriter.ShredBufferBytes) flush()
+      }
+
+    private def flush(): Unit = {
+      GraftVariantShredding.setInferredSchema(schema, buffered.toSeq, conf)
+      writer = open(path)
+      buffered.foreach(writer.write)
+      buffered = null
+    }
+
+    def close(): Unit = {
+      if (writer == null) flush()
+      writer.close()
+    }
+
+    def abort(): Unit = {
+      if (writer != null) try writer.close() catch { case _: Exception => () }
+      Files.deleteIfExists(Paths.get(path))
+    }
+  }
+
+  private lazy val toUnsafe =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+
+  private val keyOf = partPlan.keys()
 
   // ordinals of the top-level columns the write schema declares
   // non-nullable: their footer column is REQUIRED, which commit-time
@@ -329,6 +381,9 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   // writer opens
   private lazy val conf = {
     val conf = graft.lake.HadoopConfs.mutable()
+    // the write options reach ParquetWriteSupport as FileFormatWriter's
+    // job conf carries them; the builder settings apply in `open`
+    partPlan.options.foreach { case (k, v) => conf.set(k, v) }
     ParquetWriteSupport.setSchema(schema, conf)
     // everything ParquetWriteSupport/SparkToParquetSchemaConverter
     // read from the Hadoop conf (Spark's prepareWrite sets the same)
@@ -346,19 +401,16 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   // the stage dir, created with the first file (as Hadoop's create did)
   private lazy val stagePath = Files.createDirectories(Paths.get(stageDir))
 
-  private def open(name: String): Sink = {
-    val path = stagePath.resolve(name).toString
+  private def open(path: String)
+      : org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     // java.nio file creation: Hadoop's RawLocalFileSystem forks a
     // `chmod` per created file when native Hadoop is absent
     val out = new org.apache.parquet.io.LocalOutputFile(Paths.get(path))
-    Sink(new LakeParquetDataWriter.Builder(out).withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build(),
-      path,
-      if (bloomPlan.isEmpty) null
-      else Array.fill(bloomPlan.size)(
-        new graft.lake.BloomFilters.Accumulator()))
+    LakeParquetDataWriter.applyOptions(
+      new LakeParquetDataWriter.Builder(out).withConf(conf)
+        .withCompressionCodec(
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY),
+      partPlan.options).build()
   }
 
   // Spark's group-based row-level writes (UPDATE/MERGE → ReplaceData)
@@ -384,16 +436,16 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
         "violated by incoming rows — commit refused")
       r += 1
     }
-    val key = partPlan.map(p => LakeStreamingWrite.renderValue(p, row))
+    val key = keyOf(row)
     if (closeOnKeyChange && sinks.nonEmpty && !sinks.contains(key)) {
       val (prevKey, prev) = sinks.head
-      prev.writer.close()
-      closed += prev.path -> partPlan.map(_.name).zip(prevKey).toMap
+      prev.close()
+      closed += prev.path -> partPlan.partNames.zip(prevKey).toMap
       finishBlooms(prev)
       sinks.clear()
     }
     val sink = sinkFor(key)
-    sink.writer.write(row)
+    sink.write(row)
     if (bloomPlan.nonEmpty) {
       val h = bloomProj(row)
       var i = 0
@@ -417,23 +469,26 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
           "the input by the partition source columns (each open file " +
           "buffers a row group; memory limits bite before this cap)")
       fileSeq += 1
-      open(s"part-$filePrefix-${fileSeq - 1}-" +
-        s"${UUID.randomUUID().toString.take(8)}.parquet")
+      new Sink(stagePath.resolve(s"part-$filePrefix-${fileSeq - 1}-" +
+        s"${UUID.randomUUID().toString.take(8)}.parquet").toString,
+        if (bloomPlan.isEmpty) null
+        else Array.fill(bloomPlan.size)(
+          new graft.lake.BloomFilters.Accumulator()))
     })
 
   /** Open the (unpartitioned) writer's file before any row arrives, so
     * a writer that sees none still commits one zero-row file carrying
     * the schema — the empty equality-delete marker batch. */
   def openEmpty(): Unit = {
-    require(partPlan.isEmpty, "an empty file has no partition value")
+    require(partPlan.partNames.isEmpty, "an empty file has no partition value")
     sinkFor(Seq.empty)
   }
 
   override def commit(): WriterCommitMessage = {
     val files = sinks.toSeq.map { case (key, sink) =>
-      sink.writer.close()
+      sink.close()
       finishBlooms(sink)
-      sink.path -> partPlan.map(_.name).zip(key).toMap
+      sink.path -> partPlan.partNames.zip(key).toMap
     }
     sinks.clear()
     val all = closed.toSeq ++ files
@@ -479,10 +534,7 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   }
 
   override def abort(): Unit = {
-    sinks.values.foreach { sink =>
-      try sink.writer.close() catch { case _: Exception => () }
-      Files.deleteIfExists(Paths.get(sink.path))
-    }
+    sinks.values.foreach(_.abort())
     sinks.clear()
     closed.foreach { case (path, _) => Files.deleteIfExists(Paths.get(path)) }
     closed.clear()
@@ -501,6 +553,63 @@ private[graft] object LakeParquetDataWriter {
         InternalRow, Builder](f) {
     override def getWriteSupport(c: Configuration) = new ParquetWriteSupport
     override def self(): Builder = this
+  }
+
+  /** FileFormatWriter's VARIANT inference buffer
+    * (ParquetOutputWriterWithVariantShredding): the shredding schema of
+    * a file is inferred from its first 4096 rows or 64 MiB. */
+  private val ShredBufferRows = 4096
+  private val ShredBufferBytes = 64L << 20
+
+  /** The builder's own properties, whose defaults otherwise fill the
+    * only copy the writer reads — `estimateRowCountForPageSizeCheck`
+    * has no builder call. */
+  private lazy val propsField = {
+    val f = classOf[org.apache.parquet.hadoop.ParquetWriter.Builder[_, _]]
+      .getDeclaredField("encodingPropsBuilder")
+    f.setAccessible(true)
+    f
+  }
+
+  /** Apply parquet write options as ParquetOutputFormat reads them
+    * from a FileFormatWriter job conf: `ParquetWriter.Builder` reads no
+    * `parquet.*` key from its conf, so each key maps to its builder
+    * call — block and page size, dictionary, writer version, the
+    * page-size-check estimate, per-column (`key#column`) bloom filter
+    * enablement, NDV and FPP; `compression` / `parquet.compression`
+    * set the codec. Other keys reach only the write support's conf. */
+  private def applyOptions(b: Builder, options: Map[String, String])
+      : Builder = {
+    import org.apache.parquet.hadoop.ParquetOutputFormat._
+    def column(key: String, prefix: String): Option[String] =
+      Some(key.stripPrefix(prefix + "#")).filter(_ => key.startsWith(prefix + "#"))
+    options.foreach { case (k, v0) =>
+      val v = v0.trim
+      k match {
+        case BLOCK_SIZE => b.withRowGroupSize(v.toLong)
+        case PAGE_SIZE => b.withPageSize(v.toInt)
+        case ENABLE_DICTIONARY => b.withDictionaryEncoding(v.toBoolean)
+        case WRITER_VERSION => b.withWriterVersion(
+          org.apache.parquet.column.ParquetProperties.WriterVersion.fromString(v))
+        case ESTIMATE_PAGE_SIZE_CHECK =>
+          propsField.get(b).asInstanceOf[
+            org.apache.parquet.column.ParquetProperties.Builder]
+            .estimateRowCountForPageSizeCheck(v.toBoolean)
+        case "compression" | COMPRESSION => b.withCompressionCodec(
+          if (v.equalsIgnoreCase("none"))
+            org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED
+          else org.apache.parquet.hadoop.metadata.CompressionCodecName
+            .fromConf(v.toUpperCase(java.util.Locale.ROOT)))
+        case _ =>
+          column(k, BLOOM_FILTER_ENABLED).foreach(
+            b.withBloomFilterEnabled(_, v.toBoolean))
+          column(k, BLOOM_FILTER_EXPECTED_NDV).foreach(
+            b.withBloomFilterNDV(_, v.toLong))
+          column(k, BLOOM_FILTER_FPP).foreach(
+            b.withBloomFilterFPP(_, v.toDouble))
+      }
+    }
+    b
   }
 
   /** Per-task bound on bloom blobs riding the commit message instead

@@ -21,6 +21,32 @@ object GraftPlanBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** `cols` projected over `child` and resolved by `spark`'s analyzer —
+    * what `Dataset.select` analyzes, without building the Datasets. */
+  def analyzeSelect(spark: SparkSession, child: LogicalPlan,
+      cols: Seq[Column]): LogicalPlan = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    // the analyzer reads SQLConf.get (the session time zone, for one)
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(s.sessionState.conf) {
+      s.sessionState.analyzer.execute(
+        org.apache.spark.sql.catalyst.plans.logical.Project(
+          cols.map(c => classic.ExpressionUtils.toNamed(s.expression(c))), child))
+    }
+  }
+
+  /** Run `body` under `spark`'s SQL confs — on this thread
+    * (`SQLConf.get`), and with `jobs` in the tasks of every job it
+    * launches — the conf view a FileFormatWriter write job runs its
+    * writers under.
+    */
+  def withSessionConf[T](spark: SparkSession, jobs: Boolean)(body: => T): T = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(s.sessionState.conf) {
+      if (!jobs) body
+      else org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(s)(body)
+    }
+  }
+
   /** The session's SQL parser (sessionState is Scala-private; public in
     * bytecode) — lets engine code wrap it in [[GraftSqlParser]] for the
     * extension DDL without requiring session-extension registration.

@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lake.{BloomFilters, Engine, LakeTable, RangeFilter}
+import graft.lake.{BloomFilters, Engine, LakeTable, RangeFilter, Reconcile}
 
 /** Per-file bloom filters (`write.bloom-columns`): point-lookup file
   * skipping for high-cardinality columns whose min/max ranges overlap
@@ -223,6 +224,70 @@ class BloomSkipSpec extends AnyFunSuite {
       loNum = Some(BigDecimal(42)), hiNum = Some(BigDecimal(42)))))
     assert(kept.size < all)
     assert(t.read(spark).filter(col("id") === 42L).count() == 1L)
+  }
+
+  test("build_blooms over the connector builds the same bits as a " +
+      "per-schema parquet read, across rename, promotion and a default") {
+    import SparkTestSession.spark.implicits._
+    val wh = Files.createTempDirectory("graft-bloom-alter").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"int"},
+        |{"column_name":"tag","data_type":"string"}],
+        |"partitions":[]}""".stripMargin)
+    LakeTable.load(wh, "d", "t").append((0 until 120)
+      .map(i => (i - 60, if (i % 9 == 0) null else s"tag$i"))
+      .toDF("id", "tag").repartition(3))
+    // deleted rows still contribute bits (no deletes passed)
+    LakeTable.load(wh, "d", "t").deleteMoR(spark, col("id") === 5)
+    LakeTable.load(wh, "d", "t").renameColumn("tag", "label")
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"label","data_type":"string"}],
+        |"partitions":[]}""".stripMargin)
+    spark.conf.set("spark.sql.catalog.gbfalter", "graft.sources.LakeCatalog")
+    spark.conf.set("spark.sql.catalog.gbfalter.warehouse", wh)
+    spark.sql("ALTER TABLE gbfalter.d.t ADD COLUMN note STRING DEFAULT 'n/a'")
+    LakeTable.load(wh, "d", "t").append((0 until 40)
+      .map(i => (i.toLong * 1000000007L, s"new$i", s"note${i % 4}"))
+      .toDF("id", "label", "note").repartition(2))
+    val t0 = LakeTable.load(wh, "d", "t")
+    t0.updateProperties(Map("write.bloom-columns" -> "id,label,note"))
+    val t = LakeTable.load(wh, "d", "t")
+    val files = t.plannedFiles()
+    assert(files.map(_.schemaId).distinct.size >= 2 && files.size == 5)
+    // the per-schema-group parquet build buildBlooms ran before:
+    // each group reconciled to the current schema, then hashed
+    val current = t.currentSchema
+    val names = Seq("id", "label", "note")
+    val want: Map[(String, Int), Seq[Long]] = files.groupBy(_.schemaId)
+      .toSeq.flatMap { case (sid, group) =>
+        val fileSchema = t.metadata.schemaById(sid)
+        spark.read
+          .schema(Reconcile.clean(fileSchema).asInstanceOf[StructType])
+          .parquet(group.map(_.path): _*)
+          .select(col("_metadata.file_path").as("_fp") +:
+            Reconcile.projection(fileSchema, current): _*)
+          .select(col("_fp") +: names.map(n => when(col(n).isNotNull,
+            xxhash64(col(n).cast("string")))): _*)
+          .collect().groupBy(r => LakeTable.normalizePath(r.getString(0)))
+          .toSeq.flatMap { case (p, rs) =>
+            names.zipWithIndex.map { case (n, i) =>
+              (p, graft.schema.FieldIds.idOf(current(n))) ->
+                BloomFilters.build(rs.iterator.filterNot(_.isNullAt(i + 1))
+                  .map(_.getLong(i + 1)).toArray).toSeq
+            }
+          }
+      }.toMap
+    assert(t.buildBlooms(spark) == files.size)
+    val got: Map[(String, Int), Seq[Long]] =
+      LakeTable.load(wh, "d", "t").plannedFiles().flatMap { f =>
+        f.blooms.map(r => (LakeTable.normalizePath(f.path), r.fieldId) ->
+          BloomFilters.readBlob(r.path, r.offset, r.length).toSeq)
+      }.toMap
+    assert(got.keySet == want.keySet)
+    want.foreach { case (k, bits) => assert(got(k) == bits, k) }
   }
 
   test("every present value is found (no false negatives, seeded sweep)") {

@@ -8,15 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake.{BloomFilters, Engine, LakeTable}
 
 /** r18 in-write-task bloom fusion: the write tasks build the per-file
-  * filters from the rows they are writing, so the read-back job the
-  * r17 path ran per bloom-bearing write is gone. These tests pin the
-  * two things that must never drift:
+  * filters from the rows they are writing, so no write reads its files
+  * back. These tests pin the two things that must never drift:
   *
   *   1. the incremental Accumulator is bit-identical to the batch
   *      build() across its internal pin boundary, and
-  *   2. the fused filters' BITS equal the read-back path's for the
-  *      same rows — including nulls, unicode, negative longs, and an
-  *      int-typed column — so build and probe can never disagree.
+  *   2. the fused filters' BITS equal a read-back build over the
+  *      FileFormatWriter reference write of the same rows
+  *      ([[graft.lake.HiveDirWriteReference]]) — including nulls,
+  *      unicode, negative longs, and an int-typed column — so build
+  *      and probe can never disagree.
   *
   * Plus the optimization's observable: a bloom-bearing append launches
   * exactly as many Spark jobs as a bloom-less one.
@@ -88,13 +89,16 @@ class BloomTaskFusionSpec extends AnyFunSuite {
     tA.append(fixture.repartition(2, col("id")))
     val fused = blobsOf(LakeTable.load(whA, "d", "t"))
 
-    val (whB, tB) = mk("readback")
-    GlobalFlagLock.synchronized {
-      System.setProperty("graft.bloom.notask", "1")
-      try tB.append(fixture.repartition(2, col("id")))
-      finally System.clearProperty("graft.bloom.notask")
-    }
-    val readBack = blobsOf(LakeTable.load(whB, "d", "t"))
+    // the read-back build of the FileFormatWriter reference write
+    val (_, tB) = mk("readback")
+    val ref = graft.lake.HiveDirWriteReference.write(tB,
+      graft.lake.Align(fixture.repartition(2, col("id")), tB.currentSchema),
+      Files.createTempDirectory("graft-bfuse-ref"))
+    val readBack: Map[Int, Seq[Array[Long]]] = ref.flatMap(_.blooms.toSeq)
+      .groupBy(_._1).map { case (fid, bs) =>
+        fid -> bs.map(_._2).sortBy(_.toSeq.hashCode)
+      }
+    assert(ref.nonEmpty && ref.forall(_.blooms.size == 2))
 
     assert(fused.keySet == readBack.keySet)
     for (fid <- fused.keySet) {

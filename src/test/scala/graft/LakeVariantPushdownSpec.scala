@@ -34,11 +34,9 @@ import graft.lake.{Engine, LakeTable}
 class LakeVariantPushdownSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** k + variant payload with one small and one fat field; written
-    * through the DISTRIBUTED writer (graft.write.nolocal) so the
-    * parquet writer shreds — the driver-local publication writer
-    * produces unshredded variants, which read correctly but give the
-    * clip nothing to skip.
+  /** k + variant payload with one small and one fat field; the lake
+    * writer shreds it (the session's write-shredding defaults), so the
+    * clip has children to skip.
     */
   private def mk(tag: String, rows: Int = 20000): (String, String) = {
     val wh = Files.createTempDirectory(s"graft-vpush-$tag").toString
@@ -55,9 +53,7 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
         |sha2(concat('a', id), 256), sha2(concat('b', id), 256),
         |sha2(concat('c', id), 256), '"}')) AS payload"""
         .stripMargin.replace("\n", ""))
-    sys.props("graft.write.nolocal") = "1"
-    try LakeTable.load(wh, "d", "t").append(df)
-    finally sys.props.remove("graft.write.nolocal")
+    LakeTable.load(wh, "d", "t").append(df)
     val cat = s"gvp$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -311,9 +307,7 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
       "concat(sha2(concat('j', id), 256), sha2(concat('k', id), 256))" +
         " AS junk",
       """parse_json(concat('{"small": ', id, '}')) AS payload""")
-    sys.props("graft.write.nolocal") = "1"
-    try LakeTable.load(wh, "d", "t").append(df)
-    finally sys.props.remove("graft.write.nolocal")
+    LakeTable.load(wh, "d", "t").append(df)
     withExtSession { s2 =>
       s2.conf.set("spark.sql.catalog.gvprune", "graft.sources.LakeCatalog")
       s2.conf.set("spark.sql.catalog.gvprune.warehouse", wh)

@@ -14,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake.{Align, BloomFilters, Engine, FileStats, LakeTable}
 
 /** Seeded differential for the r12 publication fast paths: the SAME
-  * random op sequence runs into two tables — one with the driver-side
-  * LocalRelation write + inline eq-keys enabled (default), one forced
-  * onto the distributed job path (`graft.write.nolocal`) — and the
+  * random op sequence runs into two tables — one fed driver-resident
+  * frames (the driver-side LocalRelation write + inline eq-keys), one
+  * fed the same frames repartitioned (the distributed job path) — and the
   * visible state, the changelog, and the applied-delete semantics must
   * be identical at every checkpoint. Catches any divergence between
   * the driver-written parquet/inline-key decode and what a Spark job
@@ -70,27 +70,30 @@ class LocalWriteRandomSpec extends AnyFunSuite {
 
     val whA = mk("fast")
     val whB = mk("slow")
-    def both(op: String => Unit): Unit = {
-      op(whA)
-      withNoLocal(op(whB))
+    // `op(wh, shape)`: the driver-resident frames as they are for A,
+    // repartitioned (no longer a LocalRelation) for B
+    def both(op: (String, DataFrame => DataFrame) => Unit): Unit = {
+      op(whA, identity)
+      op(whB, _.repartition(2))
     }
     for (step <- 0 until 18) {
       rnd.nextInt(3) match {
         case 0 =>
           val rows = randRows(1 + rnd.nextInt(8))
-          both(wh => LakeTable.load(wh, "d", "t").append(df(rows)))
+          both((wh, shape) =>
+            LakeTable.load(wh, "d", "t").append(shape(df(rows))))
         case 1 =>
           val rows = randRows(1 + rnd.nextInt(6))
           // dedupe keys driver-side: upsert sources must carry one row
           // per key (both paths would diverge arbitrarily otherwise)
           val uniq = rows.groupBy(_._1).map(_._2.head).toSeq
-          both(wh => LakeTable.load(wh, "d", "t")
-            .upsertMoR(spark, df(uniq), keys = Seq("k")))
+          both((wh, shape) => LakeTable.load(wh, "d", "t")
+            .upsertMoR(spark, shape(df(uniq)), keys = Seq("k")))
         case 2 =>
           val ks = (0 until 1 + rnd.nextInt(3))
             .map(_ => rnd.nextInt(12).toLong)
-          both(wh => LakeTable.load(wh, "d", "t")
-            .deleteByKeysMoR(spark, ks.toDF("k")))
+          both((wh, shape) => LakeTable.load(wh, "d", "t")
+            .deleteByKeysMoR(spark, shape(ks.toDF("k"))))
       }
       assert(read(whA) == read(whB), s"state diverged at step $step")
     }
@@ -111,13 +114,8 @@ class LocalWriteRandomSpec extends AnyFunSuite {
     }
     assert(log(whA) == log(whB), "changelogs diverged")
     // compaction materializes identically on both
-    both(wh => { LakeTable.load(wh, "d", "t").compact(spark); () })
+    both((wh, _) => { LakeTable.load(wh, "d", "t").compact(spark); () })
     assert(read(whA) == read(whB), "post-compaction state diverged")
-  }
-
-  private def withNoLocal[T](body: => T): T = {
-    sys.props("graft.write.nolocal") = "1"
-    try body finally sys.props.remove("graft.write.nolocal")
   }
 
   private val partSchema = StructType(Seq(
@@ -173,7 +171,7 @@ class LocalWriteRandomSpec extends AnyFunSuite {
         val rows = partRows(rnd, 1 + rnd.nextInt(40))
         def df = spark.createDataFrame(rows.asJava, partSchema)
         LakeTable.load(whDriver, "d", "t").append(df)
-        withNoLocal(LakeTable.load(whTask, "d", "t").append(df))
+        LakeTable.load(whTask, "d", "t").append(df.repartition(3))
         val fd = LakeTable.load(whDriver, "d", "t").metadata.snapshots.last.files
         val ft = LakeTable.load(whTask, "d", "t").metadata.snapshots.last.files
         val ctx = s"spec $spec, batch $batch"
@@ -197,7 +195,10 @@ class LocalWriteRandomSpec extends AnyFunSuite {
     * replaced, kept as the byte-level reference: Spark's
     * ParquetWriteSupport through parquet's writer builder, snappy,
     * INT64-micros timestamps, field ids, the default variant
-    * annotation. */
+    * annotation — plus the per-file VARIANT shredding a FileFormatWriter
+    * write applies under the session defaults (the schema Spark infers
+    * from the file's rows), which the one writer applies in both
+    * modes. */
   private def retiredDriverWrite(schema: StructType,
       rows: Seq[InternalRow], p: Path): Unit = {
     import org.apache.spark.sql.internal.SQLConf
@@ -209,6 +210,14 @@ class LocalWriteRandomSpec extends AnyFunSuite {
     conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.defaultValueString)
+    if (org.apache.spark.sql.catalyst.expressions.variant
+        .VariantExpressionEvalUtils.typeContainsVariant(schema)) {
+      val unsafe = org.apache.spark.sql.catalyst.expressions
+        .UnsafeProjection.create(schema)
+      org.apache.spark.sql.execution.datasources.parquet
+        .GraftVariantShredding.setInferredSchema(schema,
+          rows.map(r => unsafe(r).copy()), conf)
+    }
     final class B(f: org.apache.parquet.io.OutputFile)
         extends org.apache.parquet.hadoop.ParquetWriter.Builder[
           InternalRow, B](f) {

@@ -63,6 +63,33 @@ class RowOpsSpec extends AnyFunSuite {
     assert(t.metadata.snapshots.size == v)
   }
 
+  test("a copy-on-write delete of rows a merge-on-read delete already " +
+      "removed rewrites nothing") {
+    val (_, t) = mkTable("delaftermor")
+    t.append(df(Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0))))
+    assert(t.deleteMoR(spark, col("id") === 1L).isDefined)
+    // the candidate scan applies the live position deletes: no live
+    // row matches, so no file is rewritten and no overwrite commits
+    assert(t.delete(spark, col("id") === 1L).isEmpty)
+    val t2 = LakeTable.load(t.location.getParent.getParent.toString, "d", "t")
+    assert(t2.metadata.snapshots.map(_.operation) == Seq("append", "delete"))
+    assert(rows(t2) == Set((2L, "a", 2.0), (3L, "b", 3.0)))
+    // the changelog replays without a copy-on-write diff to refuse
+    assert(t2.changelogBetween(spark, 0L, t2.metadata.snapshots.last.id)
+      .filter(col("_change_type") === "delete")
+      .select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("a branch copy-on-write delete skips rows deleted in the " +
+      "branch view") {
+    val (_, t) = mkTable("branchdelaftermor")
+    t.append(df(Seq((1L, "a", 1.0), (2L, "a", 2.0))))
+    assert(t.deleteMoR(spark, col("id") === 1L).isDefined)
+    t.createBranch("fix")
+    assert(t.deleteFromBranchCoW(spark, "fix", col("id") === 1L).isEmpty)
+    assert(t.deleteFromBranchCoW(spark, "fix", col("id") === 2L).isDefined)
+  }
+
   test("delete keeps NULL-predicate rows (SQL semantics)") {
     val (_, t) = mkTable("delnull")
     import SparkTestSession.spark.implicits._

@@ -59,7 +59,7 @@ class VariantPushdownRandomSpec extends AnyFunSuite {
       parts.mkString("{", ", ", "}")
     }
     import spark.implicits._
-    // file 1: PARTIALLY shredded (distributed write, shredding width
+    // file 1: PARTIALLY shredded (task-mode write, shredding width
     // capped at 3): only the first observed keys get typed_value
     // children — the REST live in the top-level binary `value`, so a
     // clipped read of an unshredded key exercises the fallback column
@@ -68,34 +68,33 @@ class VariantPushdownRandomSpec extends AnyFunSuite {
     // top-level fallback load-bearing)
     val widthKey = "spark.sql.variant.shredding.maxSchemaWidth"
     val prevWidth = spark.conf.get(widthKey)
-    sys.props("graft.write.nolocal") = "1"
     spark.conf.set(widthKey, "3")
     try LakeTable.load(wh, "d", "t").append(
       spark.createDataset((0 until 2000).map(i => (i.toLong, jsonFor(i))))
-        .toDF("k", "j").selectExpr("k", "parse_json(j) AS payload"))
-    finally {
-      sys.props.remove("graft.write.nolocal")
-      spark.conf.set(widthKey, prevWidth)
-    }
-    // file 2: UNSHREDDED (driver-local publication write)
-    LakeTable.load(wh, "d", "t").append(
+        .toDF("k", "j").selectExpr("k", "parse_json(j) AS payload")
+        .repartition(1))
+    finally spark.conf.set(widthKey, prevWidth)
+    // file 2: UNSHREDDED (write shredding off for this write, a
+    // driver-resident batch)
+    val shredKey = "spark.sql.variant.writeShredding.enabled"
+    val prevShred = spark.conf.get(shredKey)
+    spark.conf.set(shredKey, "false")
+    try LakeTable.load(wh, "d", "t").append(
       (2000 until 2200).map(i => (i.toLong, jsonFor(i))).toDF("k", "j")
         .selectExpr("k", "parse_json(j) AS payload"))
+    finally spark.conf.set(shredKey, prevShred)
     // file 3: UNIFORM objects under the same width cap — mixed
     // object/scalar/null batches can make the writer skip shredding
     // altogether (leaving the clip nothing to do), so this file
     // guarantees a shredded group with requested-but-unshredded keys
-    sys.props("graft.write.nolocal") = "1"
     spark.conf.set(widthKey, "3")
     try LakeTable.load(wh, "d", "t").append(
       spark.createDataset((2200 until 2500).map(i => (i.toLong,
         s"""{"i": ${i % 97}, "l": ${i.toLong * 31}, "m": ${i % 23}, """ +
           s""""s": "v${i % 31}", "d": ${i % 19}.5, "b": ${i % 2 == 0}}""")))
-        .toDF("k", "j").selectExpr("k", "parse_json(j) AS payload"))
-    finally {
-      sys.props.remove("graft.write.nolocal")
-      spark.conf.set(widthKey, prevWidth)
-    }
+        .toDF("k", "j").selectExpr("k", "parse_json(j) AS payload")
+        .repartition(1))
+    finally spark.conf.set(widthKey, prevWidth)
     LakeTable.load(wh, "d", "t").deleteMoR(spark,
       org.apache.spark.sql.functions.expr("k % 10 = 6"))
     spark.conf.set("spark.sql.catalog.gvpr", "graft.sources.LakeCatalog")
