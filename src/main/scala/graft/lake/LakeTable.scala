@@ -1153,15 +1153,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
   private[lake] def writeDataFiles(aligned0: DataFrame,
       outDir: Path): Seq[DataFileMeta] = {
     val local = LakeTable.isLocalPlan(aligned0)
-    // the isLocalPlan pre-check keeps the extra optimizer pass off
-    // scan-derived writes — only an all-LocalRelation plan can fold
-    val driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-      if (!local) None
-      else aligned0.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(lr.data)
-        case _ => None
-      }
+    val driverRows = LakeTable.localRows(aligned0)
     // a LocalRelation source is bounded by construction (rows already
     // collected on the driver) — publish as ONE task: LocalTableScan
     // otherwise parallelizes to leafNodeDefaultParallelism slices
@@ -1971,6 +1963,21 @@ object LakeTable {
         case _ => false
       }
   }
+
+  /** The rows of a local frame ([[isLocalPlan]]) whose optimized plan
+    * folds to a LocalRelation: they are on the driver, so a write of
+    * them runs there, without a job. None for any other frame; the
+    * isLocalPlan pre-check keeps the extra optimizer pass off
+    * scan-derived writes.
+    */
+  private[lake] def localRows(df: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    if (!isLocalPlan(df)) None
+    else df.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(lr.data)
+      case _ => None
+    }
 
   /** Replay the snapshot log into the live file set: appends add files,
     * copy-on-write overwrites remove their `removedPaths` and add their

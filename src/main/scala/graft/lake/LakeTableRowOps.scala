@@ -276,7 +276,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     if (plannedFiles(prune, statsFilters).isEmpty) return None
     val matched = liveRowsWithPos(spark, prune, statsFilters)
       .filter(predicate)
-    commitMoR(spark, matched, appended = None)
+    commitMoR(spark, matched, appended = Seq.empty)
   }
 
   /** UPDATE with merge-on-read semantics: matching rows become position
@@ -313,16 +313,30 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
         case None => col(s"`$n`")
       }
     } ++ lineageSel: _*)
-    commitMoR(spark, matched,
-      appended = Some(Align.keeping(updated, md.currentSchema,
-        LakeTable.matLineageCols)),
-      lineage = writesVectors)
+    commitMoR(spark, matched, appended = Seq(
+      Align.keeping(updated, md.currentSchema, LakeTable.matLineageCols)))
   }
 
   /** MERGE with merge-on-read semantics: matched target rows become
     * position deletes plus (for onMatch="update") appended copies with
     * the source values; unmatched source rows append. Only the delete
-    * files and the delta rows are written — no target file rewrite.
+    * files and the delta rows are written — no target file rewrite. A
+    * merge that matches no row commits its inserts as an append.
+    *
+    * The match is made one of two ways, to the same snapshot:
+    *  - a driver-resident source ([[LakeTable.isLocalPlan]]) whose key
+    *    columns have the table's types and compare on the driver
+    *    ([[driverKey]]) runs ONE Spark job: the pinned row-op scan,
+    *    narrowed to the files whose min/max can hold a source key and
+    *    filtered by the source's key values in its tasks, collected.
+    *    The rows pair with the source rows on the driver
+    *    ([[matchOnDriver]]), and the positions and new rows are written
+    *    there: one delete file (or one deletion-vector container),
+    *    whatever the scan's packing, and the updated copies and the
+    *    inserts one data file each per partition value;
+    *  - any other source keeps the distributed join against the scan.
+    *    A scan-derived source is not bounded by the driver, so neither
+    *    is its match.
     */
   def mergeMoR(spark: SparkSession, source: DataFrame, keys: Seq[String],
       onMatch: String = "update",
@@ -341,26 +355,25 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
 
     val setCols = source.columns.filter(c =>
       schema.fieldNames.contains(c) && !keys.contains(c)).toSeq
-    val srcKeyed = source.select(
+    // the distributed path's source side (lazy: the driver path never
+    // analyses it)
+    lazy val srcKeyed = source.select(
       (keys.map(k => col(s"`$k`")) ++
         setCols.map(c => col(s"`$c`").as(s"_src_$c"))): _*)
     val keyCols = keys.map(k => col(s"`$k`"))
-    // a driver-resident source (LakeTable.isLocalPlan) is checked on
-    // the driver — collecting a LocalRelation runs no Spark job; the
-    // refusal names the key as the groupBy's row would, count included
+    // a driver-resident source is checked on the driver — collecting a
+    // LocalRelation runs no Spark job; the refusal names the key as the
+    // groupBy's row would, count included
+    val local = LakeTable.isLocalPlan(source)
+    val srcRows = if (local) source.collect().toSeq else Seq.empty
+    val srcKeyIdx = keys.map(source.schema.fieldIndex)
     val dupKey =
-      if (LakeTable.isLocalPlan(source)) {
-        val norm: Any => Any = {
-          case d: Double if d == 0.0 => 0.0 // -0.0 groups with 0.0
-          case f: Float if f == 0.0f => 0.0f
-          case v => v
-        }
-        source.select(keyCols: _*).collect().toSeq
-          .groupBy(r => r.toSeq.map(norm)).collectFirst {
-            case (k, rs) if rs.size > 1 =>
-              org.apache.spark.sql.Row.fromSeq(k :+ rs.size.toLong)
-          }.toSeq
-      } else srcKeyed.groupBy(keyCols: _*)
+      if (local) srcRows.groupBy(r => srcKeyIdx.map(i => driverKey(r.get(i))))
+        .collectFirst { case (_, rs) if rs.size > 1 =>
+          org.apache.spark.sql.Row.fromSeq(
+            srcKeyIdx.map(rs.head.get) :+ rs.size.toLong)
+        }.toSeq
+      else srcKeyed.groupBy(keyCols: _*)
         .count().filter(col("count") > 1).limit(1).collect().toSeq
     require(dupKey.isEmpty,
       s"merge source has multiple rows for key ${dupKey.headOption}")
@@ -368,10 +381,41 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     // v3 lineage carries only through UPDATE copies — they ARE the
     // matched rows; deletes retire ids and inserts take fresh ones
     val carryIds = writesVectors && onMatch == "update"
-    val matched =
-      if (plannedFiles().isEmpty || onMatch == "keep") None
-      else Some(liveRowsWithPos(spark, lineage = carryIds)
-        .join(srcKeyed, keys, "inner").localCheckpoint())
+    val driverPaired = local && keys.forall { k =>
+      val dt = source.schema(k).dataType
+      dt == schema(k).dataType && driverComparable(dt)
+    }
+    val (matched, unmatched) =
+      if (driverPaired)
+        matchOnDriver(spark, source, srcRows, keys, setCols, onMatch,
+          insertUnmatched, carryIds)
+      else {
+        val m =
+          if (plannedFiles().isEmpty || onMatch == "keep") None
+          else Some(liveRowsWithPos(spark, lineage = carryIds)
+            .join(srcKeyed, keys, "inner").localCheckpoint())
+        // the matched keys ARE the target's keys among the source's
+        // (inner join vs. left_anti on the same keys; NULL keys match
+        // neither), so the insert side anti-joins the checkpointed
+        // match instead of a second full scan of the target. Spark
+        // cannot size a checkpoint; the match is bounded by the
+        // source, so it broadcasts whenever the source would — the
+        // insert rows keep the source's partitioning (a shuffle join
+        // would re-partition them, and the write's file count with
+        // them)
+        val ins = if (!insertUnmatched) None else {
+          val targetKeys = m match {
+            case Some(m) if source.queryExecution.optimizedPlan.stats
+                .sizeInBytes <= org.apache.spark.sql.internal.SQLConf.get
+                  .autoBroadcastJoinThreshold =>
+              broadcast(m.select(keyCols: _*))
+            case Some(m) => m.select(keyCols: _*)
+            case None => read(spark).select(keyCols: _*)
+          }
+          Some(source.join(targetKeys, keys, "left_anti"))
+        }
+        (m, ins)
+      }
     val updatedCopies = matched.filter(_ => onMatch == "update").map { m =>
       val lineageSel: Seq[Column] =
         if (!carryIds) Seq.empty
@@ -381,38 +425,120 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
         if (setCols.contains(n)) col(s"`_src_$n`").as(n) else col(s"`$n`")
       } ++ lineageSel: _*), schema, LakeTable.matLineageCols)
     }
-    // the matched keys ARE the target's keys among the source's (inner
-    // join vs. left_anti on the same keys; NULL keys match neither), so
-    // the insert side anti-joins the checkpointed match instead of a
-    // second full scan of the target. Spark cannot size a checkpoint;
-    // the match is bounded by the source, so it broadcasts whenever the
-    // source would — the insert rows keep the source's partitioning (a
-    // shuffle join would re-partition them, and the write's file count
-    // with them)
-    val inserts = if (!insertUnmatched) None else {
-      val targetKeys = matched match {
-        case Some(m) if source.queryExecution.optimizedPlan.stats.sizeInBytes <=
-            org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold =>
-          broadcast(m.select(keyCols: _*))
-        case Some(m) => m.select(keyCols: _*)
-        case None => read(spark).select(keyCols: _*)
+    val inserts = unmatched.map(Align(_, schema))
+    // driver-paired: the updated copies and the inserts are each ONE
+    // LocalRelation, written on the driver as files of their own — the
+    // inserts (in CDC, new keys past the table's) keep a narrow min/max
+    // that reads prune by. Distributed: one write job over their union;
+    // allowMissingColumns — inserted rows carry no materialized lineage,
+    // their null cells inherit fresh ids from the file's stamped range,
+    // v3's mixed-file inheritance rule
+    val appended =
+      if (driverPaired) updatedCopies.toSeq ++ inserts.toSeq
+      else (updatedCopies.toSeq ++ inserts.toSeq)
+        .reduceOption(_.unionByName(_, allowMissingColumns = true)).toSeq
+    matched.flatMap(m => commitMoR(spark, m, appended))
+      // nothing matched: the frame is an anti-join against the TARGET's
+      // keys — stale after a concurrent commit, so the conflict must
+      // surface, never retry (a retry could re-insert a key a racer
+      // just added, breaking insert-if-absent)
+      .orElse(inserts.map(df =>
+        writeSnapshot(df, operation = "append", retryConflicts = false)))
+  }
+
+  /** Key values compare on the driver as Spark's join and groupBy
+    * compare them: every NaN equals every NaN, -0.0 equals 0.0, binary
+    * compares by content — Scala `==` on the raw values does none of
+    * these. Struct and array values normalize element-wise.
+    */
+  private[lake] def driverKey(v: Any): Any = v match {
+    case d: Double =>
+      java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float =>
+      java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case r: org.apache.spark.sql.Row => r.toSeq.map(driverKey)
+    case s: scala.collection.Seq[_] => s.map(driverKey)
+    case other => other
+  }
+
+  /** Key types [[driverKey]] compares exactly as a join does. */
+  private def driverComparable(dt: DataType): Boolean = dt match {
+    // the default (binary) collation only: a collated string compares
+    // case- or accent-insensitively in a join
+    case StringType => true
+    case _: NumericType | BooleanType | BinaryType | DateType |
+         TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** The driver half of a driver-resident [[mergeMoR]]: ONE job scans
+    * the target's live rows whose keys are among the source's — files
+    * pruned by the keys' min/max envelope (and bloom, on integral and
+    * string keys), rows filtered in the scan tasks by the key values —
+    * and collects them. Each row pairs with the source
+    * row of its key ([[driverKey]]; NULL never matches). Returns the
+    * match as a LocalRelation shaped like the distributed join's
+    * output (the target's columns, `_graft_dfile`/`_graft_dpos`,
+    * `_row_id` with lineage, `_src_<col>` per set column; None when
+    * nothing matched or `onMatch="keep"`) and the unmatched source
+    * rows as a LocalRelation (None without `insertUnmatched`). The
+    * match is bounded by the source, as the collect requires.
+    */
+  private def matchOnDriver(spark: SparkSession, source: DataFrame,
+      srcRows: Seq[org.apache.spark.sql.Row], keys: Seq[String],
+      setCols: Seq[String], onMatch: String, insertUnmatched: Boolean,
+      carryIds: Boolean): (Option[DataFrame], Option[DataFrame]) = {
+    val srcKeyIdx = keys.map(source.schema.fieldIndex)
+    def keyOf(r: org.apache.spark.sql.Row, idx: Seq[Int]): Option[Seq[Any]] = {
+      val k = idx.map(r.get)
+      if (k.contains(null)) None else Some(k.map(driverKey))
+    }
+    val byKey = srcRows.flatMap(r => keyOf(r, srcKeyIdx).map(_ -> r)).toMap
+    // the non-float key columns' values: float keys narrow nothing,
+    // since neither `In` nor min/max compares NaN and -0.0 as a join does
+    val narrowing = keys.zip(srcKeyIdx).collect {
+      case (k, i) if !Seq(FloatType, DoubleType)
+          .contains(source.schema(k).dataType) =>
+        k -> byKey.valuesIterator.map(_.get(i)).toSeq
+    }
+    val ranges = narrowing.flatMap { case (k, vs) =>
+      graft.sources.LakeSource.filterToRanges(
+        org.apache.spark.sql.sources.In(k, vs.toArray))
+    }
+    val scanned =
+      if (byKey.isEmpty || (onMatch == "keep" && !insertUnmatched) ||
+          plannedFiles(statsFilters = ranges).isEmpty)
+        None
+      else {
+        val rows = liveRowsWithPos(spark, statsFilters = ranges,
+          lineage = carryIds)
+        val hits = narrowing.map { case (k, vs) => col(s"`$k`").isin(vs: _*) }
+          .reduceOption(_ && _).fold(rows)(rows.filter)
+        Some(if (onMatch == "keep") hits.select(keys.map(k => col(s"`$k`")): _*)
+          else hits)
       }
-      Some(Align(source.join(targetKeys, keys, "left_anti"), schema))
+    val pairs = scanned.toSeq.flatMap { df =>
+      val tKeyIdx = keys.map(df.schema.fieldIndex)
+      df.collect().toSeq.flatMap(t =>
+        keyOf(t, tKeyIdx).flatMap(byKey.get).map(t -> _))
     }
-    // allowMissingColumns: inserted rows carry no materialized lineage
-    // — their null cells inherit fresh ids from the file's stamped
-    // range, v3's mixed-file inheritance rule
-    val appended = (updatedCopies.toSeq ++ inserts.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    matched match {
-      case Some(m) => commitMoR(spark, m, appended, lineage = carryIds)
-      // insert-only merge: the frame is an anti-join against the
-      // TARGET's keys — stale after a concurrent commit, so the
-      // conflict must surface, never retry (a retry could re-insert a
-      // key a racer just added, breaking insert-if-absent)
-      case None => appended.map(df =>
-        writeSnapshot(df, operation = "append", retryConflicts = false))
+    val matched =
+      if (pairs.isEmpty || onMatch == "keep") None
+      else {
+        val setIdx = setCols.map(source.schema.fieldIndex)
+        val fields = scanned.get.schema.fields ++ setCols.map(c =>
+          source.schema(c).copy(name = s"_src_$c"))
+        Some(spark.createDataFrame(pairs.map { case (t, s) =>
+          org.apache.spark.sql.Row.fromSeq(t.toSeq ++ setIdx.map(s.get))
+        }.asJava, StructType(fields)))
+      }
+    val unmatched = if (!insertUnmatched) None else {
+      val hit = pairs.flatMap(p => keyOf(p._2, srcKeyIdx)).toSet
+      Some(spark.createDataFrame(srcRows.filter(r =>
+        keyOf(r, srcKeyIdx).forall(k => !hit(k))).asJava, source.schema))
     }
+    (matched, unmatched)
   }
 
   /** Live rows under the current schema (narrowed by `prune` /
@@ -448,12 +574,6 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
        else Nil): _*)
   }
 
-  /** Commit one merge-on-read snapshot: `matched` rows (tagged with
-    * file/pos) become position-delete files; `appended`, when present,
-    * is written as new data files in the SAME snapshot (operation
-    * "delete" — replay adds the files and accumulates the deletes).
-    * Returns None and leaves nothing behind when no row matched.
-    */
   /** True when the table writes v3 deletion vectors instead of
     * positional delete parquet — keyed off `format-version=3`,
     * mirroring Iceberg's rule that v3 tables MUST use deletion
@@ -464,11 +584,20 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     md.formatVersion >= 3 || md.properties.get("format-version")
       .exists(_.trim.toIntOption.exists(_ >= 3))
 
+  /** Commit one merge-on-read snapshot: `matched` rows (tagged with
+    * file/pos) become position-delete files; the `appended` frames are
+    * written as new data files in the SAME snapshot (operation
+    * "delete" — replay adds the files and accumulates the deletes).
+    * Returns None and leaves nothing behind when no row matched. A
+    * driver-resident match ([[LakeTable.localRows]], a driver-paired
+    * merge) writes its positions on the driver, as ONE delete file;
+    * any other runs the writer in the match's tasks, one file per task
+    * that holds a matched row.
+    */
   private[lake] def commitMoR(spark: SparkSession, matched: DataFrame,
-      appended: Option[DataFrame],
-      lineage: Boolean = false): Option[SnapshotMeta] = {
+      appended: Seq[DataFrame]): Option[SnapshotMeta] = {
     if (writesVectors)
-      return commitMoRVector(spark, matched, appended, lineage)
+      return commitMoRVector(spark, matched, appended)
     val snapshotId = md.snapshots.map(_.id).foldLeft(0L)(math.max) + 1
     val delDir = dataDir.resolve(
       s"deletes-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -477,11 +606,11 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     // messages (countOrdinal = the file_path column) — the read-back
     // count job over the just-written delete files is gone; same
     // normalize-then-sum the groupBy computed.
-    val res = LakeTable.writeViaTaskWriterRich(
-      matched.select(col("_graft_dfile").as("file_path"),
-        col("_graft_dpos").as("pos")),
+    val positions = matched.select(col("_graft_dfile").as("file_path"),
+      col("_graft_dpos").as("pos"))
+    val res = LakeTable.writeViaTaskWriterRich(positions,
       delDir, graft.sources.WritePlan.empty, Seq.empty, null,
-      countOrdinal = 0)
+      countOrdinal = 0, driverRows = LakeTable.localRows(positions))
     val written = res.files.map(_._1).sorted
     val counts: Map[String, Long] = res.counts.toSeq
       .groupMapReduce { case (p, _) => LakeTable.normalizePath(p) }(
@@ -492,14 +621,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
           Files.delete(p))
       }
     if (counts.isEmpty) { cleanup(delDir); return None }
-    val newFiles = appended match {
-      case None => Seq.empty
-      case Some(df) =>
-        val outDir = dataDir.resolve(s"snap-$snapshotId-" +
-          java.util.UUID.randomUUID().toString.take(8))
-        writeDataFiles(df.drop("_graft_dfile", "_graft_dpos"), outDir)
-    }
-    val snap = SnapshotMeta(snapshotId, newFiles, md.currentSchemaId,
+    val snap = SnapshotMeta(snapshotId, writeAppended(snapshotId, appended),
+      md.currentSchemaId,
       operation = "delete", deletePaths = written.map(_.toString),
       deleteCounts = counts, timestampMs = System.currentTimeMillis())
     commit(md.copy(snapshots = md.snapshots :+ snap))
@@ -510,7 +633,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     * exclude every already-deleted position — into one container of
     * full+delta vector blobs per affected file: the executors build
     * one Roaring bitmap per file (the shuffle carries pairs, the
-    * driver collects only O(affected files) serialized bitmaps), the
+    * driver collects only O(affected files) serialized bitmaps; pairs
+    * already on the driver, [[LakeTable.localRows]], group there), the
     * driver merges each with the file's previous vector and any
     * legacy positional parquet state, and writes ONE container.
     * Returns the DvMeta entries plus the newly-deleted counts, or
@@ -520,15 +644,27 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       snapshotId: Long): Option[(Seq[DvMeta], Map[String, Long])] = {
     import org.roaringbitmap.longlong.Roaring64Bitmap
     import spark.implicits._
-    def bitmapPerFile(df: DataFrame): Array[(String, Array[Byte])] = df
-      .select(col("file_path").cast("string"), col("pos").cast("long"))
-      .as[(String, Long)]
-      .groupByKey(t => LakeTable.normalizePath(t._1))
-      .mapGroups { (path, it) =>
-        val bm = new Roaring64Bitmap()
-        it.foreach(t => bm.addLong(t._2))
-        (path, DeletionVectors.serialize(bm))
-      }.collect()
+    def bitmap(it: Iterator[Long]): Array[Byte] = {
+      val bm = new Roaring64Bitmap()
+      it.foreach(bm.addLong)
+      DeletionVectors.serialize(bm)
+    }
+    def bitmapPerFile(df: DataFrame): Array[(String, Array[Byte])] = {
+      val pairs = df.select(col("file_path").cast("string"),
+        col("pos").cast("long"))
+      LakeTable.localRows(pairs) match {
+        // driver-resident pairs (a driver-paired merge): the same
+        // grouping, here, without the job
+        case Some(rows) => rows
+          .groupBy(r => LakeTable.normalizePath(r.getUTF8String(0).toString))
+          .map { case (path, rs) => (path, bitmap(rs.iterator.map(_.getLong(1)))) }
+          .toArray
+        case None => pairs.as[(String, Long)]
+          .groupByKey(t => LakeTable.normalizePath(t._1))
+          .mapGroups((path, it) => (path, bitmap(it.map(_._2))))
+          .collect()
+      }
+    }
     val newPos = bitmapPerFile(pairs)
     if (newPos.isEmpty) return None
     val live = LakeTable.liveDeletes(md.snapshots)
@@ -578,6 +714,27 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     Some((dvMetas, counts))
   }
 
+  /** The data files of a merge-on-read snapshot: each `appended` frame
+    * written by [[writeDataFiles]], in order, under one directory. A
+    * frame that physically carries `_graft_row_id` /
+    * `_graft_last_updated` (v3 updated copies, or a union holding them)
+    * flags its files, so lineage reads consume the materialized ids
+    * instead of minting fresh ones.
+    */
+  private def writeAppended(snapshotId: Long,
+      appended: Seq[DataFrame]): Seq[DataFileMeta] =
+    if (appended.isEmpty) Seq.empty
+    else {
+      val outDir = dataDir.resolve(s"snap-$snapshotId-" +
+        java.util.UUID.randomUUID().toString.take(8))
+      appended.flatMap { df =>
+        val fs = writeDataFiles(df.drop("_graft_dfile", "_graft_dpos"), outDir)
+        if (df.columns.contains("_graft_row_id"))
+          fs.map(_.copy(lineageCols = true))
+        else fs
+      }
+    }
+
   /** Vector flavor of [[commitMoR]] (`format-version=3` — Iceberg
     * v3's deletion-vector model): the matched positions become
     * full+delta vector blobs via [[writeVectorContainer]]. Each
@@ -587,27 +744,15 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     * amplification v3 removed.
     */
   private[lake] def commitMoRVector(spark: SparkSession, matched: DataFrame,
-      appended: Option[DataFrame],
-      lineage: Boolean = false): Option[SnapshotMeta] = {
+      appended: Seq[DataFrame]): Option[SnapshotMeta] = {
     val snapshotId = md.snapshots.map(_.id).foldLeft(0L)(math.max) + 1
     val pairs = matched.select(col("_graft_dfile").as("file_path"),
       col("_graft_dpos").as("pos"))
     writeVectorContainer(spark, pairs, snapshotId) match {
       case None => None
       case Some((dvMetas, counts)) =>
-        val newFiles = appended match {
-          case None => Seq.empty
-          case Some(df) =>
-            val outDir = dataDir.resolve(s"snap-$snapshotId-" +
-              java.util.UUID.randomUUID().toString.take(8))
-            val fs = writeDataFiles(
-              df.drop("_graft_dfile", "_graft_dpos"), outDir)
-            // updated copies physically wrote _graft_row_id /
-            // _graft_last_updated — flag them so lineage reads consume
-            // the materialized ids instead of minting fresh ones
-            if (lineage) fs.map(_.copy(lineageCols = true)) else fs
-        }
-        val snap = SnapshotMeta(snapshotId, newFiles, md.currentSchemaId,
+        val snap = SnapshotMeta(snapshotId,
+          writeAppended(snapshotId, appended), md.currentSchemaId,
           operation = "delete", deleteCounts = counts,
           timestampMs = System.currentTimeMillis(), dvs = dvMetas)
         commit(md.copy(snapshots = md.snapshots :+ snap))

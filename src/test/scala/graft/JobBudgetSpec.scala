@@ -86,6 +86,37 @@ class JobBudgetSpec extends AnyFunSuite {
       Set((1L, "A"), (2L, "B")))
   }
 
+  test("a merge-on-read MERGE of a driver-resident source runs ONE job " +
+      "and writes one delete file, one file of updated copies and one " +
+      "of inserts") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-jobs-mrg").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"k","data_type":"long"},
+        |{"column_name":"v","data_type":"string"}],"partitions":[]}"""
+        .stripMargin)
+    // several data files, a scan of several tasks: the delete output
+    // must not follow the scan's packing
+    (0 until 4).foreach(i => LakeTable.load(wh, "d", "t").append(
+      (1L to 50L).map(k => (i * 100L + k, s"v$k")).toDF("k", "v")
+        .repartition(2)))
+    val t = LakeTable.load(wh, "d", "t")
+    val src = (Seq(5L, 120L, 230L, 349L).map(k => (k, s"u$k")) ++
+      Seq((900L, "new"), (901L, "new"))).toDF("k", "v")
+    val (snap, jobs) = countJobs(t.mergeMoR(spark, src, Seq("k")))
+    assert(jobs == 1, s"one scan job, got $jobs")
+    assert(snap.get.deletePaths.size == 1, "one position-delete file")
+    assert(snap.get.deleteCounts.values.sum == 4L)
+    assert(snap.get.files.map(_.rows).sorted == Seq(2L, 4L),
+      "one file of the 4 updated copies, one of the 2 inserts")
+    val got = LakeTable.load(wh, "d", "t").read(spark)
+      .filter($"k".isin(5L, 120L, 230L, 349L, 900L, 901L, 6L))
+      .as[(Long, String)].collect().toSet
+    assert(got == Set((5L, "u5"), (120L, "u120"), (230L, "u230"),
+      (349L, "u349"), (900L, "new"), (901L, "new"), (6L, "v6")))
+  }
+
   test("a bounded incremental MV refresh (touched-group recompute) " +
       "stays inside a tight job budget") {
     import spark.implicits._

@@ -262,6 +262,40 @@ class MoRDeleteSpec extends AnyFunSuite {
       "d", "t").read(spark)) == Set(1L, 2L), "nothing committed")
   }
 
+  test("mergeMoR refuses duplicate NaN and binary source keys, " +
+      "driver-resident or not") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val wh = Files.createTempDirectory("graft-mor-mrgnan").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"d","data_type":"double"},
+        |{"column_name":"b","data_type":"binary"},
+        |{"column_name":"v","data_type":"string"}],"partitions":[]}"""
+        .stripMargin)
+    val schema = StructType(Seq(StructField("d", DoubleType),
+      StructField("b", BinaryType), StructField("v", StringType)))
+    def frame(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, schema)
+    val t = LakeTable.load(wh, "d", "t")
+    t.append(frame(Seq(Row(1.0, Array[Byte](1), "a"))))
+    // two NaN keys; two equal binary keys in distinct arrays
+    val dupNaN = Seq(Row(Double.NaN, Array[Byte](1), "x"),
+      Row(Double.NaN, Array[Byte](2), "y"))
+    val dupBin = Seq(Row(1.0, Array[Byte](7, 8), "x"),
+      Row(2.0, Array[Byte](7, 8), "y"))
+    for ((rows, key) <- Seq(dupNaN -> "d", dupBin -> "b");
+         src <- Seq(frame(rows), frame(rows).repartition(2))) {
+      val e = intercept[IllegalArgumentException](
+        LakeTable.load(wh, "d", "t").mergeMoR(spark, src, Seq(key)))
+      assert(e.getMessage.startsWith(
+        "requirement failed: merge source has multiple rows for key"),
+        e.getMessage)
+    }
+    assert(LakeTable.load(wh, "d", "t").metadata.snapshots.size == 1,
+      "nothing committed")
+  }
+
   test("metadata columns _graft_file/_graft_pos are selectable") {
     val (wh, t) = mkTable("metacols")
     t.append(df(Seq((1L, "a"), (2L, "b"))).repartition(1))
