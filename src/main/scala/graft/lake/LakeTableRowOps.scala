@@ -326,9 +326,9 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     * The match is made one of two ways, to the same snapshot:
     *  - a driver-resident source ([[LakeTable.isLocalPlan]]) whose key
     *    columns have the table's types and compare on the driver
-    *    ([[driverKey]]) runs ONE Spark job: the pinned row-op scan,
-    *    narrowed to the files whose min/max can hold a source key and
-    *    filtered by the source's key values in its tasks, collected.
+    *    ([[driverKey]]), at least one of them not floating point, runs
+    *    ONE Spark job: the pinned row-op scan, filtered in its tasks by
+    *    the source's values of the non-floating key columns, collected.
     *    The rows pair with the source rows on the driver
     *    ([[matchOnDriver]]), and the positions and new rows are written
     *    there: one delete file (or one deletion-vector container),
@@ -336,7 +336,9 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     *    inserts one data file each per partition value;
     *  - any other source keeps the distributed join against the scan.
     *    A scan-derived source is not bounded by the driver, so neither
-    *    is its match.
+    *    is its match; nor is the scan of a key that is all floating
+    *    point, which no task-side filter narrows (`In` does not compare
+    *    NaN and -0.0 as a join does).
     */
   def mergeMoR(spark: SparkSession, source: DataFrame, keys: Seq[String],
       onMatch: String = "update",
@@ -384,7 +386,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val driverPaired = local && keys.forall { k =>
       val dt = source.schema(k).dataType
       dt == schema(k).dataType && driverComparable(dt)
-    }
+    } && keys.exists(k => narrows(schema(k).dataType))
     val (matched, unmatched) =
       if (driverPaired)
         matchOnDriver(spark, source, srcRows, keys, setCols, onMatch,
@@ -462,6 +464,12 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     case other => other
   }
 
+  /** Key types whose `In` compares as a join does — every key type but
+    * the floating ones, whose NaN and -0.0 it does not — so a filter by
+    * the source's values keeps every row the join would match. */
+  private def narrows(dt: DataType): Boolean =
+    dt != FloatType && dt != DoubleType
+
   /** Key types [[driverKey]] compares exactly as a join does. */
   private def driverComparable(dt: DataType): Boolean = dt match {
     // the default (binary) collation only: a collated string compares
@@ -473,17 +481,18 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
   }
 
   /** The driver half of a driver-resident [[mergeMoR]]: ONE job scans
-    * the target's live rows whose keys are among the source's — files
-    * pruned by the keys' min/max envelope (and bloom, on integral and
-    * string keys), rows filtered in the scan tasks by the key values —
-    * and collects them. Each row pairs with the source
-    * row of its key ([[driverKey]]; NULL never matches). Returns the
-    * match as a LocalRelation shaped like the distributed join's
-    * output (the target's columns, `_graft_dfile`/`_graft_dpos`,
-    * `_row_id` with lineage, `_src_<col>` per set column; None when
-    * nothing matched or `onMatch="keep"`) and the unmatched source
-    * rows as a LocalRelation (None without `insertUnmatched`). The
-    * match is bounded by the source, as the collect requires.
+    * the target's live rows, keeps in the scan tasks those whose value
+    * of every non-floating key column is among the source's ([[narrows]];
+    * [[mergeMoR]] routes here only keys with at least one such column),
+    * and collects them. Each row pairs with the source row of its key
+    * ([[driverKey]]; NULL never matches). Returns the match as a
+    * LocalRelation shaped like the distributed join's output (the
+    * target's columns, `_graft_dfile`/`_graft_dpos`, `_row_id` with
+    * lineage, `_src_<col>` per set column; None when nothing matched or
+    * `onMatch="keep"`) and the unmatched source rows as a LocalRelation
+    * (None without `insertUnmatched`). The collect holds the rows the
+    * filter keeps: the match itself on a one-column key, and on a wider
+    * key the rows matching the source column by column.
     */
   private def matchOnDriver(spark: SparkSession, source: DataFrame,
       srcRows: Seq[org.apache.spark.sql.Row], keys: Seq[String],
@@ -495,26 +504,17 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       if (k.contains(null)) None else Some(k.map(driverKey))
     }
     val byKey = srcRows.flatMap(r => keyOf(r, srcKeyIdx).map(_ -> r)).toMap
-    // the non-float key columns' values: float keys narrow nothing,
-    // since neither `In` nor min/max compares NaN and -0.0 as a join does
     val narrowing = keys.zip(srcKeyIdx).collect {
-      case (k, i) if !Seq(FloatType, DoubleType)
-          .contains(source.schema(k).dataType) =>
-        k -> byKey.valuesIterator.map(_.get(i)).toSeq
-    }
-    val ranges = narrowing.flatMap { case (k, vs) =>
-      graft.sources.LakeSource.filterToRanges(
-        org.apache.spark.sql.sources.In(k, vs.toArray))
+      case (k, i) if narrows(source.schema(k).dataType) =>
+        col(s"`$k`").isin(byKey.valuesIterator.map(_.get(i)).toSeq: _*)
     }
     val scanned =
       if (byKey.isEmpty || (onMatch == "keep" && !insertUnmatched) ||
-          plannedFiles(statsFilters = ranges).isEmpty)
+          plannedFiles().isEmpty)
         None
       else {
-        val rows = liveRowsWithPos(spark, statsFilters = ranges,
-          lineage = carryIds)
-        val hits = narrowing.map { case (k, vs) => col(s"`$k`").isin(vs: _*) }
-          .reduceOption(_ && _).fold(rows)(rows.filter)
+        val hits = liveRowsWithPos(spark, lineage = carryIds)
+          .filter(narrowing.reduce(_ && _))
         Some(if (onMatch == "keep") hits.select(keys.map(k => col(s"`$k`")): _*)
           else hits)
       }

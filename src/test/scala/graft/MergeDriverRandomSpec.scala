@@ -21,12 +21,15 @@ import graft.lake.{Engine, LakeTable}
   * equal table rows, changelogs, per-file delete counts and v3 row
   * lineage.
   *
-  * Keys cover a long, a (long, string) pair, a double (NaN, -0.0 and
-  * 0.0 among the values: a join treats NaN as equal to NaN and -0.0 as
-  * equal to 0.0) and a binary (content equality); NULLs sit on both
-  * sides and never match. Inserted rows take fresh ids from their new
-  * file's range, so their `_row_id`s depend on the written file layout
-  * and are compared as fresh and unique, not equal.
+  * Keys cover a long, a (long, string) pair, a (double, long) pair
+  * (NaN, -0.0 and 0.0 among the values, the source's zeros signed
+  * opposite to the target's: a join treats NaN as equal to NaN and -0.0
+  * as equal to 0.0) and a binary (content equality); NULLs sit on both
+  * sides and never match. A double-only key, which no task-side filter
+  * narrows, takes the distributed join from both sources. Inserted
+  * rows take fresh ids from their new file's range, so their
+  * `_row_id`s depend on the written file layout and are compared as
+  * fresh and unique, not equal.
   */
 class MergeDriverRandomSpec extends AnyFunSuite {
   import MergeDriverRandomSpec._
@@ -83,10 +86,15 @@ class MergeDriverRandomSpec extends AnyFunSuite {
       matchNone: Boolean): Seq[Row] = {
     val slots = r.shuffle((0 until 60).toList).take(14)
       .map(s => if (matchNone) s + 100 else s)
+    // the target's zeros with the other sign: every zero match is a
+    // -0.0 = 0.0 match
+    def dbl(slot: Int): Double =
+      if (keys.contains("d") && matchNone) 100.0 + slot
+      else { val d = doubles(slot % doubles.size); if (d == 0.0) -d else d }
     def keyOf(slot: Int): Seq[Any] = keys.map {
       case "k" => slot.toLong
       case "s" => s"s${slot % 3}"
-      case "d" => if (matchNone) 100.0 + slot else doubles(slot % doubles.size)
+      case "d" => dbl(slot)
       case "b" => Seq(slot % binaries.size, if (matchNone) 1 else 42)
     }
     // one row per key value; -0.0 and 0.0 are one key, as in a join
@@ -96,9 +104,7 @@ class MergeDriverRandomSpec extends AnyFunSuite {
       case o => o
     }).values.map(_.head).toSeq.sorted
     val rows = uniq.map { slot =>
-      Row(slot.toLong, s"s${slot % 3}",
-        if (keys.contains("d") && matchNone) 100.0 + slot
-        else doubles(slot % doubles.size),
+      Row(slot.toLong, s"s${slot % 3}", dbl(slot),
         Array[Byte]((slot % binaries.size).toByte,
           (if (keys.contains("b") && matchNone) 1 else 42).toByte),
         s"src$slot-${r.nextInt(1000)}")
@@ -174,7 +180,8 @@ class MergeDriverRandomSpec extends AnyFunSuite {
     }
   }
 
-  private val keySets = Seq(Seq("k"), Seq("k", "s"), Seq("d"), Seq("b"))
+  private val keySets =
+    Seq(Seq("k"), Seq("k", "s"), Seq("d", "k"), Seq("b"), Seq("d"))
 
   /** (format v3, key set, onMatch, insertUnmatched, matchNone): every
     * onMatch mode and insert setting on both format versions, every key
@@ -186,7 +193,8 @@ class MergeDriverRandomSpec extends AnyFunSuite {
     (false, 3, "keep", true, false), (true, 3, "update", true, false),
     (false, 0, "delete", false, false), (true, 0, "keep", true, false),
     (false, 1, "update", false, false), (true, 1, "keep", false, false),
-    (false, 0, "update", true, true), (true, 2, "update", true, true))
+    (false, 0, "update", true, true), (true, 2, "update", true, true),
+    (false, 4, "update", true, false), (true, 4, "delete", true, false))
 
   test("a driver-resident source merges exactly as the distributed " +
       "join over seeded tables") {
@@ -203,8 +211,12 @@ class MergeDriverRandomSpec extends AnyFunSuite {
         val df = frame(src)
         val (res, jobs) = withJobs(t.mergeMoR(spark,
           if (driver) df else df.repartition(2), keys, onMatch, ins))
-        // the driver path runs at most its one scan job
-        if (driver) assert(jobs <= 1, s"$tag: driver-paired merge ran $jobs jobs")
+        // the driver path runs at most its one scan job; a double-only
+        // key, unbounded by the scan's filter, joins distributed
+        if (driver && keys == Seq("d"))
+          assert(jobs > 1, s"$tag: a double-only key ran $jobs job(s)")
+        else if (driver)
+          assert(jobs <= 1, s"$tag: driver-paired merge ran $jobs jobs")
         (outcome(wh, pre, v3, res), pre)
       }
       val (drv, dist) = (outs(0)._1, outs(1)._1)
