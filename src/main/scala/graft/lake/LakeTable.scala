@@ -1152,14 +1152,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     */
   private[lake] def writeDataFiles(aligned0: DataFrame,
       outDir: Path): Seq[DataFileMeta] = {
-    val local = LakeTable.isLocalPlan(aligned0)
     val driverRows = LakeTable.localRows(aligned0)
-    // a LocalRelation source is bounded by construction (rows already
-    // collected on the driver) — publish as ONE task: LocalTableScan
-    // otherwise parallelizes to leafNodeDefaultParallelism slices
-    // (= cores), and N tiny files' footer/stats/manifest cost
-    // dominates the commit
-    val aligned = if (local) aligned0.coalesce(1) else aligned0
     val schema = md.currentSchema
     val pExprs = partitionColumns.map(_._2)
     // write clustering ("write.sort-order" table property): either a
@@ -1188,10 +1181,10 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
             val cols = colSpec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             val bits = 63 / cols.size
             val bins = BigDecimal(1L << bits)
-            val statsRow = aligned.select(cols.flatMap(c => Seq(
+            val statsRow = aligned0.select(cols.flatMap(c => Seq(
               min(col(s"`$c`").cast("double")), max(col(s"`$c`").cast("double")))): _*)
               .collect()(0)
-            graft.functions.VectorFunctions.register(aligned.sparkSession)
+            graft.functions.VectorFunctions.register(aligned0.sparkSession)
             val binned = cols.zipWithIndex.map { case (c, i) =>
               val lo = Option(statsRow.get(2 * i)).map(_.toString.toDouble).getOrElse(0.0)
               val hi = Option(statsRow.get(2 * i + 1)).map(_.toString.toDouble).getOrElse(0.0)
@@ -1240,6 +1233,14 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
           }
         writeDirect(aligned0, outDir, recordedSortIds, Some(ordered))
       case None =>
+        // a local frame that did not optimize to a LocalRelation is
+        // still bounded by its local rows — publish it as ONE task:
+        // LocalTableScan otherwise parallelizes to
+        // leafNodeDefaultParallelism slices (= cores), and N tiny
+        // files' footer/stats/manifest cost dominates the commit
+        val aligned =
+          if (LakeTable.isLocalPlan(aligned0)) aligned0.coalesce(1)
+          else aligned0
         val distributed =
           if (sortExprs.nonEmpty) {
             val ranged = md.properties.get("write.sort-buckets")

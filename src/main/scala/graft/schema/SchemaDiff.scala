@@ -37,6 +37,9 @@ object SchemaDiff {
       case (FloatType, DoubleType) => Right(())
       case (d1: DecimalType, d2: DecimalType)
         if d2.precision >= d1.precision && d1.scale == d2.scale => Right(())
+      case (a @ MapType(ak, _, _), b @ MapType(bk, _, _))
+          if shallowKind(ak) != shallowKind(bk) =>
+        Left(s"cannot update map keys ($a -> $b)")
       case (a, b) if isNested(a) != isNested(b) =>
         Left(s"cannot change between primitive and non-primitive ($a -> $b)")
       case (a, b) if isNested(a) && isNested(b) =>
@@ -61,6 +64,21 @@ object SchemaDiff {
     case MapType(k, v: StructType, _) => ("map", shallowKind(k), "struct")
     case MapType(k, v, _) => ("map", shallowKind(k), shallowKind(v))
     case other => other
+  }
+
+  /** Dotted paths of every map KEY in `schema`, in [[FieldIds.flatten]]
+    * spelling: a struct key's fields flatten below `<map>.key`.
+    */
+  private def mapKeyPaths(schema: StructType): Seq[String] = {
+    def walk(dt: DataType, prefix: String): Seq[String] = dt match {
+      case s: StructType => s.fields.toSeq.flatMap(f =>
+        walk(f.dataType, if (prefix.isEmpty) f.name else s"$prefix.${f.name}"))
+      case ArrayType(et, _) => walk(et, s"$prefix.element")
+      case MapType(kt, vt, _) =>
+        s"$prefix.key" +: (walk(kt, s"$prefix.key") ++ walk(vt, s"$prefix.value"))
+      case _ => Seq.empty
+    }
+    walk(schema, "")
   }
 
   def diff(current: StructType, target: StructType): Seq[SchemaChange] = {
@@ -115,6 +133,17 @@ object SchemaDiff {
         }
       }
     }
-    changes.result()
+    // map keys never evolve (Iceberg's UpdateSchema: "Cannot update map
+    // keys"): a key is the lookup identity of every entry already
+    // written, so an add, drop or promotion inside a struct key is
+    // refused like a key type change
+    val keyPaths = (mapKeyPaths(current) ++ mapKeyPaths(target)).distinct
+    changes.result().map {
+      case c @ (_: AddColumn | _: DropColumn | _: UpdateColumnType)
+          if keyPaths.exists(k => c.path.startsWith(k + ".")) =>
+        DisallowedChange(c.path, curMap.getOrElse(c.path, NullType),
+          tgtMap.getOrElse(c.path, NullType), "cannot update map keys")
+      case c => c
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -154,16 +153,6 @@ private[graft] object LakeSource {
       case other => throw new IllegalArgumentException(
         s"unparseable partition value type $other")
     }
-
-  /** INT96 parquet timestamp → epoch micros: 8 bytes little-endian
-    * nanos-of-day + 4 bytes little-endian julian day.
-    */
-  def int96Micros(b: org.apache.parquet.io.api.Binary): Long = {
-    val buf = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
 
   /** RangeFilters → one parquet `FilterPredicate`, for ROW-GROUP (and
     * record-level) skipping INSIDE files that survive the metadata
@@ -596,28 +585,15 @@ private[graft] object LakeSource {
     case (x, y) => x == y
   }
 
-  /** Extractor for one target field out of a file-schema group level,
-    * matched by FIELD ID (the same reconciliation contract as
-    * `Reconcile.projection`): absent → null, promotions applied.
+  /** The file's footer schema; an unreadable footer fails the read
+    * with the IO error, which names the file.
     */
-  /** One key value from an equality-delete parquet record, reconciled
-    * to the current key type: the batch was written under the schema
-    * at delete time, so a later int→long / float→double promotion must
-    * not unmatch it. Values come back as Catalyst internals (UTF8String
-    * for strings) — the same representation `fieldExtractor` produces
-    * for data rows, so tuple equality is exact.
-    */
-  /** The file's footer schema, None when unreadable (the data read
-    * below then surfaces the real error with the file path).
-    */
-  def readFooterSchema(path: String)
-      : Option[org.apache.parquet.schema.MessageType] =
-    try {
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path),
-          graft.lake.HadoopConfs.mutable()))
-      try Some(fr.getFooter.getFileMetaData.getSchema) finally fr.close()
-    } catch { case _: Exception => None }
+  def readFooterSchema(path: String): org.apache.parquet.schema.MessageType = {
+    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path),
+        graft.lake.HadoopConfs.mutable()))
+    try fr.getFooter.getFileMetaData.getSchema finally fr.close()
+  }
 
   /** A memoized load: `value` computes once under the lazy-val lock,
     * so concurrent first-touch callers of the SAME key share one load
@@ -685,8 +661,8 @@ private[graft] object LakeSource {
   }
 
   /** Positions of `dataPath`'s rows deleted by the live v2 positional
-    * delete files — shared by both row-emitting readers (Group and
-    * vectorized-decode) and the columnar MoR reader. Null when there
+    * delete files — shared by the row-emitting reader and the columnar
+    * MoR reader. Null when there
     * are no delete files. JVM-cached at two levels (per delete FILE,
     * then per (delete set, data file) union) so neither concurrent
     * splits nor sibling data files re-read a delete parquet.
@@ -710,6 +686,13 @@ private[graft] object LakeSource {
       })
     }
 
+  /** One key value from an equality-delete parquet record, reconciled
+    * to the current key type: the batch was written under the schema
+    * at delete time, so a later int→long / float→double promotion must
+    * not unmatch it. Values come back as Catalyst internals (UTF8String
+    * for strings) — the representation the readers decode data rows
+    * into, so tuple equality is exact.
+    */
   def eqKeyValue(g: Group, name: String, dt: DataType): Any = {
     if (g.getFieldRepetitionCount(name) == 0) return null
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -768,8 +751,8 @@ private[graft] object LakeSource {
     * spelling: fields are matched case-insensitively by name (recursing
     * through structs; LIST/MAP-annotated groups keep the registered
     * inner layout) and fields absent from the footer are DROPPED — the
-    * by-id extractor then falls back to the default/null extractor, the
-    * same null-fill contract as the Spark-native read path. Identity
+    * readers then serve them as absent columns (initial default or
+    * null), the same null-fill contract as `spark.read.parquet`. Identity
     * for engine-written files. Field-id metadata rides along on the
     * renamed StructFields, so by-id matching is unaffected.
     */
@@ -790,160 +773,4 @@ private[graft] object LakeSource {
       }
     })
   }
-
-  def fieldExtractor(tf: StructField,
-      fileFields: Seq[StructField]): Group => Any =
-    fileFields.find(ff => FieldIds.idOf(ff) == FieldIds.idOf(tf)) match {
-      case None =>
-        // written before the column existed → its INITIAL DEFAULT
-        // (null when none recorded), mirroring Reconcile.fieldExpr
-        val d = graft.schema.Defaults.internalValue(tf)
-        _ => d
-      case Some(ff) =>
-        val name = ff.name
-        val conv = converter(tf.dataType, ff.dataType)
-        g => if (g.getFieldRepetitionCount(name) == 0) null else conv(g, name)
-    }
-
-  /** Like `fieldExtractor`, but resolves `tf`'s field ID through
-    * struct NESTING in the file schema (equality-delete keys may be
-    * struct-nested scalars). The chain is found by ID, so renames at
-    * any depth stay readable; a null or missing struct anywhere on
-    * the chain — e.g. the field was added after the file was
-    * written — reads null, matching the read-reconciliation
-    * null-fill.
-    */
-  def nestedFieldExtractor(tf: StructField,
-      fileStruct: StructType): Group => Any = {
-    def chain(st: StructType, id: Int): Option[List[StructField]] =
-      st.fields.toSeq.flatMap { f =>
-        if (FieldIds.hasId(f) && FieldIds.idOf(f) == id) Some(List(f))
-        else f.dataType match {
-          case s: StructType => chain(s, id).map(f :: _)
-          case _ => None
-        }
-      }.headOption
-    chain(fileStruct, FieldIds.idOf(tf)) match {
-      case None =>
-        // consistent with the reconciling fill: a pre-column file's
-        // rows carry the column's initial default (null when none)
-        val d = graft.schema.Defaults.internalValue(tf)
-        _ => d
-      case Some(fs) =>
-        val outer = fs.init.map(_.name).toArray
-        val leaf = fs.last.name
-        val conv = converter(tf.dataType, fs.last.dataType)
-        g => {
-          var cur: Group = g
-          var i = 0
-          var ok = true
-          while (ok && i < outer.length) {
-            if (cur.getFieldRepetitionCount(outer(i)) == 0) ok = false
-            else cur = cur.getGroup(outer(i), 0)
-            i += 1
-          }
-          if (!ok || cur.getFieldRepetitionCount(leaf) == 0) null
-          else conv(cur, leaf)
-        }
-    }
-  }
-
-  /** (group, fieldName) → Catalyst internal value for a target/file
-    * type pair, recursively through structs, 3-level parquet lists and
-    * key_value maps. Timestamps are INT64 micros (the engine's writers
-    * always produce TIMESTAMP(MICROS); INT96 never occurs in lake
-    * files).
-    */
-  def converter(target: DataType, file: DataType): (Group, String) => Any =
-    (target, file) match {
-      case (t: StructType, f: StructType) =>
-        val exs = t.fields.map(tf => fieldExtractor(tf, f.fields.toSeq))
-        (g, n) => {
-          val sub = g.getGroup(n, 0)
-          new GenericInternalRow(exs.map(_(sub)))
-        }
-      case (ArrayType(te, _), ArrayType(fe, _)) =>
-        // 3-level list encoding: <name> (LIST) { repeated group list
-        // { <element> } } — Spark's writer layout
-        val elemConv = converter(te, fe)
-        (g, n) => {
-          val outer = g.getGroup(n, 0)
-          val cnt = outer.getFieldRepetitionCount(0)
-          val arr = new Array[Any](cnt)
-          var i = 0
-          while (i < cnt) {
-            val rep = outer.getGroup(0, i)
-            arr(i) =
-              if (rep.getFieldRepetitionCount(0) == 0) null
-              else elemConv(rep, rep.getType.getFieldName(0))
-            i += 1
-          }
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-        }
-      case (MapType(tk, tv, _), MapType(fk, fv, _)) =>
-        val kConv = converter(tk, fk)
-        val vConv = converter(tv, fv)
-        (g, n) => {
-          val outer = g.getGroup(n, 0)
-          val cnt = outer.getFieldRepetitionCount(0)
-          val keys = new Array[Any](cnt)
-          val values = new Array[Any](cnt)
-          var i = 0
-          while (i < cnt) {
-            val kv = outer.getGroup(0, i)
-            keys(i) = kConv(kv, "key")
-            values(i) =
-              if (kv.getFieldRepetitionCount("value") == 0) null
-              else vConv(kv, "value")
-            i += 1
-          }
-          org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, values)
-        }
-      case (BooleanType, BooleanType) => (g, n) => g.getBoolean(n, 0)
-      case (IntegerType, IntegerType) => (g, n) => g.getInteger(n, 0)
-      case (LongType, IntegerType) => (g, n) => g.getInteger(n, 0).toLong
-      case (LongType, LongType) => (g, n) => g.getLong(n, 0)
-      case (FloatType, FloatType) => (g, n) => g.getFloat(n, 0)
-      case (DoubleType, FloatType) => (g, n) => g.getFloat(n, 0).toDouble
-      case (DoubleType, DoubleType) => (g, n) => g.getDouble(n, 0)
-      case (StringType, StringType) =>
-        (g, n) => UTF8String.fromString(g.getString(n, 0))
-      case (BinaryType, BinaryType) => (g, n) => g.getBinary(n, 0).getBytes
-      case (TimestampType, TimestampType) |
-           (TimestampNTZType, TimestampNTZType) |
-           (TimestampType, TimestampNTZType) |
-           (TimestampNTZType, TimestampType) => (g, n) => {
-        // engine writers pin INT64 micros; INT96 can still appear in
-        // files written before that pin — decode both
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        if (g.getType.getType(n).asPrimitiveType().getPrimitiveTypeName ==
-            PrimitiveTypeName.INT96) int96Micros(g.getInt96(n, 0))
-        else g.getLong(n, 0)
-      }
-      case (DateType, DateType) => (g, n) => g.getInteger(n, 0)
-      case (t: DecimalType, f: DecimalType)
-          if t.scale == f.scale && t.precision >= f.precision =>
-        // Spark's writer encodes decimals by precision: INT32 (p<=9),
-        // INT64 (p<=18), else fixed/binary two's-complement unscaled.
-        // The promotion rule (precision widen, same scale) means the
-        // unscaled value carries over unchanged.
-        (g, n) => {
-          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-          g.getType.getType(n).asPrimitiveType().getPrimitiveTypeName match {
-            case PrimitiveTypeName.INT32 =>
-              org.apache.spark.sql.types.Decimal(
-                g.getInteger(n, 0).toLong, t.precision, t.scale)
-            case PrimitiveTypeName.INT64 =>
-              org.apache.spark.sql.types.Decimal(
-                g.getLong(n, 0), t.precision, t.scale)
-            case _ =>
-              org.apache.spark.sql.types.Decimal(
-                BigDecimal(new java.math.BigInteger(
-                  g.getBinary(n, 0).getBytes), f.scale),
-                t.precision, t.scale)
-          }
-        }
-      case (t, f) => throw new UnsupportedOperationException(
-        s"graft-lake reader: unsupported conversion $f -> $t")
-    }
 }

@@ -593,8 +593,7 @@ private[graft] class LakeScanBuilder(wh: String, db: String, tbl: String,
     // its callers select metadata columns on plans the extension rule
     // may never see
     val servable = !changelogMode && !rowLevelOp && incremental.isEmpty &&
-      !refuseVariants && pin.isEmpty &&
-      !sys.props.contains("graft.read.novector")
+      !refuseVariants && pin.isEmpty
     def colOf(e: org.apache.spark.sql.connector.read.VariantExtraction)
         : Option[StructField] =
       if (e.columnName.length != 1) None
@@ -824,14 +823,20 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
         .getOrElse(md.currentSchema)
     }
     planned._4.filter(_.seq > f.seq).map { b =>
-      LakeEqBatch(b.paths, StructType(b.fieldIds.map { id =>
-        // the id may live nested in a struct — ship the LEAF field
-        // (type + id metadata); the reader re-resolves the file-side
-        // chain by id
+      // the id may live nested in a struct — ship the LEAF field
+      // (type + id metadata) and the top-level column holding it; the
+      // reader re-resolves the file-side chain by id
+      val leaves = b.fieldIds.map { id =>
         LakeTable.structPathOfId(schema, id).map(_._2)
           .getOrElse(throw new IllegalStateException(
             s"equality-delete key field id $id not in read schema"))
-      }))
+      }
+      LakeEqBatch(b.paths, StructType(leaves), leaves.map { kf =>
+        val id = FieldIds.idOf(kf)
+        schema.fields.find(f => FieldIds.flatten(StructType(Seq(f)))
+          .exists { case (_, g) => FieldIds.hasId(g) && FieldIds.idOf(g) == id })
+          .get
+      })
     }
   }
 
@@ -1337,10 +1342,11 @@ private[sources] case class LakeOffset(snapshotId: Long) extends Offset {
 /** One equality-delete batch as shipped to a reader task: the key-file
   * paths plus the key columns (current-schema fields, field-id
   * metadata attached) in batch order — the parquet files store the
-  * keys as `k<fieldId>` columns.
+  * keys as `k<fieldId>` columns — and, per key, its top-level CARRIER:
+  * the key column itself, or the struct column enclosing it.
   */
 private[sources] case class LakeEqBatch(paths: Seq[String],
-    keyFields: StructType)
+    keyFields: StructType, carriers: Seq[StructField])
 
 /** `emitOnlyDeleted` inverts the position-delete filter: the reader
   * emits ONLY the rows at deleted positions — the changelog stream's

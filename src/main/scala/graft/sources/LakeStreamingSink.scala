@@ -614,18 +614,11 @@ private[graft] object LakeParquetDataWriter {
 
   /** Per-task bound on bloom blobs riding the commit message instead
     * of a task-written container: a routine lifecycle write's blobs
-    * are 128 B – a few KB per (file, column) (a ~40k-row file is
-    * ~16 KB), so they fold into ONE driver-written container like the
+    * are 128 B – a few KB per (file, column) (a ~10k-row file's is
+    * 16 KiB), so they fold into ONE driver-written container like the
     * r17 small-delta layout; a compaction task's MaxBits blobs blow
     * the bound and write executor-side — blob bytes never accumulate
     * on the driver proportionally to file count.
     */
-  def ShipBloomBytes: Long = sys.props.get("graft.bloom.ship-bytes")
-    .flatMap { v =>
-      val n = v.toLongOption
-      if (n.isEmpty) System.err.println(
-        s"[lake] WARNING: malformed graft.bloom.ship-bytes '$v' — " +
-          "using default 65536")
-      n
-    }.getOrElse(64L << 10)
+  val ShipBloomBytes: Long = 64L << 10
 }

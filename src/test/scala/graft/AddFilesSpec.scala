@@ -170,9 +170,8 @@ class AddFilesSpec extends AnyFunSuite {
     t.addFiles(spark, Seq(caseFile))
     spark.conf.set("spark.sql.catalog.gaf", "graft.sources.LakeCatalog")
     spark.conf.set("spark.sql.catalog.gaf.warehouse", wh)
-    // SELECT * through the catalog exercises GroupRowReader, which does
-    // physical-name Group lookups — without footer reconciliation this
-    // threw parquet InvalidRecordException on every read
+    // the reader requests the table's columns by the file's physical
+    // spelling (footer reconciliation) and null-fills the absent one
     val got = spark.sql("SELECT id, v, extra FROM gaf.d.t ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .toSeq
@@ -186,6 +185,82 @@ class AddFilesSpec extends AnyFunSuite {
     t.deleteByKeysMoR(spark, Seq(1L).toDF("id"))
     assert(spark.sql("SELECT id FROM gaf.d.t").collect()
       .map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
+  test("external TIMESTAMP(MILLIS), INT96 and nested columns read " +
+      "exactly as spark.read.parquet reads the same file") {
+    import spark.implicits._
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    def file(dir: String): String =
+      Files.list(java.nio.file.Paths.get(dir)).filter(
+        _.toString.endsWith(".parquet")).findFirst().get().toString
+    def tsFile(outType: String): String = {
+      val dir = Files.createTempDirectory(s"graft-ext-$outType").toString
+      val prev = spark.conf.getOption(tsKey)
+      spark.conf.set(tsKey, outType)
+      try Seq((1L, "2024-03-05 06:07:08.123"), (2L, "1999-12-31 23:59:59.999"),
+          (3L, null)).toDF("id", "s")
+        .select(col("id"), to_timestamp(col("s")).as("ts"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      finally prev.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+      file(dir)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    Seq("TIMESTAMP_MILLIS", "INT96").foreach { outType =>
+      val ext = tsFile(outType)
+      val (_, t) = mk(s"ts-$outType",
+        """{"column_name":"id","data_type":"long"},
+          |{"column_name":"ts","data_type":"timezone"}""".stripMargin)
+      t.addFiles(spark, Seq(ext))
+      val got = rows(t.read(spark).select("id", "ts"))
+      assert(got == rows(spark.read.parquet(ext)), outType)
+      assert(t.read(spark).filter(col("id") === 1L).select("ts").head
+        .getTimestamp(0) == java.sql.Timestamp.valueOf("2024-03-05 06:07:08.123"),
+        s"$outType: the stored instant must survive the read")
+    }
+    // a struct and an array column, one row with both null
+    val nestedDir = Files.createTempDirectory("graft-ext-nested").toString
+    Seq((1L, 10, "x", Seq(1L, 2L)), (2L, 20, null, Seq.empty[Long]),
+        (3L, 0, "", null)).toDF("id", "a", "b", "arr")
+      .select(col("id"),
+        when(col("id") < 3L, struct(col("a"), col("b"))).as("st"),
+        col("arr"))
+      .coalesce(1).write.mode("overwrite").parquet(nestedDir)
+    val nested = file(nestedDir)
+    val (_, nt) = mk("nested",
+      """{"column_name":"id","data_type":"long"},
+        |{"column_name":"st","data_type":"struct","struct_def":[
+        |  {"column_name":"a","data_type":"int"},
+        |  {"column_name":"b","data_type":"string"}]},
+        |{"column_name":"arr","data_type":"array",
+        |  "array_def":{"column_name":"element","data_type":"long"}}""".stripMargin)
+    nt.addFiles(spark, Seq(nested))
+    assert(rows(nt.read(spark).select("id", "st", "arr")) ==
+      rows(spark.read.parquet(nested)))
+  }
+
+  test("a column added after registration null-fills even where the " +
+      "file carries an unregistered column of that name") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-ext-extra").toString
+    Seq((1L, "a", 7)).toDF("id", "v", "a")
+      .select(col("id"), col("v"), struct(col("a")).as("extra"))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val ext = Files.list(java.nio.file.Paths.get(dir)).filter(
+      _.toString.endsWith(".parquet")).findFirst().get().toString
+    val (wh, t) = mk("extra", idv)
+    t.addFiles(spark, Seq(ext))
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"v","data_type":"string"},
+        |{"column_name":"extra","data_type":"struct","struct_def":[
+        |  {"column_name":"a","data_type":"int"}]}],
+        |"partitions":[]}""".stripMargin)
+    val got = LakeTable.load(wh, "d", "t").read(spark).collect()
+    assert(got.length == 1 && got.head.getLong(0) == 1L && got.head.isNullAt(2),
+      s"the table's extra was added after the file: ${got.toSeq}")
   }
 
   test("a rename after registration keeps the file readable (by-name " +

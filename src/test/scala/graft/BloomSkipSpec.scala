@@ -71,26 +71,27 @@ class BloomSkipSpec extends AnyFunSuite {
   test("many-file builds write per-task containers — blobs never " +
       "stage on the driver") {
     val (wh, t0) = mk("percont")
-    // AQE would coalesce this small fixture's hash shuffle into one
-    // task; keep the partitioning so the build runs as the many-task
-    // job it is at real scale. The fixture stands in for a LARGE build
-    // (10k-file compaction): since r18 the write tasks build the
-    // filters inline and a task whose blobs exceed the ship bound
-    // writes its own container executor-side — pin the bound to 0 so
-    // this fixture exercises the big-task path it documents (small
-    // blobs otherwise fold into one driver container; the r17
-    // driver-build row bound only governs the read-back fallback now).
+    // AQE would coalesce this fixture's hash shuffle into fewer tasks;
+    // keep the partitioning so the build runs as the many-task job it
+    // is at real scale. The write tasks build the filters inline, and
+    // a task whose blobs exceed the 64 KiB ship bound writes its own
+    // container executor-side: past 26,214 rows a file's bloom is 2^19
+    // bits (64 KiB) per column, so with two bloom columns every task
+    // here blows the bound
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
       "false")
-    GlobalFlagLock.synchronized {
-      System.setProperty("graft.bloom.ship-bytes", "0")
-      try seed(t0, n = 600, parts = 24)
-      finally {
-        System.clearProperty("graft.bloom.ship-bytes")
-        spark.conf.set(
-          "spark.sql.adaptive.coalescePartitions.enabled", "true")
-      }
-    }
+    val parts = 16
+    val perTask = 27000
+    try {
+      // ids spread round-robin across the tasks, so min/max ranges
+      // overlap everywhere — the bloom is the ONLY thing that can
+      // prune a point lookup
+      t0.append(spark.range(0L, parts.toLong * perTask)
+        .select(col("id"), concat(lit("tag"), col("id").cast("string"))
+          .as("tag"), (col("id") * 0.5).as("score"))
+        .repartition(parts))
+    } finally spark.conf.set(
+      "spark.sql.adaptive.coalescePartitions.enabled", "true")
     val t = LakeTable.load(wh, "d", "t")
     val all = t.plannedFiles()
     assert(all.size >= 15, s"fixture must spread over files, got ${all.size}")
@@ -98,8 +99,9 @@ class BloomSkipSpec extends AnyFunSuite {
     // driver-side build would funnel every blob into ONE container
     // (and stage all of them on the driver to do it)
     val containers = all.flatMap(_.blooms.map(_.path)).distinct
-    assert(containers.size > 1,
-      s"expected per-task containers, got ${containers.size}")
+    assert(containers.size == all.size,
+      s"expected one container per task, got ${containers.size} for " +
+        s"${all.size} files")
     // every ref resolves to a readable, CRC-checked blob
     for (f <- all; r <- f.blooms)
       assert(BloomFilters.readBlob(r.path, r.offset, r.length).nonEmpty)
@@ -118,9 +120,7 @@ class BloomSkipSpec extends AnyFunSuite {
     // shuffle + second container-writing job — one narrow collect, one
     // container, same blobs the distributed path would build
     val (wh, t0) = mk("drvcont")
-    // one-container assertion below is flag-sensitive: another suite
-    // holding ship-bytes/notask mid-write would fan out containers
-    GlobalFlagLock.synchronized { seed(t0, n = 400, parts = 20) }
+    seed(t0, n = 400, parts = 20)
     val t = LakeTable.load(wh, "d", "t")
     val all = t.plannedFiles()
     assert(all.size >= 15, s"fixture must spread over files, got ${all.size}")
@@ -392,7 +392,7 @@ class BloomSkipSpec extends AnyFunSuite {
 
   test("containers are sweep-aware: live survives, orphaned collects") {
     val (wh, t0) = mk("sweep")
-    GlobalFlagLock.synchronized { seed(t0, n = 100, parts = 4) }
+    seed(t0, n = 100, parts = 4)
     val t = LakeTable.load(wh, "d", "t")
     val live = t.plannedFiles().flatMap(_.blooms.map(_.path)).distinct
     assert(live.size == 1)

@@ -6,18 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.{Engine, LakeTable}
-import graft.sources.BatchRowLakeReader
 
-/** r15 retires the last two COMMON GroupRowReader triggers: STRUCT-
-  * NESTED equality-delete keys (probe chains read through struct
-  * children of the decoded row) and absent-with-DEFAULT columns
-  * (served as per-reader constants — ConstantColumnVector on the
-  * columnar path, plan consts on the row path). Each scenario pins
-  * BOTH exactness (identical rows on the forced Group walk) and
-  * engagement (the `groupWalks` counter does not move), so a future
-  * gate regression that silently demotes these scans fails the spec
-  * rather than just running slower. Remaining legitimate fallbacks:
-  * exotic external encodings and unmappable schema pairs.
+/** Evolved-schema reads on the one decoder, Spark's parquet reader:
+  * STRUCT-NESTED equality-delete keys (probe chains read through
+  * struct children of the decoded row), absent-with-DEFAULT columns
+  * (per-reader constants, or constant injections into a decoded
+  * struct), and equality keys on those defaults. Each scenario pins
+  * its rows against values computed from the rows the test wrote, so
+  * the expectation does not depend on any engine read path.
   */
 class GroupWalkRetirementSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -25,13 +21,9 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  private def noGroupWalks[A](body: => A): A = {
-    val before = BatchRowLakeReader.groupWalks.get
-    val out = body
-    assert(BatchRowLakeReader.groupWalks.get == before,
-      "scan must not fall back to the Group walk")
-    out
-  }
+  private def read(wh: String) = spark.read.format("graft-lake")
+    .option("warehouse", wh).option("database", "d").option("table", "t")
+    .load()
 
   test("nested equality-delete keys decode vectorized (columnar MoR), " +
       "exact vs the forced Group walk") {
@@ -51,22 +43,13 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
         struct(col("seg"), col("name")).as("meta")))
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       Seq("seg3", "seg5").toDF("meta.seg"))
-    def read() = spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
+    val live = (0 until 300).filterNot(i => i % 7 == 3 || i % 7 == 5)
     // full projection (nested key read through the projected struct)
-    val full = noGroupWalks(rows(read()))
+    assert(rows(read(wh)) ==
+      live.map(i => s"[$i,[seg${i % 7},n$i]]").sorted)
     // pruned projection (the carrier struct drops out of the target:
-    // the reader re-requests a minimal single-chain struct)
-    val pruned = noGroupWalks(rows(read().select("k")))
-    System.setProperty("graft.read.novector", "1")
-    try {
-      assert(full == rows(read()), "full projection vs Group walk")
-      assert(pruned == rows(read().select("k")),
-        "pruned projection vs Group walk")
-    } finally System.clearProperty("graft.read.novector")
-    assert(full.size == 300 - (0 until 300).count(i =>
-      i % 7 == 3 || i % 7 == 5))
+    // the reader re-requests it cut down to the key chain)
+    assert(rows(read(wh).select("k")) == live.map(i => s"[$i]").sorted)
   }
 
   test("absent-with-DEFAULT columns decode vectorized as constants " +
@@ -87,15 +70,11 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
     // and MoR deletes so the DEFAULT + delete combination exercises
     // the columnar MoR reader's constant vectors
     LakeTable.load(wh, "d", "t").deleteMoR(spark, col("k") % 10L === 7L)
-    def read() = spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
-    val got = noGroupWalks(rows(read()))
-    System.setProperty("graft.read.novector", "1")
-    try assert(got == rows(read()), "constants vs Group walk")
-    finally System.clearProperty("graft.read.novector")
-    val notes = noGroupWalks(read().select("note").distinct()
-      .collect().map(_.getString(0)).toSet)
+    val expect = (0 until 100).filterNot(_ % 10 == 7)
+      .map(i => s"[$i,n/a,2.5]") :+ "[1000,real,9.9]"
+    assert(rows(read(wh)) == expect.sorted)
+    val notes = read(wh).select("note").distinct()
+      .collect().map(_.getString(0)).toSet
     assert(notes == Set("n/a", "real"), s"default must fill: $notes")
   }
 
@@ -116,13 +95,9 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
       Seq(5L, 50L).toDF("k"))
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       Seq(6L, 60L).toDF("k"))
-    def read() = spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
     // projection PRUNES k: both batches must resolve through the ONE
     // appended request column
-    val got = noGroupWalks(read().select("v")
-      .collect().map(_.getLong(0)).sorted.toSeq)
+    val got = read(wh).select("v").collect().map(_.getLong(0)).sorted.toSeq
     val expect = (0 until 200).filterNot(i =>
       Set(5, 50, 6, 60)(i)).map(_ * 10L)
     assert(got == expect)
@@ -136,11 +111,9 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"}],"partitions":[]}""".stripMargin)
     LakeTable.load(wh, "d", "t").append((0 until 123).map(_.toLong).toDF("k"))
-    val lit1 = noGroupWalks(spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
+    val lit1 = read(wh)
       .select(org.apache.spark.sql.functions.lit(1).as("one"))
-      .collect())
+      .collect()
     assert(lit1.length == 123 && lit1.forall(r =>
       r.length == 1 && r.getInt(0) == 1),
       "zero-column scan must emit exactly the literal — a leaked " +
@@ -161,20 +134,13 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
     LakeTable.load(wh, "d", "t").append(
       Seq((10L, "new"), (11L, "old")).toDF("k", "tag"))
     // delete by tag='old': the pre-evolution file's rows carry the
-    // DEFAULT 'old' (Group-walk semantics) — all three must vanish,
-    // plus the new file's k=11
+    // DEFAULT 'old' — all three must vanish, plus the new file's k=11
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       Seq("old").toDF("tag"))
-    def read() = spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
-    val got = noGroupWalks(rows(read()))
-    System.setProperty("graft.read.novector", "1")
-    try assert(got == rows(read()),
-      "absent-key constant probe vs Group walk")
-    finally System.clearProperty("graft.read.novector")
-    assert(got.size == 1 && got.head.contains("10"),
-      s"only the non-matching new row survives: $got")
+    assert(rows(read(wh)) == Seq("[10,new]"))
+    // the key column pruned from the projection: the old file lacks
+    // it, so its rows probe the default as a constant
+    assert(rows(read(wh).select("k")) == Seq("[10]"))
   }
 
   test("NESTED absent-with-DEFAULT fields decode vectorized via " +
@@ -192,10 +158,8 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
       (i.toLong, s"seg${i % 5}")).toDF("k", "seg")
       .select(col("k"), struct(col("seg")).as("meta")))
     // TWO injected children on one struct spine, added via table-def
-    // evolution with initial_default (r16 contract extension — the
-    // SQL surface deliberately routes nested adds here): the old
-    // file's rows must read them as per-row constants wherever meta
-    // is non-null
+    // evolution with initial_default: the old file's rows must read
+    // them as per-row constants wherever meta is non-null
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"},
@@ -215,33 +179,27 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
     // MoR deletes drive the columnar-MoR path (selection map OVER the
     // injected children)
     LakeTable.load(wh, "d", "t").deleteMoR(spark, col("k") % 10L === 7L)
-    def read() = spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load()
-    val got = noGroupWalks(rows(read()))
+    val live = (0 until 200).filterNot(_ % 10 == 7)
+    assert(rows(read(wh)) == (live.map(i => s"[$i,[seg${i % 5},n/a,2.5]]") :+
+      "[1000,[segX,real,9.9]]").sorted)
     // row-EMITTING path: a position-meta projection demotes the scan
-    // to row mode, exercising the injectStruct rebuild
-    val gotRows = noGroupWalks(rows(read()
-      .select(col("k"), col("meta"), col("_graft_pos"))))
-    System.setProperty("graft.read.novector", "1")
-    try {
-      assert(got == rows(read()), "injected constants vs Group walk")
-      assert(gotRows == rows(read()
-        .select(col("k"), col("meta"), col("_graft_pos"))),
-        "row-emitting injection vs Group walk")
-    } finally System.clearProperty("graft.read.novector")
-    val notes = noGroupWalks(read().select("meta.note").distinct()
-      .collect().map(_.getString(0)).toSet)
+    // to row mode, exercising the injectStruct rebuild. Each append
+    // wrote one driver-side file in row order, so the position of a
+    // pre-evolution row is its k
+    assert(rows(read(wh).select(col("k"), col("meta"), col("_graft_pos"))) ==
+      (live.map(i => s"[$i,[seg${i % 5},n/a,2.5],$i]") :+
+        "[1000,[segX,real,9.9],0]").sorted)
+    val notes = read(wh).select("meta.note").distinct()
+      .collect().map(_.getString(0)).toSet
     assert(notes == Set("n/a", "real"), s"nested default must fill: $notes")
-    val scores = noGroupWalks(read()
-      .agg(sum("meta.score")).collect()(0).getDouble(0))
-    val expect = (0 until 200).filterNot(_ % 10 == 7).size * 2.5 + 9.9
+    val scores = read(wh).agg(sum("meta.score")).collect()(0).getDouble(0)
+    val expect = live.size * 2.5 + 9.9
     assert(math.abs(scores - expect) < 1e-9, s"$scores != $expect")
   }
 
-  test("an equality-delete KEYED on an injected nested default keeps " +
-      "the Group walk (the decoded cell is null-filled, not the " +
-      "default) — guarded demotion, exact results") {
+  test("an equality-delete KEYED on an injected nested default reads " +
+      "the default wherever the parent struct is non-null, on the " +
+      "columnar, row-emitting and pruned-projection paths") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-gwr-nestdefeq").toString
     Engine.processTableDefJson(wh,
@@ -250,9 +208,12 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
         |{"column_name":"meta","data_type":"struct","struct_def":[
         |  {"column_name":"seg","data_type":"string"}]}],
         |"partitions":[]}""".stripMargin)
-    LakeTable.load(wh, "d", "t").append((0 until 50).map(i =>
-      (i.toLong, s"seg${i % 5}")).toDF("k", "seg")
-      .select(col("k"), struct(col("seg")).as("meta")))
+    // k = 50 has a NULL meta: its injected child reads null, not the
+    // default, so the delete below must not match it
+    LakeTable.load(wh, "d", "t").append((0 to 50).map(i =>
+      (i.toLong, if (i == 50) null else s"seg${i % 5}")).toDF("k", "seg")
+      .select(col("k"), when(col("k") < 50L, struct(col("seg")))
+        .as("meta")))
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"},
@@ -264,17 +225,35 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
     LakeTable.load(wh, "d", "t").append(
       Seq((100L, "segX", "new")).toDF("k", "seg", "tag")
         .select(col("k"), struct(col("seg"), col("tag")).as("meta")))
-    // eq-delete keyed on the INJECTED child: pre-evolution rows carry
-    // the default 'old' semantically — every one must vanish
+    // eq-delete keyed on the INJECTED child: every pre-evolution row
+    // with a non-null meta carries the default 'old' — each must vanish
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       Seq("old").toDF("meta.tag"))
-    val before = BatchRowLakeReader.groupWalks.get
-    val got = rows(spark.read.format("graft-lake")
-      .option("warehouse", wh).option("database", "d").option("table", "t")
-      .load())
-    assert(BatchRowLakeReader.groupWalks.get > before,
-      "the injected-key scan must take the guarded Group-walk demotion")
-    assert(got.size == 1 && got.head.contains("100"),
-      s"only the 'new' row survives: $got")
+    assert(rows(read(wh)) == Seq("[100,[segX,new]]", "[50,null]"))
+    assert(rows(read(wh).select(col("k"), col("_graft_pos"))) ==
+      Seq("[100,0]", "[50,50]"))
+    assert(rows(read(wh).select("k")) == Seq("[100]", "[50]"))
+  }
+
+  test("a data column spelled like the reader's row-index column fails " +
+      "a position-consuming read loudly, naming the file") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-gwr-collide").toString
+    val rowIdx = org.apache.spark.sql.execution.datasources.parquet
+      .GraftRowIndexBridge.RowIndexTempCol
+    Engine.processTableDefJson(wh,
+      s"""{"database_name":"d","table_name":"t","columns":[
+         |{"column_name":"k","data_type":"long"},
+         |{"column_name":"$rowIdx","data_type":"long"}],
+         |"partitions":[]}""".stripMargin)
+    LakeTable.load(wh, "d", "t").append(
+      Seq((1L, 7L), (2L, 8L)).toDF("k", rowIdx))
+    val e = intercept[Exception] {
+      read(wh).select(col("k"), col(rowIdx), col("_graft_pos")).collect()
+    }
+    val ise = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).collectFirst { case x: IllegalStateException => x }
+    assert(ise.exists(x => x.getMessage.contains("collide by name") &&
+      x.getMessage.contains(".parquet")), s"got $e")
   }
 }

@@ -388,23 +388,4 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
     assert(a2 == a1, "the sf0.01 build corrupted the sf0.001 memo entry")
     assert(b != a1)
   }
-
-  test("kill-switch: graft.read.novector refuses acceptance and the " +
-      "unpushed plan still answers") {
-    val (_, cat) = mk("kill", rows = 200)
-    val sql = s"SELECT sum(variant_get(payload, '$$.small', 'long')) " +
-      s"AS t FROM $cat.d.t"
-    sys.props("graft.read.novector") = "1"
-    try {
-      // novector also forces the Group walk, which cannot decode
-      // variant columns at all — acceptance refusal must show in the
-      // PLAN (variant_get stays above the scan); execution would fail
-      // on the walk either way, so only the plan is asserted
-      val plan = withPush(on = true)(
-        spark.sql(sql).queryExecution.executedPlan.toString)
-      assert(plan.contains("variant_get"), plan)
-    } finally sys.props.remove("graft.read.novector")
-    val v = withPush(on = true)(spark.sql(sql).collect()(0).getLong(0))
-    assert(v == (0L until 200L).sum)
-  }
 }

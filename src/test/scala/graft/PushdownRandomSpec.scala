@@ -18,12 +18,10 @@ import graft.lake.{Engine, LakeTable}
   * on a LOCAL-relation copy of one unfiltered read (Spark semantics,
   * no source pushdown, and immune to CacheManager plan substitution —
   * see [[truthDF]]). Any row parquet wrongly drops or resurrects
-  * fails the k-list compare. One seed re-runs on the forced Group
-  * walk (novector) so both translation consumers stay under the
-  * differential, a rename-swap pass pins the by-field-id range
-  * rewrite on live random predicates, and a live-delete pass (r15)
-  * pins the row-index-driven position probes under an ENGAGED
-  * predicate on both decode paths.
+  * fails the k-list compare. A rename-swap pass pins the by-field-id
+  * range rewrite on live random predicates, and a live-delete pass
+  * (r15) pins the row-index-driven position probes under an ENGAGED
+  * predicate.
   */
 class PushdownRandomSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -188,13 +186,6 @@ class PushdownRandomSpec extends AnyFunSuite {
     }
   }
 
-  test("random predicates match on the forced Group walk") {
-    val wh = buildTable("nv", 404L)
-    System.setProperty("graft.read.novector", "1")
-    try soak(wh, 404L, preds = 25)
-    finally System.clearProperty("graft.read.novector")
-  }
-
   test("random predicates over LIVE DELETE STATE stay exact (r15: " +
       "pushdown engages on position-consuming scans via row indexes)") {
     // position deletes + a deletion-vector-free eq delete over the
@@ -228,10 +219,6 @@ class PushdownRandomSpec extends AnyFunSuite {
     }
     rangeSweep()
     soak(wh, 909L, preds = 25)
-    // and on the forced Group walk (parquet-mr getCurrentRowIndex)
-    System.setProperty("graft.read.novector", "1")
-    try { rangeSweep(); soak(wh, 1010L, preds = 20) }
-    finally System.clearProperty("graft.read.novector")
   }
 
   test("random predicates survive a rename swap (by-id range rewrite)") {
@@ -243,8 +230,5 @@ class PushdownRandomSpec extends AnyFunSuite {
     LakeTable.load(wh, "d", "t").renameColumn("l", "i")
     LakeTable.load(wh, "d", "t").renameColumn("pdrnd_tmp", "l")
     soak(wh, 606L, preds = 25)
-    System.setProperty("graft.read.novector", "1")
-    try soak(wh, 707L, preds = 20)
-    finally System.clearProperty("graft.read.novector")
   }
 }

@@ -544,9 +544,7 @@ class ScanPushdownSpec extends AnyFunSuite {
     // ZERO nulls in every row group). After DROP + re-ADD, the logical
     // x (new id) null-fills everywhere — a name-bound IS NULL pushed
     // into parquet would stats-drop every zero-null group of the OLD
-    // x and silently lose all rows. The name collision also makes the
-    // file unmappable for the vectorized readers, so this exercises
-    // the Group-walk predicate path specifically.
+    // x and silently lose all rows.
     val wh = Files.createTempDirectory("graft-pushdown-readd").toString
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
@@ -576,12 +574,10 @@ class ScanPushdownSpec extends AnyFunSuite {
       "a bounds misbind against the old physical x would resurrect " +
         "rows the logical predicate excludes")
 
-    // rename-SWAP on the Group walk (the r14 review finding): after
-    // a↔b swap, logical `a` lives in the file under the physical name
-    // `b` — a NAME-bound predicate binds the wrong column's stats and
-    // silently drops every matching row group. The vectorized readers
-    // already rewrote ranges by field id; novector forces the Group
-    // walk, whose translation must rewrite identically.
+    // rename-SWAP (the r14 review finding): after a↔b swap, logical
+    // `a` lives in the file under the physical name `b` — a NAME-bound
+    // predicate binds the wrong column's stats and silently drops
+    // every matching row group. Ranges rewrite by field id instead.
     val wh2 = Files.createTempDirectory("graft-pushdown-swap").toString
     Engine.processTableDefJson(wh2,
       """{"database_name":"d","table_name":"t","columns":[
@@ -604,17 +600,11 @@ class ScanPushdownSpec extends AnyFunSuite {
     def ks2(where: String): Seq[Long] = spark.sql(
       s"SELECT k FROM gpd9.d.t WHERE $where ORDER BY k")
       .collect().map(_.getLong(0)).toSeq
-    System.setProperty("graft.read.novector", "1")
-    try {
-      assert(ks2("a = -1") == (0L until 5000L),
-        "logical a (old b) is -1 everywhere — a name-bound predicate " +
-          "would bind old a's [0,4999] stats and drop every group")
-      assert(ks2("b >= 4900") == (4900L until 5000L),
-        "logical b (old a) carries the key values")
-      assert(ks2("b >= 4900 AND a = -1") == (4900L until 5000L))
-    } finally System.clearProperty("graft.read.novector")
-    // the vectorized path answers identically
-    assert(ks2("a = -1") == (0L until 5000L))
-    assert(ks2("b >= 4900") == (4900L until 5000L))
+    assert(ks2("a = -1") == (0L until 5000L),
+      "logical a (old b) is -1 everywhere — a name-bound predicate " +
+        "would bind old a's [0,4999] stats and drop every group")
+    assert(ks2("b >= 4900") == (4900L until 5000L),
+      "logical b (old a) carries the key values")
+    assert(ks2("b >= 4900 AND a = -1") == (4900L until 5000L))
   }
 }

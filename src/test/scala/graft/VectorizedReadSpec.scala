@@ -13,10 +13,9 @@ import graft.lake.{Engine, LakeTable}
   * + [[graft.sources.LakeVectorize]]): clean-file scans must serve
   * ColumnarBatches (pinned — the fast path cannot silently regress to
   * row mode), EVOLVED tables (rename / int→long / float→double /
-  * decimal widen / added columns) must stay on the batch path AND
-  * read byte-identically to the row path, and every gate that forces
-  * row mode (MoR state, initial defaults, rename-swap name collision)
-  * must stay exact.
+  * decimal widen / added columns) must stay on the batch path, and
+  * every read must equal the values the test wrote (or, for an
+  * external file, `spark.read.parquet` of it).
   */
 class VectorizedReadSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -46,17 +45,12 @@ class VectorizedReadSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  /** Same collect with the vectorized path killed — the row-path
-    * oracle for differentials.
-    */
-  private def rowPath[A](body: => A): A = {
-    System.setProperty("graft.read.novector", "1")
-    try body finally System.clearProperty("graft.read.novector")
-  }
+  /** `(k, s)` rows as written, in [[rows]]' rendering. */
+  private def ks(written: Seq[(Long, String)]): Seq[String] =
+    written.map { case (k, s) => s"[$k,$s]" }.sorted
 
   test("clean-file catalog scan is pinned COLUMNAR — and not via the " +
       "kill switch") {
-    assert(!sys.props.contains("graft.read.novector"))
     val wh = mk("""{"database_name":"d","table_name":"t","columns":[
       |{"column_name":"k","data_type":"long"},
       |{"column_name":"s","data_type":"string"}],"partitions":[]}""".stripMargin)
@@ -104,11 +98,12 @@ class VectorizedReadSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT k, cnt, ratio, label, extra FROM $c.d.e")
     assert(columnarFlags(df).forall(identity),
       "renames/promotions/nested-adds must NOT drop the scan to row mode")
-    val vec = rows(df)
-    val row = rowPath(
-      rows(spark.sql(s"SELECT k, cnt, ratio, label, extra FROM $c.d.e")))
-    assert(vec == row, "vectorized read must equal the row path")
-    assert(vec.size == 80)
+    val vec = df.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getDouble(2), r.getString(3), r.getString(4))).sortBy(_._1).toSeq
+    assert(vec == (0 until 80).map(i => (i.toLong, i * 3L,
+      if (i < 50) (i / 7.0f).toDouble else i / 7.0d, s"a$i",
+      if (i < 50) null else s"x$i")),
+      "the evolved read must equal the written rows, widened")
     // spot-check the promoted values decode as widened types
     val r = spark.sql(
       s"SELECT cnt, ratio, extra FROM $c.d.e WHERE k = 10").head
@@ -130,8 +125,9 @@ class VectorizedReadSpec extends AnyFunSuite {
     val c = cat(wh)
     val df = spark.sql(s"SELECT k, amt FROM $c.d.dec")
     assert(columnarFlags(df).forall(identity))
-    val vec = rows(df)
-    assert(vec == rowPath(rows(spark.sql(s"SELECT k, amt FROM $c.d.dec"))))
+    assert(rows(df) == (0 until 20).map(i =>
+      s"[$i,${new java.math.BigDecimal(java.math.BigInteger.valueOf(
+        i * 100 + 7), 2)}]").sorted)
     assert(spark.sql(s"SELECT sum(amt) FROM $c.d.dec").head
       .getDecimal(0) == new java.math.BigDecimal("191.40")
       .setScale(2))
@@ -153,10 +149,8 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(columnarFlags(mor).forall(identity),
       "MoR deletes must stay columnar via the selection mask — " +
         "demoting the whole scan to row mode is the 100-TB decode cliff")
-    val vec = rows(mor)
-    assert(vec == rowPath(rows(spark.sql(s"SELECT k, s FROM $c.d.g"))),
-      "masked columnar MoR must equal the row path")
-    assert(vec.size == 25)
+    assert(rows(mor) == ks((5L until 30L).map(i => (i, s"v$i"))),
+      "masked columnar MoR must equal the written rows minus the deletes")
     assert(spark.sql(s"SELECT sum(k) FROM $c.d.g").head.getLong(0) ==
       (5L until 30L).sum)
 
@@ -212,9 +206,8 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(columnarFlags(df).forall(identity),
       "keyed file partitions must serve ColumnarBatches too — " +
         "partitioned tables are the normal state at scale")
-    val vec = rows(df)
-    assert(vec == rowPath(rows(spark.sql(s"SELECT grp, k, s FROM $c.d.pt"))))
-    assert(vec.size == 60)
+    assert(rows(df) ==
+      (0 until 60).map(i => s"[${i % 3},$i,v$i]").sorted)
     // partition-pruned scan stays columnar and exact
     val pruned = spark.sql(s"SELECT k FROM $c.d.pt WHERE grp = 1")
     assert(columnarFlags(pruned).forall(identity))
@@ -248,11 +241,9 @@ class VectorizedReadSpec extends AnyFunSuite {
     val vec = rows(df)
     assert(graft.sources.BatchRowLakeReader.opened.get() > before,
       "the masked columnar reader must serve MoR reads of " +
-        "engine-written files — silent Group-walk fallback is the " +
-        "100-TB decode cliff")
-    val row = rowPath(rows(spark.sql(s"SELECT k, cnt, label FROM $c.d.mv")))
-    assert(vec == row, "masked columnar decode must equal the Group walk")
-    assert(vec.size == 33)
+        "engine-written files")
+    assert(vec == (7 until 40).map(i => s"[$i,${i * 2},v$i]").sorted,
+      "masked columnar decode must equal the written rows, widened")
     // position metadata (row-emitting path, vectorized decode) stays
     // file-physical and exact alongside the MoR state
     val pos = spark.read.format("graft-lake")
@@ -289,7 +280,8 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(df.count() == 30000)
     assert(spark.sql(s"SELECT sum(k) FROM $c.d.big").head.getLong(0) ==
       (0L until 30000L).sum)
-    assert(rows(df) == rowPath(rows(spark.sql(s"SELECT k, s FROM $c.d.big"))))
+    val written = (0 until 30000).map(i => (i.toLong, f"s$i%08d"))
+    assert(rows(df) == ks(written))
 
     // mixed scan: a second file takes MoR deletes AND the big file
     // takes one — the whole scan stays COLUMNAR (selection mask), the
@@ -309,9 +301,10 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(mixed.count() == 30008)
     assert(spark.sql(s"SELECT sum(k) FROM $c.d.big").head.getLong(0) ==
       (0L until 30010L).sum - 30005L - 12345L)
-    assert(rows(mixed) ==
-      rowPath(rows(spark.sql(s"SELECT k, s FROM $c.d.big"))),
-      "split masked-columnar MoR must equal the split row path")
+    assert(rows(mixed) == ks((written ++ (30000 until 30010).map(i =>
+      (i.toLong, f"s$i%08d"))).filterNot(r => r._1 == 30005L || r._1 == 12345L)),
+      "split masked-columnar MoR must equal the written rows minus the " +
+        "deletes")
   }
 
   test("split DELETE-BEARING file: position deletes, _graft_pos, and " +
@@ -341,8 +334,8 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(df.count() == expect.size)
     assert(spark.sql(s"SELECT sum(k) FROM $c.d.sm").head.getLong(0) ==
       expect.sum)
-    assert(rows(df) == rowPath(rows(spark.sql(s"SELECT k, s FROM $c.d.sm"))),
-      "split masked-columnar must equal the split Group walk")
+    assert(rows(df) == ks(expect.map(k => (k, f"s$k%08d"))),
+      "split masked-columnar must equal the written rows minus the deletes")
     // _graft_pos (row-emitting vectorized decode, BatchRowLakeReader):
     // file-absolute positions must survive the split — pos == k
     val posDf = spark.read.format("graft-lake")
@@ -362,7 +355,7 @@ class VectorizedReadSpec extends AnyFunSuite {
     assert(eq.count() == expect2.size)
     assert(spark.sql(s"SELECT sum(k) FROM $c.d.sm").head.getLong(0) ==
       expect2.sum)
-    assert(rows(eq) == rowPath(rows(spark.sql(s"SELECT k, s FROM $c.d.sm"))))
+    assert(rows(eq) == ks(expect2.map(k => (k, f"s$k%08d"))))
   }
 
   test("EXTERNAL (add_files) flat-standard files take the " +
@@ -386,9 +379,9 @@ class VectorizedReadSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT id, v, missing FROM $c.d.x")
     val vec = rows(df)
     assert(graft.sources.BatchRowLakeReader.opened.get() > before,
-      "a flat-standard external file must decode vectorized")
-    assert(vec == rowPath(rows(
-      spark.sql(s"SELECT id, v, missing FROM $c.d.x"))))
+      "an external file must decode vectorized")
+    assert(vec == rows(spark.read.parquet(ext)
+      .selectExpr("ID", "V", "CAST(NULL AS STRING)")))
     assert(vec.size == 50)
     val r = spark.sql(s"SELECT v, missing FROM $c.d.x WHERE id = 7").head
     assert(r.getString(0) == "e7" && r.isNullAt(1))
