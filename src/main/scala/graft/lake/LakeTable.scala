@@ -741,6 +741,10 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       : (Seq[String], Boolean) = {
     val messages = Seq.newBuilder[String]
     val targetNoIds = TypeMapper.toStructType(tableDef.columns)
+    // only names the table does not carry yet: a table holding one
+    // from before the refusal can still evolve
+    LakeTable.requireUnreserved(targetNoIds.fieldNames.toSeq.filterNot(n =>
+      md.currentSchema.fieldNames.exists(_.equalsIgnoreCase(n))))
     val changes = SchemaDiff.diff(md.currentSchema, targetNoIds)
 
     val disallowed = changes.collect { case d: DisallowedChange => d }
@@ -894,6 +898,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       s"RENAME: no such column '$oldName' (have ${cur.fieldNames.mkString(", ")})")
     require(!cur.fieldNames.contains(newName),
       s"RENAME: column '$newName' already exists")
+    LakeTable.requireUnreserved(Seq(newName))
     val renamed = StructType(cur.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     val newSchemaId = md.schemas.map(_.id).max + 1
@@ -1665,6 +1670,18 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
 
 object LakeTable {
 
+  /** A CREATE, evolution or rename asked for a top-level column name
+    * the read path claims (`LakeSource.isReservedColumn`).
+    */
+  final class ReservedColumnNameException(name: String)
+      extends IllegalArgumentException(s"column name '$name' is reserved " +
+        "for the engine's metadata and row-index columns")
+
+  /** Refuses the first of `names` that is reserved. */
+  private[lake] def requireUnreserved(names: Seq[String]): Unit =
+    names.find(graft.sources.LakeSource.isReservedColumn)
+      .foreach(n => throw new ReservedColumnNameException(n))
+
   /** A written-but-unflipped metadata claim: the output of commit
     * phase 1 ([[LakeTable!.writeClaim]]), the input of phase 2
     * ([[LakeTable!.flipClaim]]). The cross-table coordinator holds one
@@ -1673,111 +1690,49 @@ object LakeTable {
   private[lake] final case class Claim(table: LakeTable, version: Int,
       target: Path, ext: TableMetadata, manifests: Seq[Path])
 
-  /** Max distinct keys a marker batch INLINES into the snapshot
-    * metadata (`EqDeleteMeta.inlineKeys`): covers the incremental-MV
-    * key-limit (1000) publications while keeping per-version metadata
-    * growth bounded; bigger batches stay parquet-only.
-    */
-  private[lake] val InlineKeyCap = 1024
-
-  /** One inline key cell, rendered losslessly per the batch's WRITE
-    * type (shortest-repr floats/doubles round-trip exactly; decimals
-    * via plain string; date/timestamp as their integral catalyst
-    * encodings). Only the eq-delete-eligible scalar types appear —
-    * writeEqDeleteBatch enforces that set.
-    */
-  private[lake] def renderInlineKey(dt: DataType,
-      row: org.apache.spark.sql.catalyst.InternalRow,
-      i: Int): Option[String] =
-    if (row.isNullAt(i)) None
-    else Some(dt match {
-      case IntegerType | DateType => row.getInt(i).toString
-      case LongType | TimestampType | TimestampNTZType =>
-        row.getLong(i).toString
-      case BooleanType => row.getBoolean(i).toString
-      case FloatType => row.getFloat(i).toString
-      case DoubleType => row.getDouble(i).toString
-      case StringType => row.getUTF8String(i).toString
-      case d: DecimalType => row.getDecimal(i, d.precision, d.scale)
-        .toJavaBigDecimal.toPlainString
-      case other => throw new IllegalStateException(
-        s"inline eq-delete key of unsupported type $other")
-    })
-
-  private[lake] def parseInlineKey(dt: DataType,
-      s: Option[String]): Any = s match {
-    case None => null
-    case Some(v) => dt match {
-      case IntegerType | DateType => v.toInt
-      case LongType | TimestampType | TimestampNTZType => v.toLong
-      case BooleanType => v.toBoolean
-      case FloatType => v.toFloat
-      case DoubleType => v.toDouble
-      case StringType =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(v)
-      case d: DecimalType => org.apache.spark.sql.types.Decimal(
-        new java.math.BigDecimal(v), d.precision, d.scale)
-      case other => throw new IllegalStateException(
-        s"inline eq-delete key of unsupported type $other")
-    }
-  }
-
-  /** The `k<id>`-columned frame of one equality batch: the INLINE keys
-    * as a LocalRelation when the batch carries them (zero IO — and a
-    * LocalRelation build side broadcasts without launching a job),
-    * else the marker parquet files. Columns carry the batch's WRITE
-    * types either way; callers cast to the resolved read types exactly
-    * like the parquet path, so type promotions behave identically.
+  /** The `k<fieldId>`-columned frame of one equality batch, at the
+    * batch's WRITE types (callers cast to the resolved read types). A
+    * SMALL batch (the incremental-MV / upsert publication shape) is
+    * re-read by every MoR read, changelog and recompute probe of its
+    * range: its marker files decode ONCE on the driver, through the
+    * connector's delete-file reader, into a byte-bounded JVM cache,
+    * and every read plans a LocalRelation (no Spark job; a
+    * LocalRelation build side broadcasts without one). Sound: marker
+    * files are immutable once committed (a lost write attempt's files
+    * are never referenced). Bigger batches keep the distributed scan.
     */
   private[graft] def eqBatchFrame(spark: SparkSession,
-      b: EqDeleteMeta): DataFrame =
-    (b.inlineKeys, b.inlineTypes) match {
-      case (Some(rows), Some(ts)) =>
-        val types = ts.map(org.apache.spark.sql.types.DataType.fromDDL)
-        val attrs = b.fieldIds.zip(types).map { case (id, dt) =>
-          org.apache.spark.sql.catalyst.expressions.AttributeReference(
-            s"k$id", dt, nullable = true)()
-        }
-        val irows = rows.map(r =>
-          org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-            r.zip(types).map { case (v, dt) => parseInlineKey(dt, v) }))
-        org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-            attrs, irows))
-      case _ =>
-        // a SMALL non-inline batch (pre-r12 tables, distributed-source
-        // upserts of a few thousand keys) is re-read by every MoR read,
-        // changelog, and recompute probe of its range — localize it
-        // ONCE and serve a LocalRelation from a byte-bounded JVM cache.
-        // Sound: marker files are immutable once committed (a lost
-        // write attempt's files are never referenced). Bigger batches
-        // keep the distributed scan.
-        val total = b.paths.foldLeft(0L) { (acc, p) =>
-          acc + (try Files.size(Paths.get(p))
-          catch { case _: Exception => Long.MaxValue / 4 })
-        }
-        // one batch is schema-homogeneous by construction (written by
-        // one writeEqDeleteBatch) — its footer IS its schema, so the
-        // reads skip the inference job either way
-        lazy val batchSchema = FileStats.sparkSchemaFromFooter(b.paths.head)
-        if (total > SmallBatchBytes)
-          spark.read.schema(batchSchema).parquet(b.paths: _*)
-        else {
-          val key = b.paths.sorted.mkString("\u0000")
-          val (schema, rows) = smallBatchCache.getOrLoad(key, 0L) {
-            val df = spark.read.schema(batchSchema).parquet(b.paths: _*)
-            val collected = df.queryExecution.executedPlan
-              .executeCollect().map(_.copy()).toSeq
-            (df.schema, collected)
-          }
-          org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
-            org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-              schema.fields.toSeq.map(f =>
-                org.apache.spark.sql.catalyst.expressions
-                  .AttributeReference(f.name, f.dataType, f.nullable)()),
-              rows))
-        }
+      b: EqDeleteMeta): DataFrame = {
+    val total = b.paths.foldLeft(0L) { (acc, p) =>
+      acc + (try Files.size(Paths.get(p))
+      catch { case _: Exception => Long.MaxValue / 4 })
     }
+    // one batch is schema-homogeneous by construction (written by one
+    // writeEqDeleteBatch) — its footer IS its schema, so the reads
+    // skip the inference job either way
+    lazy val batchSchema = StructType(FileStats.sparkSchemaFromFooter(
+      b.paths.head).fields.map(_.copy(nullable = true)))
+    if (total > SmallBatchBytes)
+      spark.read.schema(batchSchema).parquet(b.paths: _*)
+    else {
+      val key = b.paths.sorted.mkString("\u0000")
+      val (schema, rows) = smallBatchCache.getOrLoad(key, 0L) {
+        val toUnsafe = org.apache.spark.sql.catalyst.expressions
+          .UnsafeProjection.create(batchSchema)
+        (batchSchema, b.paths.flatMap { p =>
+          val it = graft.sources.LakeSource.deleteFileRows(p, batchSchema)
+          try it.map(r => toUnsafe(r).copy()).toVector
+          finally it.close()
+        })
+      }
+      org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+          schema.fields.toSeq.map(f =>
+            org.apache.spark.sql.catalyst.expressions
+              .AttributeReference(f.name, f.dataType, f.nullable)()),
+          rows))
+    }
+  }
 
   /** Marker batches at or below this total size localize through
     * [[smallBatchCache]]; ~1 MiB of key parquet is ~50-100k keys —
@@ -1937,13 +1892,8 @@ object LakeTable {
   }
 
   private val smallBatchCache = new BlobCache[
-    (StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])](
-    64L << 20,
-    { case (_, rows) => rows.map {
-        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-          u.getSizeInBytes.toLong
-        case _ => 128L
-      }.sum + 1024L })
+    (StructType, Seq[org.apache.spark.sql.catalyst.expressions.UnsafeRow])](
+    64L << 20, { case (_, rows) => rows.map(_.getSizeInBytes.toLong).sum + 1024L })
 
   /** Every leaf of the frame's plan is a LocalRelation — the rows are
     * already on the driver, so the frame is bounded by construction
@@ -2423,6 +2373,7 @@ object LakeTable {
     val loc = tableLocation(warehouse, tableDef.databaseName, tableDef.tableName)
     require(!Files.exists(loc.resolve("metadata").resolve("version-hint.text")),
       s"table already exists at $loc")
+    requireUnreserved(tableDef.columns.map(_.name))
     val (schema, nextId) = FieldIds.assign(
       TypeMapper.toStructType(tableDef.columns), startId = 1)
     val spec = PartitionSpecMeta(0, buildSpecFields(tableDef.partitions, schema))

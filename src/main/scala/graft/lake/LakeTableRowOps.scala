@@ -49,28 +49,20 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val dir = dataDir.resolve(
       s"eqdel-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
     // a bounded LOCAL key set (the incremental-MV / touched-group
-    // publication shape): dedupe on the driver, write the one marker
-    // file driver-side (no Spark job), and INLINE the keys into the
-    // metadata up to the cap — every later read of the batch then
-    // plans a LocalRelation instead of a parquet scan + broadcast job
+    // publication shape): dedupe on the driver by value (java equality,
+    // the readers' key-set semantics: NaN matches NaN, -0.0 stays
+    // apart from 0.0) and write the one marker file driver-side (no
+    // Spark job)
     if (LakeTable.isLocalPlan(keys)) {
       proj.queryExecution.optimizedPlan match {
         case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
           val types = fields.map(_._2.dataType)
-          val seen = scala.collection.mutable.LinkedHashMap
-            .empty[Seq[Option[String]],
-              org.apache.spark.sql.catalyst.InternalRow]
-          lr.data.foreach { r =>
-            val k = types.zipWithIndex.map { case (dt, i) =>
-              LakeTable.renderInlineKey(dt, r, i) }
-            if (!seen.contains(k)) seen += k -> r.copy()
-          }
-          val inline = seen.size <= LakeTable.InlineKeyCap
-          return EqDeleteMeta(markerFiles(proj, dir, Some(seen.values.toSeq)),
-            ids, snapshotId,
-            inlineKeys = if (inline) Some(seen.keys.toSeq) else None,
-            inlineTypes =
-              if (inline) Some(types.map(_.simpleString)) else None)
+          val seen = new java.util.LinkedHashMap[java.util.List[Any],
+            org.apache.spark.sql.catalyst.InternalRow]()
+          lr.data.foreach(r =>
+            seen.putIfAbsent(r.toSeq(types).asJava, r.copy()))
+          return EqDeleteMeta(markerFiles(proj, dir,
+            Some(seen.values.asScala.toSeq)), ids, snapshotId)
         case _ => ()
       }
     }

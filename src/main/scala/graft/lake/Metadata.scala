@@ -116,11 +116,11 @@ case class DeleteSet(paths: Seq[String], rows: Long,
   * every matching row of every data file whose sequence is LOWER than
   * `seq` — rows (re)written at or after the batch survive, which is
   * what makes blind streaming upserts correct without reading the
-  * table at write time.
+  * table at write time. The marker files are the one stored copy of
+  * the keys: metadata written by older versions may still carry them
+  * inline (`inline-keys`/`inline-types`), which the parser ignores.
   */
-case class EqDeleteMeta(paths: Seq[String], fieldIds: Seq[Int], seq: Long,
-    inlineKeys: Option[Seq[Seq[Option[String]]]] = None,
-    inlineTypes: Option[Seq[String]] = None)
+case class EqDeleteMeta(paths: Seq[String], fieldIds: Seq[Int], seq: Long)
 case class SchemaVersion(id: Int, schema: StructType)
 
 /** Table-level column statistics (Iceberg's statistics-file concept,
@@ -560,12 +560,7 @@ object MetadataIO {
      else Map("eq-deletes" -> JArray(sn.eqDeletes.map(eq => JObject(Map(
        "paths" -> JArray(eq.paths.map(JString(_))),
        "field-ids" -> JArray(eq.fieldIds.map(i => JNumber(i))),
-       "seq" -> JNumber(eq.seq)) ++
-       eq.inlineKeys.map(rows => "inline-keys" -> (JArray(rows.map(r =>
-         JArray(r.map(_.map(JString(_): JValue)
-           .getOrElse(JNull))))): JValue)).toMap ++
-       eq.inlineTypes.map(ts => "inline-types" ->
-         (JArray(ts.map(JString(_): JValue)): JValue)).toMap))))) ++
+       "seq" -> JNumber(eq.seq))))))) ++
     (if (sn.removedPaths.isEmpty) Map.empty[String, JValue]
      else Map("removed-files" ->
        JArray(sn.removedPaths.map(JString(_))))) ++
@@ -658,13 +653,7 @@ object MetadataIO {
         val em = eq.asObj
         EqDeleteMeta(em("paths").asArr.map(_.asStr),
           em("field-ids").asArr.map(_.asInt),
-          em("seq").asLong,
-          inlineKeys = em.get("inline-keys").map(_.asArr.map(r =>
-            r.asArr.map {
-              case graft.schema.JNull => None
-              case v => Some(v.asStr)
-            })),
-          inlineTypes = em.get("inline-types").map(_.asArr.map(_.asStr)))
+          em("seq").asLong)
       }).getOrElse(Seq.empty),
       dvs = sm.get("deletion-vectors").map(_.asArr.map { dv =>
         val dm = dv.asObj

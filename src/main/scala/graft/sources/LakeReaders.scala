@@ -1,9 +1,5 @@
 package graft.sources
 
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.example.data.Group
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
@@ -16,9 +12,11 @@ import graft.schema.FieldIds
 /** The read-side decode stack of the lake DSv2 connector: the
   * per-scan columnar decision and reader factory, the columnar
   * clean-file and merge-on-read readers, their row-emitting sibling,
-  * and the equality-delete batch cache. Every data file decodes
-  * through ONE decoder, Spark's `VectorizedParquetRecordReader`
-  * ([[LakeVectorize.openReader]]); the readers differ only in what
+  * the equality-delete marker reader and the equality-delete batch
+  * cache. Every lake parquet file, data and delete files alike,
+  * decodes through ONE decoder, Spark's `VectorizedParquetRecordReader`
+  * ([[LakeVectorize.openReader]]; delete files through
+  * [[LakeSource.deleteFileRows]]); the readers differ only in what
   * they emit (batches or rows) and what they apply on top (constants,
   * nested-default overlays, deletes, metadata columns).
   */
@@ -169,11 +167,11 @@ private[sources] class LakeReaderFactory(
 }
 
 /** Changelog delete markers from equality-delete key files: one output
-  * row per key tuple, key columns filled by field id (physical-type-
-  * adaptive via `eqKeyValue` — batches written before a type promotion
-  * still read), a struct enclosing a nested key rebuilt around it, all
-  * other columns null. A key whose column the target lacks (dropped
-  * since, or pruned) fills nothing.
+  * row per key tuple, key columns filled by field id (each `k<id>`
+  * column decoded at the key's current type, so batches written
+  * before a type promotion still read), a struct enclosing a nested
+  * key rebuilt around it, all other columns null. A key whose column
+  * the target lacks (dropped since, or pruned) fills nothing.
   */
 private[sources] class EqMarkerReader(p: LakeEqMarkerPartition)
     extends PartitionReader[InternalRow] {
@@ -185,33 +183,41 @@ private[sources] class EqMarkerReader(p: LakeEqMarkerPartition)
       case st: StructType => st.fields.exists(holdsKey)
       case _ => false
     })
-  private def filler(f: StructField): Group => Any =
+  // the `k<id>` columns the target holds, in request order
+  private val requestedKeys =
+    scala.collection.mutable.ArrayBuffer.empty[StructField]
+  private def filler(f: StructField): InternalRow => Any =
     if (isKey(f)) {
-      val name = s"k${FieldIds.idOf(f)}"
-      (g: Group) => LakeSource.eqKeyValue(g, name, f.dataType)
+      val o = requestedKeys.length
+      requestedKeys += StructField(s"k${FieldIds.idOf(f)}", f.dataType,
+        nullable = true)
+      (r: InternalRow) => LakeSource.copiedValue(r, o, f.dataType)
     } else f.dataType match {
       case st: StructType if holdsKey(f) =>
         val kids = st.fields.map(filler)
-        (g: Group) => new GenericInternalRow(kids.map(_(g)))
-      case _ => (_: Group) => null
+        (r: InternalRow) => new GenericInternalRow(kids.map(_(r)))
+      case _ => (_: InternalRow) => null
     }
-  private val fillers: Array[Group => Any] = p.target.fields.map(filler)
+  private val fillers: Array[InternalRow => Any] = p.target.fields.map(filler)
+  // a target holding no key still emits one row per tuple: the
+  // generated row-index column drives the row count
+  private val requested: StructType =
+    if (requestedKeys.nonEmpty) StructType(requestedKeys.toSeq)
+    else StructType(Seq(StructField(LakeVectorize.RowIndexTempCol,
+      LongType, nullable = true)))
   private val files = p.paths.iterator
-  private var reader: ParquetReader[Group] = _
-  private var cur: Group = _
+  private var rows: Iterator[InternalRow] with java.io.Closeable = _
+  private var cur: InternalRow = _
   override def next(): Boolean = {
-    cur = if (reader == null) null else reader.read()
-    while (cur == null && files.hasNext) {
-      if (reader != null) reader.close()
-      reader = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(files.next())).build()
-      cur = reader.read()
+    while ((rows == null || !rows.hasNext) && files.hasNext) {
+      if (rows != null) rows.close()
+      rows = LakeSource.deleteFileRows(files.next(), requested)
     }
-    cur != null
+    rows != null && rows.hasNext && { cur = rows.next(); true }
   }
   override def get(): InternalRow =
     new GenericInternalRow(fillers.map(_(cur)))
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = if (rows != null) rows.close()
 }
 
 /** Maps a (target, file) schema pair onto the ONE decoder: the
@@ -758,7 +764,7 @@ private[graft] object BatchRowLakeReader {
     // carriers the projection pruned are requested once each, cut down
     // to the key chains they hold (parquet clips to just those leaves),
     // leaves AS the keys' current types: the vectorized updaters widen
-    // exactly like eqKeyValue's int→long conversion. A carrier absent
+    // them as they widen the batches' own `k<id>` columns. A carrier absent
     // from the file reads as its own default: the key's initial default
     // for a top-level key, null for a struct
     val keys = p.eqBatches.flatMap(b =>
@@ -863,8 +869,14 @@ private[graft] object BatchRowLakeReader {
       } else -1
     // a requested-name collision would make the name-based clip bind
     // the wrong column: a data column spelled like the row-index temp
-    // column or a lineage column
-    val names = fields.map(_.name.toLowerCase(java.util.Locale.ROOT))
+    // column or a lineage column. Tables cannot take those names, but
+    // a registered file's footer can carry the row-index one
+    val fileRowIdx =
+      if (rowIdxPos < 0) Nil
+      else fileSchema.fieldNames.toSeq.filter(
+        _.equalsIgnoreCase(LakeVectorize.RowIndexTempCol))
+    val names = (fields.map(_.name) ++ fileRowIdx)
+      .map(_.toLowerCase(java.util.Locale.ROOT))
     if (names.distinct.size != names.size)
       fail(s"requested columns collide by name: " +
         names.diff(names.distinct).distinct.mkString(", "))
@@ -1076,7 +1088,8 @@ private[sources] class BatchRowLakeReader(p: LakeFilePartition,
   * about to reuse), with memoized loads so concurrent first-touch
   * partitions share one read instead of racing parallel ones; batches
   * are upsert-sized and compaction retires them, so the cache stays
-  * small in steady state.
+  * small in steady state. Each `k<id>` column decodes at the key's
+  * current type, so a tuple equals the data-row key it deletes.
   */
 private[sources] object EqBatchCache {
   private val cache = new LakeSource.LruMemoCache[
@@ -1092,20 +1105,20 @@ private[sources] object EqBatchCache {
   private def load(b: LakeEqBatch)
       : java.util.HashSet[java.util.ArrayList[Any]] = {
     val set = new java.util.HashSet[java.util.ArrayList[Any]]()
+    val types = b.keyFields.fields.map(_.dataType)
+    val requested = StructType(b.keyFields.fields.map(kf =>
+      StructField(s"k${FieldIds.idOf(kf)}", kf.dataType, nullable = true)))
     b.paths.foreach { path =>
-      val r = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(path)).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          val tuple = new java.util.ArrayList[Any](b.keyFields.fields.length)
-          b.keyFields.fields.foreach(kf =>
-            tuple.add(LakeSource.eqKeyValue(g, s"k${FieldIds.idOf(kf)}",
-              kf.dataType)))
-          set.add(tuple)
-          g = r.read()
+      val rows = LakeSource.deleteFileRows(path, requested)
+      try rows.foreach { r =>
+        val tuple = new java.util.ArrayList[Any](types.length)
+        var i = 0
+        while (i < types.length) {
+          tuple.add(LakeSource.copiedValue(r, i, types(i)))
+          i += 1
         }
-      } finally r.close()
+        set.add(tuple)
+      } finally rows.close()
     }
     set
   }

@@ -2,13 +2,9 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,6 +33,15 @@ private[graft] object LakeSource {
   def isMetaCol(name: String): Boolean =
     name == FileMetaCol || name == PosMetaCol ||
       name == RowIdMetaCol || name == LastUpdMetaCol
+
+  /** Top-level column names no table may take, case-insensitively:
+    * the metadata columns, and Spark's row-index temporary column
+    * (the vectorized reader fills any requested column of that name
+    * with row indexes instead of the stored values).
+    */
+  def isReservedColumn(name: String): Boolean =
+    (Seq(FileMetaCol, PosMetaCol, RowIdMetaCol, LastUpdMetaCol) :+
+      LakeVectorize.RowIndexTempCol).exists(_.equalsIgnoreCase(name))
 
   /** An engine-internal read of `t` through the connector: a
     * `DataSourceV2Relation` over a [[LakeSparkTable]] pinned to the
@@ -641,22 +646,59 @@ private[graft] object LakeSource {
   private val deletedPosUnions =
     new LruMemoCache[java.util.HashSet[java.lang.Long]](256)
 
+  /** The rows of one delete file (a position-delete file or an
+    * equality batch's marker file) decoded at `requested` by the ONE
+    * decoder data files use: a key written before an int→long,
+    * float→double or decimal-precision promotion reads back at its
+    * current type, in the representation data rows decode into
+    * (UTF8String, Decimal, days as Int), so key tuples and data-row
+    * keys compare exactly. Rows are reused between `next` calls: copy
+    * what outlives one. Close when done.
+    */
+  def deleteFileRows(path: String, requested: StructType)
+      : Iterator[InternalRow] with java.io.Closeable = {
+    val reader = LakeVectorize.openReader(path, requested, None,
+      returnBatches = false)
+    new Iterator[InternalRow] with java.io.Closeable {
+      private var pending = false
+      override def hasNext: Boolean =
+        pending || { pending = reader.nextKeyValue(); pending }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException(path)
+        pending = false
+        reader.getCurrentValue.asInstanceOf[InternalRow]
+      }
+      override def close(): Unit = reader.close()
+    }
+  }
+
+  /** Value `i` of a decoded delete-file row, detached from the reused
+    * column vectors.
+    */
+  def copiedValue(r: InternalRow, i: Int, dt: DataType): Any =
+    if (r.isNullAt(i)) null
+    else r.get(i, dt) match {
+      case s: UTF8String => s.clone()
+      case v => v
+    }
+
   private def parseDeleteFile(dp: String)
       : Map[String, java.util.HashSet[java.lang.Long]] = {
     val out = scala.collection.mutable.HashMap
       .empty[String, java.util.HashSet[java.lang.Long]]
-    val r = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(dp)).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        out.getOrElseUpdate(
-          LakeTable.normalizePath(g.getString("file_path", 0)),
+    val rows = deleteFileRows(dp, LakeTable.DeleteFileSchema)
+    // rows arrive grouped by data file: resolve the set once per run
+    var runPath: UTF8String = null
+    var run: java.util.HashSet[java.lang.Long] = null
+    try rows.foreach { r =>
+      val fp = r.getUTF8String(0)
+      if (fp != runPath) {
+        runPath = fp.clone()
+        run = out.getOrElseUpdate(LakeTable.normalizePath(fp.toString),
           new java.util.HashSet[java.lang.Long]())
-          .add(g.getLong("pos", 0))
-        g = r.read()
       }
-    } finally r.close()
+      run.add(r.getLong(1))
+    } finally rows.close()
     out.toMap
   }
 
@@ -685,54 +727,6 @@ private[graft] object LakeSource {
         }
       })
     }
-
-  /** One key value from an equality-delete parquet record, reconciled
-    * to the current key type: the batch was written under the schema
-    * at delete time, so a later int→long / float→double promotion must
-    * not unmatch it. Values come back as Catalyst internals (UTF8String
-    * for strings) — the representation the readers decode data rows
-    * into, so tuple equality is exact.
-    */
-  def eqKeyValue(g: Group, name: String, dt: DataType): Any = {
-    if (g.getFieldRepetitionCount(name) == 0) return null
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    // decimal keys: decode the unscaled value by PHYSICAL encoding
-    // (Spark writes INT32 for p<=9, INT64 for p<=18, else binary
-    // two's-complement) into a Decimal of the TARGET precision/scale —
-    // the same representation the data-file extractor produces, so
-    // tuple equality and hashing line up
-    dt match {
-      case d: DecimalType =>
-        return g.getType.getType(name).asPrimitiveType()
-          .getPrimitiveTypeName match {
-          case INT32 => org.apache.spark.sql.types.Decimal(
-            g.getInteger(name, 0).toLong, d.precision, d.scale)
-          case INT64 => org.apache.spark.sql.types.Decimal(
-            g.getLong(name, 0), d.precision, d.scale)
-          case _ => org.apache.spark.sql.types.Decimal(
-            BigDecimal(new java.math.BigInteger(
-              g.getBinary(name, 0).getBytes), d.scale),
-            d.precision, d.scale)
-        }
-      case _ => ()
-    }
-    val raw: Any = g.getType.getType(name).asPrimitiveType()
-      .getPrimitiveTypeName match {
-      case INT64 => g.getLong(name, 0)
-      case INT32 => g.getInteger(name, 0)
-      case BINARY => UTF8String.fromString(g.getString(name, 0))
-      case DOUBLE => g.getDouble(name, 0)
-      case FLOAT => g.getFloat(name, 0)
-      case BOOLEAN => g.getBoolean(name, 0)
-      case other => throw new UnsupportedOperationException(
-        s"equality-delete key primitive $other")
-    }
-    dt match {
-      case LongType => raw match { case i: Int => i.toLong; case v => v }
-      case DoubleType => raw match { case f: Float => f.toDouble; case v => v }
-      case _ => raw
-    }
-  }
 
   /** Planning-time externality test: a data file OUTSIDE the table's
     * own data directory was registered by reference (`add_files`) and

@@ -13,7 +13,7 @@ import graft.lake.{Engine, LakeTable, Reconcile}
   * [[ChangelogReference]] (the DataFrame union it replaced): seeded
   * random histories on a v2 (delete files) and a v3 (deletion-vector
   * deltas) table — appends, MoR deletes and merges, upserts with
-  * inline and file equality batches, a struct-nested key batch, an
+  * local and distributed equality batches, a struct-nested key batch, an
   * ALTER (int→long promotion, a rename, an added column), full and
   * scoped compactions (byte moves), and a copy-on-write overwrite
   * read with `includeCowDiffs`. Every compared range must yield the
@@ -36,6 +36,12 @@ class ChangelogRandomSpec extends AnyFunSuite {
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
+
+  /** The newest equality batch is small: its key frame is served from
+    * a LocalRelation (no Spark job), whatever wrote it.
+    */
+  private def newestBatchLocal(t: LakeTable): Boolean = LocalPlans.allLocal(
+    LakeTable.eqBatchFrame(spark, t.metadata.snapshots.last.eqDeletes.head))
 
   test("changelogBetween matches the union reference over random " +
       "v2/v3 histories") {
@@ -103,13 +109,17 @@ class ChangelogRandomSpec extends AnyFunSuite {
             val lo = rnd.nextInt(nextId.toInt).toLong
             positional(_.deleteMoR(spark, col("id").between(lo, lo + 6)))
           case 2 =>
-            // inline equality batch: a local upsert source
+            // driver-written equality batch: a local upsert source
             val ids = Seq.fill(4)(rnd.nextInt(nextId.toInt).toLong).distinct
             t.upsertMoR(spark, local(ids), Seq("id"))
+            assert(newestBatchLocal(t), tag)
+            seen += "local batch"
           case 3 =>
-            // file equality batch: a distributed upsert source
+            // task-written equality batch: a distributed upsert source
             val lo = rnd.nextInt(nextId.toInt).toLong
             t.upsertMoR(spark, distributed(lo, lo + 5), Seq("id"))
+            assert(newestBatchLocal(t), tag)
+            seen += "distributed batch"
           case 4 =>
             // struct-nested equality key
             t.deleteByKeysMoR(spark,
@@ -153,8 +163,6 @@ class ChangelogRandomSpec extends AnyFunSuite {
       val nestedId = graft.schema.FieldIds.idOf(t.currentSchema("meta")
         .dataType.asInstanceOf[org.apache.spark.sql.types.StructType]("region"))
       seen ++= Seq(
-        "inline batch" -> batches.exists(_.inlineKeys.isDefined),
-        "file batch" -> batches.exists(_.inlineKeys.isEmpty),
         "nested key" -> batches.exists(_.fieldIds == Seq(nestedId)),
         "delete files" -> snaps.exists(_.deletePaths.nonEmpty),
         "vector deltas" -> snaps.exists(_.dvs.nonEmpty),
@@ -163,7 +171,7 @@ class ChangelogRandomSpec extends AnyFunSuite {
         .filter(_._2).map(_._1)
     }
     // the seeded histories exercised every marker kind
-    assert(seen == Set("inline batch", "file batch", "nested key",
+    assert(seen == Set("local batch", "distributed batch", "nested key",
       "delete files", "vector deltas", "byte move", "overwrite"), seen)
   }
 }

@@ -20,8 +20,8 @@ import graft.lake.{Engine, LakeTable, RangeFilter, Reconcile}
   * ([[ParquetReference]]: parquet read + reconciling projection,
   * driver-collected delete positions anti-joined on `_metadata`):
   * `LakeTable.read`, `readLineage` and the merge-on-read row-op scan
-  * under merge-on-read position deletes, equality batches (inline and
-  * file-based), v3 deletion vectors, time travel across an ALTER,
+  * under merge-on-read position deletes, equality batches (driver-
+  * and task-written), v3 deletion vectors, time travel across an ALTER,
   * partition pruning and stats filters; and the pinned file-list reads
   * (`readPinned`) of each of their callers — constraint scans,
   * `changesBetween`, changelog delete markers, the copy-on-write
@@ -248,16 +248,20 @@ class ConnectorRandomSpec extends AnyFunSuite {
         i => i != null && i % 3 == 0), rnd), Seq("id"))
       check("mergeMoR")
       checkPos("mergeMoR")
-      // equality batches: a local key set (inline keys) and an
-      // RDD-backed one (marker files only)
+      // equality batches: a local key set (one driver-written marker
+      // file) and an RDD-backed one (task-written marker files); both
+      // are small, so their key frames are LocalRelations (no job)
+      def newestBatch = load().metadata.snapshots.last.eqDeletes.head
+      def servedLocally(b: graft.lake.EqDeleteMeta): Boolean =
+        LocalPlans.allLocal(LakeTable.eqBatchFrame(spark, b))
       load().upsertMoR(spark, rowsFor(schema, ids(5 until 15), rnd),
         Seq("id"))
-      assert(load().metadata.snapshots.last.eqDeletes.head.inlineKeys
-        .isDefined, "a local upsert batch inlines its keys")
+      assert(newestBatch.paths.size == 1 && servedLocally(newestBatch),
+        "a local upsert batch writes one marker file, served locally")
       load().deleteByKeysMoR(spark, spark.range(25, 40, 1, 2)
         .select(col("id")))
-      assert(load().metadata.snapshots.last.eqDeletes.head.inlineKeys
-        .isEmpty, "a distributed key set writes marker files only")
+      assert(servedLocally(newestBatch),
+        "a small distributed key set is served locally too")
       check("eq batches")
       load().append(rowsFor(schema, ids(100 until 110), rnd))
       check("eq batches + later append")

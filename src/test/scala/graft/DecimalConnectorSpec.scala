@@ -103,7 +103,7 @@ class DecimalConnectorSpec extends AnyFunSuite {
     val native = t.read(spark).select("k32", "v").collect()
       .map(r => r.getDecimal(0).toString -> r.getString(1)).toMap
     assert(native == expect, "native read")
-    // DSv2 executor path (eqKeyValue decimal decode)
+    // DSv2 executor path (marker keys decoded by the data-file decoder)
     val dsv2 = spark.read.format("graft-lake")
       .option("warehouse", wh).option("database", "d")
       .option("table", "teq").load()

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -536,28 +538,69 @@ class EqDeleteSpec extends AnyFunSuite {
     assert(squash.files.forall(_.seq == 1L))
   }
 
-  test("the inline cap holds: a local batch past 1024 keys writes its " +
-      "marker file driver-side but does NOT inline (metadata growth " +
-      "stays bounded); application is identical either way") {
+  private def countJobs[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      var prev = -1
+      var cur = jobs.get
+      while (prev != cur) { Thread.sleep(100); prev = cur; cur = jobs.get }
+      (r, cur)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** No metadata document of the table stores a key copy. */
+  private def noInlineKeys(wh: String): Boolean = {
+    val md = LakeTable.tableLocation(wh, "d", "t").resolve("metadata")
+    Files.list(md).iterator().asScala.filter(_.toString.endsWith(".json"))
+      .forall(p => !Files.readString(p).contains("inline-keys"))
+  }
+
+  test("a local batch writes ONE marker file driver-side and stores its " +
+      "keys only there; a small batch is served with zero Spark jobs, a " +
+      "batch past 1 MiB reads distributed; application is identical") {
     import spark.implicits._
-    val (wh, t) = mk("inlinecap")
+    val (wh, t) = mk("smallbatch")
     t.append((1L to 3000L).map(i => (i, s"v$i")).toDF("id", "v"))
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       (1L to 2000L).map(i => Tuple1(i)).toDF("id"))
     val t2 = LakeTable.load(wh, "d", "t")
     val batch = t2.metadata.snapshots.last.eqDeletes.head
-    assert(batch.inlineKeys.isEmpty && batch.inlineTypes.isEmpty,
-      "a 2000-key batch must not inline")
-    assert(batch.paths.size == 1, "still ONE driver-written marker file")
+    assert(batch.paths.size == 1, "ONE driver-written marker file")
+    assert(noInlineKeys(wh), "the metadata stores no key copy")
+    // first use of the batch decodes the marker on the driver
+    val (small, jobs) = countJobs {
+      val f = LakeTable.eqBatchFrame(spark, batch)
+      (f, f.collect().map(_.getLong(0)).toSet)
+    }
+    assert(jobs == 0 && LocalPlans.allLocal(small._1), s"$jobs jobs")
+    assert(small._2 == (1L to 2000L).toSet)
     assert(t2.read(spark).count() == 1000L)
     assert(t2.read(spark).agg(org.apache.spark.sql.functions.min("id"))
       .head().getLong(0) == 2001L)
+    // a distributed key set past 1 MiB of marker parquet keeps the
+    // distributed scan
+    t2.deleteByKeysMoR(spark, spark.range(0, 300000).select(
+      (rand(7) * 1e15).cast("long").plus(1000000L).as("id")))
+    val big = LakeTable.load(wh, "d", "t").metadata.snapshots.last
+      .eqDeletes.head
+    assert(big.paths.map(p => Files.size(java.nio.file.Paths.get(p))).sum >
+      (1L << 20))
+    val bigFrame = LakeTable.eqBatchFrame(spark, big)
+    assert(!LocalPlans.allLocal(bigFrame))
+    assert(bigFrame.count() == 300000L)
+    assert(LakeTable.load(wh, "d", "t").read(spark).count() == 1000L)
   }
 
-  test("tiny local marker batches INLINE their keys in metadata — " +
-      "all eligible types round-trip (nulls, decimals, floats), the " +
-      "applied state equals the parquet path, and promotions cast " +
-      "like parquet") {
+  test("tiny local marker batches store their keys only in the marker " +
+      "file — all eligible types round-trip (nulls, decimals, floats) " +
+      "and key promotions widen them on read") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-eqdel-inline").toString
     Engine.processTableDefJson(wh,
@@ -579,7 +622,7 @@ class EqDeleteSpec extends AnyFunSuite {
       (3, null, null, null, "r3"),
       (4, 0.3f, "1.500", "a", "r4"))))
     // multi-column keyed delete incl. a NULL-keyed tuple (null-safe
-    // matching) — a local frame, so the batch inlines
+    // matching) — a local frame, so the marker is written driver-side
     LakeTable.load(wh, "d", "t").deleteByKeysMoR(spark,
       Seq[(Integer, java.lang.Float, String, String)](
         (1, 0.3f, "1.500", "a"),
@@ -589,14 +632,13 @@ class EqDeleteSpec extends AnyFunSuite {
           col("dec").cast("decimal(9,3)").as("dec"), col("s")))
     val t2 = LakeTable.load(wh, "d", "t")
     val batch = t2.metadata.snapshots.last.eqDeletes.head
-    assert(batch.inlineKeys.isDefined && batch.inlineTypes.isDefined,
-      "a tiny local batch must inline its keys")
-    assert(batch.inlineKeys.get.size == 2)
+    assert(noInlineKeys(wh), "the metadata stores no key copy")
+    assert(spark.read.parquet(batch.paths: _*).count() == 2L)
     // rows 1 and 3 die (exact float/decimal/null matching); 2 and 4
     // survive (4 shares every key value EXCEPT id)
     assert(t2.read(spark).select("v").collect().map(_.getString(0))
       .toSet == Set("r2", "r4"))
-    // the changelog's marker rows come from the inline path too
+    // the changelog's marker rows decode from the marker file
     val markers = t2.changelogBetween(spark, 1L,
         t2.metadata.snapshots.map(_.id).max)
       .filter(col("_change_type") === "delete")
@@ -607,8 +649,8 @@ class EqDeleteSpec extends AnyFunSuite {
       (Some(1), Some(0.3f), Some("1.500000000000000000"), Some("a")),
       (None, None, None, None)) ||
       markers.exists(_._1.contains(1)), s"got $markers")
-    // key-column promotion (int -> long, float -> double): the inline
-    // decode parses at WRITE types then casts, exactly like parquet —
+    // key-column promotion (int -> long, float -> double): the marker
+    // decodes at the keys' current types, exactly like the data rows —
     // the float 0.3f must still strike after widening to double
     LakeTable.load(wh, "d", "t").evolve(graft.schema.TableDef.parse(
       """{"database_name":"d","table_name":"t","columns":[
@@ -621,6 +663,6 @@ class EqDeleteSpec extends AnyFunSuite {
     val t3 = LakeTable.load(wh, "d", "t")
     assert(t3.read(spark).select("v").collect().map(_.getString(0))
       .toSet == Set("r2", "r4"),
-      "inline keys must apply identically across a key promotion")
+      "marker keys must apply identically across a key promotion")
   }
 }

@@ -235,25 +235,31 @@ class GroupWalkRetirementSpec extends AnyFunSuite {
     assert(rows(read(wh).select("k")) == Seq("[100]", "[50]"))
   }
 
-  test("a data column spelled like the reader's row-index column fails " +
-      "a position-consuming read loudly, naming the file") {
+  test("an add_files'd file carrying a column spelled like the reader's " +
+      "row-index column fails a position-consuming read loudly, naming " +
+      "the file") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-gwr-collide").toString
     val rowIdx = org.apache.spark.sql.execution.datasources.parquet
       .GraftRowIndexBridge.RowIndexTempCol
     Engine.processTableDefJson(wh,
-      s"""{"database_name":"d","table_name":"t","columns":[
-         |{"column_name":"k","data_type":"long"},
-         |{"column_name":"$rowIdx","data_type":"long"}],
+      """{"database_name":"d","table_name":"t","columns":[
+         |{"column_name":"k","data_type":"long"}],
          |"partitions":[]}""".stripMargin)
-    LakeTable.load(wh, "d", "t").append(
-      Seq((1L, 7L), (2L, 8L)).toDF("k", rowIdx))
+    // tables cannot take the name, but a registered file's footer can
+    val ext = Files.createTempDirectory("graft-gwr-collide-ext").toString
+    Seq((1L, 7L), (2L, 8L)).toDF("k", rowIdx).coalesce(1)
+      .write.mode("overwrite").parquet(ext)
+    val file = Files.list(java.nio.file.Paths.get(ext)).filter(
+      _.toString.endsWith(".parquet")).findFirst().get().toString
+    LakeTable.load(wh, "d", "t").addFiles(spark, Seq(file))
+    assert(rows(read(wh)) == Seq("[1]", "[2]"))
     val e = intercept[Exception] {
-      read(wh).select(col("k"), col(rowIdx), col("_graft_pos")).collect()
+      read(wh).select(col("k"), col("_graft_pos")).collect()
     }
     val ise = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).collectFirst { case x: IllegalStateException => x }
     assert(ise.exists(x => x.getMessage.contains("collide by name") &&
-      x.getMessage.contains(".parquet")), s"got $e")
+      x.getMessage.contains(file)), s"got $e")
   }
 }

@@ -15,11 +15,11 @@ import graft.lake.{Align, BloomFilters, Engine, FileStats, LakeTable}
 
 /** Seeded differential for the r12 publication fast paths: the SAME
   * random op sequence runs into two tables — one fed driver-resident
-  * frames (the driver-side LocalRelation write + inline eq-keys), one
+  * frames (the driver-side LocalRelation write + marker file), one
   * fed the same frames repartitioned (the distributed job path) — and the
   * visible state, the changelog, and the applied-delete semantics must
   * be identical at every checkpoint. Catches any divergence between
-  * the driver-written parquet/inline-key decode and what a Spark job
+  * the driver-written parquet/marker-key decode and what a Spark job
   * would have produced (value encoding, null handling, dedupe,
   * sequencing). The driver run of the direct writer is also pinned
   * against the task run for every partition transform, and against
@@ -97,13 +97,16 @@ class LocalWriteRandomSpec extends AnyFunSuite {
       }
       assert(read(whA) == read(whB), s"state diverged at step $step")
     }
-    // the fast-path table really used inline batches somewhere
-    val inlined = LakeTable.load(whA, "d", "t").metadata.snapshots
-      .flatMap(_.eqDeletes).count(_.inlineKeys.isDefined)
-    val slowInlined = LakeTable.load(whB, "d", "t").metadata.snapshots
-      .flatMap(_.eqDeletes).count(_.inlineKeys.isDefined)
-    assert(inlined > 0, "the fast path must have inlined key batches")
-    assert(slowInlined == 0, "the forced path must not inline")
+    // every batch of both tables is small: its key frame is served from
+    // a LocalRelation; the fast-path table's batches are ONE
+    // driver-written marker file each
+    def batches(wh: String) = LakeTable.load(wh, "d", "t").metadata
+      .snapshots.flatMap(_.eqDeletes)
+    def servedLocally(b: graft.lake.EqDeleteMeta): Boolean =
+      LocalPlans.allLocal(LakeTable.eqBatchFrame(spark, b))
+    assert(batches(whA).nonEmpty && batches(whB).nonEmpty)
+    assert(batches(whA).forall(b => b.paths.size == 1 && servedLocally(b)))
+    assert(batches(whB).forall(servedLocally))
     // changelogs agree row-for-row (same ordinals, types, values)
     def log(wh: String): Seq[(Long, String, Int)] = {
       val t = LakeTable.load(wh, "d", "t")
