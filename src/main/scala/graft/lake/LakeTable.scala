@@ -1895,21 +1895,22 @@ object LakeTable {
     (StructType, Seq[org.apache.spark.sql.catalyst.expressions.UnsafeRow])](
     64L << 20, { case (_, rows) => rows.map(_.getSizeInBytes.toLong).sum + 1024L })
 
-  /** Every leaf of the frame's plan is a LocalRelation — the rows are
-    * already on the driver, so the frame is bounded by construction
-    * (the incremental-MV publication shape). Such writes coalesce to
-    * one task/file: LocalTableScan otherwise parallelizes its handful
-    * of rows to leafNodeDefaultParallelism (= cores) slices.
+  /** Every leaf of the frame's OPTIMIZED plan is a LocalRelation — the
+    * rows are on the driver, so the frame is bounded by construction:
+    * built from local rows (the incremental-MV publication shape), or
+    * read from a lake scan small enough to decode on the driver
+    * ([[graft.sources.LakeLocalScan]]). Such writes coalesce to one
+    * task/file: LocalTableScan otherwise parallelizes its handful of
+    * rows to leafNodeDefaultParallelism (= cores) slices.
     */
   private[lake] def isLocalPlan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       LocalRelation, Repartition, RepartitionByExpression}
-    val plan = df.queryExecution.logical
-    val leaves = plan.collectLeaves()
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]) &&
       // a caller that explicitly re-partitioned its local rows asked
       // for that parallelism/file spread — respect it
-      !plan.exists {
+      !df.queryExecution.logical.exists {
         case _: Repartition | _: RepartitionByExpression => true
         case _ => false
       }
@@ -1917,9 +1918,7 @@ object LakeTable {
 
   /** The rows of a local frame ([[isLocalPlan]]) whose optimized plan
     * folds to a LocalRelation: they are on the driver, so a write of
-    * them runs there, without a job. None for any other frame; the
-    * isLocalPlan pre-check keeps the extra optimizer pass off
-    * scan-derived writes.
+    * them runs there, without a job. None for any other frame.
     */
   private[lake] def localRows(df: DataFrame)
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =

@@ -319,18 +319,20 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     *  - a driver-resident source ([[LakeTable.isLocalPlan]]) whose key
     *    columns have the table's types and compare on the driver
     *    ([[driverKey]]), at least one of them not floating point, runs
-    *    ONE Spark job: the pinned row-op scan, filtered in its tasks by
-    *    the source's values of the non-floating key columns, collected.
+    *    at most ONE Spark job: the pinned row-op scan, filtered by the
+    *    source's values of the non-floating key columns, collected (no
+    *    job when the scan decodes on the driver,
+    *    [[graft.sources.LakeLocalScan]]).
     *    The rows pair with the source rows on the driver
     *    ([[matchOnDriver]]), and the positions and new rows are written
     *    there: one delete file (or one deletion-vector container),
     *    whatever the scan's packing, and the updated copies and the
     *    inserts one data file each per partition value;
     *  - any other source keeps the distributed join against the scan.
-    *    A scan-derived source is not bounded by the driver, so neither
-    *    is its match; nor is the scan of a key that is all floating
-    *    point, which no task-side filter narrows (`In` does not compare
-    *    NaN and -0.0 as a join does).
+    *    A source over the driver-decode bound is not bounded by the
+    *    driver, so neither is its match; nor is the scan of a key that
+    *    is all floating point, which no filter narrows (`In` does not
+    *    compare NaN and -0.0 as a join does).
     */
   def mergeMoR(spark: SparkSession, source: DataFrame, keys: Seq[String],
       onMatch: String = "update",
@@ -472,8 +474,9 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     case _ => false
   }
 
-  /** The driver half of a driver-resident [[mergeMoR]]: ONE job scans
-    * the target's live rows, keeps in the scan tasks those whose value
+  /** The driver half of a driver-resident [[mergeMoR]]: one scan of
+    * the target's live rows (on the driver under the table's
+    * driver-decode bound, else one job) keeps those whose value
     * of every non-floating key column is among the source's ([[narrows]];
     * [[mergeMoR]] routes here only keys with at least one such column),
     * and collects them. Each row pairs with the source row of its key
@@ -628,7 +631,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     * driver collects only O(affected files) serialized bitmaps; pairs
     * already on the driver, [[LakeTable.localRows]], group there), the
     * driver merges each with the file's previous vector and any
-    * legacy positional parquet state, and writes ONE container.
+    * legacy positional parquet state (decoded on the driver, no job),
+    * and writes ONE container.
     * Returns the DvMeta entries plus the newly-deleted counts, or
     * None when no pair survived.
     */
@@ -663,18 +667,17 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val affected = newPos.map(_._1).toSet
     // transition case: an affected file still carries v2 positional
     // parquet state — fold those positions into the new vector so the
-    // REPLACE semantics lose nothing (read once, per affected file)
-    val legacyByFile: Map[String, Roaring64Bitmap] = {
-      val legacyPaths = affected.toSeq
-        .flatMap(p => live.get(p).toSeq.filter(_.dv.isEmpty).flatMap(_.paths))
-        .distinct
-      if (legacyPaths.isEmpty) Map.empty
-      else bitmapPerFile(spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(legacyPaths: _*)
-          .filter(col("file_path").isin(affected.toSeq: _*)))
-        .map { case (p, b) => p -> DeletionVectors.deserialize(b) }
-        .toMap
-    }
+    // REPLACE semantics lose nothing (decoded on the driver by the
+    // readers' own position loader, once per affected file)
+    val legacyByFile: Map[String, Roaring64Bitmap] = affected.toSeq
+      .flatMap(p => live.get(p).filter(d => d.dv.isEmpty && d.paths.nonEmpty)
+        .map { d =>
+          val bm = new Roaring64Bitmap()
+          graft.sources.LakeSource.loadDeletedPositions(d.paths, p)
+            .forEach(pos => bm.addLong(pos))
+          p -> bm
+        })
+      .toMap
     val blobs = newPos.toSeq.sortBy(_._1).map { case (p, deltaBytes) =>
       val delta = DeletionVectors.deserialize(deltaBytes)
       val prevRows = live.get(p).map(_.rows).getOrElse(0L)

@@ -706,7 +706,9 @@ object LakeReadQueries extends QueryModule {
       hit.collect()
       require(graft.sources.MatViewRewrite.lastRewrite
         .contains(("mvr", "roll")), "fresh MV must answer the query")
-      require(hit.queryExecution.executedPlan.toString
+      // the rewrite is an analysis rule: the analyzed plan names the
+      // table read, whether its scan runs as a job or on the driver
+      require(hit.queryExecution.analyzed.toString
         .contains("__mat_roll"), "plan must scan the backing table")
       // stale: a source commit the view hasn't merged — fall back to
       // the source and serve the LIVE rows
@@ -776,7 +778,7 @@ object LakeReadQueries extends QueryModule {
         .contains("rollup"), "the coarser aggregate must roll up " +
         s"from the finer MV, got ${
           graft.sources.MatViewRewrite.lastRewriteKind}")
-      require(hit.queryExecution.executedPlan.toString
+      require(hit.queryExecution.analyzed.toString
         .contains("__mat_fine"), "plan must scan the backing table")
       // count(DISTINCT group-key) derives from the backing key column
       val dct = vsql("SELECT o_custkey, count(DISTINCT o_prio) AS " +
@@ -1832,6 +1834,10 @@ object LakeReadQueries extends QueryModule {
           col("l_partkey").as("l_part"),
           col("l_returnflag").as("l_ship"),
           col("l_quantity").as("l_qty"))
+      // the audit reads the scan's own metric: the scan runs as a job
+      // (driver decode off, read.local-scan.max-bytes = 0)
+      LakeTable.load(wh, "pd", "li").updateProperties(
+        Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
       // one sorted file => row groups carry tight disjoint key ranges
       LakeTable.load(wh, "pd", "li")
         .append(li.repartition(1).sortWithinPartitions("l_okey"))
@@ -1936,6 +1942,10 @@ object LakeReadQueries extends QueryModule {
           |{"column_name":"sname","data_type":"string"}],
           |"partitions":[]}""".stripMargin)
       LakeTable.load(wh, "ev", "sup").renameColumn("sname", "label")
+      // the check reads the scan's columnar form: the scan runs as a job
+      // (driver decode off)
+      LakeTable.load(wh, "ev", "sup").updateProperties(
+        Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
       s.conf.set("spark.sql.catalog.gse", "graft.sources.LakeCatalog")
       s.conf.set("spark.sql.catalog.gse.warehouse", wh)
       s.sql("ALTER TABLE gse.ev.sup ADD COLUMN extra STRING")

@@ -68,6 +68,7 @@ private[graft] object LakeSource {
       state: Option[LakeReadState] = None,
       changelog: Option[Seq[(graft.lake.SnapshotMeta, Int)]] = None)
       : org.apache.spark.sql.DataFrame = {
+    LakeLocalScan.install(spark)
     val view = t.frozenView
     val md = view.metadata
     val table = new LakeSparkTable(view.location.getParent.getParent.toString,

@@ -85,6 +85,10 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
+  // the session reading this table plans its small scans on the driver
+  org.apache.spark.sql.SparkSession.getActiveSession
+    .foreach(LakeLocalScan.install)
+
   /** Row-identity metadata columns — `SELECT _graft_file, _graft_pos
     * FROM graft.db.t` works, and they are the rowId the delta-based
     * (merge-on-read) SQL row-level operations key their position
@@ -427,7 +431,13 @@ private[graft] case class LakeReadPin(table: LakeTable,
     prune: Map[String, Set[String]] = Map.empty,
     statsFilters: Seq[graft.lake.RangeFilter] = Seq.empty,
     state: Option[LakeReadState] = None,
-    changelog: Option[Seq[(graft.lake.SnapshotMeta, Int)]] = None)
+    changelog: Option[Seq[(graft.lake.SnapshotMeta, Int)]] = None) {
+  /** The files this read decoded on the driver
+    * ([[LakeLocalScan.decode]]), kept for the Datasets derived from it:
+    * each re-plans the scan, and none decodes a file again. */
+  private[sources] val decoded = new java.util.concurrent.ConcurrentHashMap[
+    InputPartition, IndexedSeq[InternalRow]]()
+}
 
 /** An explicit read state: data files (each carrying its own data
   * sequence and lineage constants), position-delete sets and deletion
@@ -1066,6 +1076,21 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
         out
       }
     }
+
+  /** Whether [[LakeLocalScan]] decodes this batch scan on the driver:
+    * not a streaming or row-level-operation scan, and every planned
+    * data file of known size, their bytes together at most the table's
+    * `read.local-scan.max-bytes`.
+    */
+  private[sources] lazy val driverResident: Boolean =
+    !changelogMode && !rowLevelOp && {
+      val (t, files, _, _) = planned
+      val bound = LakeLocalScan.maxBytes(t.metadata.properties)
+      bound > 0 && (aggResult.isDefined ||
+        files.forall(_.bytes >= 0) && files.map(_.bytes).sum <= bound)
+    }
+
+  private[sources] def pinned: Option[LakeReadPin] = pin
 
   override def readSchema(): StructType =
     aggResult match {

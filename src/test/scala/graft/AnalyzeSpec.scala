@@ -22,7 +22,10 @@ class AnalyzeSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"id","data_type":"long"},
         |{"column_name":"grp","data_type":"string"},
-        |{"column_name":"v","data_type":"string"}],"partitions":[]}""".stripMargin)
+        |{"column_name":"v","data_type":"string"}],"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
+    // the scans stay distributed (driver decode off): the spec reads the
+    // statistics the scan relation serves
     (wh, LakeTable.load(wh, "d", "t"))
   }
 

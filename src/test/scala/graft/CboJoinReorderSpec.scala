@@ -37,9 +37,12 @@ class CboJoinReorderSpec extends AnyFunSuite {
     */
   private def mk(tag: String, analyze: Boolean): String = {
     val wh = Files.createTempDirectory(s"graft-cbo-$tag").toString
+    // driver decode off: the connector's statistics reach the optimizer
+    // through the scan relation, which a decoded table would replace
     def defJson(t: String, cols: String) =
       s"""{"database_name":"d","table_name":"$t","columns":[$cols],
-         |"partitions":[]}""".stripMargin
+         |"partitions":[],
+         |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin
     Engine.processTableDefJson(wh, defJson("fact",
       """{"column_name":"f_k","data_type":"long"},
         |{"column_name":"f_b","data_type":"long"},

@@ -27,7 +27,9 @@ import graft.lake.{Engine, LakeTable, RangeFilter, Reconcile}
   * `changesBetween`, changelog delete markers, the copy-on-write
   * before-state, scoped compaction with lineage, `readStaged` and
   * `readBranch`. Cells AND schemas (names, types, nullability, field
-  * metadata) must agree.
+  * metadata) must agree. The differentials run every seed under both
+  * read bounds ([[LocalScanDiff]]): driver-decoded and distributed
+  * scans must leave the tables in the same state.
   */
 class ConnectorRandomSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -166,7 +168,7 @@ class ConnectorRandomSpec extends AnyFunSuite {
   }
 
   private def mkKeyed(rnd: scala.util.Random, tag: String,
-      v3: Boolean): (String, LakeTable, StructType) = {
+      v3: Boolean, bound: Option[Long]): (String, LakeTable, StructType) = {
     val wh = Files.createTempDirectory(s"graft-conndiff-$tag").toString
     // id: the row key (optional; nulls included); one random column
     // declared required, to pin the nullability the reads declare
@@ -182,8 +184,20 @@ class ConnectorRandomSpec extends AnyFunSuite {
          |${cols.map(_._2).mkString(",")}],"partitions":[]${
            if (v3) ""","properties":{"format-version":"3"}""" else ""}}"""
         .stripMargin)
+    LocalScanDiff.set(LakeTable.load(wh, "d", "t"), bound)
     val t = LakeTable.load(wh, "d", "t")
     (wh, t, Reconcile.clean(t.currentSchema).asInstanceOf[StructType])
+  }
+
+  /** `body` once per read bound ([[LocalScanDiff]]), each from the same
+    * seed; the tables it returns must end in the same state under both.
+    */
+  private def underBothBounds(body: Option[Long] => Seq[LakeTable]): Unit = {
+    val states = LocalScanDiff.Bounds.map(b =>
+      body(b).map(t => LocalScanDiff.state(spark, t)))
+    states(0).zip(states(1)).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"table $i: the two bounds' table states differ")
+    }
   }
 
   private def rowsFor(schema: StructType, ids: Seq[java.lang.Long],
@@ -210,11 +224,11 @@ class ConnectorRandomSpec extends AnyFunSuite {
   }
 
   test("differential: read and the row-op scan vs the parquet stack " +
-      "under position deletes, vectors and equality batches (seeded)") {
+      "under position deletes, vectors and equality batches (seeded)") { underBothBounds { bound =>
     val rnd = new scala.util.Random(77770002L)
-    for (iter <- 1 to 4) {
+    for (iter <- 1 to 4) yield {
       val v3 = iter % 2 == 0
-      val (wh, t0, schema) = mkKeyed(rnd, s"mor$iter", v3)
+      val (wh, t0, schema) = mkKeyed(rnd, s"mor$iter", v3, bound)
       def load() = LakeTable.load(wh, "d", "t")
       def ids(r: Range): Seq[java.lang.Long] =
         r.map(i => java.lang.Long.valueOf(i.toLong)) ++ Seq(null)
@@ -265,11 +279,12 @@ class ConnectorRandomSpec extends AnyFunSuite {
       check("eq batches")
       load().append(rowsFor(schema, ids(100 until 110), rnd))
       check("eq batches + later append")
+      load()
     }
-  }
+  }}
 
   test("differential: time travel across an ALTER, partition pruning " +
-      "and stats filters match the parquet stack (seeded)") {
+      "and stats filters match the parquet stack (seeded)") { underBothBounds { bound =>
     val rnd = new scala.util.Random(77770003L)
     val wh = Files.createTempDirectory("graft-conndiff-alter").toString
     defTable(wh,
@@ -281,6 +296,7 @@ class ConnectorRandomSpec extends AnyFunSuite {
         |  {"column_name":"a","data_type":"int"}]}],
         |"partitions":[{"column":"p","name":"p"}]}"""
         .stripMargin)
+    LocalScanDiff.set(LakeTable.load(wh, "d", "t"), bound)
     def load() = LakeTable.load(wh, "d", "t")
     def batch(from: Int, to: Int, v2: Boolean): DataFrame = {
       val base = spark.range(from, to).select(col("id"),
@@ -333,7 +349,8 @@ class ConnectorRandomSpec extends AnyFunSuite {
       assertSame(got, stackRead(t, prune, asOf, stats),
         s"prune=$prune stats=$stats asOf=$asOf")
     }
-  }
+    Seq(t)
+  }}
 
   /** The changelog delete markers of one position-delete snapshot,
     * by the reference: the affected files read whole, semi-joined
@@ -360,11 +377,11 @@ class ConnectorRandomSpec extends AnyFunSuite {
   test("differential: the pinned file-list reads of constraint scans, " +
       "changesBetween, changelog markers, the copy-on-write before-state, " +
       "scoped compaction, readStaged and readBranch vs the parquet " +
-      "reference (seeded)") {
+      "reference (seeded)") { underBothBounds { bound =>
     val rnd = new scala.util.Random(77770004L)
-    for (iter <- 1 to 2) {
+    for (iter <- 1 to 2) yield {
       val v3 = iter % 2 == 0
-      val (wh, t0, schema) = mkKeyed(rnd, s"pin$iter", v3)
+      val (wh, t0, schema) = mkKeyed(rnd, s"pin$iter", v3, bound)
       def load() = LakeTable.load(wh, "d", "t")
       def ids(r: Range): Seq[java.lang.Long] =
         r.map(i => java.lang.Long.valueOf(i.toLong))
@@ -481,8 +498,9 @@ class ConnectorRandomSpec extends AnyFunSuite {
       val t6 = load()
       val got = if (v3) t6.readLineage(spark) else t6.read(spark)
       assert(cells(got) == want, s"iter $iter compacted rows")
+      t6
     }
-  }
+  }}
 
   private implicit class SeqAsJava[A](s: Seq[A]) {
     def asJava: java.util.List[A] = {

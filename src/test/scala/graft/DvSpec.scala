@@ -158,6 +158,73 @@ class DvSpec extends AnyFunSuite {
     assert(lakeReader(wh).count() == 6L)
   }
 
+  test("upgraded to v3: a MoR delete's vector holds the legacy and the new " +
+      "positions, and folding the legacy parquet state runs no job") {
+    def upgraded(tag: String, legacy: Boolean): String = {
+      val wh = Files.createTempDirectory(s"graft-dv-fold-$tag").toString
+      Engine.processTableDefJson(wh,
+        """{"database_name":"d","table_name":"t","columns":[
+          |{"column_name":"id","data_type":"long"},
+          |{"column_name":"v","data_type":"string"}],"partitions":[]}"""
+          .stripMargin)
+      // one driver-written file: id i sits at position i - 1
+      LakeTable.load(wh, "d", "t").append(df((1L to 12L).map(i => (i, s"v$i"))))
+      if (legacy) LakeTable.load(wh, "d", "t")
+        .deleteMoR(spark, col("id").isin(2L, 3L)) // v2 positional parquet
+      LakeTable.load(wh, "d", "t")
+        .updateProperties(Map("format-version" -> "3"))
+      wh
+    }
+    def jobsOf(body: => Unit): Int = {
+      val group = s"dv-fold-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties != null &&
+              group == j.properties.getProperty("spark.jobGroup.id"))
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      spark.sparkContext.setJobGroup(group, "dv fold jobs")
+      try {
+        body
+        var prev = -1
+        while (prev != jobs.get) { prev = jobs.get; Thread.sleep(100) }
+        prev
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(l)
+      }
+    }
+    val wh = upgraded("mixed", legacy = true)
+    val jobs = jobsOf(LakeTable.load(wh, "d", "t")
+      .deleteMoR(spark, col("id").isin(6L, 7L)))
+    assert(jobs == 0, s"a small upgraded table's MoR delete ran $jobs jobs")
+    val t = LakeTable.load(wh, "d", "t")
+    val live = LakeTable.liveDeletes(t.metadata.snapshots)
+    assert(live.size == 1 && live.values.head.paths.isEmpty)
+    val dv = live.values.head.dv.get
+    assert(ParquetReference.vectorBits(dv.dvPath, dv.offset, dv.length).toSet ==
+      Set(1L, 2L, 5L, 6L), "the vector is the legacy plus the new positions")
+    assert(ParquetReference.vectorBits(dv.dvPath, dv.deltaOffset,
+      dv.deltaLength).toSet == Set(5L, 6L), "the delta is the new positions")
+    assert(ids(t.read(spark)) == (1L to 12L).toSet -- Set(2L, 3L, 6L, 7L))
+    // scans run as jobs (bound 0): the fold adds none to the delete's own
+    val bound0 = Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0")
+    val (whA, whB) = (upgraded("mixed0", legacy = true),
+      upgraded("pure0", legacy = false))
+    Seq(whA, whB).foreach(w => LakeTable.load(w, "d", "t").updateProperties(bound0))
+    val withFold = jobsOf(LakeTable.load(whA, "d", "t")
+      .deleteMoR(spark, col("id").isin(6L, 7L)))
+    val without = jobsOf(LakeTable.load(whB, "d", "t")
+      .deleteMoR(spark, col("id").isin(6L, 7L)))
+    assert(withFold == without,
+      s"folding legacy positions ran ${withFold - without} extra jobs")
+    assert(ids(LakeTable.load(whA, "d", "t").read(spark)) ==
+      (1L to 12L).toSet -- Set(2L, 3L, 6L, 7L))
+  }
+
   test("changelog reads the delta blob: exactly this commit's deletions") {
     val (wh, t) = mkTable("cdc")
     t.append(df((1L to 6L).map(i => (i, s"v$i"))))
@@ -206,6 +273,8 @@ class DvSpec extends AnyFunSuite {
 
   test("vector read plan: bitmap probe inside the scan stage, no delete join") {
     val (_, t) = mkTable("plan")
+    // the plans below are the distributed scan's (driver decode off)
+    t.updateProperties(Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     t.append(df((1L to 6L).map(i => (i, s"v$i"))))
     t.deleteMoR(spark, col("id") <= 2L)
     // the connector read applies the vector inside its reader: no

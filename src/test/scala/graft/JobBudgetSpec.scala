@@ -91,10 +91,13 @@ class JobBudgetSpec extends AnyFunSuite {
       "of inserts") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-jobs-mrg").toString
+    // the scan runs as a job (driver decode off; LocalScanSpec covers
+    // the same merge decoding on the driver, in no job)
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"},
-        |{"column_name":"v","data_type":"string"}],"partitions":[]}"""
+        |{"column_name":"v","data_type":"string"}],"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}"""
         .stripMargin)
     // several data files, a scan of several tasks: the delete output
     // must not follow the scan's packing
@@ -222,7 +225,8 @@ class JobBudgetSpec extends AnyFunSuite {
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"g","data_type":"string"},
         |{"column_name":"amt","data_type":"decimal(18,4)"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     def rows(r: Seq[(Long, String, Double)]) = r.toDF("k", "g", "amt")
       .select(col("k"), col("g"), col("amt").cast("decimal(18,4)").as("amt"))
     LakeTable.load(wh, "d", "clsrc").append(
@@ -231,6 +235,10 @@ class JobBudgetSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.gjcl.warehouse", wh)
     vsql("CREATE MATERIALIZED VIEW gjcl.d.roll AS SELECT g, count(*) AS n, " +
       "sum(amt) AS s FROM gjcl.d.clsrc GROUP BY g").collect()
+    // the source and the backing table keep their scans distributed
+    // (driver decode off): the plans and jobs below are the scans'
+    LakeTable.load(wh, "d", "__mat_roll").updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     // a MoR merge (position deletes + inserts) and a MoR delete
     LakeTable.load(wh, "d", "clsrc").mergeMoR(spark,
       rows(Seq((3L, "g1", 99.0), (500L, "g9", 1.0))), Seq("k"))

@@ -38,13 +38,16 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
     * writer shreds it (the session's write-shredding defaults), so the
     * clip has children to skip.
     */
+  // every table here keeps its scans distributed (driver decode off):
+  // the spec checks what the variant push plans into the scan
   private def mk(tag: String, rows: Int = 20000): (String, String) = {
     val wh = Files.createTempDirectory(s"graft-vpush-$tag").toString
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"payload","data_type":"variant"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     import SparkTestSession.spark.implicits._
     // fat field = concatenated digests: incompressible, so byte-level
     // IO reflects the skipped column chunk instead of snappy's ratio
@@ -164,7 +167,8 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
     Engine.processTableDefJson(wh,
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     import SparkTestSession.spark.implicits._
     LakeTable.load(wh, "d", "t").append(
       Seq(1L, 2L).toDF("k"))
@@ -172,7 +176,8 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"t","columns":[
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"payload","data_type":"variant"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     LakeTable.load(wh, "d", "t").append(
       Seq((3L, """{"small": 30}"""), (4L, """{"small": 40}"""))
         .toDF("k", "json")
@@ -302,7 +307,8 @@ class LakeVariantPushdownSpec extends AnyFunSuite {
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"junk","data_type":"string"},
         |{"column_name":"payload","data_type":"variant"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     val df = SparkTestSession.spark.range(20000).selectExpr("id AS k",
       "concat(sha2(concat('j', id), 256), sha2(concat('k', id), 256))" +
         " AS junk",

@@ -212,6 +212,10 @@ class MatViewSpec extends AnyFunSuite {
     // keys hash-spread so min/max envelopes cover everything and only
     // the bloom probe (write.bloom-columns is auto-set on the group
     // key at create) can prune
+    // the source scan stays distributed (driver decode off), so the
+    // seed aggregate's write is one task per shuffle partition
+    LakeTable.load(wh, "d", "src").updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     LakeTable.load(wh, "d", "src").append(
       (0L until 4000L).map(i => (i, i * 3)).toDF("k", "x"))
     spark.conf.set("spark.sql.catalog.gmvp", "graft.sources.LakeCatalog")

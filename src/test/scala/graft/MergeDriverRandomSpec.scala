@@ -29,7 +29,10 @@ import graft.lake.{Engine, LakeTable}
   * narrows, takes the distributed join from both sources. Inserted
   * rows take fresh ids from their new file's range, so their
   * `_row_id`s depend on the written file layout and are compared as
-  * fresh and unique, not equal.
+  * fresh and unique, not equal. Every case runs under both read bounds
+  * ([[LocalScanDiff]]): at the default the driver path's scan decodes
+  * on the driver and runs no job; the two bounds must agree on rows,
+  * changelog, lineage and table state.
   */
 class MergeDriverRandomSpec extends AnyFunSuite {
   import MergeDriverRandomSpec._
@@ -67,9 +70,11 @@ class MergeDriverRandomSpec extends AnyFunSuite {
 
   /** The seeded table: two appends, a merge-on-read delete, and on v3 a
     * merge-on-read update (materialized lineage). */
-  private def build(wh: String, seed: Long, v3: Boolean): LakeTable = {
+  private def build(wh: String, seed: Long, v3: Boolean,
+      bound: Option[Long] = None): LakeTable = {
     val r = new scala.util.Random(seed)
     Engine.processTableDefJson(wh, ddl)
+    LocalScanDiff.set(LakeTable.load(wh, "d", "t"), bound)
     if (v3) LakeTable.load(wh, "d", "t")
       .updateProperties(Map("format-version" -> "3"))
     LakeTable.load(wh, "d", "t").append(frame((0 until 30).map(targetRow(r, _))))
@@ -204,40 +209,61 @@ class MergeDriverRandomSpec extends AnyFunSuite {
       val tag = s"case $i (v3=$v3 keys=$keys onMatch=$onMatch " +
         s"insertUnmatched=$ins matchNone=$none)"
       val src = source(new scala.util.Random(seed), keys, none)
-      val outs = Seq(true, false).map { driver =>
-        val wh = Files.createTempDirectory(s"graft-mdr-$i").toString
-        val t = build(wh, seed, v3)
-        val pre = before(t, v3)
-        val df = frame(src)
-        val (res, jobs) = withJobs(t.mergeMoR(spark,
-          if (driver) df else df.repartition(2), keys, onMatch, ins))
-        // the driver path runs at most its one scan job; a double-only
-        // key, unbounded by the scan's filter, joins distributed
-        if (driver && keys == Seq("d"))
-          assert(jobs > 1, s"$tag: a double-only key ran $jobs job(s)")
-        else if (driver)
-          assert(jobs <= 1, s"$tag: driver-paired merge ran $jobs jobs")
-        (outcome(wh, pre, v3, res), pre)
+      // every case under both read bounds: at the default the scans
+      // decode on the driver, at 0 they run as jobs
+      val runs = for (bound <- LocalScanDiff.Bounds) yield {
+        val outs = Seq(true, false).map { driver =>
+          val wh = Files.createTempDirectory(s"graft-mdr-$i").toString
+          val t = build(wh, seed, v3, bound)
+          val pre = before(t, v3)
+          val df = frame(src)
+          val (res, jobs) = withJobs(t.mergeMoR(spark,
+            if (driver) df else df.repartition(2), keys, onMatch, ins))
+          // the driver path runs at most its one scan job, none when the
+          // scan decodes on the driver; a double-only key, unbounded by
+          // the scan's filter, joins distributed
+          val maxJobs = if (bound.isEmpty) 0 else 1
+          if (driver && keys == Seq("d"))
+            assert(jobs > 1, s"$tag: a double-only key ran $jobs job(s)")
+          else if (driver)
+            assert(jobs <= maxJobs, s"$tag ${LocalScanDiff.label(bound)}: " +
+              s"driver-paired merge ran $jobs jobs")
+          (outcome(wh, pre, v3, res), pre,
+            LocalScanDiff.state(spark, LakeTable.load(wh, "d", "t")))
+        }
+        val (drv, dist) = (outs(0)._1, outs(1)._1)
+        val btag = s"$tag ${LocalScanDiff.label(bound)}"
+        assert(drv.operation == dist.operation, btag)
+        assert(drv.rows == dist.rows, btag)
+        assert(drv.changelog == dist.changelog, btag)
+        assert(drv.deleteCounts == dist.deleteCounts, btag)
+        assert(drv.carried == dist.carried, btag)
+        assert(drv.lastUpdated == dist.lastUpdated, btag)
+        assert(drv.fresh.size == dist.fresh.size, btag)
+        assert(outs(0)._3 == outs(1)._3, s"$btag: table state")
+        outs.foreach { case (o, pre, _) =>
+          assert(o.fresh.distinct.size == o.fresh.size, s"$btag: fresh ids unique")
+          assert(o.fresh.forall(_ > pre.ids.foldLeft(-1L)(math.max)),
+            s"$btag: fresh ids above every earlier id")
+        }
+        if (none) {
+          assert(drv.operation.contains("append"),
+            s"$btag: a merge that matches nothing appends its inserts")
+          assert(drv.deleteCounts.isEmpty, btag)
+        } else if (onMatch != "keep")
+          assert(drv.deleteCounts.nonEmpty, s"$btag: the case matched rows")
+        (drv, outs(0)._3)
       }
-      val (drv, dist) = (outs(0)._1, outs(1)._1)
-      assert(drv.operation == dist.operation, tag)
-      assert(drv.rows == dist.rows, tag)
-      assert(drv.changelog == dist.changelog, tag)
-      assert(drv.deleteCounts == dist.deleteCounts, tag)
-      assert(drv.carried == dist.carried, tag)
-      assert(drv.lastUpdated == dist.lastUpdated, tag)
-      assert(drv.fresh.size == dist.fresh.size, tag)
-      outs.foreach { case (o, pre) =>
-        assert(o.fresh.distinct.size == o.fresh.size, s"$tag: fresh ids unique")
-        assert(o.fresh.forall(_ > pre.ids.foldLeft(-1L)(math.max)),
-          s"$tag: fresh ids above every earlier id")
-      }
-      if (none) {
-        assert(drv.operation.contains("append"),
-          s"$tag: a merge that matches nothing appends its inserts")
-        assert(drv.deleteCounts.isEmpty, tag)
-      } else if (onMatch != "keep")
-        assert(drv.deleteCounts.nonEmpty, s"$tag: the case matched rows")
+      // the bounds agree: same rows, changelog, lineage and table state
+      // (the files an update's copies land in may differ, so the
+      // per-file delete counts compare by their total)
+      val ((a, sa), (b, sb)) = (runs(0), runs(1))
+      assert(a.operation == b.operation && a.rows == b.rows &&
+        a.changelog == b.changelog && a.carried == b.carried &&
+        a.lastUpdated == b.lastUpdated && a.fresh.size == b.fresh.size,
+        s"$tag: the two bounds' merges differ")
+      assert(a.deleteCounts.values.sum == b.deleteCounts.values.sum, tag)
+      assert(sa == sb, s"$tag: the two bounds' table states differ")
     }
   }
 

@@ -201,6 +201,9 @@ class MoRDeleteSpec extends AnyFunSuite {
       "update, the insert side never re-scans the target") {
     import SparkTestSession.spark.implicits._
     val (wh, t) = mkTable("mrgnull")
+    // the target scan runs as a job (driver decode off) for the
+    // listener below to count
+    t.updateProperties(Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     t.append(Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"), (2L, "b2"),
       (null, "n")).toDF("id", "v"))
     val src = Seq[(java.lang.Long, String)]((2L, "B"), (null, "N"),

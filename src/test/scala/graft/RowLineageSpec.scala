@@ -242,6 +242,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("lineage read plan: per-file constants resolve in the scan stage, no join") {
     val (_, t) = mkTable("plan")
+    // the plans below are the distributed scan's (driver decode off)
+    t.updateProperties(Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     t.append(df((1L to 6L).map(i => (i, s"v$i"))))
     // the connector lineage read takes per-file constants from its
     // input partitions: no join, no lookup expression

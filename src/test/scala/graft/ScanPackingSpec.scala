@@ -18,6 +18,8 @@ import graft.lake.{Engine, LakeTable}
 class ScanPackingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  // every scan here runs as a job (driver decode off): the spec pins
+  // the tasks a scan plans
   private def mkTable(tag: String, parts: String = "[]"): (String, LakeTable) = {
     val wh = Files.createTempDirectory(s"graft-pack-$tag").toString
     Engine.processTableDefJson(wh,
@@ -25,7 +27,8 @@ class ScanPackingSpec extends AnyFunSuite {
         |{"column_name":"id","data_type":"long"},
         |{"column_name":"g","data_type":"string"},
         |{"column_name":"v","data_type":"string"}],
-        |"partitions":$parts}""".stripMargin)
+        |"partitions":$parts,
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     (wh, LakeTable.load(wh, "d", "t"))
   }
 
@@ -145,7 +148,8 @@ class ScanPackingSpec extends AnyFunSuite {
         |{"column_name":"id","data_type":"long"},
         |{"column_name":"g","data_type":"string"},
         |{"column_name":"v","data_type":"string"}],"partitions":[],
-        |"properties":{"write.sort-order":"id"}}""".stripMargin)
+        |"properties":{"write.sort-order":"id",
+        |"read.local-scan.max-bytes":"0"}}""".stripMargin)
     val t = smallFiles(LakeTable.load(wh, "d", "t"), wh, 8)
     withConf("spark.sql.files.openCostInBytes" -> "1") {
       val sql = spark.read.format("graft-lake").option("warehouse", wh)

@@ -33,9 +33,12 @@ class ScanPushdownSpec extends AnyFunSuite {
     val t = LakeTable.load(wh, "d", "t")
     // tiny parquet blocks => many row groups per file, so predicate
     // skipping actually has groups to skip
+    // the scans run as jobs (driver decode off): the spec reads the
+    // records a task decoded from its input metrics
     t.updateProperties(Map(
       "write.option.parquet.block.size" -> "4096",
-      "write.option.parquet.page.size" -> "1024"))
+      "write.option.parquet.page.size" -> "1024",
+      graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     (wh, LakeTable.load(wh, "d", "t"))
   }
 
@@ -272,7 +275,8 @@ class ScanPushdownSpec extends AnyFunSuite {
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"d","data_type":"double"},
         |{"column_name":"f","data_type":"float"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     LakeTable.load(wh, "d", "t").updateProperties(Map(
       "write.option.parquet.block.size" -> "4096",
       "write.option.parquet.page.size" -> "1024"))
@@ -359,7 +363,8 @@ class ScanPushdownSpec extends AnyFunSuite {
         |{"column_name":"d7","data_type":"decimal(7,2)"},
         |{"column_name":"d12","data_type":"decimal(12,2)"},
         |{"column_name":"d22","data_type":"decimal(22,4)"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     LakeTable.load(wh, "d", "t").updateProperties(Map(
       "write.option.parquet.block.size" -> "4096",
       "write.option.parquet.page.size" -> "1024"))
@@ -444,7 +449,8 @@ class ScanPushdownSpec extends AnyFunSuite {
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"dt","data_type":"date"},
         |{"column_name":"v","data_type":"long"}],
-        |"partitions":[]}""".stripMargin)
+        |"partitions":[],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     LakeTable.load(wh, "d", "t").updateProperties(Map(
       "write.option.parquet.block.size" -> "4096",
       "write.option.parquet.page.size" -> "1024"))

@@ -19,12 +19,15 @@ import graft.lake.{Engine, LakeTable}
 class StoragePartitionJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  // every table here keeps its scans distributed (driver decode off):
+  // the spec checks the key-grouped partitioning the scans report
   private def mkTable(wh: String, tbl: String, partCol: String): LakeTable = {
     Engine.processTableDefJson(wh,
       s"""{"database_name":"d","table_name":"$tbl","columns":[
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"v","data_type":"string"}],
-        |"partitions":[{"column":"$partCol"}]}""".stripMargin)
+        |"partitions":[{"column":"$partCol"}],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     LakeTable.load(wh, "d", tbl)
   }
 
@@ -111,7 +114,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
         s"""{"database_name":"d","table_name":"$tbl","columns":[
           |{"column_name":"ts","data_type":"timestamp"},
           |{"column_name":"v","data_type":"string"}],
-          |"partitions":[{"column":"ts","transform":"month"}]}""".stripMargin)
+          |"partitions":[{"column":"ts","transform":"month"}],
+          |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
       LakeTable.load(wh, "d", tbl)
     }
     def t(s: String) = java.time.LocalDateTime.parse(s)
@@ -146,7 +150,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"w","columns":[
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"v","data_type":"string"}],
-        |"partitions":[{"column":"k"}]}""".stripMargin)
+        |"partitions":[{"column":"k"}],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     implicit val sqlCtx = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -176,6 +181,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
                 |PARTITIONED BY (bucket(4, k))""".stripMargin)
     spark.sql("""CREATE TABLE gbkt.d.fb (k BIGINT, w STRING)
                 |PARTITIONED BY (bucket(4, k))""".stripMargin)
+    Seq("fa", "fb").foreach(t => LakeTable.load(wh, "d", t).updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0")))
     LakeTable.load(wh, "d", "fa").append(
       (1L to 40L).map(i => (i, s"a$i")).toDF("k", "v"))
     LakeTable.load(wh, "d", "fb").append(
@@ -209,6 +216,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
                 |PARTITIONED BY (bucket(4, k))
                 |TBLPROPERTIES ('write.sort-order' = 'k',
                 |               'write.sort-buckets' = '1')""".stripMargin)
+    Seq("sa", "sb").foreach(t => LakeTable.load(wh, "d", t).updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0")))
     LakeTable.load(wh, "d", "sa").append(
       (1L to 40L).map(i => (i, s"a$i")).toDF("k", "v"))
     LakeTable.load(wh, "d", "sb").append(
@@ -243,7 +252,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"bk","columns":[
         |{"column_name":"k","data_type":"long"},
         |{"column_name":"v","data_type":"string"}],
-        |"partitions":[{"column":"k","transform":"bucket[4]"}]}""".stripMargin)
+        |"partitions":[{"column":"k","transform":"bucket[4]"}],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     val t = LakeTable.load(wh, "d", "bk")
     t.append(Seq((1L, "batch")).toDF("k", "v"))
     implicit val sqlCtx = spark.sqlContext
@@ -286,7 +296,8 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
       """{"database_name":"d","table_name":"s","columns":[
         |{"column_name":"k","data_type":"string"},
         |{"column_name":"v","data_type":"long"}],
-        |"partitions":[{"column":"k"}]}""".stripMargin)
+        |"partitions":[{"column":"k"}],
+        |"properties":{"read.local-scan.max-bytes":"0"}}""".stripMargin)
     val t = LakeTable.load(wh, "d", "s")
     t.append(Seq(("c++", 1L), ("a b", 2L), ("plain", 3L)).toDF("k", "v"))
     t.append(Seq(("c++", 4L)).toDF("k", "v"))

@@ -131,6 +131,10 @@ class TruncateTransformSpec extends AnyFunSuite {
                 |PARTITIONED BY (truncate(10, k))""".stripMargin)
     spark.sql("""CREATE TABLE gtj.d.jb (k BIGINT, w STRING)
                 |PARTITIONED BY (truncate(10, k))""".stripMargin)
+    // scans stay distributed (driver decode off): the join's plan is
+    // what the test checks
+    Seq("ja", "jb").foreach(t => LakeTable.load(wh, "d", t).updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0")))
     LakeTable.load(wh, "d", "ja").append(
       (1L to 40L).map(i => (i, s"a$i")).toDF("k", "v"))
     LakeTable.load(wh, "d", "jb").append(

@@ -21,9 +21,14 @@ class VectorizedReadSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private var n = 0
+  // every table here keeps its scans distributed (driver decode off):
+  // the spec pins the columnar form the scans run in
   private def mk(defJson: String): String = {
     val wh = Files.createTempDirectory("graft-vec").toString
     Engine.processTableDefJson(wh, defJson)
+    val d = graft.schema.TableDef.parse(defJson).toOption.get
+    LakeTable.load(wh, d.databaseName, d.tableName).updateProperties(
+      Map(graft.sources.LakeLocalScan.MaxBytesProperty -> "0"))
     wh
   }
   private def cat(wh: String): String = {
