@@ -1147,7 +1147,8 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     *    on the driver: a Lambda-style append of a few orders, an
     *    incremental-MV publication) runs the writer once on the driver
     *    over those rows — no Spark job — grouped by partition key, or
-    *    sorted by (partition key, sort order) under `write.sort-order`;
+    *    under `write.sort-order` cut into `write.sort-buckets` ranges of
+    *    it, each sorted by (partition key, sort order), as the job writes;
     *  - every other frame runs it in tasks: hash-distributed by the
     *    partition expressions (Iceberg's `write.distribution-mode=hash`
     *    default — one file per partition value; `none` opts out, any
@@ -1186,13 +1187,30 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
             val cols = colSpec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             val bits = 63 / cols.size
             val bins = BigDecimal(1L << bits)
-            val statsRow = aligned0.select(cols.flatMap(c => Seq(
-              min(col(s"`$c`").cast("double")), max(col(s"`$c`").cast("double")))): _*)
-              .collect()(0)
+            val asDouble = cols.map(c => col(s"`$c`").cast("double"))
+            // (min, max) per column; rows on the driver are scanned there
+            // (NaN largest, as Spark's min/max order it)
+            val stats: Seq[(Option[Double], Option[Double])] = driverRows match {
+              case Some(rows) =>
+                graft.sources.WritePlan.bind(aligned0.sparkSession,
+                    aligned0.schema, asDouble).map { e =>
+                  val vs = rows.flatMap(r => Option(e.eval(r)))
+                    .map(_.asInstanceOf[Double])
+                  (vs.minOption(Ordering.Double.TotalOrdering),
+                    vs.maxOption(Ordering.Double.TotalOrdering))
+                }
+              case None =>
+                val row = aligned0.select(asDouble.flatMap(c =>
+                  Seq(min(c), max(c))): _*).collect()(0)
+                cols.indices.map(i => (Option(row.get(2 * i)),
+                  Option(row.get(2 * i + 1))))
+                  .map { case (lo, hi) => (lo.map(_.toString.toDouble),
+                    hi.map(_.toString.toDouble)) }
+            }
             graft.functions.VectorFunctions.register(aligned0.sparkSession)
             val binned = cols.zipWithIndex.map { case (c, i) =>
-              val lo = Option(statsRow.get(2 * i)).map(_.toString.toDouble).getOrElse(0.0)
-              val hi = Option(statsRow.get(2 * i + 1)).map(_.toString.toDouble).getOrElse(0.0)
+              val lo = stats(i)._1.getOrElse(0.0)
+              val hi = stats(i)._2.getOrElse(0.0)
               val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
               least(
                 floor((col(s"`$c`").cast("double") - lit(lo)) / lit(span) * lit(bins.toDouble)),
@@ -1227,16 +1245,27 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     val rowOrder = pExprs ++ sortExprs
     driverRows match {
       case Some(rows) =>
-        val ordered =
-          if (sortExprs.isEmpty) rows
+        import org.apache.spark.sql.catalyst.expressions.{Ascending, InterpretedOrdering, SortOrder}
+        def sortedBy(rs: Seq[org.apache.spark.sql.catalyst.InternalRow],
+            by: Seq[Column]) =
+          rs.sorted(new InterpretedOrdering(graft.sources.WritePlan.bind(
+            aligned0.sparkSession, aligned0.schema, by)
+            .map(SortOrder(_, Ascending))))
+        // as the job range-partitions by the sort order into
+        // "write.sort-buckets" tasks: the rows sorted by it, cut into as
+        // many contiguous runs (one file per partition value each), each
+        // run then sorted by (partition key, sort order)
+        val runs =
+          if (sortExprs.isEmpty) Seq(rows)
           else {
-            import org.apache.spark.sql.catalyst.expressions.{Ascending, InterpretedOrdering, SortOrder}
-            val ord = new InterpretedOrdering(graft.sources.WritePlan.bind(
-              aligned0.sparkSession, aligned0.schema, rowOrder)
-              .map(SortOrder(_, Ascending)))
-            rows.sorted(ord)
+            val n = md.properties.get("write.sort-buckets")
+              .map(_.trim.toInt).getOrElse(1).min(rows.size).max(1)
+            val ranged = sortedBy(rows, sortExprs)
+            (0 until n).map(i =>
+              ranged.slice(i * ranged.size / n, (i + 1) * ranged.size / n))
+              .map(r => if (pExprs.isEmpty) r else sortedBy(r, rowOrder))
           }
-        writeDirect(aligned0, outDir, recordedSortIds, Some(ordered))
+        writeDirect(aligned0, outDir, recordedSortIds, Some(runs))
       case None =>
         // a local frame that did not optimize to a LocalRelation is
         // still bounded by its local rows — publish it as ONE task:
@@ -1291,8 +1320,8 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
 
   /** The file sink of [[writeDataFiles]]: one job whose tasks write
     * `df` through [[graft.sources.LakeParquetDataWriter]] under the
-    * table's [[graft.sources.WritePlan]], or with `driverRows` the
-    * same task body run once on the driver. The tasks also build each
+    * table's [[graft.sources.WritePlan]], or with `driverRuns` the
+    * same task body run on the driver, once per run. The tasks also build each
     * file's bloom filters (`write.bloom-columns`) from the rows they
     * write and read its footer stats right after close, so nothing is
     * read back. A failed task aborts its own files and the survivors
@@ -1300,7 +1329,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     */
   private def writeDirect(df: DataFrame, outDir: Path,
       sortedByIds: Seq[Int],
-      driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+      driverRuns: Option[Seq[Seq[org.apache.spark.sql.catalyst.InternalRow]]] =
         None): Seq[DataFileMeta] = {
     val bloomPlan = bloomTargets().map { case (n, fid) =>
       val ord = df.schema.fieldNames.indexOf(n)
@@ -1311,7 +1340,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
       df, outDir, graft.sources.LakeStreamingWrite.writePlan(this, df.schema,
         df.sparkSession),
       bloomPlan, dataDir, statsSchema = md.currentSchema,
-      driverRows = driverRows)
+      driverRuns = driverRuns)
     res.files.map { case (p, partVals) =>
       val (rows, stats, bytes) = res.stats.getOrElse(p,
         throw new IllegalStateException(s"no task stats for written file $p"))
@@ -1793,9 +1822,10 @@ object LakeTable {
     * only the ~40-byte refs back with the file list — the r17 path
     * re-read every just-written file through an extra Spark job (plus
     * a row shuffle past the small-delta bounds); the rows are already
-    * in hand at write time, at ANY scale. `driverRows` (the rows of a
-    * frame whose optimized plan is a LocalRelation) runs the same task
-    * body once on the driver instead of launching the job. Either way
+    * in hand at write time, at ANY scale. `driverRuns` (the rows of a
+    * frame whose optimized plan is a LocalRelation, in one or more runs)
+    * runs the same task body on the driver once per run instead of
+    * launching the job. Either way
     * the writer runs under the frame's session confs (its VARIANT
     * shredding limits), as a FileFormatWriter job's writers do.
     */
@@ -1804,7 +1834,7 @@ object LakeTable {
       bloomPlan: Seq[graft.sources.BloomWriteCol], bloomDir: Path,
       statsSchema: StructType = null,
       countOrdinal: Int = -1,
-      driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+      driverRuns: Option[Seq[Seq[org.apache.spark.sql.catalyst.InternalRow]]] =
         None): TaskWriteOut = {
     Files.createDirectories(dir)
     val out = dir.toString
@@ -1834,14 +1864,14 @@ object LakeTable {
         } catch { case e: Throwable => w.abort(); throw e }
       }
     val msgs = org.apache.spark.sql.GraftPlanBridge.withSessionConf(
-        df.sparkSession, jobs = driverRows.isEmpty) {
-      driverRows match {
-        case Some(rows) =>
-          // rows already on the driver: ONE run of the task body here,
-          // no job. Grouped stably by rendered partition key, so each
-          // value is one contiguous run → one file, as hash+sort gives
-          // the distributed run.
-          val grouped =
+        df.sparkSession, jobs = driverRuns.isEmpty) {
+      driverRuns match {
+        case Some(runs) =>
+          // rows already on the driver: one run of the task body here
+          // per run, no job. Grouped stably by rendered partition key, so
+          // each value is one contiguous run → one file, as hash+sort
+          // gives the distributed run.
+          def grouped(rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
             if (!keyed) rows.iterator
             else {
               val keyOf = plan.keys()
@@ -1855,7 +1885,8 @@ object LakeTable {
               }
               groups.valuesIterator.flatMap(_.iterator)
             }
-          task(0, grouped).toArray
+          runs.zipWithIndex.flatMap { case (r, i) => task(i, grouped(r)) }
+            .toArray
         case None =>
           df.queryExecution.toRdd.mapPartitionsWithIndex(task).collect()
       }

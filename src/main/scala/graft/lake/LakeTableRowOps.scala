@@ -82,7 +82,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       : Seq[String] = {
     val written = LakeTable.writeViaTaskWriterRich(keys, dir,
       graft.sources.WritePlan.empty,
-      Seq.empty, null, driverRows = driverRows).files.map(_._1).sorted
+      Seq.empty, null, driverRuns = driverRows.map(Seq(_))).files.map(_._1).sorted
     if (written.nonEmpty) written
     else {
       val w = new graft.sources.LakeParquetDataWriter(dir.toString,
@@ -605,7 +605,7 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       col("_graft_dpos").as("pos"))
     val res = LakeTable.writeViaTaskWriterRich(positions,
       delDir, graft.sources.WritePlan.empty, Seq.empty, null,
-      countOrdinal = 0, driverRows = LakeTable.localRows(positions))
+      countOrdinal = 0, driverRuns = LakeTable.localRows(positions).map(Seq(_)))
     val written = res.files.map(_._1).sorted
     val counts: Map[String, Long] = res.counts.toSeq
       .groupMapReduce { case (p, _) => LakeTable.normalizePath(p) }(

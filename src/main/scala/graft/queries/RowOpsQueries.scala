@@ -803,11 +803,7 @@ object RowOpsQueries extends QueryModule {
           |{"column_name":"o_totalprice","data_type":"double"}],
           |"partitions":[],
           |"properties":{"write.sort-order":"zorder(o_orderkey,o_custkey)",
-          |"write.sort-buckets":"8","read.local-scan.max-bytes":"0"}}"""
-          .stripMargin)
-      // (read.local-scan.max-bytes = 0: a compaction decoded on the
-      // driver writes ONE sorted file, which no range predicate prunes;
-      // the key compacts through the range-partitioned job)
+          |"write.sort-buckets":"8"}}""".stripMargin)
       val t = LakeTable.load(wh, "zq", "ord")
       val orders = Tables(s, dir, "orders")
         .filter(col("o_custkey") % 2 === 0) // bench-sized fixture

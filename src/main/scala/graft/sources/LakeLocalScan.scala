@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.{CompletableFuture, CompletionException}
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,9 +13,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LocalRelati
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.types.StructType
 
 /** Driver-resident small scans: a lake batch scan whose planned input
-  * is at most the table's `read.local-scan.max-bytes` becomes a
+  * is at most the table's `read.local-scan.max-bytes` (and whose rows
+  * decode to a bounded size, [[fits]]) becomes a
   * `LocalRelation`, its rows decoded on the driver by the scan's own
   * readers ([[decode]]), and the Project / Filter / Limit above it fold
   * into it (`ConvertToLocalRelation`) — collecting such a read runs no
@@ -40,14 +43,51 @@ private[graft] object LakeLocalScan extends Rule[LogicalPlan] {
     * files; 0 keeps every scan of the table distributed. */
   val MaxBytesProperty = "read.local-scan.max-bytes"
 
-  /** Above this many planned bytes a 4-core local job's parallel decode
-    * beats one driver thread (measured, README "Driver-resident small
-    * scans"). */
-  val DefaultMaxBytes: Long = 4L << 20
+  /** The threads a driver decode runs on: the driver's cores. */
+  val DecodeThreads: Int = Runtime.getRuntime.availableProcessors
+
+  /** The default bound: 1 MiB of planned parquet per decode thread. A
+    * driver decode saves one job's fixed cost, and the bytes that cost
+    * would decode grow with the threads decoding them; on a 4-vCPU host
+    * the crossover against a `local[4]` job sat between 3.4 and 6.3 MB
+    * (README "Driver-resident small scans"). */
+  val DefaultMaxBytes: Long = (1L << 20) * DecodeThreads
+
+  /** The rows decoded under the bound may take at most this many times
+    * its bytes, estimated as the planned files' row counts times the
+    * read schema's default row size: a dictionary- or run-length-encoded
+    * column decodes to many times its parquet bytes, and the decoded
+    * rows are held on the driver. */
+  val DecodedPerPlannedByte = 8
 
   def maxBytes(props: Map[String, String]): Long =
     props.get(MaxBytesProperty).flatMap(_.trim.toLongOption)
       .getOrElse(DefaultMaxBytes)
+
+  /** Whether files of these sizes and row counts, read under `schema`,
+    * decode on the driver under `bound`. */
+  def fits(bound: Long, files: Seq[graft.lake.DataFileMeta],
+      schema: StructType): Boolean =
+    bound > 0 && files.forall(f => f.bytes >= 0 && f.rows >= 0) &&
+      files.map(_.bytes).sum <= bound &&
+      BigInt(files.map(_.rows).sum) * (8 + schema.defaultSize) <=
+        BigInt(bound) * DecodedPerPlannedByte
+
+  // decode threads end after a minute idle, and, like task threads,
+  // inherit no session or job group from the thread that started them
+  private val pool = {
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val p = new ThreadPoolExecutor(DecodeThreads, DecodeThreads,
+      60L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(null, r,
+          s"graft-local-scan-${threads.incrementAndGet()}", 0L, false)
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 
   def install(spark: SparkSession): Unit = synchronized {
     val ex = spark.experimental
@@ -85,12 +125,11 @@ private[graft] object LakeLocalScan extends Rule[LogicalPlan] {
     * partitions through its own reader factory, so deletes, deletion
     * vectors, equality batches, schema mapping and the pushed ranges'
     * row-group skipping apply as in tasks. Columnar batches are copied
-    * to rows. A packed partition's files
-    * decode one by one, the files in parallel on the common fork-join
-    * pool (a file's open and footer read dominate a small decode), and
-    * their rows concatenate in plan order. A pinned read keeps the rows
-    * per file, so a Dataset derived from it (re-optimized, so
-    * re-planned) decodes no file twice.
+    * to rows. A packed partition's files decode one by one, the files
+    * in parallel on at most [[DecodeThreads]] threads (a file's open and
+    * footer read dominate a small decode), and their rows concatenate in
+    * plan order. A pinned read keeps the rows per file, so a Dataset
+    * derived from it (re-optimized, so re-planned) decodes no file twice.
     */
   def decode(scan: LakeScan): Seq[InternalRow] = {
     val batch = scan.toBatch
@@ -121,8 +160,8 @@ private[graft] object LakeLocalScan extends Rule[LogicalPlan] {
       case mp: LakeMultiFilePartition => mp.parts
       case p => Seq(p)
     }
-    if (units.size <= 1) units.flatMap(cached)
-    else units.map(u => CompletableFuture.supplyAsync(() => cached(u)))
+    if (units.size <= 1 || DecodeThreads <= 1) units.flatMap(cached)
+    else units.map(u => CompletableFuture.supplyAsync(() => cached(u), pool))
       .flatMap { f =>
         // a reader's failure surfaces as itself, as it would from a task
         try f.join()

@@ -1078,16 +1078,16 @@ private[sources] class LakeScan(wh: String, db: String, tbl: String,
     }
 
   /** Whether [[LakeLocalScan]] decodes this batch scan on the driver:
-    * not a streaming or row-level-operation scan, and every planned
-    * data file of known size, their bytes together at most the table's
-    * `read.local-scan.max-bytes`.
+    * not a streaming or row-level-operation scan, and the planned data
+    * files within the table's `read.local-scan.max-bytes`
+    * ([[LakeLocalScan.fits]]).
     */
   private[sources] lazy val driverResident: Boolean =
     !changelogMode && !rowLevelOp && {
       val (t, files, _, _) = planned
       val bound = LakeLocalScan.maxBytes(t.metadata.properties)
       bound > 0 && (aggResult.isDefined ||
-        files.forall(_.bytes >= 0) && files.map(_.bytes).sum <= bound)
+        LakeLocalScan.fits(bound, files, readSchema()))
     }
 
   private[sources] def pinned: Option[LakeReadPin] = pin

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -90,10 +92,11 @@ class LocalScanSpec extends AnyFunSuite {
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).toSeq.sorted
 
-  test("the default bound is a positive byte count; 0 or a junk value " +
+  test("the default bound is 1 MiB per decode thread; 0 or a junk value " +
       "parse as documented") {
     assert(LakeLocalScan.maxBytes(Map.empty) == LakeLocalScan.DefaultMaxBytes)
-    assert(LakeLocalScan.DefaultMaxBytes > 0)
+    assert(LakeLocalScan.DefaultMaxBytes ==
+      (1L << 20) * Runtime.getRuntime.availableProcessors)
     assert(LakeLocalScan.maxBytes(
       Map(LakeLocalScan.MaxBytesProperty -> "0")) == 0L)
     assert(LakeLocalScan.maxBytes(
@@ -235,5 +238,104 @@ class LocalScanSpec extends AnyFunSuite {
     val over = spark.sql(s"EXPLAIN SELECT * FROM $t WHERE id = 3")
       .collect().head.getString(0)
     assert(over.contains("BatchScan"), over)
+  }
+
+  test("the bound also caps the decoded size: a file that decodes to many " +
+      "times its parquet bytes stays distributed") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id LONG, v STRING")
+    val f = graft.lake.DataFileMeta("f", 0, 0, rows = 1000L,
+      partitionValues = Map.empty, bytes = 1000L)
+    // 1000 rows x (8 + 8 + 20) B = 36 000 B decoded
+    assert(LakeLocalScan.fits(36000L / LakeLocalScan.DecodedPerPlannedByte, Seq(f), schema))
+    assert(!LakeLocalScan.fits(36000L / LakeLocalScan.DecodedPerPlannedByte - 1,
+      Seq(f), schema))
+    assert(!LakeLocalScan.fits(999L, Seq(f), schema))
+    assert(!LakeLocalScan.fits(0L, Seq(f), schema))
+    assert(!LakeLocalScan.fits(1L << 20, Seq(f.copy(bytes = -1L)), schema))
+
+    // one constant-valued file: a few KiB of parquet, megabytes of rows
+    val wh = Files.createTempDirectory("graft-localscan-rle").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"v","data_type":"string"}],"partitions":[]}"""
+        .stripMargin)
+    LakeTable.load(wh, "d", "t").updateProperties(
+      Map(LakeLocalScan.MaxBytesProperty -> (64L << 10).toString))
+    LakeTable.load(wh, "d", "t").append(spark.range(200000).repartition(1)
+      .selectExpr("CAST(7 AS LONG) AS id", "'constant' AS v"))
+    val file = LakeTable.load(wh, "d", "t").plannedFiles().head
+    assert(file.bytes < (64L << 10), s"parquet bytes ${file.bytes}")
+    val t = catalog("glsrle", wh)
+    val q = spark.sql(s"SELECT count(*) FROM $t WHERE v = 'constant'")
+    val (n, j) = countJobs(q.collect().head.getLong(0))
+    assert(n == 200000L)
+    assert(j >= 1, s"jobs: $j")
+    assert(q.queryExecution.executedPlan.toString.contains("BatchScan"))
+  }
+
+  test("a read of a few hundred tiny files decodes them on at most the " +
+      "decode threads") {
+    val wh = Files.createTempDirectory("graft-localscan-tiny").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"}],"partitions":[]}"""
+        .stripMargin)
+    LakeTable.load(wh, "d", "t").append(
+      spark.range(0, 300, 1, 300).selectExpr("id"))
+    val t = LakeTable.load(wh, "d", "t")
+    assert(t.plannedFiles().size == 300)
+    def decodeThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith("graft-local-scan-"))
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val watch = new Thread(() =>
+      try while (true) {
+        peak.accumulateAndGet(decodeThreads(), math.max)
+        Thread.sleep(1)
+      } catch { case _: InterruptedException => () })
+    watch.setDaemon(true)
+    watch.start()
+    val (got, j) = try countJobs(ids(t.read(spark)))
+      finally { watch.interrupt(); watch.join() }
+    assert(got == (0L until 300L))
+    assert(j == 0, s"jobs: $j")
+    assert(peak.get <= LakeLocalScan.DecodeThreads,
+      s"${peak.get} decode threads, at most ${LakeLocalScan.DecodeThreads}")
+  }
+
+  test("a sorted table's driver compaction writes write.sort-buckets range " +
+      "files, as the distributed one does (sort and z-order)") {
+    for (order <- Seq("id", "zorder(id,g)");
+         (tag, bound, local) <- Seq(("sb", None, true), ("sb0", Some(0L), false))) {
+      val wh = Files.createTempDirectory(s"graft-localscan-$tag").toString
+      Engine.processTableDefJson(wh,
+        s"""{"database_name":"d","table_name":"t","columns":[
+          |{"column_name":"id","data_type":"long"},
+          |{"column_name":"g","data_type":"int"}],"partitions":[],
+          |"properties":{"write.sort-order":"$order","write.sort-buckets":"4"
+          |${bound.fold("")(b => s""","${LakeLocalScan.MaxBytesProperty}":"$b"""")}}}"""
+          .stripMargin)
+      import SparkTestSession.spark.implicits._
+      // four local appends, each spanning the whole id range
+      (0 until 4).foreach(b => LakeTable.load(wh, "d", "t").append(
+        (0 until 100).map(i => (i * 4L + b, i % 7)).toDF("id", "g")))
+      val (_, cj) = countJobs(LakeTable.load(wh, "d", "t").compact(spark))
+      val t = LakeTable.load(wh, "d", "t")
+      val files = t.plannedFiles()
+      val label = s"$order bound=$bound"
+      assert(files.size == 4, s"$label: ${files.size} files")
+      val fid = graft.schema.FieldIds.idOf(t.currentSchema("id"))
+      val ranges = files.map(f => (BigDecimal(f.stats(fid).min),
+        BigDecimal(f.stats(fid).max))).sortBy(_._1)
+      if (order == "id")
+        assert(ranges.sliding(2).forall { case Seq(a, b) => a._2 < b._1 },
+          s"$label: overlapping ranges $ranges")
+      else assert(t.plannedFiles(statsFilters = Seq(graft.lake.RangeFilter("id",
+        loNum = Some(BigDecimal(0)), hiNum = Some(BigDecimal(40))))).size < 4,
+        s"$label: an id range prunes no file of $ranges")
+      assert(ids(t.read(spark)) == (0L until 400L))
+      if (local) assert(cj == 0, s"$label: compact jobs $cj")
+      else assert(cj >= 1, s"$label: compact jobs $cj")
+    }
   }
 }
