@@ -4,6 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream,
   DataOutputStream}
 import java.nio.file.Path
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** One live deletion vector: the deleted row positions of a single data
@@ -51,6 +55,54 @@ object DeletionVectors {
     val bm = new Roaring64Bitmap()
     bm.deserialize(new DataInputStream(new ByteArrayInputStream(bytes)))
     bm
+  }
+
+  /** Deleted positions gathered one (data file, position) pair at a
+    * time into one bitmap per data file (keyed by normalized path):
+    * the half of every merge-on-read delete that runs where the
+    * positions are found — a row-op scan task, the driver, a SQL delta
+    * writer. `serialized` is what a task ships back; [[union]] ORs the
+    * shipped bitmaps per file on the driver.
+    */
+  final class Positions {
+    private val byFile = new java.util.HashMap[String, Roaring64Bitmap]()
+    // matched rows arrive grouped by file: resolve the bitmap once a run
+    private var runPath: UTF8String = null
+    private var run: Roaring64Bitmap = null
+
+    def add(path: UTF8String, pos: Long): Unit = {
+      if (path != runPath) {
+        runPath = path.clone()
+        run = byFile.computeIfAbsent(LakeTable.normalizePath(path.toString),
+          _ => new Roaring64Bitmap())
+      }
+      run.addLong(pos)
+    }
+
+    def serialized: Seq[(String, Array[Byte])] =
+      byFile.asScala.toSeq.map { case (p, bm) => p -> serialize(bm) }
+  }
+
+  /** The bitmaps of (path, position) rows — the path a string at
+    * ordinal 0, the position a long at ordinal 1 — as one task ships
+    * them. */
+  def foldPositions(rows: Iterator[InternalRow]): Iterator[(String, Array[Byte])] = {
+    val acc = new Positions
+    rows.foreach(r => acc.add(r.getUTF8String(0), r.getLong(1)))
+    acc.serialized.iterator
+  }
+
+  /** OR shipped bitmaps per data file. */
+  def union(parts: Iterator[(String, Array[Byte])]): Map[String, Roaring64Bitmap] = {
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+    parts.foreach { case (p, bytes) =>
+      val bm = deserialize(bytes)
+      out.get(p) match {
+        case Some(acc) => acc.or(bm)
+        case None => out(p) = bm
+      }
+    }
+    out.toMap
   }
 
   /** Write one container holding, per affected data file, the full

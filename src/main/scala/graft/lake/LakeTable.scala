@@ -1768,10 +1768,10 @@ object LakeTable {
     * far past it the broadcast side deserves a distributed scan. */
   private val SmallBatchBytes = 1L << 20
 
-  /** Physical schema of every positional-delete parquet file — pinned
-    * by the two writers (commitMoR's select and LakeDeltaWriter's
-    * deleteSchema). Passing it to the reads skips schema inference,
-    * which launches a footer-merge Spark job per call (r17). */
+  /** Read schema of every positional-delete parquet file. One writer
+    * writes them (`commitPositions`, one file per commit, both columns
+    * required as the Iceberg spec declares them), and one reader reads
+    * them ([[graft.sources.LakeSource.deleteFileRows]]). */
   private[graft] val DeleteFileSchema: StructType = StructType(Seq(
     StructField("file_path", StringType),
     StructField("pos", LongType)))
@@ -1793,13 +1793,12 @@ object LakeTable {
     }
 
   /** Everything a rich task write returns beyond the file list: bloom
-    * refs, per-file (rows, stats, bytes), and the countOrdinal value
-    * histogram — each present only when the matching input asked. */
+    * refs and per-file (rows, stats, bytes) — each present only when
+    * the matching input asked. */
   private[lake] case class TaskWriteOut(
       files: Seq[(String, Map[String, String])],
       blooms: Map[String, Seq[BloomRef]],
-      stats: Map[String, (Long, Map[Int, ColStats], Long)],
-      counts: Map[String, Long])
+      stats: Map[String, (Long, Map[Int, ColStats], Long)])
 
   /** One job that writes `df` as parquet under `dir` through the one
     * lake writer ([[graft.sources.LakeParquetDataWriter]]) and returns
@@ -1833,7 +1832,6 @@ object LakeTable {
       plan: graft.sources.WritePlan,
       bloomPlan: Seq[graft.sources.BloomWriteCol], bloomDir: Path,
       statsSchema: StructType = null,
-      countOrdinal: Int = -1,
       driverRuns: Option[Seq[Seq[org.apache.spark.sql.catalyst.InternalRow]]] =
         None): TaskWriteOut = {
     Files.createDirectories(dir)
@@ -1851,7 +1849,7 @@ object LakeTable {
         val w = new graft.sources.LakeParquetDataWriter(
           out, writeSchema, plan, s"b$i", closeOnKeyChange = keyed,
           bloomPlan = bloomPlan, bloomDir = bloomOut,
-          statsSchema = statsSchema, countOrdinal = countOrdinal)
+          statsSchema = statsSchema)
         try {
           it.foreach(w.write)
           w.commit() match {
@@ -1915,11 +1913,7 @@ object LakeTable {
     TaskWriteOut(
       msgs.flatMap(_.files).toSeq,
       (msgs.flatMap(_.refs) ++ shippedRefs).toMap,
-      msgs.flatMap(_.fileStats).toMap,
-      msgs.iterator.flatMap(_.valueCounts)
-        .foldLeft(Map.empty[String, Long]) { case (acc, (k, v)) =>
-          acc.updated(k, acc.getOrElse(k, 0L) + v)
-        })
+      msgs.flatMap(_.fileStats).toMap)
   }
 
   private val smallBatchCache = new BlobCache[

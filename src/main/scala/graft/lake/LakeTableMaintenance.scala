@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.schema._
 
@@ -423,16 +424,17 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     snap
   }
 
-  /** Register an executor-written merge-on-read delta — position-delete
-    * parquets plus replacement/insert data files — as one snapshot
+  /** Register an executor-written merge-on-read delta — the deleted
+    * positions the SQL delta writers folded into bitmaps, plus the
+    * replacement/insert data files they wrote — as one snapshot
     * (operation "delete": replay adds the data files and accumulates
-    * the deletes). The SQL WriteDelta path commits through here.
+    * the deletes), through the one position commit
+    * ([[commitPositions]]). The SQL WriteDelta path commits through here.
     */
   def commitExternalDelta(dataFiles: Seq[(String, Map[String, String])],
-      deleteFiles: Seq[String], deleteCounts: Map[String, Long],
-      writtenSchemaId: Int, writtenSpecId: Int,
-      spark: Option[SparkSession] = None): Option[SnapshotMeta] = {
-    if (dataFiles.isEmpty && deleteFiles.isEmpty) return None
+      positions: Map[String, Roaring64Bitmap],
+      writtenSchemaId: Int, writtenSpecId: Int): Option[SnapshotMeta] = {
+    if (dataFiles.isEmpty && positions.isEmpty) return None
     val schema = md.schemaById(writtenSchemaId)
     val files = LakeTable.parMapFiles(dataFiles.sortBy(_._1)) { case (p, partVals) =>
       val (rows, stats) = FileStats.fromFooterWithRows(p, schema)
@@ -441,38 +443,9 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
         stats = stats,
         bytes = try Files.size(Paths.get(p)) catch { case _: Exception => -1L })
     }
-    val snapshotId = md.snapshots.map(_.id).foldLeft(0L)(math.max) + 1
-    // a v3 table converts the task-written positional parquet into
-    // deletion vectors AT COMMIT: one distributed pass over the delta
-    // (the SQL WriteDelta scan emitted live rows only, so every pair
-    // is newly deleted — writeVectorContainer's merge contract). The
-    // parquet stage files become unreferenced and fall to the orphan
-    // sweep; deleting them eagerly here would race a concurrent
-    // reader that planned against them between our write and commit.
-    val vectorized: Option[(Seq[DvMeta], Map[String, Long])] =
-      if (writesVectors && deleteFiles.nonEmpty) {
-        val s = spark.getOrElse(throw new IllegalStateException(
-          "format-version=3 delta commit needs a SparkSession to " +
-            "vectorize its position deletes"))
-        writeVectorContainer(s,
-          s.read.schema(LakeTable.DeleteFileSchema)
-            .parquet(deleteFiles: _*).select("file_path", "pos"),
-          snapshotId)
-      } else None
-    val snap = vectorized match {
-      case Some((dvMetas, counts)) =>
-        SnapshotMeta(snapshotId, files, writtenSchemaId,
-          operation = "delete", deleteCounts = counts,
-          timestampMs = System.currentTimeMillis(), dvs = dvMetas)
-      case None =>
-        SnapshotMeta(snapshotId, files, writtenSchemaId,
-          operation = "delete", deletePaths = deleteFiles.sorted,
-          deleteCounts = deleteCounts.map { case (p, n) =>
-            LakeTable.normalizePath(p) -> n
-          }, timestampMs = System.currentTimeMillis())
-    }
-    commit(md.copy(snapshots = md.snapshots :+ snap))
-    Some(snap)
+    Some(commitPositions(positions)(id => SnapshotMeta(id, files,
+      writtenSchemaId, operation = "delete",
+      timestampMs = System.currentTimeMillis())))
   }
 
   /** ANALYZE TABLE: one scan computing, per top-level column, the
@@ -578,15 +551,16 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     * cheap cure for delete-file sprawl between full compactions: after
     * a run of MoR deletes every affected data file drags a list of
     * small delete files through each read; afterwards it consults one.
-    * Commits a live-state "rewrite" snapshot (replay reset, byte move —
-    * CDC/changelog/streaming skip it) whose deletePaths are the merged
-    * file; per-file deleted-row counts carry over unchanged, so
-    * metadata-only COUNT(*) stays exact. (file,pos) tuples are unique
-    * across live delete files by construction — the delete write path
-    * excludes already-deleted positions — so the merge is a plain
-    * concatenation. None when there is nothing to merge.
+    * Each live data file's positions load on the driver as the readers
+    * load them ([[positionalBitmap]]; tombstones of dead data files are
+    * never asked for) and go through the one position commit
+    * ([[commitPositions]]) as a live-state "rewrite" snapshot (replay
+    * reset, byte move — CDC/changelog/streaming skip it) whose
+    * deletePaths are the merged file; per-file deleted-row counts carry
+    * over unchanged, so metadata-only COUNT(*) stays exact. None when
+    * there is nothing to merge.
     */
-  def rewritePositionDeleteFiles(spark: SparkSession): Option[SnapshotMeta] = {
+  def rewritePositionDeleteFiles(): Option[SnapshotMeta] = {
     if (currentHintVersion() != loadedVersion)
       throw new java.util.ConcurrentModificationException(
         s"table $location was committed concurrently; reload and retry")
@@ -596,60 +570,29 @@ private[lake] trait LakeTableMaintenance { self: LakeTable =>
     // (the representation v3 mandates), after which reads never open
     // a delete parquet again
     if (writesVectors) return convertPositionalToVectors(liveDel)
-    val delFiles = liveDel.values.flatMap(_.paths).toSeq.distinct
-    if (delFiles.size <= 1) return None
-    val newId = (md.snapshots ++ md.staged).map(_.id).foldLeft(0L)(math.max) + 1
-    val dir = dataDir.resolve(
-      s"posdel-$newId-${java.util.UUID.randomUUID().toString.take(8)}")
-    // keep only tombstones of files still live (a CoW rewrite already
-    // materialized the others); the live set is metadata-scale, shipped
-    // as a broadcast semi-join, never a giant IN-list
-    import spark.implicits._
-    // vector-backed files need no tombstone carry — their DV is the
-    // complete delete state and the squash carries it in `dvs`
-    val livePaths = liveDel.collect {
-      case (p, ds) if ds.dv.isEmpty => p }.toSeq.toDF("file_path")
-    // r17: per-task direct write (no FileFormatWriter machinery)
-    val merged = LakeTable.writeViaTaskWriter(
-      spark.read.schema(LakeTable.DeleteFileSchema).parquet(delFiles: _*)
-        .join(org.apache.spark.sql.functions.broadcast(livePaths),
-          Seq("file_path"), "left_semi")
-        .coalesce(1),
-      dir, graft.sources.WritePlan.empty).map(_._1).sorted
-    val snap = liveStateSnapshot(md.snapshots, newId, md.currentSchemaId,
-      System.currentTimeMillis()).copy(deletePaths = merged)
-    commit(md.copy(snapshots = md.snapshots :+ snap))
-    Some(snap)
+    if (liveDel.values.flatMap(_.paths).toSeq.distinct.size <= 1) return None
+    Some(commitPositions(liveDel.map { case (p, ds) => p -> positionalBitmap(p, ds) })(
+      id => liveStateSnapshot(md.snapshots, id, md.currentSchemaId,
+        System.currentTimeMillis())))
   }
 
   /** Convert every live positional-parquet delete to a deletion
     * vector in one squash commit: each live data file's bitmap builds
     * on the driver from the positions the readers themselves load
-    * ([[graft.sources.LakeSource.loadDeletedPositions]]: one parse per
-    * delete file, cached; tombstones of dead data files are never
-    * asked for), the exact per-file counts audit the conversion, and
-    * the committed "rewrite" snapshot carries ONLY vectors — the
-    * already-vectored files' DVs ride along unchanged. Delta blobs are
-    * empty (nothing is newly deleted; this is a representation change,
-    * invisible to the changelog like any rewrite).
+    * ([[positionalBitmap]]: the exact per-file counts audit the
+    * conversion), and the committed "rewrite" snapshot carries ONLY
+    * vectors — the already-vectored files' DVs ride along unchanged.
+    * Delta blobs are empty (nothing is newly deleted; this is a
+    * representation change, invisible to the changelog like any
+    * rewrite).
     */
   private[lake] def convertPositionalToVectors(
       liveDel: Map[String, DeleteSet]): Option[SnapshotMeta] = {
-    import org.roaringbitmap.longlong.Roaring64Bitmap
     val positional = liveDel.filter(_._2.dv.isEmpty)
     if (positional.isEmpty) return None
     val newId = (md.snapshots ++ md.staged).map(_.id).foldLeft(0L)(math.max) + 1
     val blobs = positional.toSeq.sortBy(_._1).map { case (p, ds) =>
-      val full = new Roaring64Bitmap()
-      Option(graft.sources.LakeSource.loadDeletedPositions(ds.paths, p))
-        .foreach(_.forEach(pos => full.addLong(pos)))
-      // the exact per-file deleted-row count is tracked metadata — a
-      // conversion that changes it would corrupt visible row counts
-      require(full.getLongCardinality == ds.rows,
-        s"positional→vector conversion for $p changed the deleted-row " +
-          s"count: parquet holds ${full.getLongCardinality}, metadata " +
-          s"says ${ds.rows}")
-      p -> ((full, new Roaring64Bitmap()))
+      p -> ((positionalBitmap(p, ds), new Roaring64Bitmap()))
     }
     val dvPath = dataDir.resolve(s"deletes-$newId-" +
       java.util.UUID.randomUUID().toString.take(8) + ".gdv")

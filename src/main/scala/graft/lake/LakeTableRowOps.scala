@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.schema._
 
@@ -288,10 +289,12 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
         s"table $location was committed concurrently; reload and retry")
     if (plannedFiles(prune, statsFilters).isEmpty) return None
     // one materialization feeds both the delete positions and the
-    // updated copies (localCheckpoint: reclaimed when the df drops)
-    val matched = liveRowsWithPos(spark, prune, statsFilters,
-      lineage = writesVectors)
-      .filter(predicate).localCheckpoint()
+    // updated copies: a driver-resident match is one already (the
+    // pinned read keeps its decoded rows), any other is checkpointed
+    // (localCheckpoint: reclaimed when the df drops)
+    val hits = liveRowsWithPos(spark, prune, statsFilters,
+      lineage = writesVectors).filter(predicate)
+    val matched = if (LakeTable.isLocalPlan(hits)) hits else hits.localCheckpoint()
     // a v3 updated copy is the SAME row: it materializes the matched
     // row's id and nulls its last-updated so inheritance re-stamps the
     // new file's sequence — identical semantics to the CoW update path
@@ -324,10 +327,9 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     *    job when the scan decodes on the driver,
     *    [[graft.sources.LakeLocalScan]]).
     *    The rows pair with the source rows on the driver
-    *    ([[matchOnDriver]]), and the positions and new rows are written
-    *    there: one delete file (or one deletion-vector container),
-    *    whatever the scan's packing, and the updated copies and the
-    *    inserts one data file each per partition value;
+    *    ([[matchOnDriver]]), and the new rows are written there: the
+    *    updated copies and the inserts one data file each per
+    *    partition value;
     *  - any other source keeps the distributed join against the scan.
     *    A source over the driver-decode bound is not bounded by the
     *    driver, so neither is its match; nor is the scan of a key that
@@ -556,9 +558,8 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     import graft.sources.LakeSource.{FileMetaCol, PosMetaCol, RowIdMetaCol}
     val rows = graft.sources.LakeSource.engineRead(spark, this, prune, None,
       statsFilters)
-    // declared as the parquet stack declared them (a nullable path, no
-    // metadata-column tags): the delete files written from these
-    // columns keep their layout
+    // declared as a parquet read's file path is (nullable), and
+    // untagged as metadata columns (a join's output keeps them)
     val path = org.apache.spark.sql.GraftPlanBridge.column(
       org.apache.spark.sql.catalyst.expressions.KnownNullable(
         org.apache.spark.sql.GraftPlanBridge.expression(col(FileMetaCol))))
@@ -580,115 +581,118 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
       .exists(_.trim.toIntOption.exists(_ >= 3))
 
   /** Commit one merge-on-read snapshot: `matched` rows (tagged with
-    * file/pos) become position-delete files; the `appended` frames are
-    * written as new data files in the SAME snapshot (operation
-    * "delete" — replay adds the files and accumulates the deletes).
-    * Returns None and leaves nothing behind when no row matched. A
-    * driver-resident match ([[LakeTable.localRows]], a driver-paired
-    * merge) writes its positions on the driver, as ONE delete file;
-    * any other runs the writer in the match's tasks, one file per task
-    * that holds a matched row.
+    * file/pos) become position deletes ([[commitPositions]]); the
+    * `appended` frames are written as new data files in the SAME
+    * snapshot (operation "delete" — replay adds the files and
+    * accumulates the deletes). Returns None and writes nothing when no
+    * row matched. The positions fold into one bitmap per data file
+    * where the matched rows are: on the driver for a driver-resident
+    * match ([[LakeTable.localRows]]: a small scan, a driver-paired
+    * merge), else in the match's own tasks, whose bitmaps come back
+    * with the collect — no shuffle, and no write in the tasks.
     */
   private[lake] def commitMoR(spark: SparkSession, matched: DataFrame,
       appended: Seq[DataFrame]): Option[SnapshotMeta] = {
-    if (writesVectors)
-      return commitMoRVector(spark, matched, appended)
-    val snapshotId = md.snapshots.map(_.id).foldLeft(0L)(math.max) + 1
-    val delDir = dataDir.resolve(
-      s"deletes-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
-    // r17: per-task direct write (no FileFormatWriter machinery).
-    // r18: the per-file victim counts ride the write tasks' commit
-    // messages (countOrdinal = the file_path column) — the read-back
-    // count job over the just-written delete files is gone; same
-    // normalize-then-sum the groupBy computed.
-    val positions = matched.select(col("_graft_dfile").as("file_path"),
-      col("_graft_dpos").as("pos"))
-    val res = LakeTable.writeViaTaskWriterRich(positions,
-      delDir, graft.sources.WritePlan.empty, Seq.empty, null,
-      countOrdinal = 0, driverRuns = LakeTable.localRows(positions).map(Seq(_)))
-    val written = res.files.map(_._1).sorted
-    val counts: Map[String, Long] = res.counts.toSeq
-      .groupMapReduce { case (p, _) => LakeTable.normalizePath(p) }(
-        _._2)(_ + _)
-    def cleanup(dir: Path): Unit =
-      scala.util.Using.resource(Files.walk(dir)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder()).forEach(p =>
-          Files.delete(p))
-      }
-    if (counts.isEmpty) { cleanup(delDir); return None }
-    val snap = SnapshotMeta(snapshotId, writeAppended(snapshotId, appended),
-      md.currentSchemaId,
-      operation = "delete", deletePaths = written.map(_.toString),
-      deleteCounts = counts, timestampMs = System.currentTimeMillis())
-    commit(md.copy(snapshots = md.snapshots :+ snap))
-    Some(snap)
+    val pairs = matched.select(col("_graft_dfile"), col("_graft_dpos"))
+    val positions = DeletionVectors.union(LakeTable.localRows(pairs) match {
+      case Some(rows) => DeletionVectors.foldPositions(rows.iterator)
+      case None => pairs.queryExecution.toRdd
+        .mapPartitions(DeletionVectors.foldPositions).collect().iterator
+    })
+    if (positions.isEmpty) None
+    else Some(commitPositions(positions)(id => SnapshotMeta(id,
+      writeAppended(id, appended), md.currentSchemaId,
+      operation = "delete", timestampMs = System.currentTimeMillis())))
   }
 
-  /** Aggregate newly-deleted (file_path, pos) PAIRS — which must
-    * exclude every already-deleted position — into one container of
-    * full+delta vector blobs per affected file: the executors build
-    * one Roaring bitmap per file (the shuffle carries pairs, the
-    * driver collects only O(affected files) serialized bitmaps; pairs
-    * already on the driver, [[LakeTable.localRows]], group there), the
-    * driver merges each with the file's previous vector and any
-    * legacy positional parquet state (decoded on the driver, no job),
-    * and writes ONE container.
-    * Returns the DvMeta entries plus the newly-deleted counts, or
-    * None when no pair survived.
+  /** The one writer and commit of position-delete state. `positions`
+    * are one bitmap per data file (normalized path); `build` makes the
+    * snapshot of the new id (writing any data files it adds), and the
+    * written delete state replaces its delete fields:
+    *  - v2: ONE position-delete parquet, written on the driver, rows
+    *    in (`file_path`, `pos`) order as the Iceberg spec asks for
+    *    position-delete files;
+    *  - v3: ONE container of full+delta vectors ([[writeVectorContainer]]).
+    * So the delete files of a commit follow the commit, never the
+    * tasks or packing of the scan that found the positions. Every
+    * caller but `rewritePositionDeleteFiles` passes newly deleted
+    * positions only, which the v3 merge checks. No positions: the
+    * snapshot commits as built, with no delete state.
     */
-  private[lake] def writeVectorContainer(spark: SparkSession, pairs: DataFrame,
-      snapshotId: Long): Option[(Seq[DvMeta], Map[String, Long])] = {
-    import org.roaringbitmap.longlong.Roaring64Bitmap
-    import spark.implicits._
-    def bitmap(it: Iterator[Long]): Array[Byte] = {
-      val bm = new Roaring64Bitmap()
-      it.foreach(bm.addLong)
-      DeletionVectors.serialize(bm)
-    }
-    def bitmapPerFile(df: DataFrame): Array[(String, Array[Byte])] = {
-      val pairs = df.select(col("file_path").cast("string"),
-        col("pos").cast("long"))
-      LakeTable.localRows(pairs) match {
-        // driver-resident pairs (a driver-paired merge): the same
-        // grouping, here, without the job
-        case Some(rows) => rows
-          .groupBy(r => LakeTable.normalizePath(r.getUTF8String(0).toString))
-          .map { case (path, rs) => (path, bitmap(rs.iterator.map(_.getLong(1)))) }
-          .toArray
-        case None => pairs.as[(String, Long)]
-          .groupByKey(t => LakeTable.normalizePath(t._1))
-          .mapGroups((path, it) => (path, bitmap(it.map(_._2))))
-          .collect()
+  private[lake] def commitPositions(positions: Map[String, Roaring64Bitmap])(
+      build: Long => SnapshotMeta): SnapshotMeta = {
+    val snapshotId = (md.snapshots ++ md.staged).map(_.id)
+      .foldLeft(0L)(math.max) + 1
+    val base = build(snapshotId)
+    val snap =
+      if (positions.isEmpty) base
+      else {
+        val (paths, dvs, counts) =
+          if (writesVectors) {
+            val (dvs, counts) = writeVectorContainer(positions, snapshotId)
+            (Seq.empty, dvs, counts)
+          } else (Seq(writePositionFile(positions, snapshotId)), Seq.empty,
+            positions.map { case (p, bm) => p -> bm.getLongCardinality })
+        // crash window under test (DvSpec torn-container recovery,
+        // CrashRecoveryRandomSpec): a death HERE strands the delete file
+        // or container, and any data files, unreferenced — readers never
+        // see them, the orphan sweep collects them, a retry recommits
+        LakeTable.faultPoint("post-dv-write-pre-commit")
+        base.copy(deletePaths = paths, deleteCounts = counts, dvs = dvs)
       }
-    }
-    val newPos = bitmapPerFile(pairs)
-    if (newPos.isEmpty) return None
+    commit(md.copy(snapshots = md.snapshots :+ snap))
+    snap
+  }
+
+  /** One v2 position-delete parquet of `positions`, sorted by path and
+    * position, written on the driver by the one lake writer. */
+  private def writePositionFile(positions: Map[String, Roaring64Bitmap],
+      snapshotId: Long): String = {
+    val w = new graft.sources.LakeParquetDataWriter(dataDir.resolve(
+        s"deletes-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
+        .toString,
+      StructType(LakeTable.DeleteFileSchema.fields.map(_.copy(nullable = false))),
+      graft.sources.WritePlan.empty, "pos")
+    try {
+      positions.toSeq.sortBy(_._1).foreach { case (p, bm) =>
+        val path = org.apache.spark.unsafe.types.UTF8String.fromString(p)
+        val it = bm.getLongIterator
+        while (it.hasNext) w.write(
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            Array[Any](path, it.next())))
+      }
+      w.commit().asInstanceOf[graft.sources.LakeFilesCommit].files.head._1
+    } catch { case e: Throwable => w.abort(); throw e }
+  }
+
+  /** Merge newly deleted positions — which must exclude every
+    * already-deleted one — into one container of full+delta vector
+    * blobs per affected file: each file's new positions are ORed with
+    * its previous vector and any legacy positional parquet state
+    * (decoded on the driver, no job), and ONE container is written.
+    * Each file's new vector REPLACES its entire earlier delete state,
+    * so the live structures per file stay O(1) across any number of
+    * delete commits — v2's accumulating delete-file list is the read
+    * amplification v3 removed. Returns the DvMeta entries plus the
+    * newly-deleted counts.
+    */
+  private def writeVectorContainer(positions: Map[String, Roaring64Bitmap],
+      snapshotId: Long): (Seq[DvMeta], Map[String, Long]) = {
     val live = LakeTable.liveDeletes(md.snapshots)
-    val affected = newPos.map(_._1).toSet
-    // transition case: an affected file still carries v2 positional
-    // parquet state — fold those positions into the new vector so the
-    // REPLACE semantics lose nothing (decoded on the driver by the
-    // readers' own position loader, once per affected file)
-    val legacyByFile: Map[String, Roaring64Bitmap] = affected.toSeq
-      .flatMap(p => live.get(p).filter(d => d.dv.isEmpty && d.paths.nonEmpty)
-        .map { d =>
-          val bm = new Roaring64Bitmap()
-          graft.sources.LakeSource.loadDeletedPositions(d.paths, p)
-            .forEach(pos => bm.addLong(pos))
-          p -> bm
-        })
-      .toMap
-    val blobs = newPos.toSeq.sortBy(_._1).map { case (p, deltaBytes) =>
-      val delta = DeletionVectors.deserialize(deltaBytes)
+    val blobs = positions.toSeq.sortBy(_._1).map { case (p, delta) =>
       val prevRows = live.get(p).map(_.rows).getOrElse(0L)
       val full = new Roaring64Bitmap()
       full.or(delta)
       live.get(p).flatMap(_.dv).foreach(d =>
         full.or(DeletionVectors.cached(d.dvPath, d.offset, d.length)))
-      legacyByFile.get(p).foreach(full.or)
-      // the pairs contract above: every pair is NEWLY deleted, so the
-      // union must be exactly additive, or a resurrect/double-delete
-      // bug is in flight
+      // transition case: the file still carries v2 positional parquet
+      // state — fold those positions into the new vector so the
+      // REPLACE semantics lose nothing
+      live.get(p).filter(d => d.dv.isEmpty && d.paths.nonEmpty)
+        .foreach(d => full.or(positionalBitmap(p, d)))
+      // the positions contract above: every position is NEWLY deleted,
+      // so the union must be exactly additive, or a resurrect/
+      // double-delete bug is in flight
       require(full.getLongCardinality ==
           prevRows + delta.getLongCardinality,
         s"deletion-vector merge for $p is not additive: previous " +
@@ -699,14 +703,24 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
     val dvPath = dataDir.resolve(s"deletes-$snapshotId-" +
       java.util.UUID.randomUUID().toString.take(8) + ".gdv")
     Files.createDirectories(dataDir)
-    val dvMetas = DeletionVectors.writeContainer(dvPath, blobs)
-    // crash window under test (DvSpec torn-container recovery): a
-    // death HERE strands the container unreferenced — readers never
-    // see it, the orphan sweep collects it, a retry recommits
-    LakeTable.faultPoint("post-dv-write-pre-commit")
-    val counts = blobs.map { case (p, (_, delta)) =>
-      p -> delta.getLongCardinality }.toMap
-    Some((dvMetas, counts))
+    (DeletionVectors.writeContainer(dvPath, blobs),
+      blobs.map { case (p, (_, delta)) => p -> delta.getLongCardinality }.toMap)
+  }
+
+  /** The positions a data file's live v2 delete parquets delete, as
+    * the readers load them ([[graft.sources.LakeSource.loadDeletedPositions]]:
+    * one parse per delete file, cached), checked against the tracked
+    * count — a conversion that changed it would corrupt visible row
+    * counts.
+    */
+  private[lake] def positionalBitmap(path: String, ds: DeleteSet): Roaring64Bitmap = {
+    val bm = new Roaring64Bitmap()
+    Option(graft.sources.LakeSource.loadDeletedPositions(ds.paths, path))
+      .foreach(_.forEach(pos => bm.addLong(pos)))
+    require(bm.getLongCardinality == ds.rows,
+      s"position deletes of $path: the delete files hold " +
+        s"${bm.getLongCardinality}, metadata says ${ds.rows}")
+    bm
   }
 
   /** The data files of a merge-on-read snapshot: each `appended` frame
@@ -729,31 +743,6 @@ private[lake] trait LakeTableRowOps { self: LakeTable =>
         else fs
       }
     }
-
-  /** Vector flavor of [[commitMoR]] (`format-version=3` — Iceberg
-    * v3's deletion-vector model): the matched positions become
-    * full+delta vector blobs via [[writeVectorContainer]]. Each
-    * file's new vector REPLACES its entire earlier delete state, so
-    * the live structures per file stay O(1) across any number of
-    * delete commits — v2's accumulating delete-file list is the read
-    * amplification v3 removed.
-    */
-  private[lake] def commitMoRVector(spark: SparkSession, matched: DataFrame,
-      appended: Seq[DataFrame]): Option[SnapshotMeta] = {
-    val snapshotId = md.snapshots.map(_.id).foldLeft(0L)(math.max) + 1
-    val pairs = matched.select(col("_graft_dfile").as("file_path"),
-      col("_graft_dpos").as("pos"))
-    writeVectorContainer(spark, pairs, snapshotId) match {
-      case None => None
-      case Some((dvMetas, counts)) =>
-        val snap = SnapshotMeta(snapshotId,
-          writeAppended(snapshotId, appended), md.currentSchemaId,
-          operation = "delete", deleteCounts = counts,
-          timestampMs = System.currentTimeMillis(), dvs = dvMetas)
-        commit(md.copy(snapshots = md.snapshots :+ snap))
-        Some(snap)
-    }
-  }
 
   /** UPDATE t SET assignments WHERE predicate — copy-on-write: affected
     * files are rewritten with the assignments applied to matching rows,

@@ -1336,8 +1336,7 @@ private[sources] object LakeProcedures {
               case "rewrite_position_delete_files" =>
                 val before = LakeTable.liveDeletes(t.metadata.snapshots)
                   .values.flatMap(_.paths).toSeq.distinct.size
-                val snap = t.rewritePositionDeleteFiles(
-                  org.apache.spark.sql.SparkSession.active)
+                val snap = t.rewritePositionDeleteFiles()
                 (StructType(Seq(
                   StructField("merged_delete_files", IntegerType,
                     nullable = false),

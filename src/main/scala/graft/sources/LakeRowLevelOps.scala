@@ -108,9 +108,10 @@ private[sources] class LakeBatchWriterFactory(stageDir: String,
   * (_graft_file, _graft_pos): the scan emits live rows with their row
   * identity, matched rows arrive at the writers as DELETE (+ INSERT
   * for updates, `representUpdateAsDeleteAndInsert`), and commit()
-  * registers the position-delete parquets plus the delta data files as
-  * ONE snapshot. Write cost scales with the matched delta — no target
-  * file is rewritten.
+  * registers the tasks' deleted positions (one position-delete file or
+  * deletion-vector container for the commit) plus the delta data files
+  * as ONE snapshot. Write cost scales with the matched delta — no
+  * target file is rewritten.
   */
 private[sources] class LakeDeltaOperation(wh: String, db: String,
     tbl: String, cmd: RowLevelOperation.Command) extends RowLevelOperation
@@ -159,16 +160,6 @@ private[sources] class LakeDeltaBatchWrite(wh: String, db: String,
         .toString)
   }
 
-  // captured while the driver session that planned the write is still
-  // active: commit() may run on a thread with NO active session, and a
-  // v3 delta commit needs one to vectorize its position deletes — a
-  // lazy getActiveSession there would fail AFTER the delta parquet was
-  // already written
-  private val builtSession
-      : Option[org.apache.spark.sql.SparkSession] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
     new LakeDeltaWriterFactory(stage, rowSchema, partPlan)
@@ -177,18 +168,15 @@ private[sources] class LakeDeltaBatchWrite(wh: String, db: String,
     val parts = messages.collect { case c: LakeDeltaCommit => c }
     table.commitExternalDelta(
       dataFiles = parts.flatMap(_.dataFiles).toSeq,
-      deleteFiles = parts.flatMap(_.deleteFiles).toSeq,
-      deleteCounts = parts.flatMap(_.deleteCounts.toSeq)
-        .groupMapReduce(_._1)(_._2)(_ + _),
-      writtenSchemaId = writtenSchemaId, writtenSpecId = writtenSpecId,
-      spark = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(builtSession))
+      positions = graft.lake.DeletionVectors.union(
+        parts.iterator.flatMap(_.positions)),
+      writtenSchemaId = writtenSchemaId, writtenSpecId = writtenSpecId)
     ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case c: LakeDeltaCommit => c }.foreach { c =>
-      (c.dataFiles.map(_._1) ++ c.deleteFiles).foreach { p =>
+      c.dataFiles.map(_._1).foreach { p =>
         val path = Paths.get(p)
         Files.deleteIfExists(path)
         Files.deleteIfExists(path.getParent.resolve(
@@ -197,10 +185,11 @@ private[sources] class LakeDeltaBatchWrite(wh: String, db: String,
     }
 }
 
+/** One delta task's output: its data files, and its deleted positions
+  * as one serialized bitmap per data file. */
 private[sources] case class LakeDeltaCommit(
     dataFiles: Seq[(String, Map[String, String])],
-    deleteFiles: Seq[String],
-    deleteCounts: Map[String, Long]) extends WriterCommitMessage
+    positions: Seq[(String, Array[Byte])]) extends WriterCommitMessage
 
 private[sources] class LakeDeltaWriterFactory(stageDir: String,
     rowSchema: StructType, partPlan: WritePlan)
@@ -213,8 +202,8 @@ private[sources] class LakeDeltaWriterFactory(stageDir: String,
 }
 
 /** Per-task delta writer: INSERTs stream into partitioned data files
-  * (the shared parquet writer), DELETEs buffer as exact (plain path,
-  * position) counts and land in one position-delete parquet per task.
+  * (the shared parquet writer), DELETEs fold into one bitmap per data
+  * file that rides the commit message — the task writes no delete file.
   */
 private[sources] class LakeDeltaWriter(stageDir: String,
     rowSchema: StructType, partPlan: WritePlan, tag: String)
@@ -224,25 +213,11 @@ private[sources] class LakeDeltaWriter(stageDir: String,
 
   private val dataWriter =
     new LakeParquetDataWriter(stageDir, rowSchema, partPlan, s"ins-$tag")
-  private val deleteSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("file_path",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-  private val deleteWriter =
-    new LakeParquetDataWriter(s"$stageDir/deletes", deleteSchema,
-      WritePlan.empty, s"del-$tag")
-  private val counts = scala.collection.mutable.Map.empty[String, Long]
+  private val positions = new graft.lake.DeletionVectors.Positions
 
-  override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    // id = (_graft_file: plain path string, _graft_pos: long)
-    val file = id.getUTF8String(0)
-    counts.updateWith(file.toString) {
-      c => Some(c.getOrElse(0L) + 1L)
-    }
-    deleteWriter.write(new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](file.copy(), id.getLong(1))))
-  }
+  // id = (_graft_file: plain path string, _graft_pos: long)
+  override def delete(meta: InternalRow, id: InternalRow): Unit =
+    positions.add(id.getUTF8String(0), id.getLong(1))
 
   override def update(meta: InternalRow, id: InternalRow,
       row: InternalRow): Unit =
@@ -251,22 +226,11 @@ private[sources] class LakeDeltaWriter(stageDir: String,
 
   override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
-  override def commit(): WriterCommitMessage = {
-    val data = dataWriter.commit() match {
-      case LakeFilesCommit(fs) => fs
-      case other => throw new IllegalStateException(s"unexpected $other")
-    }
-    val dels = deleteWriter.commit() match {
-      case LakeFilesCommit(fs) => fs.map(_._1)
-      case other => throw new IllegalStateException(s"unexpected $other")
-    }
-    LakeDeltaCommit(data, dels, counts.toMap)
+  override def commit(): WriterCommitMessage = dataWriter.commit() match {
+    case LakeFilesCommit(fs) => LakeDeltaCommit(fs, positions.serialized)
+    case other => throw new IllegalStateException(s"unexpected $other")
   }
 
-  override def abort(): Unit = {
-    dataWriter.abort(); deleteWriter.abort()
-  }
-  override def close(): Unit = {
-    dataWriter.close(); deleteWriter.close()
-  }
+  override def abort(): Unit = dataWriter.abort()
+  override def close(): Unit = dataWriter.close()
 }

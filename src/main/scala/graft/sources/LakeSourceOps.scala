@@ -101,6 +101,29 @@ private[graft] object LakeSource {
       f.copy(dataType = go(f.dataType), nullable = true)))
   }
 
+  /** `st` with each field some schema in `history` lacks (by field id)
+    * declared nullable, at every level: a file written under that
+    * schema has no value for the field and reads null (or its initial
+    * default) there, whatever the field declares now — a required
+    * field added by ALTER. Fields without an id (metadata columns)
+    * keep their nullability.
+    */
+  def nullableWhereAbsent(st: StructType, history: Seq[StructType]): StructType = {
+    def ids(s: StructType): Set[Int] = FieldIds.flatten(s).collect {
+      case (_, f) if FieldIds.hasId(f) => FieldIds.idOf(f)
+    }.toSet
+    val always = history.map(ids).reduceOption(_ intersect _).getOrElse(Set.empty)
+    def go(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f => f.copy(
+        dataType = go(f.dataType),
+        nullable = f.nullable || FieldIds.hasId(f) && !always(FieldIds.idOf(f)))))
+      case ArrayType(et, n) => ArrayType(go(et), n)
+      case MapType(kt, vt, n) => MapType(go(kt), go(vt), n)
+      case other => other
+    }
+    go(st).asInstanceOf[StructType]
+  }
+
   /** Changelog-mode columns (option("changelog", "true") on a stream
     * read): same names/semantics as `LakeTable.changelogBetween`.
     */

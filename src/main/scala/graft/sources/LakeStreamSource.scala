@@ -272,12 +272,15 @@ private[sources] class LakeSparkTable(val wh: String, val db: String,
         "stream's startSnapshot option positions a changelog read)")
     // keep the field-id-bearing schema (the reader reconciles by id)
     // but force data columns nullable — marker rows null-fill non-key
-    // columns; readSchema cleans at the end like the normal path
+    // columns; readSchema cleans at the end like the normal path. Any
+    // other read declares nullable the fields older files lack (the
+    // scan's output; the table's declared schema stays as it is)
     val full =
       if (changelogMode || pin.exists(_.changelog.isDefined))
         StructType(pinnedSchema.fields.toSeq.map(_.copy(nullable = true)) ++
           LakeSource.changelogFields)
-      else pinnedSchema
+      else LakeSource.nullableWhereAbsent(pinnedSchema,
+        lake.metadata.schemas.map(_.schema))
     new LakeScanBuilder(wh, db, tbl, startSnapshot, full, asOfSnapshot,
       maxSnapshotsPerTrigger =
         Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt),

@@ -219,10 +219,7 @@ private[graft] case class LakeFilesBloomCommit(
       * `statsSchema` is set (r18: the driver otherwise re-opens every
       * written file's footer at commit) */
     fileStats: Seq[(String, (Long, Map[Int, graft.lake.ColStats], Long))] =
-      Seq.empty,
-    /** histogram of the `countOrdinal` column's values across the
-      * task's rows (r18: replaces commitMoR's read-back count job) */
-    valueCounts: Seq[(String, Long)] = Seq.empty)
+      Seq.empty)
   extends WriterCommitMessage
 
 /** One bloom-fused column of a batch write: the write-schema ordinal +
@@ -271,12 +268,10 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     closeOnKeyChange: Boolean = false,
     bloomPlan: Seq[BloomWriteCol] = Seq.empty,
     bloomDir: String = null,
-    statsSchema: StructType = null,
-    countOrdinal: Int = -1)
+    statsSchema: StructType = null)
     extends DataWriter[InternalRow] {
 
-  private def rich: Boolean =
-    bloomPlan.nonEmpty || statsSchema != null || countOrdinal >= 0
+  private def rich: Boolean = bloomPlan.nonEmpty || statsSchema != null
 
   /** One open file. Under `partPlan.shred` the parquet writer opens
     * only once the shredding schema is inferred from the buffered
@@ -360,8 +355,6 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   // file at commit time
   private val closedStats = mutable.ArrayBuffer.empty[
     (String, (Long, Map[Int, graft.lake.ColStats], Long))]
-  // countOrdinal value histogram across the task's rows
-  private val valCounts = new java.util.HashMap[String, java.lang.Long]()
 
   private def finishBlooms(sink: Sink): Unit = {
     if (bloomPlan.nonEmpty)
@@ -454,12 +447,6 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
         i += 1
       }
     }
-    if (countOrdinal >= 0 && !row.isNullAt(countOrdinal))
-      // toString copies out of the (reused) row buffer
-      valCounts.merge(row.getUTF8String(countOrdinal).toString,
-        java.lang.Long.valueOf(1L),
-        (a: java.lang.Long, b: java.lang.Long) =>
-          java.lang.Long.valueOf(a.longValue + b.longValue))
   }
 
   private def sinkFor(key: Seq[String]): Sink =
@@ -499,17 +486,12 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
       closedBlooms.clear()
       val statsOut = closedStats.toVector
       closedStats.clear()
-      val countsOut = {
-        import scala.jdk.CollectionConverters._
-        valCounts.asScala.toSeq.map { case (k, v) => (k, v.longValue) }
-      }
-      valCounts.clear()
       val blobBytes = entries.iterator
         .flatMap(_._2).map(_.length.toLong).sum
       if (blobBytes <= LakeParquetDataWriter.ShipBloomBytes)
         // small blobs ride the commit message; the driver folds every
         // task's into ONE container (the r17 small-delta layout)
-        LakeFilesBloomCommit(all, Seq.empty, entries, statsOut, countsOut)
+        LakeFilesBloomCommit(all, Seq.empty, entries, statsOut)
       else {
         // one container per big task, same placement/refs shape as the
         // distributed read-back build (buildBloomRefs); only the
@@ -528,7 +510,7 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
               graft.lake.BloomFilters.K)
           })
         }
-        LakeFilesBloomCommit(all, refs, Seq.empty, statsOut, countsOut)
+        LakeFilesBloomCommit(all, refs, Seq.empty, statsOut)
       }
     }
   }
@@ -540,7 +522,6 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     closed.clear()
     closedBlooms.clear()
     closedStats.clear()
-    valCounts.clear()
   }
 
   override def close(): Unit = ()

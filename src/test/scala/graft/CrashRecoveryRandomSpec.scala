@@ -138,4 +138,87 @@ class CrashRecoveryRandomSpec extends AnyFunSuite {
       } finally LakeTable.faultHook = _ => ()
     }
   }
+
+  private def isCrash(e: Throwable): Boolean =
+    e != null && (e.isInstanceOf[TornCrash] || isCrash(e.getCause))
+
+  private def isConflict(e: Throwable): Boolean = e != null &&
+    (e.isInstanceOf[java.util.ConcurrentModificationException] ||
+      isConflict(e.getCause))
+
+  test("position deletes crash at the position write and at the claim: " +
+      "pre- or post-state, the sweep reclaims the stranded delete file, " +
+      "a retry converges (deleteMoR, mergeMoR, SQL DELETE; v2 and v3)") {
+    val faults = Seq("post-dv-write-pre-commit", "post-claim-pre-flip")
+    for (v3 <- Seq(false, true); op <- Seq("deleteMoR", "mergeMoR", "sql");
+         fault <- faults) {
+      val label = s"v3=$v3 op=$op fault=$fault"
+      val wh = Files.createTempDirectory("graft-crashpos").toString
+      Engine.processTableDefJson(wh,
+        s"""{"database_name":"d","table_name":"t","columns":[
+          |{"column_name":"id","data_type":"long"},
+          |{"column_name":"v","data_type":"string"}],"partitions":[],
+          |"properties":{"commit.recovery.grace-ms":"0",
+          |"write.delete.mode":"merge-on-read"
+          |${if (v3) ""","format-version":"3"""" else ""}}}""".stripMargin)
+      (0 until 2).foreach(b => LakeTable.load(wh, "d", "t").append(
+        df((0 until 10).map(i => (b * 10L + i, s"v${b * 10 + i}")))))
+      val cat = s"gcrash${if (v3) 3 else 2}${op}${faults.indexOf(fault)}"
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val pre = state(wh)
+      val (run, post): (() => Unit, Map[Long, String]) = op match {
+        case "deleteMoR" =>
+          (() => { LakeTable.load(wh, "d", "t").deleteMoR(spark,
+            org.apache.spark.sql.functions.col("id") % 3 === 0L) },
+            pre.filter(_._1 % 3 != 0))
+        case "mergeMoR" =>
+          val src = Seq((1L, "m1"), (12L, "m12"), (100L, "n100"))
+          (() => { LakeTable.load(wh, "d", "t").mergeMoR(spark, df(src),
+            Seq("id")) }, pre ++ src)
+        case "sql" =>
+          (() => { spark.sql(s"DELETE FROM $cat.d.t WHERE id % 4 = 1").collect() },
+            pre.filter(_._1 % 4 != 1))
+      }
+      def referenced(): Set[String] = {
+        val md = LakeTable.load(wh, "d", "t").metadata
+        md.snapshots.flatMap(s => s.files.map(_.path) ++ s.deletePaths ++
+          s.dvs.map(_.dvPath)).toSet
+      }
+      var armed = fault
+      LakeTable.faultHook = name =>
+        if (armed != null && name == armed) { armed = null; throw new TornCrash }
+      val crashed = try { run(); false } catch { case e: Throwable if isCrash(e) => true }
+      LakeTable.faultHook = _ => ()
+      try {
+        assert(crashed, s"$label: the fault point never fired")
+        // died before the pointer flip either way: the pre-state
+        assert(state(wh) == pre, s"$label: after the crash")
+        if (fault == "post-dv-write-pre-commit") {
+          // the stranded delete file (v2) or container (v3) is swept;
+          // a claim's files are referenced by a version not yet
+          // flipped, so that case sweeps after the retry
+          val swept = LakeTable.load(wh, "d", "t").removeOrphanFiles(0L)
+          assert(swept.exists(p => if (v3) p.endsWith(".gdv")
+            else p.contains("/deletes-") && p.endsWith(".parquet")),
+            s"$label: swept $swept")
+          assert(state(wh) == pre, s"$label: after the sweep")
+        }
+        // retry until the op commits: a pending claim rolls forward on
+        // the first attempt's commit, which then refuses as a conflict
+        var attempts = 0
+        var done = false
+        while (!done) {
+          attempts += 1
+          assert(attempts <= 3, s"$label: no convergence")
+          done = try { run(); true } catch { case e: Throwable if isConflict(e) => false }
+        }
+        assert(state(wh) == post, s"$label: after the retry")
+        LakeTable.load(wh, "d", "t").removeOrphanFiles(0L)
+        assert(state(wh) == post, s"$label: after the final sweep")
+        assert(referenced().forall(p => Files.exists(java.nio.file.Paths.get(p))),
+          s"$label: the sweep removed a referenced file")
+      } finally LakeTable.faultHook = _ => ()
+    }
+  }
 }

@@ -341,7 +341,7 @@ class DvSpec extends AnyFunSuite {
     t2.deleteMoR(spark, col("id") === 3L) // second v2 parquet commit
     val t3 = LakeTable.load(wh, "d", "t")
     t3.updateProperties(Map("format-version" -> "3")) // upgrade
-    val snap = t3.rewritePositionDeleteFiles(spark)
+    val snap = t3.rewritePositionDeleteFiles()
     assert(snap.isDefined && snap.get.deletePaths.isEmpty &&
       snap.get.dvs.nonEmpty)
     val t4 = LakeTable.load(wh, "d", "t")
@@ -354,7 +354,7 @@ class DvSpec extends AnyFunSuite {
     assert(lakeReader(wh).count() == 7L)
     // idempotent: nothing positional left to convert
     assert(LakeTable.load(wh, "d", "t")
-      .rewritePositionDeleteFiles(spark).isEmpty)
+      .rewritePositionDeleteFiles().isEmpty)
   }
 
   test("mergeMoR under vectors: matched rows vector-deleted, updates append") {

@@ -145,6 +145,24 @@ class LocalScanSpec extends AnyFunSuite {
     }
   }
 
+  test("updateMoR runs no job under the bound (v2 and v3), and " +
+      "distributed with the bound at 0; same table") {
+    for (v3 <- Seq(false, true)) {
+      val states = for ((tag, bound, local) <- Seq(("up", None, true),
+          ("up0", Some(0L), false))) yield {
+        val (wh, _) = mk(s"$tag${if (v3) "3" else "2"}", bound, v3)
+        def load() = LakeTable.load(wh, "d", "t")
+        val (snap, uj) = countJobs(load().updateMoR(spark,
+          Map("v" -> upper(col("v"))), col("id").between(150L, 169L)))
+        assert(snap.exists(_.deleteCounts.values.sum == 20L))
+        val label = s"v3=$v3 bound=$bound: update $uj"
+        if (local) assert(uj == 0, label) else assert(uj >= 1, label)
+        LocalScanDiff.state(spark, load())
+      }
+      assert(states.distinct.size == 1, s"v3=$v3")
+    }
+  }
+
   test("a refresh's changelog and backing reads run no job under the " +
       "bound, and distributed with the bound at 0") {
     for ((tag, bound, local) <- Seq(("cl", None, true), ("cl0", Some(0L), false))) {

@@ -399,7 +399,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(LakeTable.liveDeletes(t.metadata.snapshots)
       .values.flatMap(_.paths).toSeq.distinct.size >= 2,
       "multiple live delete files before the merge")
-    val snap = t.rewritePositionDeleteFiles(spark)
+    val snap = t.rewritePositionDeleteFiles()
     assert(snap.isDefined, "multiple live delete files must merge")
     val t2 = LakeTable.load(wh, "d", "t")
     val liveAfter = LakeTable.liveDeletes(t2.metadata.snapshots)
@@ -413,7 +413,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(ids(t2) == Set(2L))
     assert(t2.read(spark).count() == 1L)
     // a second run has nothing to merge (fixpoint for maintenance loops)
-    assert(t2.rewritePositionDeleteFiles(spark).isEmpty)
+    assert(t2.rewritePositionDeleteFiles().isEmpty)
     // later MoR deletes accumulate on top of the merged state
     t2.deleteMoR(spark, col("id") === 2L)
     assert(ids(LakeTable.load(wh, "d", "t")).isEmpty)
